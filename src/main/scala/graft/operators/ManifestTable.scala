@@ -51,6 +51,32 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   * zero footer reads at plan time, and files written before a column
   * existed read as NULL for it (the [[Tables]] `mergeSchema`
   * contract, without the O(files) footer scan).
+  *
+  * Every writer commits through ONE optimistic transaction core
+  * ([[transact]]): snapshot (or the caller's head) → the writer's
+  * scan and data write → `beforeCommit` → validate against the fresh
+  * head → publish `v{N+1}`, re-reading and re-validating after a lost
+  * publish. A writer declares a READ SET — the files whose presence
+  * and deletion-vector state its scan depended on — and one of three
+  * CONFLICT RULES for when a concurrent commit replaced one of those
+  * files or moved its DV state:
+  *  - NONE (appends, overwrites, schema and ledger ops): the change is
+  *    a function of the head alone, so it merges onto whatever head
+  *    wins — appended files add, metadata re-derives;
+  *  - RESTART (copy-on-write and MoR delete/update, upsert,
+  *    mergeInto, overwriteWhere, foldDeletes): the change must apply,
+  *    so the whole scan reruns against the new head, up to a fixed
+  *    bound of consecutive conflicts, past which the writer fails
+  *    loudly (each lost round's files are vacuum orphans);
+  *  - ABORT (compact): a layout-only rewrite is stale, so it gives up
+  *    and returns the winner's snapshot.
+  * Under every rule the `#batch:<id>` ledger is re-checked on each
+  * head (a replay commits nothing), the written batch's schema merges
+  * into the head's recorded schema (a column name the head reserves
+  * refuses the commit), and write intents clear however the
+  * transaction ends. A concurrent append never conflicts: its files
+  * are outside every read set, so it survives any writer (snapshot
+  * isolation — rows it adds post-date the writer's scan).
   */
 object ManifestTable {
 
@@ -199,7 +225,7 @@ object ManifestTable {
         (if (bloomColumns.isEmpty) Seq.empty
          else Seq(s"$BloomColsPrefix${bloomColumns.mkString(",")}",
            s"$BloomCapPrefix$bloomKeyCapacity"))
-      val ok = tryCommit(root, 0, Seq.empty, meta)
+      val ok = tryCommit(root, Snapshot(0, Seq.empty, meta)).isDefined
       require(ok || latest(root).nonEmpty, s"init race lost at $root")
     }
   }
@@ -241,10 +267,8 @@ object ManifestTable {
                                     bloomCols: Seq[String],
                                     bloomCap: Long)
 
-  private def statSpecOf(snap: Option[Snapshot]): StatSpec =
-    snap.map(s => StatSpec(statColsOf(s), bloomColsOf(s), bloomCapOf(s)))
-      .getOrElse(StatSpec(Seq.empty, Seq.empty,
-        ManifestStats.BloomKeyCapacity))
+  private def statSpecOf(snap: Snapshot): StatSpec =
+    StatSpec(statColsOf(snap), bloomColsOf(snap), bloomCapOf(snap))
 
   // ---- head resolution: checkpoint hint + dense-chain probe ----
 
@@ -296,16 +320,14 @@ object ManifestTable {
     }
   }
 
-  /** Atomic publish of version `n`: write a temp manifest, publish it
-    * as `v{n}` through the [[AtomicPublish]] seam (complete-or-absent;
-    * fails if `v{n}` exists), then refresh the head hint. */
-  private[operators] def tryCommit(root: String, n: Int,
-                                   files: Seq[String],
-                                   meta: Seq[String] = Seq.empty,
-                                   schemaJson: Option[String] = None,
-                                   stats: Map[String, String] = Map.empty)
-      : Boolean = {
-    require(meta.forall(_.startsWith("#")),
+  /** Atomic publish of `next` as version `next.version`: write a temp
+    * manifest, publish it as `v{N}` through the [[AtomicPublish]] seam
+    * (complete-or-absent; fails if `v{N}` exists), then refresh the
+    * head hint. Returns the published snapshot — stats restricted to
+    * the files it references, exactly as a reader parses it — or None
+    * when another commit took the version. */
+  private def tryCommit(root: String, next: Snapshot): Option[Snapshot] = {
+    require(next.meta.forall(_.startsWith("#")),
       "metadata lines must be #-prefixed")
     val dir = manifestDir(root)
     val fs = fsOf(dir)
@@ -313,17 +335,160 @@ object ManifestTable {
       s".tmp-${java.util.UUID.randomUUID()}.manifest")
     // stat lines only for files the version still references — a
     // dropped file's stats drop with it
-    val fileSet = files.toSet
-    val statLines = stats.toSeq.filter(s => fileSet(s._1)).sortBy(_._1)
+    val fileSet = next.files.toSet
+    val live = next.stats.filter(s => fileSet(s._1))
+    val statLines = live.toSeq.sortBy(_._1)
       .map { case (f, payload) => s"$FileStatPrefix$f|$payload" }
     writeFile(fs, tmp,
-      (schemaJson.map(SchemaPrefix + _).toSeq ++ statLines ++ meta ++ files)
-        .mkString("\n"))
+      (next.schemaJson.map(SchemaPrefix + _).toSeq ++ statLines ++
+        next.meta ++ next.files).mkString("\n"))
     val ok =
-      try publisher(fs).publish(fs, tmp, new HPath(dir, s"v$n"))
+      try publisher(fs).publish(fs, tmp, new HPath(dir, s"v${next.version}"))
       finally { if (fs.exists(tmp)) fs.delete(tmp, false); () }
-    if (ok) writeHint(fs, dir, n)
-    ok
+    if (ok) writeHint(fs, dir, next.version)
+    if (ok) Some(next.copy(stats = live)) else None
+  }
+
+  // ---- the optimistic transaction core ----
+
+  /** The head [[transact]] starts from when no manifest exists yet —
+    * an append or schema op then publishes `v0` itself. */
+  private val Empty = Snapshot(-1, Seq.empty)
+
+  /** Consecutive read-set conflicts a RESTART-rule writer survives
+    * before it fails loudly (see the class doc's conflict rules). */
+  private val MaxRestarts = 8
+
+  /** A writer's conflict rule — the class doc states all three. */
+  private sealed trait OnConflict
+  private case object NoConflict extends OnConflict
+  private case object Restart extends OnConflict
+  private case object Abort extends OnConflict
+
+  /** One prepared attempt of a writer. `change` maps the head the
+    * commit lands on to the next version's content (None: the head
+    * already has it — publish nothing); `result` builds the writer's
+    * answer from the published snapshot (or from the head, on an
+    * abort or a no-op); `readSet` lists the files whose presence and
+    * DV state the attempt's scan depended on; `schema` is the written
+    * batch's schema, folded into the head's recorded schema at
+    * publish time. */
+  private final case class Plan[R](change: Snapshot => Option[Snapshot],
+                                   result: Snapshot => R,
+                                   readSet: Seq[String] = Seq.empty,
+                                   schema: Option[StructType] = None)
+
+  /** The write intents of one transaction: every data or sidecar write
+    * its attempts make registers here, and [[transact]] clears them
+    * all however it ends (committed files are live by then; a lost
+    * round's files are ordinary vacuum orphans). */
+  private final class Writes(root: String) {
+    private val tokens = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    /** [[writeData]] under `base`'s declared stat shape: (files, stats). */
+    def data(spark: SparkSession, df: DataFrame,
+             base: Snapshot): (Seq[String], Map[String, String]) = {
+      val (files, token, stats) = writeData(spark, root, df, statSpecOf(base))
+      tokens += token
+      (files, stats)
+    }
+
+    /** A fresh intent-guarded `data/<token>` dir for a sidecar write. */
+    def sidecarDir(): String = {
+      val token = java.util.UUID.randomUUID().toString
+      registerIntent(root, token)
+      tokens += token
+      s"data/$token"
+    }
+
+    def clear(): Unit = tokens.foreach(clearIntent(root, _))
+  }
+
+  /** Did a concurrent commit replace a file of `readSet` or move its
+    * deletion-vector state between `base` and `head`? (A rewrite that
+    * read through the old overlay would resurrect the new DV's
+    * victims, or drop its pointer.) */
+  private def drifted(base: Snapshot, head: Snapshot,
+                      readSet: Seq[String]): Boolean =
+    readSet.nonEmpty && {
+      val live = head.files.toSet
+      readSet.exists(f => !live(f) || dvStateOf(head, f) != dvStateOf(base, f))
+    }
+
+  /** THE optimistic transaction every writer commits through (the
+    * class doc states the protocol and the conflict rules):
+    *  1. snapshot — `head` on the first attempt when the caller
+    *     already read it (the one-manifest-read-per-batch seam), a
+    *     fresh [[latest]] otherwise;
+    *  2. `prepare` runs the writer's scan and data write against it
+    *     (Left = nothing to commit), writing through the [[Writes]]
+    *     it is handed;
+    *  3. `beforeCommit` (the race-injection test seam);
+    *  4. a read-dependent writer (rule RESTART/ABORT) validates its
+    *     read set against a FRESH head; a NONE-rule writer's change is
+    *     a function of the head alone, so it goes straight on;
+    *  5. publish: the `#batch:<id>` marker (`ledger`) and the schema
+    *     merge apply to the head the commit lands on; a lost publish
+    *     re-reads the head and re-validates (4), a replayed batch
+    *     returns `ledger`'s answer on that head.
+    * `op` names the writer in the restart-bound failure. */
+  private def transact[R](root: String, op: String, rule: OnConflict,
+                          head: Option[Snapshot] = None,
+                          ledger: Option[(Long, Snapshot => R)] = None,
+                          beforeCommit: () => Unit = () => ())
+                         (prepare: (Snapshot, Writes) => Either[R, Plan[R]])
+      : R = {
+    def fresh(): Snapshot = latest(root).getOrElse(Empty)
+    def replayed(s: Snapshot): Option[R] = ledger.collect {
+      case (id, answer) if batchCommitted(s, id) => answer(s)
+    }
+    val writes = new Writes(root)
+    try {
+      var snap = head.getOrElse(fresh())
+      var conflicts = 0
+      var out: Option[R] = None
+      while (out.isEmpty) {
+        out = replayed(snap)
+        if (out.isEmpty) prepare(snap, writes) match {
+          case Left(r) => out = Some(r)
+          case Right(plan) =>
+            val base = snap
+            beforeCommit()
+            if (rule != NoConflict) snap = fresh()
+            var restart = false
+            while (out.isEmpty && !restart) {
+              out = replayed(snap)
+              if (out.isEmpty) {
+                if (drifted(base, snap, plan.readSet)) {
+                  if (rule == Abort) out = Some(plan.result(snap))
+                  else {
+                    conflicts += 1
+                    if (conflicts >= MaxRestarts)
+                      throw new IllegalStateException(
+                        s"$op at $root lost $conflicts consecutive " +
+                          "conflicts on the files it read (a concurrent " +
+                          "rewrite or merge-on-read delete); pause the " +
+                          "conflicting writer and retry")
+                    restart = true
+                  }
+                } else plan.change(snap) match {
+                  case None => out = Some(plan.result(snap))
+                  case Some(next) =>
+                    val meta = ledger.fold(next.meta)(l =>
+                      next.meta :+ s"$BatchPrefix${l._1}")
+                    val schema = plan.schema.map(s => mergeSchemaJson(
+                      seededSchemaJson(SparkSession.active, root, snap), s,
+                      reservedNames(snap.meta))).orElse(next.schemaJson)
+                    out = tryCommit(root, next.copy(version = snap.version + 1,
+                      meta = meta, schemaJson = schema)).map(plan.result)
+                    if (out.isEmpty) snap = fresh()
+                }
+              }
+            }
+        }
+      }
+      out.get
+    } finally writes.clear()
   }
 
   // ---- schema ledger ----
@@ -480,7 +645,7 @@ object ManifestTable {
     // files' data as NULL)
     require(from.matches("[A-Za-z0-9_]+"),
       s"column name must be word-shaped: '$from'")
-    commitLoop(root) { cur =>
+    metaCommit(root) { cur =>
       val schema = recordedSchema(cur).orElse(
         seededSchemaJson(spark, root, cur)
           .map(DataType.fromJson(_).asInstanceOf[StructType]))
@@ -497,10 +662,10 @@ object ManifestTable {
         if (f.name == from) f.copy(name = to) else f))
       val map = colmapOf(cur.meta)
       val newMap = (map - from) + (to -> (from +: map.getOrElse(from, Seq.empty)))
-      (cur.files,
-        rebuildRenameMeta(cur.meta, newMap, droppedOf(cur.meta),
+      Some(cur.copy(
+        meta = rebuildRenameMeta(cur.meta, newMap, droppedOf(cur.meta),
           Map(from -> to)),
-        Some(newSchema.json), cur.stats)
+        schemaJson = Some(newSchema.json)))
     }
   }
 
@@ -512,7 +677,7 @@ object ManifestTable {
     * resurrect the old bytes. */
   def dropColumn(spark: SparkSession, root: String,
                  name: String): Snapshot =
-    commitLoop(root) { cur =>
+    metaCommit(root) { cur =>
       val schema = recordedSchema(cur).orElse(
         seededSchemaJson(spark, root, cur)
           .map(DataType.fromJson(_).asInstanceOf[StructType]))
@@ -526,9 +691,9 @@ object ManifestTable {
       val map = colmapOf(cur.meta)
       val newDropped = droppedOf(cur.meta) + name ++
         map.getOrElse(name, Seq.empty)
-      (cur.files,
-        rebuildRenameMeta(cur.meta, map - name, newDropped, Map.empty),
-        Some(newSchema.json), cur.stats)
+      Some(cur.copy(
+        meta = rebuildRenameMeta(cur.meta, map - name, newDropped, Map.empty),
+        schemaJson = Some(newSchema.json)))
     }
 
   /** ADD COLUMNS — metadata-only commit, zero data I/O: the recorded
@@ -544,7 +709,7 @@ object ManifestTable {
     require(cols.nonEmpty, "addColumns needs at least one column")
     cols.fieldNames.foreach(n => require(n.matches("[A-Za-z0-9_]+"),
       s"column name must be word-shaped: '$n'"))
-    commitLoop(root) { cur =>
+    metaCommit(root) { cur =>
       val schema = recordedSchema(cur).orElse(
         seededSchemaJson(spark, root, cur)
           .map(DataType.fromJson(_).asInstanceOf[StructType]))
@@ -561,7 +726,7 @@ object ManifestTable {
           "re-introducing them would resurrect old files' bytes")
       val newSchema = StructType(schema.fields ++
         cols.fields.map(_.copy(nullable = true)))
-      (cur.files, cur.meta, Some(newSchema.json), cur.stats)
+      Some(cur.copy(schemaJson = Some(newSchema.json)))
     }
   }
 
@@ -577,10 +742,8 @@ object ManifestTable {
     * case). A no-op widen (same type) commits nothing. */
   def widenColumn(spark: SparkSession, root: String, name: String,
                   to: DataType): Snapshot = {
-    var res: Option[Snapshot] = None
-    while (res.isEmpty) {
-      val cur = latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
+    metaCommit(root) { head =>
+      val cur = present(root, head)
       val schema = recordedSchema(cur).orElse(
         seededSchemaJson(spark, root, cur)
           .map(DataType.fromJson(_).asInstanceOf[StructType]))
@@ -598,18 +761,23 @@ object ManifestTable {
       require(w == to,
         s"cannot NARROW column '$name' from " +
           s"${field.dataType.catalogString} to ${to.catalogString}")
-      if (w == field.dataType) res = Some(cur) // already that wide
-      else {
-        val newSchema = StructType(schema.fields.map(f =>
-          if (f.name == name) f.copy(dataType = to) else f))
-        if (tryCommit(root, cur.version + 1, cur.files, cur.meta,
-          Some(newSchema.json), cur.stats))
-          res = Some(Snapshot(cur.version + 1, cur.files, cur.meta,
-            Some(newSchema.json), cur.stats))
-      }
+      if (w == field.dataType) None // already that wide
+      else Some(cur.copy(schemaJson = Some(StructType(schema.fields.map(f =>
+        if (f.name == name) f.copy(dataType = to) else f)).json)))
     }
-    res.get
   }
+
+  /** [[transact]] for a metadata-only change computed from the head
+    * alone — no scan, no data write, conflict rule NONE. */
+  private def metaCommit(root: String, head: Option[Snapshot] = None)
+      (change: Snapshot => Option[Snapshot]): Snapshot =
+    transact(root, "metadata commit", NoConflict, head)((_, _) =>
+      Right(Plan[Snapshot](change, s => s)))
+
+  /** `snap`, unless it is the no-manifest-yet [[Empty]] head. */
+  private def present(root: String, snap: Snapshot): Snapshot =
+    if (snap.version >= 0) snap
+    else throw new IllegalStateException(s"no manifest at $root")
 
   /** Schema-ledger seed for a PRE-LEDGER manifest: when the current
     * snapshot holds files but no recorded schema (a table created
@@ -639,7 +807,7 @@ object ManifestTable {
     * intent REGARDLESS of mtime/grace, so a writer stalled between
     * [[writeData]] and its commit can never have its files vacuumed
     * out from under it and then publish a manifest of dead paths.
-    * The intent is cleared once the writer's commit loop resolves
+    * The intent is cleared once the writer's transaction resolves
     * (committed OR aborted — aborted files become plain orphans and
     * age out under the grace) — or immediately, when the data write
     * itself fails (the partial files age out the same way). */
@@ -689,8 +857,8 @@ object ManifestTable {
   }
 
   /** Write `df` as immutable data files; returns their root-relative
-    * paths, the write token (whose intent the CALLER must clear
-    * once its commit loop resolves), and the new files' encoded
+    * paths, the write token (whose intent the CALLER — [[Writes]] —
+    * clears once its transaction resolves), and the new files' encoded
     * [[ManifestStats]] payloads: row counts and on-disk BYTES always
     * (footer + the directory listing this method already does —
     * planners and compaction never stat the filesystem again), plus
@@ -736,20 +904,12 @@ object ManifestTable {
              beforeCommit: () => Unit = () => (),
              guardLedger: Option[String] = None): Snapshot = {
     guardLedger.foreach(TakedownLedger.requireClear(_, root))
-    // stat columns are fixed at init — one snapshot read serves the
-    // whole op (the commit loop re-reads for the merge anyway)
-    val head0 = latest(root)
-    val (newFiles, token, newStats) =
-      writeData(spark, root, df, statSpecOf(head0))
-    try {
-      beforeCommit()
-      commitLoop(root) { cur =>
-        (cur.files ++ newFiles, cur.meta,
-          Some(mergeSchemaJson(seededSchemaJson(spark, root, cur), df.schema,
-            reservedNames(cur.meta))),
-          cur.stats ++ newStats)
-      }
-    } finally clearIntent(root, token)
+    transact(root, "append", NoConflict, beforeCommit = beforeCommit) {
+      (head, w) =>
+        val (newFiles, newStats) = w.data(spark, df, head)
+        Right(Plan(cur => Some(cur.copy(files = cur.files ++ newFiles,
+          stats = cur.stats ++ newStats)), s => s, schema = Some(df.schema)))
+    }
   }
 
   /** OVERWRITE: replace the table's entire contents with `df` in one
@@ -764,15 +924,11 @@ object ManifestTable {
   def overwrite(spark: SparkSession, root: String, df: DataFrame,
                 guardLedger: Option[String] = None): Snapshot = {
     guardLedger.foreach(TakedownLedger.requireClear(_, root))
-    val head0 = latest(root)
-    val (newFiles, token, newStats) =
-      writeData(spark, root, df, statSpecOf(head0))
-    try commitLoop(root) { cur =>
-      (newFiles, cur.meta,
-        Some(mergeSchemaJson(seededSchemaJson(spark, root, cur), df.schema,
-          reservedNames(cur.meta))),
-        newStats)
-    } finally clearIntent(root, token)
+    transact(root, "overwrite", NoConflict) { (head, w) =>
+      val (newFiles, newStats) = w.data(spark, df, head)
+      Right(Plan(cur => Some(cur.copy(files = newFiles, stats = newStats)),
+        s => s, schema = Some(df.schema)))
+    }
   }
 
   /** The latest version whose manifest was PUBLISHED at or before
@@ -830,7 +986,7 @@ object ManifestTable {
   /** Is micro-batch `id` already committed at the CURRENT head — the
     * replay fast-path for callers that want to skip computing their
     * batch entirely ([[appendBatch]]/[[upsertBatch]] re-check inside
-    * the commit loop regardless, so this is an optimization, never
+    * the transaction regardless, so this is an optimization, never
     * the correctness line). */
   def isBatchCommitted(root: String, batchId: Long): Boolean =
     latest(root).exists(batchCommitted(_, batchId))
@@ -870,37 +1026,27 @@ object ManifestTable {
     // other's ledger (the exact silent-no-op hazard the claim
     // refuses); for sentinel ids only the location hash may decide
     def knownQid(q: String): Boolean = q != UnknownQid
-    def reclaim(cur: Snapshot): Option[Snapshot] = {
-      val meta = cur.meta.filterNot(_.startsWith(SinkCkptPrefix)) :+
-        s"$SinkCkptPrefix$fp"
-      if (tryCommit(root, cur.version + 1, cur.files, meta,
-        cur.schemaJson, cur.stats))
-        Some(Snapshot(cur.version + 1, cur.files, meta, cur.schemaJson,
-          cur.stats))
-      else None
-    }
-    // first iteration may ride a caller-read head (the sink's
+    def reclaim(cur: Snapshot): Option[Snapshot] =
+      Some(cur.copy(meta = cur.meta.filterNot(_.startsWith(SinkCkptPrefix)) :+
+        s"$SinkCkptPrefix$fp"))
+    // first attempt may ride a caller-read head (the sink's
     // one-read-per-batch seam) — a stale head only costs a lost
-    // tryCommit and a fresh re-read, never a wrong claim verdict
+    // publish and a fresh re-read, never a wrong claim verdict
     // (the matched fingerprint is immutable once recorded)
-    var pending = head0
-    var done: Option[Snapshot] = None
-    while (done.isEmpty) {
-      val cur = pending.orElse(latest(root)).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
-      pending = None
+    metaCommit(root, head0) { head =>
+      val cur = present(root, head)
       sinkCheckpointOf(cur) match {
-        case None => done = reclaim(cur)
+        case None => reclaim(cur)
         // existing == fp implies equal location hashes, so even a
         // sentinel-id match is a genuine same-location restart
-        case Some(existing) if existing == fp => done = Some(cur)
+        case Some(existing) if existing == fp => None
         case Some(existing) if existing.contains('@') =>
           val Array(eQid, eLoc) = existing.split('@')
           if (eQid == queryId && knownQid(queryId)) {
             // same QUERY at a new location — a copied/relocated
             // checkpoint keeps its persisted id, and its batch ids ARE
             // this ledger's; record the move
-            done = reclaim(cur)
+            reclaim(cur)
           } else if (eLoc == locHash) {
             // the WIPED-checkpoint shape: a fresh query id at the SAME
             // location. Its deterministic replays of already-committed
@@ -916,7 +1062,7 @@ object ManifestTable {
                 "original, batches whose ids are already committed " +
                 "would be dropped — re-init the table for a divergent " +
                 "feed")
-            done = reclaim(cur)
+            reclaim(cur)
           } else throw new IllegalArgumentException(
             s"the streaming-batch ledger at $root belongs to the sink " +
               s"query fingerprinted '$existing'; this is a DIFFERENT " +
@@ -927,7 +1073,7 @@ object ManifestTable {
         case Some(legacy) =>
           // pre-r20 claim: a bare path hash. The same location
           // upgrades in place; a different one is a second query.
-          if (legacy == locHash) done = reclaim(cur)
+          if (legacy == locHash) reclaim(cur)
           else throw new IllegalArgumentException(
             s"the streaming-batch ledger at $root belongs to the sink " +
               s"checkpoint fingerprinted '$legacy' (pre-r20 form); " +
@@ -936,7 +1082,6 @@ object ManifestTable {
               "original checkpoint, or re-init the table")
       }
     }
-    done.get
   }
 
   /** Highest batch id the ledger has recorded (−1 if none): the max
@@ -958,7 +1103,7 @@ object ManifestTable {
     * Structured Streaming contract) finds its marker (or the
     * [[foldBatches]] watermark covering it) and returns the current
     * snapshot without writing anything; a replay racing a concurrent
-    * commit re-reads and re-checks inside the optimistic loop. The
+    * commit re-reads and re-checks inside the transaction. The
     * ledger grows one line per batch until [[foldBatches]] folds the
     * contiguous prefix into a single watermark line. */
   def appendBatch(spark: SparkSession, root: String, batchId: Long,
@@ -969,48 +1114,23 @@ object ManifestTable {
     * one-manifest-read-per-micro-batch seam (guide §6 round-trips):
     * the streaming sink and the signature store read the head once
     * per batch and thread it through the replay check, the stat
-    * lookup, and the commit loop's FIRST attempt. A stale head is
+    * lookup, and the transaction's FIRST attempt. A stale head is
     * harmless by construction: it can only miss NEWER commits (batch
     * markers never retract), so a stale replay-check FALSE is
-    * re-checked inside the loop after the version-collision re-read,
-    * and a stale commit attempt loses `tryCommit` (atomic
+    * re-checked by [[transact]] after the version-collision re-read,
+    * and a stale commit attempt loses its publish (atomic
     * complete-or-absent) and retries fresh. */
   private[graft] def appendBatchWith(spark: SparkSession, root: String,
                                      batchId: Long, df: DataFrame,
-                                     head: Option[Snapshot]): Snapshot = {
-    val marker = s"$BatchPrefix$batchId"
-    head.filter(batchCommitted(_, batchId)) match {
-      case Some(cur) => cur // replayed: nothing to read, write, or commit
-      case None =>
-        // the replay-check read also serves the stat-column lookup
-        val (newFiles, token, newStats) =
-          writeData(spark, root, df, statSpecOf(head))
-        try {
-          var cur = head.getOrElse(Snapshot(-1, Seq.empty))
-          var result: Option[Snapshot] = None
-          while (result.isEmpty) {
-            if (batchCommitted(cur, batchId)) {
-              // a racing duplicate committed first — return ITS state
-              // without committing anything; our data files become
-              // vacuumable orphans
-              result = Some(cur)
-            } else {
-              val files = cur.files ++ newFiles
-              val meta = cur.meta :+ marker
-              val schema = Some(mergeSchemaJson(
-                seededSchemaJson(spark, root, cur), df.schema,
-                reservedNames(cur.meta)))
-              val stats = cur.stats ++ newStats
-              if (tryCommit(root, cur.version + 1, files, meta, schema, stats))
-                result = Some(Snapshot(cur.version + 1, files, meta, schema,
-                  stats))
-              else cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-            }
-          }
-          result.get
-        } finally clearIntent(root, token)
+                                     head: Option[Snapshot]): Snapshot =
+    // the replay-check read also serves the stat-column lookup
+    transact(root, "appendBatch", NoConflict,
+      head = Some(head.getOrElse(Empty)),
+      ledger = Some(batchId -> ((s: Snapshot) => s))) { (cur, w) =>
+      val (newFiles, newStats) = w.data(spark, df, cur)
+      Right(Plan(c => Some(c.copy(files = c.files ++ newFiles,
+        stats = c.stats ++ newStats)), s => s, schema = Some(df.schema)))
     }
-  }
 
   /** [[overwrite]] under the batch ledger — the streaming
     * COMPLETE-mode commit: the new snapshot references ONLY this
@@ -1026,34 +1146,14 @@ object ManifestTable {
     * seam and staleness argument as [[appendBatchWith]]. */
   private[graft] def overwriteBatchWith(spark: SparkSession, root: String,
                                         batchId: Long, df: DataFrame,
-                                        head: Option[Snapshot]): Snapshot = {
-    val marker = s"$BatchPrefix$batchId"
-    head.filter(batchCommitted(_, batchId)) match {
-      case Some(cur) => cur // replayed: nothing to read, write, or commit
-      case None =>
-        val (newFiles, token, newStats) =
-          writeData(spark, root, df, statSpecOf(head))
-        try {
-          var cur = head.getOrElse(Snapshot(-1, Seq.empty))
-          var result: Option[Snapshot] = None
-          while (result.isEmpty) {
-            if (batchCommitted(cur, batchId)) result = Some(cur)
-            else {
-              val meta = cur.meta :+ marker
-              val schema = Some(mergeSchemaJson(
-                seededSchemaJson(spark, root, cur), df.schema,
-                reservedNames(cur.meta)))
-              if (tryCommit(root, cur.version + 1, newFiles, meta, schema,
-                newStats))
-                result = Some(Snapshot(cur.version + 1, newFiles, meta,
-                  schema, newStats))
-              else cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-            }
-          }
-          result.get
-        } finally clearIntent(root, token)
+                                        head: Option[Snapshot]): Snapshot =
+    transact(root, "overwriteBatch", NoConflict,
+      head = Some(head.getOrElse(Empty)),
+      ledger = Some(batchId -> ((s: Snapshot) => s))) { (cur, w) =>
+      val (newFiles, newStats) = w.data(spark, df, cur)
+      Right(Plan(c => Some(c.copy(files = newFiles, stats = newStats)),
+        s => s, schema = Some(df.schema)))
     }
-  }
 
   /** Fold the streaming batch ledger: replace the contiguous prefix
     * of `#batch:<id>` markers (starting just above the existing
@@ -1069,18 +1169,10 @@ object ManifestTable {
     * [[expireManifests]] — run it on the same cadence. */
   def foldBatches(root: String, keepRecent: Int = 0): Snapshot = {
     require(keepRecent >= 0, "keepRecent must be >= 0")
-    var res: Option[Snapshot] = None
-    while (res.isEmpty) {
-      val cur = latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
-      val (newMeta, changed) = foldedMeta(cur.meta, keepRecent)
-      if (!changed) res = Some(cur)
-      else if (tryCommit(root, cur.version + 1, cur.files, newMeta,
-        cur.schemaJson, cur.stats))
-        res = Some(Snapshot(cur.version + 1, cur.files, newMeta,
-          cur.schemaJson, cur.stats))
+    metaCommit(root) { cur =>
+      val (newMeta, changed) = foldedMeta(present(root, cur).meta, keepRecent)
+      if (changed) Some(cur.copy(meta = newMeta)) else None
     }
-    res.get
   }
 
   private def foldedMeta(meta: Seq[String],
@@ -1443,69 +1535,50 @@ object ManifestTable {
               beforeCommit: () => Unit = () => (),
               clusterBy: Seq[String] = Seq.empty): Snapshot = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val base = latest(root).getOrElse(
-      throw new IllegalStateException(s"no manifest at $root"))
-    if (base.files.isEmpty) return base
-    // size the rewrite from the manifest's recorded bytes; stat the
-    // FS only for legacy files whose lines predate the bytes field
-    lazy val fs = fsOf(new HPath(root))
-    val bytes = base.files.map { f =>
-      base.stats.get(f).map(ManifestStats.decodeCached(_).bytes)
-        .filter(_ >= 0)
-        .getOrElse(fs.getFileStatus(new HPath(root, f)).getLen)
-    }.sum
-    val n = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val baseRead = readSnapshot(spark, root, base)
-    val arranged = if (clusterBy.isEmpty) baseRead.repartition(n)
-    else {
-      val missing = clusterBy.filterNot(baseRead.columns.contains)
-      require(missing.isEmpty,
-        s"clusterBy column(s) not in the table: ${missing.mkString(",")}")
-      baseRead.repartitionByRange(n, clusterBy.map(F.col): _*)
-        .sortWithinPartitions(clusterBy.map(F.col): _*)
-    }
-    val (compacted, token, compactedStats) =
-      writeData(spark, root, arranged, statSpecOf(Some(base)))
-    try {
-      beforeCommit()
-      val baseSet = base.files.toSet
-      var result: Option[Snapshot] = None
-      while (result.isEmpty) {
-        val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-        if (!baseSet.subsetOf(cur.files.toSet) ||
-          base.files.exists(f => dvStateOf(cur, f) != dvStateOf(base, f))) {
-          // a conflicting rewrite committed first — or a concurrent
-          // MoR delete moved a file's DV state (our rewrite read
-          // through the OLD overlay and would resurrect its victims
-          // while dropping the DV pointer). Either way our rewrite is
-          // stale; aborting is safe (compaction is layout-only) and
-          // the files it wrote are unreferenced and will be vacuumed
-          // once the orphan grace passes
-          result = Some(cur)
-        } else {
-          // conflict-free merge: files that appeared since the base
-          // snapshot are appends — keep them alongside the compacted set
-          val files = compacted ++ cur.files.filterNot(baseSet)
-          val stats = cur.stats ++ compactedStats
-          if (tryCommit(root, cur.version + 1, files, cur.meta,
-            cur.schemaJson, stats))
-            result = Some(Snapshot(cur.version + 1, files, cur.meta,
-              cur.schemaJson, liveStats(files, stats)))
+    transact(root, "compact", Abort, beforeCommit = beforeCommit) {
+      (head, w) =>
+        val base = present(root, head)
+        if (base.files.isEmpty) Left(base)
+        else {
+          // size the rewrite from the manifest's recorded bytes; stat
+          // the FS only for legacy files whose lines predate the bytes
+          // field
+          lazy val fs = fsOf(new HPath(root))
+          val bytes = base.files.map { f =>
+            base.stats.get(f).map(ManifestStats.decodeCached(_).bytes)
+              .filter(_ >= 0)
+              .getOrElse(fs.getFileStatus(new HPath(root, f)).getLen)
+          }.sum
+          val n = math.max(1L,
+            (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+          val baseRead = readSnapshot(spark, root, base)
+          val arranged = if (clusterBy.isEmpty) baseRead.repartition(n)
+          else {
+            val missing = clusterBy.filterNot(baseRead.columns.contains)
+            require(missing.isEmpty,
+              s"clusterBy column(s) not in the table: ${missing.mkString(",")}")
+            baseRead.repartitionByRange(n, clusterBy.map(F.col): _*)
+              .sortWithinPartitions(clusterBy.map(F.col): _*)
+          }
+          val (compacted, compactedStats) = w.data(spark, arranged, base)
+          // the read set is the whole base: a conflicting rewrite or a
+          // MoR delete on any base file ABORTS (compaction is
+          // layout-only; merging two rewrites of one base would commit
+          // every base row twice, and a rewrite read through the OLD
+          // overlay would resurrect the delete's victims). Files that
+          // appeared since the base are appends — kept alongside the
+          // compacted set
+          val baseSet = base.files.toSet
+          Right(Plan(cur => Some(cur.copy(
+            files = compacted ++ cur.files.filterNot(baseSet),
+            stats = cur.stats ++ compactedStats)), s => s,
+            readSet = base.files))
         }
-      }
-      result.get
-    } finally clearIntent(root, token)
-  }
-
-  /** Stats restricted to the files a snapshot references. */
-  private def liveStats(files: Seq[String],
-                        stats: Map[String, String]): Map[String, String] = {
-    val fs = files.toSet
-    stats.filter(s => fs(s._1))
+    }
   }
 
   /** Row-level DELETE — copy-on-write rewrite of ONLY the files that
-    * contain victim rows, committed through the same optimistic loop.
+    * contain victim rows, committed through the transaction core.
     * The scale-store counterpart of the reference's own S7 delete
     * (`classes/hive/model.php:831-853`) and the primitive a
     * takedown/retraction pass needs: at 100 TB a purge touches the
@@ -1519,28 +1592,23 @@ object ManifestTable {
     *    second victim scan anywhere);
     *  - untouched files are carried into the new snapshot by
     *    reference — their bytes are never read or rewritten;
-    *  - commit semantics differ from [[compact]] on conflict: a
-    *    compaction abort is safe (the data is unchanged, only its
-    *    layout), but a delete MUST apply — if a concurrent rewrite
-    *    replaced an affected file, the whole pass RESTARTS against
-    *    the new snapshot instead of aborting, up to `maxRestarts`
-    *    rounds (sustained compaction churn past that fails loudly
-    *    rather than rewriting forever — each aborted round's files
-    *    are ordinary vacuum orphans). Concurrent appends merge
-    *    conflict-free exactly as in compact (their files are
-    *    outside the affected set) — note an append racing in rows
-    *    matching `predicate` lands AFTER this delete's victim scan
-    *    and survives it, the standard snapshot-isolation reading of
-    *    a concurrent DELETE + INSERT.
+    *  - conflict rule RESTART (the class doc): a compaction abort is
+    *    safe (the data is unchanged, only its layout), but a delete
+    *    MUST apply — if a concurrent rewrite replaced an affected
+    *    file, the whole pass reruns against the new snapshot.
+    *    Concurrent appends merge conflict-free exactly as in compact
+    *    (their files are outside the affected set) — note an append
+    *    racing in rows matching `predicate` lands AFTER this delete's
+    *    victim scan and survives it, the standard snapshot-isolation
+    *    reading of a concurrent DELETE + INSERT.
     * `beforeCommit` is the usual race-injection test seam. */
   def deleteWhere(spark: SparkSession, root: String, predicate: Column,
-                  beforeCommit: () => Unit = () => (),
-                  maxRestarts: Int = 8): Delete =
+                  beforeCommit: () => Unit = () => ()): Delete =
     // null predicate results keep the row (DELETE: NULL is not TRUE)
-    deleteWith(spark, root,
+    rewriteWith(spark, root, "deleteWhere",
       df => df.filter(predicate),
       df => df.filter(!F.coalesce(predicate, F.lit(false))),
-      beforeCommit, maxRestarts, prune = Some(predicate))
+      beforeCommit, prune = Some(predicate))
 
   /** [[deleteWhere]] for a victim set that is NOT driver-sized — the
     * frame-shaped takedown ([[Retraction.purgeWhere]] resume path):
@@ -1550,18 +1618,17 @@ object ManifestTable {
     * rewrite, restart, and snapshot-isolation semantics. */
   def deleteIds(spark: SparkSession, root: String, idCol: String,
                 victims: DataFrame,
-                beforeCommit: () => Unit = () => (),
-                maxRestarts: Int = 8): Delete = {
+                beforeCommit: () => Unit = () => ()): Delete = {
     require(victims.columns.length == 1,
       s"victims frame must have exactly one id column, " +
         s"got ${victims.columns.mkString(",")}")
     val v = victims.toDF("__victim_id").distinct()
       .localCheckpoint(eager = true)
     val prune = idPrune(spark, idCol, v, "__victim_id")
-    deleteWith(spark, root,
+    rewriteWith(spark, root, "deleteIds",
       df => df.join(v, df(idCol) === v("__victim_id"), "left_semi"),
       df => df.join(v, df(idCol) === v("__victim_id"), "left_anti"),
-      beforeCommit, maxRestarts, prune)
+      beforeCommit, prune)
   }
 
   /** Driver-sized id sets past this prune by RANGE only. Under the
@@ -1607,8 +1674,8 @@ object ManifestTable {
     * get `assignments` applied (column -> replacement expression,
     * evaluated against the row); only the files that contain matched
     * rows are rewritten, everything else is carried by reference.
-    * Same optimistic commit, restart-on-conflicting-rewrite, and
-    * snapshot-isolation semantics as the delete: a concurrent append
+    * Conflict rule RESTART (the class doc), with the delete's
+    * snapshot-isolation reading: a concurrent append
     * lands untouched even if its rows match `predicate` (they
     * post-date the scan). A NULL predicate result leaves the row
     * unchanged (UPDATE WHERE semantics). Assignments must not change
@@ -1617,10 +1684,9 @@ object ManifestTable {
     * matched-row count from the update's own single victim scan. */
   def updateWhere(spark: SparkSession, root: String, predicate: Column,
                   assignments: Map[String, Column],
-                  beforeCommit: () => Unit = () => (),
-                  maxRestarts: Int = 8): Delete = {
+                  beforeCommit: () => Unit = () => ()): Delete = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    rewriteWith(spark, root,
+    rewriteWith(spark, root, "updateWhere",
       hits = df => df.filter(predicate),
       rewrite = df => {
         val unknown = assignments.keySet -- df.columns.toSet
@@ -1641,7 +1707,7 @@ object ManifestTable {
         }
         out
       },
-      beforeCommit, maxRestarts, prune = Some(predicate))
+      beforeCommit, prune = Some(predicate))
   }
 
   /** One FRAME-shaped membership conjunct of a [[deleteWhereTerms]]/
@@ -1669,19 +1735,18 @@ object ManifestTable {
   def deleteWhereTerms(spark: SparkSession, root: String,
                        residue: Option[Column],
                        terms: Seq[MembershipTerm],
-                       beforeCommit: () => Unit = () => (),
-                       maxRestarts: Int = 8): Delete = {
+                       beforeCommit: () => Unit = () => ()): Delete = {
     require(terms.nonEmpty, "deleteWhereTerms needs at least one term")
     val (mark, fire, prune) = membership(spark, residue, terms)
-    deleteWith(spark, root,
+    rewriteWith(spark, root, "deleteWhereTerms",
       hits = df => mark(df).filter(fire)
         .select(df.columns.toSeq.map(c => df(c)): _*),
       // keep = everything but (residue ∧ all terms), in ONE pass over
       // the victim files: left-outer every membership marker on, drop
       // the firing rows, project the original columns back
-      keep = df => mark(df).filter(!fire)
+      rewrite = df => mark(df).filter(!fire)
         .select(df.columns.toSeq.map(c => df(c)): _*),
-      beforeCommit, maxRestarts, prune)
+      beforeCommit, prune)
   }
 
   /** Single-term [[deleteWhereTerms]] — the `WHERE p AND c IN
@@ -1689,10 +1754,9 @@ object ManifestTable {
   def deleteWhereIn(spark: SparkSession, root: String,
                     residue: Option[Column], inCol: String,
                     values: DataFrame,
-                    beforeCommit: () => Unit = () => (),
-                    maxRestarts: Int = 8): Delete =
+                    beforeCommit: () => Unit = () => ()): Delete =
     deleteWhereTerms(spark, root, residue,
-      Seq(MembershipTerm(inCol, values)), beforeCommit, maxRestarts)
+      Seq(MembershipTerm(inCol, values)), beforeCommit)
 
   /** [[updateWhere]] with N FRAME-shaped membership terms: rows where
     * `residue` holds AND every term holds get `assignments` applied.
@@ -1702,12 +1766,11 @@ object ManifestTable {
                        residue: Option[Column],
                        terms: Seq[MembershipTerm],
                        assignments: Map[String, Column],
-                       beforeCommit: () => Unit = () => (),
-                       maxRestarts: Int = 8): Delete = {
+                       beforeCommit: () => Unit = () => ()): Delete = {
     require(assignments.nonEmpty, "updateWhereTerms needs an assignment")
     require(terms.nonEmpty, "updateWhereTerms needs at least one term")
     val (mark, fire, prune) = membership(spark, residue, terms)
-    rewriteWith(spark, root,
+    rewriteWith(spark, root, "updateWhereTerms",
       hits = df => mark(df).filter(fire)
         .select(df.columns.toSeq.map(c => df(c)): _*),
       rewrite = df => {
@@ -1729,7 +1792,7 @@ object ManifestTable {
         }
         out
       },
-      beforeCommit, maxRestarts, prune)
+      beforeCommit, prune)
   }
 
   /** Single-term [[updateWhereTerms]]. */
@@ -1737,11 +1800,9 @@ object ManifestTable {
                     residue: Option[Column], inCol: String,
                     values: DataFrame,
                     assignments: Map[String, Column],
-                    beforeCommit: () => Unit = () => (),
-                    maxRestarts: Int = 8): Delete =
+                    beforeCommit: () => Unit = () => ()): Delete =
     updateWhereTerms(spark, root, residue,
-      Seq(MembershipTerm(inCol, values)), assignments,
-      beforeCommit, maxRestarts)
+      Seq(MembershipTerm(inCol, values)), assignments, beforeCommit)
 
   /** Shared membership machinery: (frame marker, fire predicate,
     * file prune) for a residue + N terms. Each term's values pin
@@ -1778,14 +1839,6 @@ object ManifestTable {
     (mark, fire, prune)
   }
 
-  private def deleteWith(spark: SparkSession, root: String,
-                         hits: DataFrame => DataFrame,
-                         keep: DataFrame => DataFrame,
-                         beforeCommit: () => Unit,
-                         maxRestarts: Int,
-                         prune: Option[Column] = None): Delete =
-    rewriteWith(spark, root, hits, keep, beforeCommit, maxRestarts, prune)
-
   // ---- merge-on-read deletes ----
 
   /** MERGE-ON-READ DELETE — the write-amplification answer to
@@ -1817,20 +1870,18 @@ object ManifestTable {
     *    DV-only commit diffs the two versions' DV state, reading only
     *    the affected files ([[changes]]).
     *
-    * Same optimistic-commit + restart semantics as [[deleteWhere]]:
-    * a concurrent rewrite of an affected file (or a concurrent MoR
-    * delete touching it) restarts the victim scan against the new
-    * snapshot, up to `maxRestarts`. Repeated MoR deletes on one file
+    * Conflict rule RESTART (the class doc): a concurrent rewrite of
+    * an affected file (or a concurrent MoR delete touching it) reruns
+    * the victim scan against the new snapshot. Repeated MoR deletes on one file
     * UNION into a single superseding sidecar (one `dvref` per file).
     * Returns the committed snapshot and the exact victim count —
     * already-deleted rows are invisible to the victim scan and never
     * double-count. */
   def deleteWhereMoR(spark: SparkSession, root: String, predicate: Column,
-                     beforeCommit: () => Unit = () => (),
-                     maxRestarts: Int = 8): Delete =
+                     beforeCommit: () => Unit = () => ()): Delete =
     // null predicate results keep the row (DELETE: NULL is not TRUE)
-    morDelete(spark, root, df => df.filter(predicate),
-      beforeCommit, maxRestarts, prune = Some(predicate))
+    morDelete(spark, root, "deleteWhereMoR", df => df.filter(predicate),
+      beforeCommit, prune = Some(predicate))
 
   /** [[deleteWhereTerms]] in merge-on-read form: victims are rows
     * where `residue` and every membership term hold — same term
@@ -1838,12 +1889,11 @@ object ManifestTable {
   def deleteWhereTermsMoR(spark: SparkSession, root: String,
                           residue: Option[Column],
                           terms: Seq[MembershipTerm],
-                          beforeCommit: () => Unit = () => (),
-                          maxRestarts: Int = 8): Delete = {
+                          beforeCommit: () => Unit = () => ()): Delete = {
     require(terms.nonEmpty, "deleteWhereTermsMoR needs at least one term")
     val (mark, fire, prune) = membership(spark, residue, terms)
-    morDelete(spark, root, df => mark(df).filter(fire),
-      beforeCommit, maxRestarts, prune)
+    morDelete(spark, root, "deleteWhereTermsMoR", df => mark(df).filter(fire),
+      beforeCommit, prune)
   }
 
   /** [[deleteIds]] in merge-on-read form — the takedown shape: victim
@@ -1851,21 +1901,20 @@ object ManifestTable {
     * one-column `victims` frame; only DV sidecars commit. */
   def deleteIdsMoR(spark: SparkSession, root: String, idCol: String,
                    victims: DataFrame,
-                   beforeCommit: () => Unit = () => (),
-                   maxRestarts: Int = 8): Delete = {
+                   beforeCommit: () => Unit = () => ()): Delete = {
     require(victims.columns.length == 1,
       s"victims frame must have exactly one id column, " +
         s"got ${victims.columns.mkString(",")}")
     val v = victims.toDF("__victim_id").distinct()
       .localCheckpoint(eager = true)
     val prune = idPrune(spark, idCol, v, "__victim_id")
-    morDelete(spark, root,
+    morDelete(spark, root, "deleteIdsMoR",
       df => df.join(v, df(idCol) === v("__victim_id"), "left_semi"),
-      beforeCommit, maxRestarts, prune)
+      beforeCommit, prune)
   }
 
-  /** A snapshot's DV identity for one file — the drift probe the MoR
-    * commit loop compares across snapshots. */
+  /** A snapshot's DV identity for one file — the drift probe
+    * [[drifted]] compares across snapshots. */
   private def dvStateOf(snap: Snapshot, f: String): (Option[String], Long) =
     snap.stats.get(f).map(ManifestStats.decodeCached)
       .map(st => (st.dvRef, st.dvRows)).getOrElse((None, 0L))
@@ -1876,26 +1925,21 @@ object ManifestTable {
     * unioned with the affected files' prior DV rows — as ONE new
     * sidecar under its own `data/<token>/`, and commit by pointing
     * the affected files' stat payloads at it. The file LIST never
-    * changes. Commit-loop drift checks: an affected file replaced by
-    * a rewrite, OR its DV state moved by a concurrent MoR delete,
+    * changes. The affected files are the read set: one replaced by a
+    * rewrite, OR its DV state moved by a concurrent MoR delete,
     * restarts the scan (a lost MoR-MoR race must not clobber the
     * winner's sidecar pointer). */
-  private def morDelete(spark: SparkSession, root: String,
+  private def morDelete(spark: SparkSession, root: String, op: String,
                         hits: DataFrame => DataFrame,
                         beforeCommit: () => Unit,
-                        maxRestarts: Int,
                         prune: Option[Column]): Delete = {
-    require(maxRestarts >= 1, "maxRestarts must be >= 1")
     val abs = "__graft_file"
     val pos = "__graft_pos"
-    var restarts = 0
-    var result: Option[Delete] = None
-    while (result.isEmpty) {
-      val base = latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
+    transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
+      val base = present(root, head)
       val scanFiles =
         prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-      if (scanFiles.isEmpty) result = Some(Delete(base, 0L))
+      if (scanFiles.isEmpty) Left(Delete(base, 0L))
       else {
         val scan = readSnapshotImpl(spark, root,
           base.copy(files = scanFiles), fileCol = Some(abs),
@@ -1907,7 +1951,7 @@ object ManifestTable {
         val (victims, perFile) = Pin.countByKey(hits(scan)
           .select(relPathCol(F.col(abs)).as("file"), F.col(pos).as("pos")),
           "file")
-        if (perFile.isEmpty) result = Some(Delete(base, 0L))
+        if (perFile.isEmpty) Left(Delete(base, 0L))
         else {
           val affected = base.files.filter(perFile.contains)
           val removed = perFile.values.sum
@@ -1926,50 +1970,21 @@ object ManifestTable {
                 "left_semi")
             victims.unionByName(carried)
           }
-          val token = java.util.UUID.randomUUID().toString
-          registerIntent(root, token)
-          val dvDir = s"data/$token"
-          try {
-            val total = removed + oldRefs.values.map(_._2).sum
-            val nParts = math.max(1L,
-              total / (8L * 1000 * 1000)).toInt
-            newDv.repartition(nParts).write.parquet(s"$root/$dvDir")
-            beforeCommit()
-            val affectedSet = affected.toSet
-            var retryScan = false
-            while (result.isEmpty && !retryScan) {
-              val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-              val drifted = !affectedSet.subsetOf(cur.files.toSet) ||
-                affected.exists(f =>
-                  dvStateOf(cur, f) != dvStateOf(base, f))
-              if (drifted) {
-                restarts += 1
-                if (restarts >= maxRestarts)
-                  throw new IllegalStateException(
-                    s"MoR delete at $root lost $restarts consecutive " +
-                      "races; pause compaction or raise maxRestarts")
-                retryScan = true
-              } else {
-                val stats2 = cur.stats ++ affected.map { f =>
-                  val st = cur.stats.get(f)
-                    .map(ManifestStats.decodeCached)
-                    .getOrElse(ManifestStats.FileStats(-1L, Map.empty))
-                  f -> ManifestStats.encode(st.copy(dvRef = Some(dvDir),
-                    dvRows = st.dvRows + perFile(f)))
-                }
-                if (tryCommit(root, cur.version + 1, cur.files, cur.meta,
-                  cur.schemaJson, stats2))
-                  result = Some(Delete(
-                    Snapshot(cur.version + 1, cur.files, cur.meta,
-                      cur.schemaJson, liveStats(cur.files, stats2)),
-                    removed))
-              }
-            }
-          } finally clearIntent(root, token)
+          val dvDir = w.sidecarDir()
+          val total = removed + oldRefs.values.map(_._2).sum
+          val nParts = math.max(1L, total / (8L * 1000 * 1000)).toInt
+          newDv.repartition(nParts).write.parquet(s"$root/$dvDir")
+          // the file LIST never changes: the affected files' payloads
+          // point at the new sidecar
+          Right(Plan(cur => Some(cur.copy(stats = cur.stats ++ affected.map { f =>
+            val st = cur.stats.get(f).map(ManifestStats.decodeCached)
+              .getOrElse(ManifestStats.FileStats(-1L, Map.empty))
+            f -> ManifestStats.encode(st.copy(dvRef = Some(dvDir),
+              dvRows = st.dvRows + perFile(f)))
+          })), Delete(_, removed), readSet = affected))
         }
       }
     }
-    result.get
   }
 
   /** PREDICATE OVERWRITE — `replaceWhere` / v2 `INSERT INTO …
@@ -1996,39 +2011,36 @@ object ManifestTable {
     *    isolation: an append committing between this op's victim
     *    scan and its commit survives untouched even where its rows
     *    match `predicate` (they post-date the scan); a conflicting
-    *    REWRITE of an affected file restarts the scan, up to
-    *    `maxRestarts`;
+    *    REWRITE of an affected file restarts the scan (conflict rule
+    *    RESTART, the class doc);
     *  - returns the committed snapshot and the REPLACED row count.
     * A no-victim predicate degrades to a plain ledgered append of
     * `df` (the reload of a not-yet-loaded day). */
   def overwriteWhere(spark: SparkSession, root: String,
                      predicate: Column, df: DataFrame,
-                     beforeCommit: () => Unit = () => (),
-                     maxRestarts: Int = 8): Delete = {
-    require(maxRestarts >= 1, "maxRestarts must be >= 1")
-    val head0 = latest(root).getOrElse(
-      throw new IllegalStateException(s"no manifest at $root"))
-    // fused pin (Pin.countWhere): the violation audit rides the pin's
-    // own materializing job; the audit column lives only in the
-    // pinned rows and is projected away before the write
-    val (pinnedV, violations) = Pin.countWhere(
-      df.withColumn("__graft_viol", !F.coalesce(predicate, F.lit(false))),
-      "__graft_viol")
-    require(violations == 0L,
-      s"overwriteWhere: $violations new row(s) do not satisfy the " +
-        "replace predicate — they would land OUTSIDE the replaced " +
-        "region; widen the predicate or filter the input")
-    val pinned = pinnedV.drop("__graft_viol")
-    val (newFiles, newToken, newStats) =
-      writeData(spark, root, pinned, statSpecOf(Some(head0)))
-    try {
-      var restarts = 0
-      var result: Option[Delete] = None
-      while (result.isEmpty) {
-        val base = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-        val schemaNew = Some(mergeSchemaJson(
-          seededSchemaJson(spark, root, base), pinned.schema,
-          reservedNames(base.meta)))
+                     beforeCommit: () => Unit = () => ()): Delete = {
+    // the new rows write ONCE, on the first attempt; a restart reuses
+    // their files and re-derives only the replaced region
+    var reload: Option[(Seq[String], Map[String, String], StructType)] = None
+    transact(root, "overwriteWhere", Restart, beforeCommit = beforeCommit) {
+      (head, w) =>
+        val base = present(root, head)
+        val (newFiles, newStats, newSchema) = reload.getOrElse {
+          // fused pin (Pin.countWhere): the violation audit rides the
+          // pin's own materializing job; the audit column lives only in
+          // the pinned rows and is projected away before the write
+          val (pinnedV, violations) = Pin.countWhere(
+            df.withColumn("__graft_viol", !F.coalesce(predicate, F.lit(false))),
+            "__graft_viol")
+          require(violations == 0L,
+            s"overwriteWhere: $violations new row(s) do not satisfy the " +
+              "replace predicate — they would land OUTSIDE the replaced " +
+              "region; widen the predicate or filter the input")
+          val pinned = pinnedV.drop("__graft_viol")
+          val (files, stats) = w.data(spark, pinned, base)
+          reload = Some((files, stats, pinned.schema))
+          reload.get
+        }
         val scanFiles =
           if (base.files.isEmpty) Seq.empty
           else candidateFiles(spark, root, base, predicate)
@@ -2044,62 +2056,20 @@ object ManifestTable {
             val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
             (base.files.filter(hitRel), perFile.map(_._2).sum)
           }
-        if (affected.isEmpty) {
-          // nothing to replace: the op is a plain ledgered append
-          beforeCommit()
-          while (result.isEmpty) {
-            val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-            val files = cur.files ++ newFiles
-            val stats = cur.stats ++ newStats
-            if (tryCommit(root, cur.version + 1, files, cur.meta,
-              schemaNew, stats))
-              result = Some(Delete(Snapshot(cur.version + 1, files,
-                cur.meta, schemaNew, liveStats(files, stats)), 0L))
-          }
-        } else {
-          // keep side of the affected files (DV overlay applied, so
-          // a MoR-deleted row neither survives nor double-counts)
-          val keep = readSnapshot(spark, root,
+        // keep side of the affected files (DV overlay applied, so a
+        // MoR-deleted row neither survives nor double-counts); with no
+        // affected file the op is a plain ledgered append
+        val (keptFiles, keptStats) =
+          if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
+          else w.data(spark, readSnapshot(spark, root,
             base.copy(files = affected))
-            .filter(!F.coalesce(predicate, F.lit(false)))
-          val (keptFiles, keptToken, keptStats) =
-            writeData(spark, root, keep, statSpecOf(Some(base)))
-          try {
-            beforeCommit()
-            val affectedSet = affected.toSet
-            var retryScan = false
-            while (result.isEmpty && !retryScan) {
-              val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-              // DV-state drift counts as a conflict exactly like a
-              // file rewrite: the keep side read through base's DV
-              // overlay, so publishing it under a moved DV would
-              // resurrect the concurrent MoR delete's victims
-              if (!affectedSet.subsetOf(cur.files.toSet) ||
-                affected.exists(f =>
-                  dvStateOf(cur, f) != dvStateOf(base, f))) {
-                restarts += 1
-                if (restarts >= maxRestarts)
-                  throw new IllegalStateException(
-                    s"overwriteWhere at $root lost $restarts " +
-                      "consecutive rewrite races; pause compaction or " +
-                      "raise maxRestarts")
-                retryScan = true
-              } else {
-                val files = cur.files.filterNot(affectedSet) ++
-                  keptFiles ++ newFiles
-                val stats = cur.stats ++ keptStats ++ newStats
-                if (tryCommit(root, cur.version + 1, files, cur.meta,
-                  schemaNew, stats))
-                  result = Some(Delete(
-                    Snapshot(cur.version + 1, files, cur.meta,
-                      schemaNew, liveStats(files, stats)), removed))
-              }
-            }
-          } finally clearIntent(root, keptToken)
-        }
-      }
-      result.get
-    } finally clearIntent(root, newToken)
+            .filter(!F.coalesce(predicate, F.lit(false))), base)
+        val affectedSet = affected.toSet
+        Right(Plan(cur => Some(cur.copy(
+          files = cur.files.filterNot(affectedSet) ++ keptFiles ++ newFiles,
+          stats = cur.stats ++ keptStats ++ newStats)),
+          Delete(_, removed), readSet = affected, schema = Some(newSchema)))
+    }
   }
 
   /** FOLD DELETION VECTORS: rewrite ONLY the files carrying a DV
@@ -2110,25 +2080,22 @@ object ManifestTable {
     * unreadable instantly (metadata-sized), this pass erases their
     * bytes, and [[vacuum]] then deletes the superseded files and
     * sidecars. A table with no DVs is a zero-cost no-op (no scan, no
-    * commit). Same optimistic-commit + restart semantics as
-    * [[compact]]'s conflict rule, but restricted to the DV'd files.
+    * commit). Conflict rule RESTART (the class doc) over the DV'd
+    * files as the read set.
     * Also the maintenance valve for a DV that grew past broadcast
     * size. */
   def foldDeletes(spark: SparkSession, root: String,
-                  targetFileBytes: Long = 128L * 1024 * 1024,
-                  maxRestarts: Int = 8)
-      : Snapshot = {
+                  targetFileBytes: Long = 128L * 1024 * 1024): Snapshot = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    require(maxRestarts >= 1, "maxRestarts must be >= 1")
-    var restarts = 0
-    var result: Option[Snapshot] = None
-    while (result.isEmpty) {
-      val base = latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
+    // RESTART, but boundedly: every lost round has already rewritten
+    // all DV'd files (vacuum orphans), so a steady MoR-delete stream
+    // fails loudly rather than livelocking on garbage writes
+    transact(root, "foldDeletes", Restart) { (head, w) =>
+      val base = present(root, head)
       val dvFiles = base.files.filter(f =>
         base.stats.get(f).exists(
           ManifestStats.decodeCached(_).dvRef.isDefined))
-      if (dvFiles.isEmpty) result = Some(base)
+      if (dvFiles.isEmpty) Left(base)
       else {
         val bytes = dvFiles.flatMap(f => base.stats.get(f)
           .map(ManifestStats.decodeCached(_).bytes).filter(_ >= 0)).sum
@@ -2136,40 +2103,13 @@ object ManifestTable {
           (bytes + targetFileBytes - 1) / targetFileBytes).toInt
         val folded = readSnapshot(spark, root,
           base.copy(files = dvFiles)).repartition(n)
-        val (newFiles, token, newStats) =
-          writeData(spark, root, folded, statSpecOf(Some(base)))
-        try {
-          val dvSet = dvFiles.toSet
-          var retryScan = false
-          while (result.isEmpty && !retryScan) {
-            val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-            val drifted = !dvSet.subsetOf(cur.files.toSet) ||
-              dvFiles.exists(f => dvStateOf(cur, f) != dvStateOf(base, f))
-            if (drifted) {
-              // re-derive the DV'd set — but boundedly: every lost
-              // round has already rewritten all DV'd files (vacuum
-              // orphans), so a steady MoR-delete stream must fail
-              // loudly rather than livelock writing garbage forever
-              restarts += 1
-              if (restarts >= maxRestarts)
-                throw new IllegalStateException(
-                  s"foldDeletes at $root lost $restarts consecutive " +
-                    "MoR-delete races; pause the delete stream or " +
-                    "raise maxRestarts")
-              retryScan = true
-            } else {
-              val files = cur.files.filterNot(dvSet) ++ newFiles
-              val stats = cur.stats ++ newStats
-              if (tryCommit(root, cur.version + 1, files, cur.meta,
-                cur.schemaJson, stats))
-                result = Some(Snapshot(cur.version + 1, files, cur.meta,
-                  cur.schemaJson, liveStats(files, stats)))
-            }
-          }
-        } finally clearIntent(root, token)
+        val (newFiles, newStats) = w.data(spark, folded, base)
+        val dvSet = dvFiles.toSet
+        Right(Plan(cur => Some(cur.copy(
+          files = cur.files.filterNot(dvSet) ++ newFiles,
+          stats = cur.stats ++ newStats)), s => s, readSet = dvFiles))
       }
     }
-    result.get
   }
 
   /** The `#dvmode:` table declaration: with merge-on-read deletes ON,
@@ -2179,10 +2119,9 @@ object ManifestTable {
     * carries through compaction and every rewrite like any meta
     * line. */
   def setMorDeletes(root: String, on: Boolean): Snapshot =
-    commitLoop(root) { cur =>
+    metaCommit(root) { cur =>
       val rest = cur.meta.filterNot(_.startsWith(DvModePrefix))
-      val meta = if (on) rest :+ s"${DvModePrefix}on" else rest
-      (cur.files, meta, cur.schemaJson, cur.stats)
+      Some(cur.copy(meta = if (on) rest :+ s"${DvModePrefix}on" else rest))
     }
 
   /** Is the table declared merge-on-read for SQL deletes? */
@@ -2204,8 +2143,8 @@ object ManifestTable {
     * reference, and the new snapshot = carried ∪ rewritten ∪ update
     * files. The updates may ADD columns — the recorded schema merges
     * exactly as an append's would, and older files read NULL for
-    * them. Same optimistic commit + restart-on-conflicting-rewrite
-    * semantics as [[deleteWhere]] (a merge must apply); a concurrent
+    * them. Conflict rule RESTART (the class doc — a merge must
+    * apply), like [[deleteWhere]]; a concurrent
     * append with a colliding id post-dates the match scan and
     * survives alongside the update row — the snapshot-isolation
     * reading of MERGE racing INSERT (last committer is not
@@ -2223,9 +2162,8 @@ object ManifestTable {
     * (ManifestStatsSpec). */
   def upsert(spark: SparkSession, root: String, idCol: String,
              updates: DataFrame,
-             beforeCommit: () => Unit = () => (),
-             maxRestarts: Int = 8): Merge =
-    upsertImpl(spark, root, idCol, updates, beforeCommit, maxRestarts, None)
+             beforeCommit: () => Unit = () => ()): Merge =
+    upsertImpl(spark, root, idCol, updates, beforeCommit, None)
 
   /** EXACTLY-ONCE streaming MERGE — the bridge between the CDC stack
     * and the manifest table: [[upsert]] under the same `#batch:<id>`
@@ -2239,47 +2177,37 @@ object ManifestTable {
     * `Merge(current, 0, 0)`, its data files (if any were written
     * before a racing duplicate won) become vacuumable orphans. A
     * rewrite-shaped merge that loses its commit race re-checks the
-    * ledger inside the restart loop, so a duplicate can never apply
+    * ledger on every head it validates, so a duplicate can never apply
     * the batch twice. Feed ordering across DIFFERENT batch ids is the
     * caller's contract, exactly as with a transactional-table
     * streaming MERGE: each id applies once, last-applied-wins per
     * key. */
   def upsertBatch(spark: SparkSession, root: String, batchId: Long,
                   idCol: String, updates: DataFrame,
-                  beforeCommit: () => Unit = () => (),
-                  maxRestarts: Int = 8): Merge =
+                  beforeCommit: () => Unit = () => ()): Merge =
     upsertBatchWith(spark, root, batchId, idCol, updates, latest(root),
-      beforeCommit, maxRestarts)
+      beforeCommit)
 
   /** [[upsertBatch]] against a caller-read head — same one-read seam
     * and staleness argument as [[appendBatchWith]] (the rewrite path
-    * additionally re-checks drift inside its restart loop). */
+    * additionally re-checks drift on every fresh head). */
   private[graft] def upsertBatchWith(spark: SparkSession, root: String,
                                      batchId: Long, idCol: String,
                                      updates: DataFrame,
                                      head: Option[Snapshot],
-                                     beforeCommit: () => Unit = () => (),
-                                     maxRestarts: Int = 8): Merge =
+                                     beforeCommit: () => Unit = () => ())
+      : Merge =
     head.filter(batchCommitted(_, batchId)) match {
       case Some(cur) => Merge(cur, 0L, 0L) // replayed: nothing to do
       case None => upsertImpl(spark, root, idCol, updates, beforeCommit,
-        maxRestarts, Some(batchId), head)
+        Some(batchId), head)
     }
 
   private def upsertImpl(spark: SparkSession, root: String, idCol: String,
                          updates: DataFrame,
                          beforeCommit: () => Unit,
-                         maxRestarts: Int,
                          batchId: Option[Long],
-                         headHint: Option[Snapshot] = None): Merge = {
-    require(maxRestarts >= 1, "maxRestarts must be >= 1")
-    // with a batch id, every commit attempt carries the marker and
-    // every loop re-checks the ledger (a racing duplicate may have
-    // committed the batch while this writer was scanning/writing)
-    def metaFor(cur: Snapshot): Seq[String] =
-      batchId.map(id => cur.meta :+ s"$BatchPrefix$id").getOrElse(cur.meta)
-    def replayed(cur: Snapshot): Boolean =
-      batchId.exists(batchCommitted(cur, _))
+                         head: Option[Snapshot] = None): Merge = {
     // fused pins (Pin.count): each pin's materializing job carries
     // its count — two actions per upsert instead of four
     val (u, nU) = Pin.count(updates)
@@ -2287,139 +2215,77 @@ object ManifestTable {
       Pin.count(u.select(F.col(idCol).as("__merge_id")).distinct())
     require(nIds == nU,
       s"upsert updates must carry distinct '$idCol' values")
-    val head0 = headHint.orElse(latest(root))
-    val (updFiles, updToken, updStats) =
-      writeData(spark, root, u, statSpecOf(head0))
     // the update-id set prunes the match scan: an exact IN-list for
     // driver-sized batches (bloom-answerable — scattered CDC ids
     // still skip files), the id RANGE beyond that (cluster by the
     // merge key to keep it tight — see the class doc's contract)
     val prune = idPrune(spark, idCol, uIds, "__merge_id")
-    try {
-      var restarts = 0
-      var result: Option[Merge] = None
-      // a caller-passed head rides into the first iteration (the
-      // sink's one-read seam — fresh by construction there); callers
-      // without a hint keep the post-write fresh read, so the public
-      // upsert's race window is unchanged
-      var baseHint = headHint
-      while (result.isEmpty) {
-        val base = baseHint.orElse(latest(root)).getOrElse(
-          throw new IllegalStateException(s"no manifest at $root"))
-        baseHint = None
-        val schema = Some(mergeSchemaJson(
-          seededSchemaJson(spark, root, base), u.schema,
-          reservedNames(base.meta)))
-        if (replayed(base)) {
-          // a racing duplicate committed this batch — return ITS state
-          result = Some(Merge(base, 0L, 0L))
-        } else if (base.files.isEmpty) {
-          // empty table: the merge is a pure insert
-          if (tryCommit(root, base.version + 1, updFiles, metaFor(base),
-            schema, updStats))
-            result = Some(Merge(Snapshot(base.version + 1, updFiles,
-              metaFor(base), schema, updStats), 0L, nU))
-        } else {
-          val scanFiles =
-            prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-          // one pushed-down job over the CANDIDATE files only: per
-          // matched id, every file holding a row for it — each id
-          // attributed ONCE (to its first file), so `matched` counts
-          // DISTINCT ids even when racing appends left duplicate rows
-          // for one id, possibly across files (insertedRows =
-          // nU - matched can never go negative)
-          val perFile = if (scanFiles.isEmpty) Array.empty[(String, Long)]
-          else {
-            val scan = readSnapshotImpl(spark, root,
-              base.copy(files = scanFiles), fileCol = Some("__file"),
-              posCol = None)
-            scan
-              .join(uIds, scan(idCol) === uIds("__merge_id"), "left_semi")
-              .select(F.col("__file"), F.col(idCol).as("__id"))
-              .groupBy("__id")
-              .agg(F.sort_array(F.collect_set("__file")).as("fs"))
-              .select(F.posexplode(F.col("fs")).as(Seq("pos", "__file")))
-              .groupBy("__file")
-              .agg(F.sum(F.when(F.col("pos") === 0, 1L).otherwise(0L))
-                .as("firsts"))
-              .collect().map(r => (r.getString(0), r.getLong(1)))
-          }
-          // O(files) suffix-set probe (file entries are always
-          // data/<token>/part-*, three segments)
-          val hitRel = perFile.iterator
-            .map(x => relPathOf(x._1)).toSet
-          val affected = base.files.filter(hitRel)
-          val matched = perFile.map(_._2).sum
-          if (affected.isEmpty) {
-            // no collisions: the merge is a plain append of updates
-            beforeCommit()
-            while (result.isEmpty) {
-              val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-              if (replayed(cur)) result = Some(Merge(cur, 0L, 0L))
-              else {
-                val files = cur.files ++ updFiles
-                val sc = Some(mergeSchemaJson(
-                  seededSchemaJson(spark, root, cur), u.schema,
-                  reservedNames(cur.meta)))
-                val stats = cur.stats ++ updStats
-                if (tryCommit(root, cur.version + 1, files, metaFor(cur),
-                  sc, stats))
-                  result = Some(Merge(Snapshot(cur.version + 1, files,
-                    metaFor(cur), sc, liveStats(files, stats)), 0L, nU))
-              }
-            }
-          } else {
-            // read the affected subset through the SAME mapped
-            // projection as any read — renamed columns coalesce, so
-            // the survivors (and thus the rewritten files) carry the
-            // CURRENT names
-            val affectedScan =
-              readSnapshot(spark, root, base.copy(files = affected))
-            // drop the replaced versions; their update rows arrive
-            // via the already-written update files
-            val survivors = affectedScan.join(uIds,
-              affectedScan(idCol) === uIds("__merge_id"), "left_anti")
-            val (newFiles, token, newStats) =
-              writeData(spark, root, survivors, statSpecOf(Some(base)))
-            try {
-              beforeCommit()
-              val affectedSet = affected.toSet
-              var retryScan = false
-              while (result.isEmpty && !retryScan) {
-                val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-                if (replayed(cur)) result = Some(Merge(cur, 0L, 0L))
-                // survivors were read through base's DV overlay — a
-                // moved DV state is a conflict, same as a file rewrite
-                else if (!affectedSet.subsetOf(cur.files.toSet) ||
-                  affected.exists(f =>
-                    dvStateOf(cur, f) != dvStateOf(base, f))) {
-                  restarts += 1
-                  if (restarts >= maxRestarts)
-                    throw new IllegalStateException(
-                      s"upsert at $root lost $restarts consecutive " +
-                        "rewrite races; pause compaction or raise maxRestarts")
-                  retryScan = true
-                } else {
-                  val files =
-                    cur.files.filterNot(affectedSet) ++ newFiles ++ updFiles
-                  val sc = Some(mergeSchemaJson(
-                    seededSchemaJson(spark, root, cur), u.schema,
-                    reservedNames(cur.meta)))
-                  val stats = cur.stats ++ newStats ++ updStats
-                  if (tryCommit(root, cur.version + 1, files, metaFor(cur),
-                    sc, stats))
-                    result = Some(Merge(
-                      Snapshot(cur.version + 1, files, metaFor(cur), sc,
-                        liveStats(files, stats)),
-                      matched, nU - matched))
-                }
-              }
-            } finally clearIntent(root, token)
-          }
-        }
+    // the updates write ONCE, on the first attempt; a restart reuses
+    // their files and re-derives only the rewritten survivors
+    var upd: Option[(Seq[String], Map[String, String])] = None
+    // with a batch id every attempt re-checks the ledger (a racing
+    // duplicate may have committed the batch while this writer was
+    // scanning/writing) and the commit carries the marker
+    transact(root, "upsert", Restart, head = head,
+      ledger = batchId.map(_ -> ((s: Snapshot) => Merge(s, 0L, 0L))),
+      beforeCommit = beforeCommit) { (hd, w) =>
+      val base = present(root, hd)
+      val (updFiles, updStats) = upd.getOrElse {
+        upd = Some(w.data(spark, u, base))
+        upd.get
       }
-      result.get
-    } finally clearIntent(root, updToken)
+      val scanFiles =
+        if (base.files.isEmpty) Seq.empty
+        else prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
+      // one pushed-down job over the CANDIDATE files only: per
+      // matched id, every file holding a row for it — each id
+      // attributed ONCE (to its first file), so `matched` counts
+      // DISTINCT ids even when racing appends left duplicate rows
+      // for one id, possibly across files (insertedRows =
+      // nU - matched can never go negative)
+      val perFile = if (scanFiles.isEmpty) Array.empty[(String, Long)]
+      else {
+        val scan = readSnapshotImpl(spark, root,
+          base.copy(files = scanFiles), fileCol = Some("__file"),
+          posCol = None)
+        scan
+          .join(uIds, scan(idCol) === uIds("__merge_id"), "left_semi")
+          .select(F.col("__file"), F.col(idCol).as("__id"))
+          .groupBy("__id")
+          .agg(F.sort_array(F.collect_set("__file")).as("fs"))
+          .select(F.posexplode(F.col("fs")).as(Seq("pos", "__file")))
+          .groupBy("__file")
+          .agg(F.sum(F.when(F.col("pos") === 0, 1L).otherwise(0L))
+            .as("firsts"))
+          .collect().map(r => (r.getString(0), r.getLong(1)))
+      }
+      // O(files) suffix-set probe (file entries are always
+      // data/<token>/part-*, three segments)
+      val hitRel = perFile.iterator
+        .map(x => relPathOf(x._1)).toSet
+      val affected = base.files.filter(hitRel)
+      val matched = perFile.map(_._2).sum
+      // no collisions: the merge is a plain append of the updates.
+      // Otherwise read the affected subset through the SAME mapped
+      // projection as any read — renamed columns coalesce, so the
+      // survivors (and thus the rewritten files) carry the CURRENT
+      // names — and drop the replaced versions; their update rows
+      // arrive via the already-written update files
+      val (newFiles, newStats) =
+        if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
+        else {
+          val affectedScan =
+            readSnapshot(spark, root, base.copy(files = affected))
+          w.data(spark, affectedScan.join(uIds,
+            affectedScan(idCol) === uIds("__merge_id"), "left_anti"), base)
+        }
+      val affectedSet = affected.toSet
+      Right(Plan(cur => Some(cur.copy(
+        files = cur.files.filterNot(affectedSet) ++ newFiles ++ updFiles,
+        stats = cur.stats ++ newStats ++ updStats)),
+        Merge(_, matched, nU - matched), readSet = affected,
+        schema = Some(u.schema)))
+    }
   }
 
   /** One `WHEN MATCHED` / `WHEN NOT MATCHED BY SOURCE` clause of a
@@ -2495,10 +2361,10 @@ object ManifestTable {
     * through the same bounds/Bloom stats (an unconditional clause
     * degrades to a full scan, necessarily: every unmatched row
     * changes). Files with no row fired by any clause carry by
-    * reference untouched. Same optimistic commit +
-    * restart-on-conflicting-rewrite + snapshot-isolation semantics
-    * as [[deleteWhere]]/[[upsert]]: a concurrent append post-dates
-    * the match scan and lands unmerged.
+    * reference untouched. Conflict rule RESTART (the class doc),
+    * with the snapshot-isolation reading of [[deleteWhere]]/
+    * [[upsert]]: a concurrent append post-dates the match scan and
+    * lands unmerged.
     *
     * With `batchId` the commit carries the `#batch:<id>` ledger
     * marker in the SAME atomic publish — a replayed merge (same id)
@@ -2513,9 +2379,7 @@ object ManifestTable {
                 notMatched: Seq[WhenNotMatched] = Seq.empty,
                 notMatchedBySource: Seq[WhenMatched] = Seq.empty,
                 batchId: Option[Long] = None,
-                beforeCommit: () => Unit = () => (),
-                maxRestarts: Int = 8): Merge = {
-    require(maxRestarts >= 1, "maxRestarts must be >= 1")
+                beforeCommit: () => Unit = () => ()): Merge = {
     require(matched.nonEmpty || notMatched.nonEmpty ||
       notMatchedBySource.nonEmpty, "mergeInto needs at least one clause")
     require(idCols.nonEmpty && idCols.size == sourceKeys.size,
@@ -2529,14 +2393,10 @@ object ManifestTable {
     require(!srcNames.exists(_.startsWith("__")),
       "merge source column names must not start with '__' (reserved " +
         "for the merge frame)")
-    def replayed(cur: Snapshot): Boolean =
-      batchId.exists(batchCommitted(cur, _))
-    latest(root) match {
-      case Some(head) if replayed(head) => return Merge(head, 0L, 0L)
-      case None =>
-        throw new IllegalStateException(s"no manifest at $root")
-      case _ => ()
-    }
+    // a replay returns before the source is even pinned; the head
+    // read here is also the transaction's first snapshot
+    val head = present(root, latest(root).getOrElse(Empty))
+    if (batchId.exists(batchCommitted(head, _))) return Merge(head, 0L, 0L)
     val keyCols = idCols.indices.map(mergeKeyCol)
     // the source pins once: keys first, columns under the __s_
     // prefix, plus the match marker the left-outer join nulls out
@@ -2582,255 +2442,215 @@ object ManifestTable {
     // no condition can be TRUE has no firable row either way
     def anyRaw(cs: Seq[WhenMatched]): Column =
       cs.map(_.condition.getOrElse(F.lit(true))).reduce(_ || _)
-    def metaFor(cur: Snapshot): Seq[String] =
-      batchId.map(id => cur.meta :+ s"$BatchPrefix$id").getOrElse(cur.meta)
 
-    var restarts = 0
-    var result: Option[Merge] = None
-    while (result.isEmpty) {
-      val base = latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
-      if (replayed(base)) { result = Some(Merge(base, 0L, 0L)) }
-      else {
-        // ---- victim discovery (pruned probes, driver-sized output)
-        // key candidates serve BOTH the matched probe and the insert
-        // anti-join: conservative superset of files that can hold a
-        // source key
-        val keyFiles =
-          if (base.files.isEmpty) Seq.empty
-          else keyPrune.map(candidateFiles(spark, root, base, _))
-            .getOrElse(base.files)
-        // the ANSI cardinality check, on the rows it actually covers:
-        // a violation is a target row MORE THAN ONE source row would
-        // actually MODIFY (fire a matched clause on) — duplicates
-        // matching nothing are legal inserts, and duplicate copies
-        // whose conditions are false on that row attempt nothing. The
-        // probe is bounded to dup-keyed target rows (semi-join), then
-        // counts FIRING source pairs per target row.
-        if (matched.nonEmpty && dupKeys.nonEmpty && keyFiles.nonEmpty) {
-          val dk = dupKeys.get
-          val scan = readSnapshot(spark, root, base.copy(files = keyFiles))
-          val dup = scan.join(dk, keyJoinCond(scan, dk), "left_semi")
-            .withColumn("__rowid", F.monotonically_increasing_id())
-          val firing = dup.join(src, keyJoinCond(dup, src), "inner")
+    transact(root, "mergeInto", Restart, head = Some(head),
+      ledger = batchId.map(_ -> ((s: Snapshot) => Merge(s, 0L, 0L))),
+      beforeCommit = beforeCommit) { (base, w) =>
+      // ---- victim discovery (pruned probes, driver-sized output)
+      // key candidates serve BOTH the matched probe and the insert
+      // anti-join: conservative superset of files that can hold a
+      // source key
+      val keyFiles =
+        if (base.files.isEmpty) Seq.empty
+        else keyPrune.map(candidateFiles(spark, root, base, _))
+          .getOrElse(base.files)
+      // the ANSI cardinality check, on the rows it actually covers:
+      // a violation is a target row MORE THAN ONE source row would
+      // actually MODIFY (fire a matched clause on) — duplicates
+      // matching nothing are legal inserts, and duplicate copies
+      // whose conditions are false on that row attempt nothing. The
+      // probe is bounded to dup-keyed target rows (semi-join), then
+      // counts FIRING source pairs per target row.
+      if (matched.nonEmpty && dupKeys.nonEmpty && keyFiles.nonEmpty) {
+        val dk = dupKeys.get
+        val scan = readSnapshot(spark, root, base.copy(files = keyFiles))
+        val dup = scan.join(dk, keyJoinCond(scan, dk), "left_semi")
+          .withColumn("__rowid", F.monotonically_increasing_id())
+        val firing = dup.join(src, keyJoinCond(dup, src), "inner")
+          .filter(anyHolds(matched))
+        require(firing.groupBy("__rowid").count()
+          .filter(F.col("count") > 1).isEmpty,
+          "mergeInto: more than one source row (duplicate key " +
+            "tuples) attempts to modify the same target row — which " +
+            "copy updates it would be nondeterministic (the ANSI " +
+            "MERGE cardinality violation); de-duplicate the source " +
+            "first")
+      }
+      val nmbsFiles =
+        if (notMatchedBySource.isEmpty || base.files.isEmpty) Seq.empty
+        else candidateFiles(spark, root, base,
+          anyRaw(notMatchedBySource))
+      def scanOf(files: Seq[String]): DataFrame =
+        readSnapshotImpl(spark, root, base.copy(files = files),
+          fileCol = Some("__file"), posCol = None)
+      // per-file fired-row counts, matched and not-matched-by-source
+      // tagged apart — ONE pushed-down job over the union
+      val mProbe =
+        if (matched.isEmpty || keyFiles.isEmpty) None
+        else {
+          val scan = scanOf(keyFiles)
+          Some(scan
+            .join(src, keyJoinCond(scan, src), "inner")
             .filter(anyHolds(matched))
-          require(firing.groupBy("__rowid").count()
-            .filter(F.col("count") > 1).isEmpty,
-            "mergeInto: more than one source row (duplicate key " +
-              "tuples) attempts to modify the same target row — which " +
-              "copy updates it would be nondeterministic (the ANSI " +
-              "MERGE cardinality violation); de-duplicate the source " +
-              "first")
+            .select(F.col("__file"), F.lit(true).as("__m")))
         }
-        val nmbsFiles =
-          if (notMatchedBySource.isEmpty || base.files.isEmpty) Seq.empty
-          else candidateFiles(spark, root, base,
-            anyRaw(notMatchedBySource))
-        def scanOf(files: Seq[String]): DataFrame =
-          readSnapshotImpl(spark, root, base.copy(files = files),
-            fileCol = Some("__file"), posCol = None)
-        // per-file fired-row counts, matched and not-matched-by-source
-        // tagged apart — ONE pushed-down job over the union
-        val mProbe =
-          if (matched.isEmpty || keyFiles.isEmpty) None
-          else {
-            val scan = scanOf(keyFiles)
-            Some(scan
-              .join(src, keyJoinCond(scan, src), "inner")
-              .filter(anyHolds(matched))
-              .select(F.col("__file"), F.lit(true).as("__m")))
+      val nProbe =
+        if (nmbsFiles.isEmpty) None
+        else {
+          val scan = scanOf(nmbsFiles)
+          Some(scan
+            .join(srcKeys, keyJoinCond(scan, srcKeys), "left_anti")
+            .filter(anyHolds(notMatchedBySource))
+            .select(F.col("__file"), F.lit(false).as("__m")))
+        }
+      val perFile = (mProbe ++ nProbe).reduceOption(_ unionByName _)
+        .map(_.groupBy("__file")
+          .agg(F.sum(F.when(F.col("__m"), 1L).otherwise(0L)).as("m"))
+          .collect().map(r => (r.getString(0), r.getLong(1))))
+        .getOrElse(Array.empty[(String, Long)])
+      val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
+      val affected = base.files.filter(hitRel)
+      val matchedRows = perFile.map(_._2).sum
+      // ---- the rewritten victims: left-outer the source onto the
+      // affected rows, fold the clauses first-true-wins
+      val rewritten =
+        if (affected.isEmpty) None
+        else {
+          val victims = readSnapshot(spark, root,
+            base.copy(files = affected))
+          val unknown = (matched ++ notMatchedBySource).flatMap {
+            case WhenMatched(_, MergeUpdate(as)) => as.keys
+            case _ => Nil
+          }.toSet -- victims.columns.toSet
+          require(unknown.isEmpty,
+            "merge UPDATE assigns to unknown column(s): " +
+              unknown.mkString(","))
+          // with no matched clause, no kept expression references a
+          // source column — join only the DEDUPLICATED key+marker
+          // frame, so a duplicate source key (legal here) cannot fan
+          // a carried row out into two copies
+          val joinSrc =
+            if (matched.nonEmpty) src
+            else src.select(keyCols.map(F.col) :+
+              F.col(MergePresentCol): _*).dropDuplicates(keyCols)
+          val frame = victims.join(joinSrc,
+            keyJoinCond(victims, joinSrc), "left_outer")
+          val isM = F.coalesce(F.col(MergePresentCol), F.lit(false))
+          // clause index: matched clauses 0.., NMBS clauses offset
+          // by the matched count; -1 = untouched
+          val allClauses = matched ++ notMatchedBySource
+          val clauseIdx = allClauses.zipWithIndex.foldRight(
+            F.lit(-1): Column) { case ((cl, i), rest) =>
+            val side = if (i < matched.size) isM else !isM
+            F.when(side && holds(cl.condition), F.lit(i)).otherwise(rest)
           }
-        val nProbe =
-          if (nmbsFiles.isEmpty) None
-          else {
-            val scan = scanOf(nmbsFiles)
-            Some(scan
-              .join(srcKeys, keyJoinCond(scan, srcKeys), "left_anti")
-              .filter(anyHolds(notMatchedBySource))
-              .select(F.col("__file"), F.lit(false).as("__m")))
+          val tagged = frame.withColumn("__clause", clauseIdx)
+          val dropIdx = allClauses.zipWithIndex.collect {
+            case (WhenMatched(_, MergeDelete), i) => i }
+          val kept =
+            if (dropIdx.isEmpty) tagged
+            else tagged.filter(!F.col("__clause")
+              .isInCollection(dropIdx.map(Int.box)))
+          Some(kept.select(victims.columns.toIndexedSeq.map { c =>
+            val folded = allClauses.zipWithIndex.foldRight(
+              victims(c)) { case ((cl, i), rest) =>
+              cl.action match {
+                case MergeUpdate(as) if as.contains(c) =>
+                  F.when(F.col("__clause") === i, as(c)).otherwise(rest)
+                case _ => rest
+              }
+            }
+            folded.as(c)
+          }: _*))
+        }
+      // ---- the inserts: source rows matching NO target key, first
+      // insert clause wins, unassigned columns NULL
+      val targetSchema = recordedSchema(base).getOrElse(
+        rewritten.map(r => r.schema).getOrElse(
+          if (base.files.isEmpty) StructType(Seq.empty)
+          else readSnapshot(spark, root, base).schema))
+      val inserts =
+        if (notMatched.isEmpty) None
+        else {
+          val unmatched =
+            if (base.files.isEmpty || keyFiles.isEmpty) src
+            else {
+              val keys = readSnapshot(spark, root,
+                base.copy(files = keyFiles))
+                .select(idCols.map(F.col): _*)
+              src.join(keys, keyJoinCond(keys, src), "left_anti")
+            }
+          val iIdx = notMatched.zipWithIndex.foldRight(
+            F.lit(-1): Column) { case ((cl, i), rest) =>
+            F.when(holds(cl.condition), F.lit(i)).otherwise(rest)
           }
-        val perFile = (mProbe ++ nProbe).reduceOption(_ unionByName _)
-          .map(_.groupBy("__file")
-            .agg(F.sum(F.when(F.col("__m"), 1L).otherwise(0L)).as("m"))
-            .collect().map(r => (r.getString(0), r.getLong(1))))
-          .getOrElse(Array.empty[(String, Long)])
-        val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
-        val affected = base.files.filter(hitRel)
-        val matchedRows = perFile.map(_._2).sum
-        // ---- the rewritten victims: left-outer the source onto the
-        // affected rows, fold the clauses first-true-wins
-        val rewritten =
-          if (affected.isEmpty) None
-          else {
-            val victims = readSnapshot(spark, root,
-              base.copy(files = affected))
-            val unknown = (matched ++ notMatchedBySource).flatMap {
-              case WhenMatched(_, MergeUpdate(as)) => as.keys
-              case _ => Nil
-            }.toSet -- victims.columns.toSet
+          val fired = unmatched.withColumn("__iclause", iIdx)
+            .filter(F.col("__iclause") >= 0)
+          if (targetSchema.nonEmpty) {
+            val unknown = notMatched.flatMap(_.assignments.keys).toSet --
+              targetSchema.fieldNames.toSet
             require(unknown.isEmpty,
-              "merge UPDATE assigns to unknown column(s): " +
+              "merge INSERT assigns to unknown column(s): " +
                 unknown.mkString(","))
-            // with no matched clause, no kept expression references a
-            // source column — join only the DEDUPLICATED key+marker
-            // frame, so a duplicate source key (legal here) cannot fan
-            // a carried row out into two copies
-            val joinSrc =
-              if (matched.nonEmpty) src
-              else src.select(keyCols.map(F.col) :+
-                F.col(MergePresentCol): _*).dropDuplicates(keyCols)
-            val frame = victims.join(joinSrc,
-              keyJoinCond(victims, joinSrc), "left_outer")
-            val isM = F.coalesce(F.col(MergePresentCol), F.lit(false))
-            // clause index: matched clauses 0.., NMBS clauses offset
-            // by the matched count; -1 = untouched
-            val allClauses = matched ++ notMatchedBySource
-            val clauseIdx = allClauses.zipWithIndex.foldRight(
-              F.lit(-1): Column) { case ((cl, i), rest) =>
-              val side = if (i < matched.size) isM else !isM
-              F.when(side && holds(cl.condition), F.lit(i)).otherwise(rest)
+          }
+          val cols =
+            if (targetSchema.nonEmpty) targetSchema.fields.toSeq
+            else {
+              // empty un-seeded table: the insert clauses define the
+              // shape — every assigned column, in first-clause order
+              val names = notMatched.flatMap(_.assignments.keys).distinct
+              require(names.nonEmpty, "mergeInto into an empty " +
+                "schemaless table needs at least one INSERT assignment")
+              names.map(n => StructField(n, NullType))
             }
-            val tagged = frame.withColumn("__clause", clauseIdx)
-            val dropIdx = allClauses.zipWithIndex.collect {
-              case (WhenMatched(_, MergeDelete), i) => i }
-            val kept =
-              if (dropIdx.isEmpty) tagged
-              else tagged.filter(!F.col("__clause")
-                .isInCollection(dropIdx.map(Int.box)))
-            Some(kept.select(victims.columns.toIndexedSeq.map { c =>
-              val folded = allClauses.zipWithIndex.foldRight(
-                victims(c)) { case ((cl, i), rest) =>
-                cl.action match {
-                  case MergeUpdate(as) if as.contains(c) =>
-                    F.when(F.col("__clause") === i, as(c)).otherwise(rest)
-                  case _ => rest
+          val nullRest: StructField => Column = f =>
+            if (targetSchema.nonEmpty) F.lit(null).cast(f.dataType)
+            else F.lit(null)
+          Some(fired.select(cols.map { f =>
+            val v = notMatched.zipWithIndex.foldRight(nullRest(f)) {
+              case ((cl, i), rest) =>
+                cl.assignments.get(f.name) match {
+                  case Some(e) => F.when(F.col("__iclause") === i, e)
+                    .otherwise(rest)
+                  case None => rest
                 }
-              }
-              folded.as(c)
-            }: _*))
-          }
-        // ---- the inserts: source rows matching NO target key, first
-        // insert clause wins, unassigned columns NULL
-        val targetSchema = recordedSchema(base).getOrElse(
-          rewritten.map(r => r.schema).getOrElse(
-            if (base.files.isEmpty) StructType(Seq.empty)
-            else readSnapshot(spark, root, base).schema))
-        val inserts =
-          if (notMatched.isEmpty) None
-          else {
-            val unmatched =
-              if (base.files.isEmpty || keyFiles.isEmpty) src
-              else {
-                val keys = readSnapshot(spark, root,
-                  base.copy(files = keyFiles))
-                  .select(idCols.map(F.col): _*)
-                src.join(keys, keyJoinCond(keys, src), "left_anti")
-              }
-            val iIdx = notMatched.zipWithIndex.foldRight(
-              F.lit(-1): Column) { case ((cl, i), rest) =>
-              F.when(holds(cl.condition), F.lit(i)).otherwise(rest)
             }
-            val fired = unmatched.withColumn("__iclause", iIdx)
-              .filter(F.col("__iclause") >= 0)
-            if (targetSchema.nonEmpty) {
-              val unknown = notMatched.flatMap(_.assignments.keys).toSet --
-                targetSchema.fieldNames.toSet
-              require(unknown.isEmpty,
-                "merge INSERT assigns to unknown column(s): " +
-                  unknown.mkString(","))
-            }
-            val cols =
-              if (targetSchema.nonEmpty) targetSchema.fields.toSeq
-              else {
-                // empty un-seeded table: the insert clauses define the
-                // shape — every assigned column, in first-clause order
-                val names = notMatched.flatMap(_.assignments.keys).distinct
-                require(names.nonEmpty, "mergeInto into an empty " +
-                  "schemaless table needs at least one INSERT assignment")
-                names.map(n => StructField(n, NullType))
-              }
-            val nullRest: StructField => Column = f =>
-              if (targetSchema.nonEmpty) F.lit(null).cast(f.dataType)
-              else F.lit(null)
-            Some(fired.select(cols.map { f =>
-              val v = notMatched.zipWithIndex.foldRight(nullRest(f)) {
-                case ((cl, i), rest) =>
-                  cl.assignments.get(f.name) match {
-                    case Some(e) => F.when(F.col("__iclause") === i, e)
-                      .otherwise(rest)
-                    case None => rest
-                  }
-              }
-              (if (targetSchema.nonEmpty) v.cast(f.dataType) else v)
-                .as(f.name)
-            }: _*))
-          }
-        // type-safety: a rewrite must not change the recorded shape
-        rewritten.foreach { r =>
-          val before = readSnapshot(spark, root,
-            base.copy(files = affected)).schema
-          before.fields.zip(r.schema.fields).foreach { case (a, b) =>
-            require(a.dataType.catalogString == b.dataType.catalogString,
-              s"merge assignment changes column '${a.name}' from " +
-                s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
-          }
+            (if (targetSchema.nonEmpty) v.cast(f.dataType) else v)
+              .as(f.name)
+          }: _*))
         }
-        val insertsPinned = inserts.map(_.localCheckpoint(eager = true))
-        val insertedRows = insertsPinned.map(_.count()).getOrElse(0L)
-        val outFrames = rewritten.toSeq ++
-          insertsPinned.filter(_ => insertedRows > 0L)
-        if (outFrames.isEmpty) {
-          // nothing fired: no-op — unless the ledger marker must land
-          if (batchId.isEmpty) result = Some(Merge(base, 0L, 0L))
-          else {
-            val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-            if (replayed(cur)) result = Some(Merge(cur, 0L, 0L))
-            else if (tryCommit(root, cur.version + 1, cur.files,
-              metaFor(cur), cur.schemaJson, cur.stats))
-              result = Some(Merge(Snapshot(cur.version + 1, cur.files,
-                metaFor(cur), cur.schemaJson, cur.stats), 0L, 0L))
-          }
-        } else {
-          val out = outFrames.reduce(_ unionByName _)
-          val (newFiles, token, newStats) =
-            writeData(spark, root, out, statSpecOf(Some(base)))
-          try {
-            beforeCommit()
-            val affectedSet = affected.toSet
-            var retryScan = false
-            while (result.isEmpty && !retryScan) {
-              val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-              if (replayed(cur)) result = Some(Merge(cur, 0L, 0L))
-              // the merge frame was read through base's DV overlay — a
-              // moved DV state is a conflict, same as a file rewrite
-              else if (!affectedSet.subsetOf(cur.files.toSet) ||
-                affected.exists(f =>
-                  dvStateOf(cur, f) != dvStateOf(base, f))) {
-                restarts += 1
-                if (restarts >= maxRestarts)
-                  throw new IllegalStateException(
-                    s"mergeInto at $root lost $restarts consecutive " +
-                      "rewrite races; pause compaction or raise maxRestarts")
-                retryScan = true
-              } else {
-                val files = cur.files.filterNot(affectedSet) ++ newFiles
-                val sc = Some(mergeSchemaJson(
-                  seededSchemaJson(spark, root, cur), out.schema,
-                  reservedNames(cur.meta)))
-                val stats = cur.stats ++ newStats
-                if (tryCommit(root, cur.version + 1, files, metaFor(cur),
-                  sc, stats))
-                  result = Some(Merge(
-                    Snapshot(cur.version + 1, files, metaFor(cur), sc,
-                      liveStats(files, stats)),
-                    matchedRows, insertedRows))
-              }
-            }
-          } finally clearIntent(root, token)
+      // type-safety: a rewrite must not change the recorded shape
+      rewritten.foreach { r =>
+        val before = readSnapshot(spark, root,
+          base.copy(files = affected)).schema
+        before.fields.zip(r.schema.fields).foreach { case (a, b) =>
+          require(a.dataType.catalogString == b.dataType.catalogString,
+            s"merge assignment changes column '${a.name}' from " +
+              s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
         }
       }
+      val insertsPinned = inserts.map(_.localCheckpoint(eager = true))
+      val insertedRows = insertsPinned.map(_.count()).getOrElse(0L)
+      val outFrames = rewritten.toSeq ++
+        insertsPinned.filter(_ => insertedRows > 0L)
+      if (outFrames.isEmpty) {
+        // nothing fired: no-op — unless the ledger marker must land
+        // (the core adds it to an otherwise unchanged head)
+        if (batchId.isEmpty) Left(Merge(base, 0L, 0L))
+        else Right(Plan(cur => Some(cur), Merge(_, 0L, 0L)))
+      } else {
+        // the merge frame was read through base's DV overlay: the
+        // affected files are the read set
+        val out = outFrames.reduce(_ unionByName _)
+        val (newFiles, newStats) = w.data(spark, out, base)
+        val affectedSet = affected.toSet
+        Right(Plan(cur => Some(cur.copy(
+          files = cur.files.filterNot(affectedSet) ++ newFiles,
+          stats = cur.stats ++ newStats)),
+          Merge(_, matchedRows, insertedRows), readSet = affected,
+          schema = Some(out.schema)))
+      }
     }
-    result.get
   }
 
   /** The files of `snap` that MAY contain rows matching `predicate`,
@@ -3015,26 +2835,22 @@ object ManifestTable {
   /** The shared copy-on-write engine: locate the files containing
     * `hits` rows (one pushed-down job that also prices the report),
     * rewrite ONLY those files through `rewrite`, and commit through
-    * the optimistic loop with delete-style restart semantics.
+    * [[transact]] under conflict rule RESTART, the affected files as
+    * the read set.
     * `prune` (the op's predicate, when it has a stats-evaluable one)
     * bounds even the VICTIM SCAN to the manifest's candidate files —
     * the affected set is provably inside it, so skipped files need
     * neither scanning nor rewriting. */
-  private def rewriteWith(spark: SparkSession, root: String,
+  private def rewriteWith(spark: SparkSession, root: String, op: String,
                           hits: DataFrame => DataFrame,
                           rewrite: DataFrame => DataFrame,
                           beforeCommit: () => Unit,
-                          maxRestarts: Int,
-                          prune: Option[Column] = None): Delete = {
-    require(maxRestarts >= 1, "maxRestarts must be >= 1")
-    var restarts = 0
-    var result: Option[Delete] = None
-    while (result.isEmpty) {
-      val base = latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
+                          prune: Option[Column] = None): Delete =
+    transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
+      val base = present(root, head)
       val scanFiles =
         prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-      if (scanFiles.isEmpty) result = Some(Delete(base, 0L))
+      if (scanFiles.isEmpty) Left(Delete(base, 0L))
       else {
         // the provenance column materializes AT THE SCAN, before any
         // join/shuffle `hits` may introduce — and the scan overlays
@@ -3050,69 +2866,22 @@ object ManifestTable {
         val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
         val affected = base.files.filter(hitRel)
         val removed = perFile.map(_._2).sum
-        if (affected.isEmpty) result = Some(Delete(base, 0L))
+        if (affected.isEmpty) Left(Delete(base, 0L))
         else {
           // rewrite ONLY the affected files — through the mapped
           // projection, so rewritten files carry the CURRENT names
           val affectedScan =
             readSnapshot(spark, root, base.copy(files = affected))
-          val (newFiles, token, newStats) =
-            writeData(spark, root, rewrite(affectedScan),
-              statSpecOf(Some(base)))
-          try {
-            beforeCommit()
-            val affectedSet = affected.toSet
-            var retryScan = false
-            while (result.isEmpty && !retryScan) {
-              val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-              if (!affectedSet.subsetOf(cur.files.toSet) ||
-                affected.exists(f =>
-                  dvStateOf(cur, f) != dvStateOf(base, f))) {
-                // a rewrite replaced our victims' files — or a
-                // concurrent MoR delete moved a file's DV state (our
-                // survivor scan used the OLD overlay and would
-                // resurrect its victims). The delete must still
-                // apply, so re-scan against the new snapshot; our
-                // rewritten files become orphans
-                restarts += 1
-                if (restarts >= maxRestarts)
-                  throw new IllegalStateException(
-                    s"row rewrite at $root lost $restarts consecutive " +
-                      "rewrite races; pause compaction or raise maxRestarts")
-                retryScan = true
-              } else {
-                val files = cur.files.filterNot(affectedSet) ++ newFiles
-                val stats = cur.stats ++ newStats
-                if (tryCommit(root, cur.version + 1, files, cur.meta,
-                  cur.schemaJson, stats))
-                  result = Some(Delete(
-                    Snapshot(cur.version + 1, files, cur.meta,
-                      cur.schemaJson, liveStats(files, stats)), removed))
-              }
-            }
-          } finally clearIntent(root, token)
+          val (newFiles, newStats) =
+            w.data(spark, rewrite(affectedScan), base)
+          val affectedSet = affected.toSet
+          Right(Plan(cur => Some(cur.copy(
+            files = cur.files.filterNot(affectedSet) ++ newFiles,
+            stats = cur.stats ++ newStats)), Delete(_, removed),
+            readSet = affected))
         }
       }
     }
-    result.get
-  }
-
-  /** Optimistic commit: recompute the file list against the latest
-    * snapshot until the version publish wins. */
-  private def commitLoop(root: String)
-      (merge: Snapshot =>
-        (Seq[String], Seq[String], Option[String], Map[String, String]))
-      : Snapshot = {
-    var committed: Option[Snapshot] = None
-    while (committed.isEmpty) {
-      val cur = latest(root).getOrElse(Snapshot(-1, Seq.empty))
-      val (files, meta, schema, stats) = merge(cur)
-      if (tryCommit(root, cur.version + 1, files, meta, schema, stats))
-        committed = Some(Snapshot(cur.version + 1, files, meta, schema,
-          liveStats(files, stats)))
-    }
-    committed.get
-  }
 
   /** TABLE HISTORY — one row per SURVIVING manifest version, from
     * metadata alone (zero data I/O): file count, total rows (when
@@ -3192,7 +2961,7 @@ object ManifestTable {
     *    older versions have drained;
     *  - WRITE INTENTS (structural): a file whose `data/<token>/`
     *    write is still in flight — intent registered at
-    *    [[writeData]], cleared when the writer's commit loop
+    *    [[writeData]], cleared when the writer's transaction
     *    resolves — is spared unconditionally, however old. This
     *    closes the stalled-writer hole mtime grace alone leaves: a
     *    writer paused longer than the grace between writeData and

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.ManifestTable
 
@@ -864,6 +865,61 @@ class ManifestTableSpec extends SparkSpec {
     assert(ManifestTable.read(spark, root).count() == 20)
   }
 
+  private val tagCol = StructType(Seq(StructField("tag", StringType)))
+
+  test("overwriteWhere racing addColumns keeps the added column (replace and no-victim paths)") {
+    val root = java.nio.file.Files.createTempDirectory("graft_owadd").toString
+    ManifestTable.init(root, Seq("id"))
+    ManifestTable.append(spark, root, batch(0, 100))
+    // the column lands BETWEEN the replace's scan and its commit: the
+    // schema must merge against the head it publishes on, not the
+    // scan-time base
+    val d = ManifestTable.overwriteWhere(spark, root, F.col("id") < 10,
+      (0L until 5L).toDF("id").withColumn("payload", F.lit("re")),
+      beforeCommit = () => {
+        ManifestTable.addColumns(spark, root, tagCol); ()
+      })
+    assert(d.removedRows == 10L)
+    assert(ManifestTable.read(spark, root).columns.toSeq ==
+      Seq("id", "payload", "tag"), "the racing addColumns was lost")
+    assert(ids(root) == ((0L until 5L) ++ (10L until 100L)).toSet)
+    // a no-victim replace (a plain ledgered append) merges the same way
+    ManifestTable.overwriteWhere(spark, root, F.col("id") >= 1000,
+      Seq(1000L).toDF("id").withColumn("payload", F.lit("n")),
+      beforeCommit = () => {
+        ManifestTable.addColumns(spark, root,
+          StructType(Seq(StructField("tag2", LongType)))); ()
+      })
+    assert(ManifestTable.read(spark, root).columns.toSeq ==
+      Seq("id", "payload", "tag", "tag2"))
+    assert(ids(root).contains(1000L))
+  }
+
+  test("overwriteWhere racing a rename refuses and commits nothing, as append does") {
+    val root = java.nio.file.Files.createTempDirectory("graft_owren").toString
+    ManifestTable.init(root, Seq("id"))
+    ManifestTable.append(spark, root, batch(0, 100))
+    // the reload still carries 'payload', which the racing rename
+    // reserved: publishing it would record `id,payload` beside a
+    // `body=payload` chain
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.overwriteWhere(spark, root, F.col("id") < 10,
+        (0L until 5L).toDF("id").withColumn("payload", F.lit("re")),
+        beforeCommit = () => {
+          ManifestTable.renameColumn(spark, root, "payload", "body"); ()
+        })
+    }
+    assert(e.getMessage.contains("reserved"))
+    val head = ManifestTable.latest(root).get
+    assert(head.version == 2, s"the refused replace committed: v${head.version}")
+    assert(ManifestTable.read(spark, root).columns.toSeq == Seq("id", "body"))
+    assert(ids(root) == (0L until 100L).toSet)
+    assert(ManifestTable.vacuum(root, orphanGraceMillis = 0)
+      .exists(_.endsWith(".parquet")),
+      "the refused replace's files must be vacuumable, not intent-pinned")
+    assert(ids(root) == (0L until 100L).toSet)
+  }
+
   test("column drop: reads and rewrites exclude the column; the name (and its chain) is tombstoned") {
     val root = java.nio.file.Files.createTempDirectory("graft_drop").toString
     ManifestTable.init(root)
@@ -1586,5 +1642,183 @@ class ManifestTableSpec extends SparkSpec {
     assert(got.size == 51L) // 50 odd survivors + the insert
     assert(got(1L) == "up" && got(3L) == "up" && got(200L) == "up")
     assert(!got.contains(2L), "a deleted row resurrected through upsert")
+  }
+
+  // ---- the conflict matrix: every writer exposing beforeCommit x an
+  // injected concurrent operation. One data file, so every writer's
+  // read set is that file and every injected rewrite or DV lands on
+  // it. Outcomes (the class doc's conflict rules):
+  //  merge   — the writer publishes on the injected head, one attempt;
+  //  restart — the writer reruns its scan once, then publishes;
+  //  abort   — the writer publishes nothing and returns the head;
+  //  refuse  — the writer throws (a reserved column name) and
+  //            publishes nothing.
+  private type Rows = Map[Long, String]
+
+  /** A writer row: its call (beforeCommit injected) and its effect on
+    * the id -> payload model. */
+  private case class Writer(name: String, run: (String, () => Unit) => Unit,
+                            effect: Rows => Rows)
+
+  private def mergeSrc(ids: Seq[Long], payload: String) =
+    ids.toDF("id").withColumn("payload", F.lit(payload))
+
+  private val writers: Seq[Writer] = Seq(
+    Writer("append", (root, bc) => {
+      ManifestTable.append(spark, root, batch(200, 205), beforeCommit = bc); ()
+    }, _ ++ (200L until 205L).map(i => i -> s"row$i")),
+    Writer("upsert", (root, bc) => {
+      ManifestTable.upsert(spark, root, "id", mergeSrc(Seq(10L, 11L, 300L), "up"),
+        beforeCommit = bc); ()
+    }, _ ++ Seq(10L, 11L, 300L).map(_ -> "up")),
+    Writer("upsertBatch", (root, bc) => {
+      ManifestTable.upsertBatch(spark, root, 7L, "id",
+        mergeSrc(Seq(10L, 11L, 300L), "up"), beforeCommit = bc); ()
+    }, _ ++ Seq(10L, 11L, 300L).map(_ -> "up")),
+    Writer("mergeInto", (root, bc) => {
+      ManifestTable.mergeInto(spark, root, Seq("id"),
+        mergeSrc(Seq(10L, 11L, 300L), "mg"), Seq(F.col("id")),
+        matched = Seq(ManifestTable.WhenMatched(None, ManifestTable.MergeUpdate(
+          Map("payload" -> ManifestTable.sourceCol("payload"))))),
+        notMatched = Seq(ManifestTable.WhenNotMatched(None, Map(
+          "id" -> ManifestTable.sourceCol("id"),
+          "payload" -> ManifestTable.sourceCol("payload")))),
+        beforeCommit = bc); ()
+    }, _ ++ Seq(10L, 11L, 300L).map(_ -> "mg")),
+    Writer("deleteWhere", (root, bc) => {
+      ManifestTable.deleteWhere(spark, root, F.col("id") < 5, beforeCommit = bc); ()
+    }, _.filter(_._1 >= 5)),
+    Writer("updateWhere", (root, bc) => {
+      ManifestTable.updateWhere(spark, root, F.col("id") < 5,
+        Map("payload" -> F.lit("upd")), beforeCommit = bc); ()
+    }, r => r ++ r.keys.filter(_ < 5).map(_ -> "upd")),
+    Writer("deleteWhereMoR", (root, bc) => {
+      ManifestTable.deleteWhereMoR(spark, root, F.col("id") < 5,
+        beforeCommit = bc); ()
+    }, _.filter(_._1 >= 5)),
+    Writer("overwriteWhere", (root, bc) => {
+      ManifestTable.overwriteWhere(spark, root,
+        F.col("id") >= 50 && F.col("id") < 60, mergeSrc(Seq(50L, 51L), "re"),
+        beforeCommit = bc); ()
+    }, r => r.filterNot(kv => kv._1 >= 50 && kv._1 < 60) ++
+      Seq(50L, 51L).map(_ -> "re")),
+    Writer("compact", (root, bc) => {
+      ManifestTable.compact(spark, root, 1L << 20, beforeCommit = bc); ()
+    }, identity))
+
+  /** An injected concurrent operation and its effect on the model. */
+  private case class Injection(name: String, run: String => Unit,
+                               effect: Rows => Rows)
+
+  private val injections: Seq[Injection] = Seq(
+    Injection("append", root => {
+      ManifestTable.append(spark, root, batch(1000, 1003)); ()
+    }, _ ++ (1000L until 1003L).map(i => i -> s"row$i")),
+    Injection("compact", root => {
+      ManifestTable.compact(spark, root, 1L << 20); ()
+    }, identity),
+    Injection("deleteWhereMoR", root => {
+      ManifestTable.deleteWhereMoR(spark, root, F.col("id") === 99L); ()
+    }, _ - 99L),
+    Injection("addColumns", root => {
+      ManifestTable.addColumns(spark, root, tagCol); ()
+    }, identity),
+    Injection("renameColumn", root => {
+      ManifestTable.renameColumn(spark, root, "payload", "body"); ()
+    }, identity))
+
+  //                   append    compact    deleteWhereMoR addColumns renameColumn
+  private val conflictMatrix: Map[String, Seq[String]] = Map(
+    "append"         -> Seq("merge", "merge",   "merge",   "merge", "refuse"),
+    "upsert"         -> Seq("merge", "restart", "restart", "merge", "refuse"),
+    "upsertBatch"    -> Seq("merge", "restart", "restart", "merge", "refuse"),
+    "mergeInto"      -> Seq("merge", "restart", "restart", "merge", "refuse"),
+    "deleteWhere"    -> Seq("merge", "restart", "restart", "merge", "merge"),
+    "updateWhere"    -> Seq("merge", "restart", "restart", "merge", "merge"),
+    "deleteWhereMoR" -> Seq("merge", "restart", "restart", "merge", "merge"),
+    "overwriteWhere" -> Seq("merge", "restart", "restart", "merge", "refuse"),
+    "compact"        -> Seq("merge", "abort",   "abort",   "merge", "merge"))
+
+  private def rowsOf(root: String): Rows =
+    ManifestTable.read(spark, root).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  test("conflict matrix: each writer x each injected concurrent op merges, restarts, aborts or refuses as declared") {
+    val base: Rows = (0L until 100L).map(i => i -> s"row$i").toMap
+    for (w <- writers; (inj, expected) <- injections.zip(conflictMatrix(w.name))) {
+      val cell = s"${w.name} x ${inj.name}"
+      val root = java.nio.file.Files.createTempDirectory("graft_matrix").toString
+      ManifestTable.init(root, Seq("id"))
+      ManifestTable.append(spark, root, batch(0, 100).coalesce(1))
+      var calls = 0
+      var injected = -1
+      val run = scala.util.Try(w.run(root, () => {
+        calls += 1
+        if (injected < 0) {
+          inj.run(root)
+          injected = ManifestTable.latest(root).get.version
+        }
+      }))
+      val head = ManifestTable.latest(root).get
+      val outcome = run match {
+        case scala.util.Failure(e: IllegalArgumentException)
+            if e.getMessage.contains("reserved") => "refuse"
+        case scala.util.Failure(e) => throw new AssertionError(s"$cell threw", e)
+        case scala.util.Success(_) if head.version == injected => "abort"
+        case scala.util.Success(_) if calls == 1 => "merge"
+        case scala.util.Success(_) if calls == 2 => "restart"
+        case _ => s"$calls attempts"
+      }
+      assert(outcome == expected, s"$cell: expected $expected, got $outcome")
+      assert(head.version == (if (outcome == "merge" || outcome == "restart")
+        injected + 1 else injected), s"$cell published v${head.version}")
+      val want = if (outcome == "refuse") inj.effect(base)
+        else w.effect(inj.effect(base))
+      assert(rowsOf(root) == want, s"$cell: wrong final rows")
+      if (inj.name == "addColumns")
+        assert(ManifestTable.read(spark, root).columns.contains("tag"),
+          s"$cell lost the racing column")
+      assert(Option(new java.io.File(root, "manifest/intents").list())
+        .forall(_.isEmpty),
+        s"$cell left a write intent behind")
+    }
+  }
+
+  test("restart bound: a MoR delete conflicting on every attempt stops each restart-rule writer with one message; its files vacuum") {
+    val restartWriters = writers.filter(w =>
+      conflictMatrix(w.name)(2) == "restart")
+    assert(restartWriters.map(_.name) == Seq("upsert", "upsertBatch",
+      "mergeInto", "deleteWhere", "updateWhere", "deleteWhereMoR",
+      "overwriteWhere"))
+    for (w <- restartWriters) {
+      val root = java.nio.file.Files.createTempDirectory("graft_bound").toString
+      ManifestTable.init(root, Seq("id"))
+      ManifestTable.append(spark, root, batch(0, 100).coalesce(1))
+      // every attempt loses: a fresh MoR delete moves the one file's
+      // DV state between each scan and its commit
+      var calls = 0
+      val e = intercept[IllegalStateException] {
+        w.run(root, () => {
+          ManifestTable.deleteWhereMoR(spark, root, F.col("id") === 99L - calls)
+          calls += 1
+        })
+      }
+      val op = if (w.name == "upsertBatch") "upsert" else w.name
+      assert(e.getMessage.startsWith(s"$op at $root lost 8 consecutive " +
+        "conflicts on the files it read"), s"${w.name}: ${e.getMessage}")
+      assert(calls == 8, s"${w.name} made $calls attempts")
+      // the writer published nothing; only the injected deletes landed
+      assert(rowsOf(root) == (0L until 92L).map(i => i -> s"row$i").toMap,
+        s"${w.name} published under a conflict")
+      assert(Option(new java.io.File(root, "manifest/intents").list())
+        .forall(_.isEmpty),
+        s"${w.name} left a write intent behind")
+      val live = ManifestTable.latest(root).get.files.toSet
+      val vacuumed = ManifestTable.vacuum(root, orphanGraceMillis = 0)
+      assert(vacuumed.exists(_.endsWith(".parquet")),
+        s"${w.name}'s lost rounds left no vacuumable files")
+      assert(vacuumed.toSet.intersect(live).isEmpty)
+      assert(rowsOf(root).size == 92, s"vacuum after ${w.name} broke the table")
+    }
   }
 }
