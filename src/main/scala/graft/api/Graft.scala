@@ -123,10 +123,12 @@ final case class Graft(spark: SparkSession, sfDir: String) {
     // later enableSql call only needs to confirm the objects still
     // exist (suites drop them in cleanup) and refresh the cached file
     // listing. Under the HMS-backed catalog this matters for latency:
-    // the first-registration path below costs a DESCRIBE query + a
-    // footer read per table, which against a metastore turns every
-    // enableSql call into ~0.5 s of catalog round-trips — paid once
-    // per JVM now, not once per SQL query.
+    // the first-registration path below costs a DESCRIBE query per
+    // table (plus, the first time this JVM sees a file, one footer
+    // inference job — `Tables.parquet` reuses the schema after that),
+    // which against a metastore turns every enableSql call into
+    // ~0.5 s of catalog round-trips — paid once per JVM now, not once
+    // per SQL query.
     // keyed view -> CURRENT location (not a set of seen pairs): with
     // alternating sfDirs in one JVM, a set would still contain the
     // OLD (view, loc) pair after re-registration re-pointed the store
@@ -154,8 +156,8 @@ final case class Graft(spark: SparkSession, sfDir: String) {
     // schema since — the catalog would keep serving the stale one.
     // So the first time this JVM sees a (store, location) pair it
     // also requires the catalog schema to equal the current footer
-    // schema (one driver-side footer read, far cheaper than the DDL
-    // round-trip); subsequent calls in the same JVM trust it —
+    // schema (a footer read, inferred at most once per file identity
+    // by Tables.parquet); subsequent calls in the same JVM trust it —
     // re-reading footers per enableSql call would tax every SQL
     // query with listing+footer I/O for no new information.
     // Mid-JVM rewrites at the same path are out of contract (drop
@@ -168,10 +170,12 @@ final case class Graft(spark: SparkSession, sfDir: String) {
           .select("data_type").collect().headOption.map(_.getString(0))
       ).toOption.flatten
     val footerKey = (store, absLoc)
+    // the footer schema, inferred once per file identity JVM-wide
+    lazy val fileSchema = Tables.parquet(spark, expectedLoc).schema
     val upToDate = current.exists(_.stripPrefix("file:") == absLoc) &&
       (Graft.footerChecked.contains(footerKey) ||
-        scala.util.Try(spark.table(store).schema ==
-          spark.read.parquet(expectedLoc).schema).getOrElse(false))
+        scala.util.Try(spark.table(store).schema == fileSchema)
+          .getOrElse(false))
     if (upToDate && spark.catalog.tableExists(t) &&
         Graft.viewEnsured.contains(t)) {
       Graft.footerChecked.add(footerKey)
@@ -197,9 +201,9 @@ final case class Graft(spark: SparkSession, sfDir: String) {
       // failures in CI logs). The option skips the doomed attempt and
       // persists Spark-native directly; nothing here needs Hive-engine
       // readability, and Spark reads its own format either way.
-      spark.catalog.createTable(store, "parquet",
+      spark.catalog.createTable(store, "parquet", fileSchema,
         Map("path" -> expectedLoc, "skipHiveMetadata" -> "true"))
-      // schema just inferred from these footers — checked by creation
+      // schema just read from these footers — checked by creation
       Graft.footerChecked.add(footerKey)
     } else {
       spark.catalog.refreshTable(store)

@@ -1,7 +1,9 @@
 package graft.sources
 
 import graft.schema.{Catalog, TableDef}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.types.StructType
 
 /** Table scans (SURVEY §2.1 S1): SELECT the declared fields, aliased
   * from their physical columns, FROM the model's table
@@ -12,8 +14,58 @@ import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
   * `PushedFilters`/`ReadSchema` in .explain). No casts are applied on
   * scan — declared types mirror storage, keeping the scan zero-copy
   * and schema-identical to the oracle's view of the same files.
+  *
+  * Base-file reads go through [[parquet]], which infers a file's
+  * schema once and reuses it while the file keeps its identity:
+  * length + modification time + the session's parquet-inference
+  * settings (`InferenceConfs`). A directory or a missing path is
+  * read exactly as `spark.read.parquet(path)` reads it (listing,
+  * inference and Spark's own `PATH_NOT_FOUND` error included).
   */
 object Tables {
+
+  /** Session settings that change what parquet schema inference
+    * returns for the same bytes; part of a cached schema's identity. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  private final case class FileIdentity(
+      length: Long, modified: Long, confs: Seq[Option[String]])
+
+  // qualified file path -> (identity it was inferred under, schema);
+  // at most one entry per path, replaced when the identity changes
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (FileIdentity, StructType)]()
+
+  /** `spark.read.parquet(path)`, without the schema-inference job for
+    * a single file whose identity is unchanged since its last read.
+    * Every call still builds a fresh relation (fresh attribute ids)
+    * and lists the file; only the footer job is skipped. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val status =
+      try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile) match {
+      case None => spark.read.parquet(path)
+      case Some(st) =>
+        val id = FileIdentity(st.getLen, st.getModificationTime,
+          InferenceConfs.map(spark.conf.getOption))
+        val key = st.getPath.toString
+        val schema = Option(schemas.get(key)) match {
+          case Some((`id`, cached)) => cached
+          case _ =>
+            val inferred = spark.read.parquet(path).schema
+            schemas.put(key, (id, inferred))
+            inferred
+        }
+        spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Physical path of a table under a scale-factor directory. */
   def path(sfDir: String, table: String): String = s"$sfDir/$table.parquet"
@@ -28,7 +80,7 @@ object Tables {
     // idempotent.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val t = Catalog(table)
-    val raw = spark.read.parquet(path(sfDir, t.storageName))
+    val raw = parquet(spark, path(sfDir, t.storageName))
     raw.select(t.fields.map { f =>
       val base = F.col(f.physical)
       val phys = raw.schema(f.physical).dataType

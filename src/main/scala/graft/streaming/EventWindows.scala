@@ -227,7 +227,7 @@ object EventWindows {
   private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val eventsPath = Tables.path(sfDir, "events")
-    val physSchema = spark.read.parquet(eventsPath).schema
+    val physSchema = Tables.parquet(spark, eventsPath).schema
     val tsPhys = physSchema("ts").dataType
     // the file-stream source requires a directory: stream the SF dir
     // with a glob pinned to the events table

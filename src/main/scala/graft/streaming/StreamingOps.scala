@@ -27,7 +27,8 @@ object StreamingOps {
     // need one up front) rather than pinning a hand-written copy —
     // the same fixture-drift lesson as the events stream
     val physSchema =
-      spark.read.parquet(graft.sources.Tables.path(sfDir, "documents")).schema
+      graft.sources.Tables.parquet(spark,
+        graft.sources.Tables.path(sfDir, "documents")).schema
     spark.readStream.schema(physSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(sfDir)
@@ -297,7 +298,8 @@ object StreamingOps {
     // TIMESTAMP(MICROS)); ts itself is unused here, but the stream
     // schema must still match what's on disk
     val physSchema =
-      spark.read.parquet(graft.sources.Tables.path(sfDir, "events")).schema
+      graft.sources.Tables.parquet(spark,
+        graft.sources.Tables.path(sfDir, "events")).schema
 
     val perUser = userTotalsTransform(
       spark.readStream.schema(physSchema)

@@ -114,13 +114,14 @@ object Profile {
       val fn = graft.SparkEntry.queries(name)
       // warm once, measure second (bench methodology: steady state)
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      Thread.sleep(200) // let listener drain
+      org.apache.spark.sql.graftbridge.drainListeners(spark.sparkContext)
       agg.reset()
       trace.on = traceOn
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // listener is async; let final task events land
+      // listener is async; let final task events land
+      org.apache.spark.sql.graftbridge.drainListeners(spark.sparkContext)
       trace.on = false
       if (traceOn) trace.dump()
       val taskS = agg.taskMs.get / 1e3

@@ -14,6 +14,12 @@ object graftbridge {
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** Blocks until the (private[spark]) listener bus has delivered
+    * every event posted so far, so listener counts read afterwards
+    * are complete — a fixed sleep can miss late events. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   /** Public re-export of the `private[sql]` streaming-fallback trait:
     * a DSv2 [[connector.catalog.Table]] implementing it streams
     * through the V1 provider its `v1Table` names (the Delta pattern

@@ -453,23 +453,13 @@ class ManifestStatsSpec extends SparkSpec {
     // the write-fused tap (BloomWriteTap): a bloom-table append must
     // launch exactly ONE Spark job — the data write — with the
     // sidecar built from the write job's own accumulator
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val root = java.nio.file.Files.createTempDirectory("graft_tap").toString
     ManifestTable.init(root, Seq("id"), Seq("id", "payload"))
-    spark.sparkContext.addSparkListener(l)
-    try {
-      ManifestTable.append(spark, root, batch(0L, 100L).coalesce(2))
-      Thread.sleep(300) // job-start events are async; let them land
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get == 1,
-      s"bloom-table append launched ${jobs.get} jobs; the filter must " +
-        "build inside the single write job")
+    val (_, jobs) = jobsDuring(
+      ManifestTable.append(spark, root, batch(0L, 100L).coalesce(2)))
+    assert(jobs.size == 1,
+      s"bloom-table append launched ${jobs.size} jobs; the filter must " +
+        "build inside the single write job: " + jobs.mkString(" // "))
     // ... and the tap-built sidecar prunes exactly like the aggregate's
     val snap = ManifestTable.latest(root).get
     assert(snap.files.size == 2)

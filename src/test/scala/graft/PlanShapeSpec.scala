@@ -254,23 +254,13 @@ class PlanShapeSpec extends SparkSpec {
     // returned untouched WITHOUT probing .rdd — under AQE that probe
     // would execute the upstream shuffle stages at plan time (real
     // jobs, re-run again by the caller's query)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     val shuffly = docs.groupBy("doc_id")
       .agg(org.apache.spark.sql.functions.count("*").as("n"))
-    spark.sparkContext.addSparkListener(l)
-    try {
-      assert(graft.operators.Spread.floor(shuffly) eq shuffly,
-        "Spread.floor must refuse a frame containing an exchange")
-      Thread.sleep(300)
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get == 0,
-      s"Spread.floor launched ${jobs.get} jobs probing a shuffly frame")
+    val (floored, jobs) = jobsDuring(graft.operators.Spread.floor(shuffly))
+    assert(floored eq shuffly,
+      "Spread.floor must refuse a frame containing an exchange")
+    assert(jobs.isEmpty,
+      s"Spread.floor launched ${jobs.size} jobs probing a shuffly frame")
   }
 
   test("bloom probe survives closure serialization under interpreted eval") {

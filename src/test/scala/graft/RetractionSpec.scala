@@ -470,44 +470,20 @@ class RetractionSpec extends SparkSpec {
         Seq(g.toLong -> words(g)).toDF("doc_id", "text"),
         "doc_id", "text", K, BANDS, TAU, sh3))
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        descs.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(js.stageInfos.map(_.name).mkString("|")))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     // AQE submits one stage-materialization job per union branch,
     // which would re-introduce O(generations) JOBS (though parallel
     // and single-action); turn it off so the metric is the actions
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      SignatureStore.purge(spark, root, "doc_id", Seq(3L))
-      // listener bus is async — poll until the count stabilizes
-      var last = -1
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = jobs.get()
-        if (c == last) stable += 1 else { last = c; stable = 0 }
-      }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
+    val (_, jobs) =
+      try jobsDuring(SignatureStore.purge(spark, root, "doc_id", Seq(3L)))
+      finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
     // one grouped membership scan + the base-fold write — NOT one
     // count action per live generation (8 here); the old
     // per-generation loop alone cost 9 actions before any rewrite
-    assert(jobs.get() <= 4,
-      s"purge over 8 generations launched ${jobs.get()} jobs: " +
-        descs.toArray.mkString(" // "))
+    assert(jobs.size <= 4,
+      s"purge over 8 generations launched ${jobs.size} jobs: " +
+        jobs.mkString(" // "))
     assert(SignatureStore.signatures(spark, root)
       .select("doc_id").distinct().as[Long].collect().toSet ==
       (0L until 8L).toSet - 3L)
