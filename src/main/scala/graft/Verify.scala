@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -27,18 +26,10 @@ object Verify {
         sys.exit(2)
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // persistent-catalog queries register through a real Hive
     // metastore (embedded Derby) unless SPARK_GRAFT_HMS=0
-    val spark = graft.api.Metastore.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.api.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]

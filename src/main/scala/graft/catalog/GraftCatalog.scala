@@ -82,8 +82,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def isManifestEntry(v1: TableIdentifier): Boolean =
     sessionCatalog.tableExists(v1) && !sessionCatalog.isTempView(v1) &&
-      sessionCatalog.getTableMetadata(v1).provider
-        .exists(_.equalsIgnoreCase(ManifestSql.ManifestProvider))
+      ManifestSql.isManifestEntry(sessionCatalog.getTableMetadata(v1))
 
   /** Resolve a graft identifier to its manifest root, or a loud
     * NoSuchTable — this catalog only ever serves `USING
@@ -96,7 +95,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       Array(catalogName) ++ ident.namespace() :+ ident.name())
     if (isManifestEntry(v1)) {
       val meta = sessionCatalog.getTableMetadata(v1)
-      Resolved(rootOf(meta), chained = false, meta)
+      Resolved(ManifestSql.rootOfEntry(meta), chained = false, meta)
     }
     else {
       // the rename-chain shape: `name` is a VIEW over `name_store`
@@ -107,19 +106,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
       if (viewShaped && isManifestEntry(store)) {
         val meta = sessionCatalog.getTableMetadata(store)
-        Resolved(rootOf(meta), chained = true, meta)
+        Resolved(ManifestSql.rootOfEntry(meta), chained = true, meta)
       } else throw missing
     }
   }
-
-  private def rootOf(meta: org.apache.spark.sql.catalyst.catalog
-      .CatalogTable): String =
-    meta.storage.properties.get("path")
-      .orElse(meta.storage.locationUri.map(u =>
-        new org.apache.hadoop.fs.Path(u).toString))
-      .getOrElse(throw new IllegalStateException(
-        s"manifest catalog table ${meta.identifier.quotedString} " +
-          "has no path"))
 
   override def loadTable(ident: Identifier): Table = {
     val r = resolve(ident)
@@ -175,9 +165,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!sessionCatalog.databaseExists(db))
       throw new NoSuchNamespaceException(Array(catalogName, db))
     sessionCatalog.listTables(db).filter { t =>
-      scala.util.Try(sessionCatalog.getTableMetadata(t).provider
-        .exists(_.equalsIgnoreCase(ManifestSql.ManifestProvider)))
-        .getOrElse(false)
+      scala.util.Try(ManifestSql.isManifestEntry(
+        sessionCatalog.getTableMetadata(t))).getOrElse(false)
     }.map(t => Identifier.of(Array(db), t.table)).toArray
   }
 

@@ -55,8 +55,8 @@ final case class GraftTable(spark: SparkSession, fullName: String,
     * first — this door is the structural backstop that keeps
     * v2-addressed DELETE working even if the analyzer's rule order
     * reshuffles (or in a session without the graft extensions), and
-    * it honors the table's `#dvmode:` declaration (deletion vectors
-    * vs copy-on-write) exactly like the SQL rewrite path. */
+    * commits through the same [[ManifestSql.sqlDeleteAt]] as the SQL
+    * rewrite path (which honors the table's `#dvmode:` declaration). */
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     versionAsOf.isEmpty && !readOnlyChain
@@ -73,11 +73,7 @@ final case class GraftTable(spark: SparkSession, fullName: String,
     val cond = filters.map(GraftTable.filterToColumn)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val mor = graft.operators.ManifestTable.latest(root)
-      .exists(graft.operators.ManifestTable.morDeletes)
-    if (mor)
-      graft.operators.ManifestTable.deleteWhereMoR(session, root, cond)
-    else graft.operators.ManifestTable.deleteWhere(session, root, cond)
+    ManifestSql.sqlDeleteAt(session, root, cond)
     session.catalog.refreshByPath(root)
     v1Meta.map(_.identifier).foreach(id => scala.util.Try(
       session.sessionState.catalog.refreshTable(id)))

@@ -841,7 +841,7 @@ object ManifestTable {
   }
 
   /** The root-relative `data/<token>/part-*` suffix of an absolute
-    * scan path (`input_file_name()` output) — manifest file entries
+    * scan path (`_metadata.file_path` output) — manifest file entries
     * are always exactly these three segments, so equality on the
     * suffix IS the membership test, probed through a Set in O(files)
     * instead of a files×affected nested `endsWith` scan. The ONE
@@ -1326,10 +1326,12 @@ object ManifestTable {
 
   /** [[readSnapshot]] plus PROVENANCE: `fileCol` (absolute file path
     * of each row's source file) and/or `posCol` (parquet row index in
-    * it) materialize AT THE SCAN — before any join the DV overlay may
-    * introduce (`input_file_name()` after a shuffle boundary returns
-    * empty strings; `_metadata` is join-safe by construction). The
-    * copy-on-write victim scans and the MoR delete both ride this. */
+    * it) materialize AT THE SCAN, from the deterministic `_metadata`
+    * columns — join-safe (`input_file_name()` after a shuffle
+    * boundary returns empty strings) and transparent to filter
+    * pushdown, so a victim predicate still reaches the parquet scan.
+    * The copy-on-write victim scans and the MoR delete both ride
+    * this. */
   private def readSnapshotImpl(spark: SparkSession, root: String,
                                snap: Snapshot,
                                fileCol: Option[String],
@@ -1353,9 +1355,11 @@ object ManifestTable {
       return scan0.select(dataCols: _*)
     }
     if (!needMeta) {
-      // provenance without DVs: the classic scan-time column
+      // provenance without DVs: the file-path metadata column, NOT
+      // input_file_name() — a nondeterministic projection stops
+      // every filter above it from reaching the parquet scan
       return scan0.select(dataCols :+
-        F.input_file_name().as(fileCol.get): _*)
+        F.col("_metadata.file_path").as(fileCol.get): _*)
     }
     // DV path (or an explicit posCol ask): select data columns plus
     // the parquet metadata identity, overlay, then shape the output
@@ -1583,6 +1587,9 @@ object ManifestTable {
     * (`classes/hive/model.php:831-853`) and the primitive a
     * takedown/retraction pass needs: at 100 TB a purge touches the
     * handful of files holding the victim ids, never the table.
+    * Victims are the rows where `predicate` holds AND every
+    * membership term holds ([[MembershipTerm]] — the `WHERE p AND
+    * c IN (SELECT …) AND [NOT] EXISTS (…)` shape; none by default).
     *
     *  - locating victims reads the base snapshot WITH the predicate
     *    pushed to the parquet scan (only matching row-groups
@@ -1590,6 +1597,10 @@ object ManifestTable {
     *    file — a metadata-scale collect, bounded by the file count,
     *    that also prices the [[Delete.removedRows]] report (no
     *    second victim scan anywhere);
+    *  - the victim scan prunes by the predicate AND each POSITIVE
+    *    term's value set (IN-list + Blooms when driver-sized, range
+    *    beyond); negated terms cannot prune (absence is not a
+    *    bounds-provable property);
     *  - untouched files are carried into the new snapshot by
     *    reference — their bytes are never read or rewritten;
     *  - conflict rule RESTART (the class doc): a compaction abort is
@@ -1601,34 +1612,26 @@ object ManifestTable {
     *    racing in rows matching `predicate` lands AFTER this delete's
     *    victim scan and survives it, the standard snapshot-isolation
     *    reading of a concurrent DELETE + INSERT.
-    * `beforeCommit` is the usual race-injection test seam. */
+    * A NULL predicate result keeps the row (DELETE: NULL is not
+    * TRUE). `beforeCommit` is the usual race-injection test seam. */
   def deleteWhere(spark: SparkSession, root: String, predicate: Column,
-                  beforeCommit: () => Unit = () => ()): Delete =
-    // null predicate results keep the row (DELETE: NULL is not TRUE)
-    rewriteWith(spark, root, "deleteWhere",
-      df => df.filter(predicate),
-      df => df.filter(!F.coalesce(predicate, F.lit(false))),
-      beforeCommit, prune = Some(predicate))
+                  terms: Seq[MembershipTerm] = Nil,
+                  beforeCommit: () => Unit = () => ()): Delete = {
+    val v = victimsOf(spark, Some(predicate), terms)
+    rewriteWith(spark, root, "deleteWhere", v, v.keep, beforeCommit)
+  }
 
   /** [[deleteWhere]] for a victim set that is NOT driver-sized — the
     * frame-shaped takedown ([[Retraction.purgeWhere]] resume path):
-    * victim membership resolves through semi/anti joins against the
-    * single-id-column `victims` frame (AQE broadcasts the smaller
-    * side) instead of an `isin` literal, with the same copy-on-write
-    * rewrite, restart, and snapshot-isolation semantics. */
+    * the single-id-column `victims` frame is one membership term
+    * (joins, AQE broadcasts the smaller side) instead of an `isin`
+    * literal, with the same copy-on-write rewrite, restart, and
+    * snapshot-isolation semantics. */
   def deleteIds(spark: SparkSession, root: String, idCol: String,
                 victims: DataFrame,
                 beforeCommit: () => Unit = () => ()): Delete = {
-    require(victims.columns.length == 1,
-      s"victims frame must have exactly one id column, " +
-        s"got ${victims.columns.mkString(",")}")
-    val v = victims.toDF("__victim_id").distinct()
-      .localCheckpoint(eager = true)
-    val prune = idPrune(spark, idCol, v, "__victim_id")
-    rewriteWith(spark, root, "deleteIds",
-      df => df.join(v, df(idCol) === v("__victim_id"), "left_semi"),
-      df => df.join(v, df(idCol) === v("__victim_id"), "left_anti"),
-      beforeCommit, prune)
+    val v = victimsOf(spark, None, Seq(MembershipTerm(idCol, victims)))
+    rewriteWith(spark, root, "deleteIds", v, v.keep, beforeCommit)
   }
 
   /** Driver-sized id sets past this prune by RANGE only. Under the
@@ -1670,12 +1673,13 @@ object ManifestTable {
 
   /** Row-level UPDATE — the copy-on-write twin of [[deleteWhere]]
     * and the scale form of the reference's S6 update
-    * (`classes/hive/model.php:762-829`): rows matching `predicate`
-    * get `assignments` applied (column -> replacement expression,
-    * evaluated against the row); only the files that contain matched
-    * rows are rewritten, everything else is carried by reference.
-    * Conflict rule RESTART (the class doc), with the delete's
-    * snapshot-isolation reading: a concurrent append
+    * (`classes/hive/model.php:762-829`): rows where `predicate` and
+    * every membership term hold (the delete's victims, same
+    * pruning) get `assignments` applied (column -> replacement
+    * expression, evaluated against the row); only the files that
+    * contain matched rows are rewritten, everything else is carried
+    * by reference. Conflict rule RESTART (the class doc), with the
+    * delete's snapshot-isolation reading: a concurrent append
     * lands untouched even if its rows match `predicate` (they
     * post-date the scan). A NULL predicate result leaves the row
     * unchanged (UPDATE WHERE semantics). Assignments must not change
@@ -1684,36 +1688,33 @@ object ManifestTable {
     * matched-row count from the update's own single victim scan. */
   def updateWhere(spark: SparkSession, root: String, predicate: Column,
                   assignments: Map[String, Column],
+                  terms: Seq[MembershipTerm] = Nil,
                   beforeCommit: () => Unit = () => ()): Delete = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    rewriteWith(spark, root, "updateWhere",
-      hits = df => df.filter(predicate),
-      rewrite = df => {
-        val unknown = assignments.keySet -- df.columns.toSet
-        require(unknown.isEmpty,
-          s"updateWhere assigns to unknown column(s): ${unknown.mkString(",")}")
-        val out = df.select(df.columns.toSeq.map { c =>
-          assignments.get(c) match {
-            case Some(expr) =>
-              F.when(F.coalesce(predicate, F.lit(false)), expr)
-                .otherwise(F.col(c)).as(c)
-            case None => F.col(c)
-          }
-        }: _*)
-        df.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
-          require(a.dataType.catalogString == b.dataType.catalogString,
-            s"assignment changes column '${a.name}' from " +
-              s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
+    val v = victimsOf(spark, Some(predicate), terms)
+    rewriteWith(spark, root, "updateWhere", v, df => {
+      val unknown = assignments.keySet -- df.columns.toSet
+      require(unknown.isEmpty,
+        s"updateWhere assigns to unknown column(s): ${unknown.mkString(",")}")
+      val out = v.mark(df).select(df.columns.toSeq.map { c =>
+        assignments.get(c) match {
+          case Some(expr) => F.when(v.fire, expr).otherwise(F.col(c)).as(c)
+          case None => F.col(c)
         }
-        out
-      },
-      beforeCommit, prune = Some(predicate))
+      }: _*)
+      df.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
+        require(a.dataType.catalogString == b.dataType.catalogString,
+          s"assignment changes column '${a.name}' from " +
+            s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
+      }
+      out
+    }, beforeCommit)
   }
 
-  /** One FRAME-shaped membership conjunct of a [[deleteWhereTerms]]/
-    * [[updateWhereTerms]] predicate: `col IN <values>` (`negated =
-    * false` — the `c IN (SELECT …)` / equality-correlated `EXISTS`
-    * shape) or `col` matching NO values row (`negated = true` — the
+  /** One FRAME-shaped membership conjunct of a row-level delete or
+    * update: `col IN <values>` (`negated = false` — the `c IN
+    * (SELECT …)` / equality-correlated `EXISTS` shape) or `col`
+    * matching NO values row (`negated = true` — the
     * equality-correlated `NOT EXISTS` shape, sound anti-join
     * semantics: a NULL `col` matches nothing, so it FIRES under
     * negation, exactly as `NOT EXISTS (… WHERE s.k = t.k)` does; this
@@ -1723,96 +1724,33 @@ object ManifestTable {
   final case class MembershipTerm(col: String, values: DataFrame,
                                   negated: Boolean = false)
 
-  /** [[deleteWhere]] with N FRAME-shaped membership terms: victims
-    * are rows where `residue` holds (None = always) AND every term
-    * holds — the `WHERE p AND c1 IN (SELECT …) AND EXISTS (…) AND
-    * NOT EXISTS (…)` shape. The victim scan prunes by the residue
-    * AND each POSITIVE term's value set (IN-list + Blooms when
-    * driver-sized, range beyond — [[deleteIds]]' envelope); negated
-    * terms cannot prune (absence is not a bounds-provable property).
-    * Null `col` values on a positive term keep their rows (IN: NULL
-    * is not TRUE); on a negated term they fire (anti semantics). */
-  def deleteWhereTerms(spark: SparkSession, root: String,
-                       residue: Option[Column],
-                       terms: Seq[MembershipTerm],
-                       beforeCommit: () => Unit = () => ()): Delete = {
-    require(terms.nonEmpty, "deleteWhereTerms needs at least one term")
-    val (mark, fire, prune) = membership(spark, residue, terms)
-    rewriteWith(spark, root, "deleteWhereTerms",
-      hits = df => mark(df).filter(fire)
-        .select(df.columns.toSeq.map(c => df(c)): _*),
-      // keep = everything but (residue ∧ all terms), in ONE pass over
-      // the victim files: left-outer every membership marker on, drop
-      // the firing rows, project the original columns back
-      rewrite = df => mark(df).filter(!fire)
-        .select(df.columns.toSeq.map(c => df(c)): _*),
-      beforeCommit, prune)
+  /** The victim set of one row-level write, from [[victimsOf]].
+    * `mark` left-outer joins every term's `__in_hit_<i>` marker onto
+    * a frame; `hit` is the victim filter — the BARE predicate AND the
+    * markers, so the predicate pushes to the parquet scan (a Filter
+    * drops NULL already); `fire` is its two-valued form (NULL
+    * predicate → false) for the keep side and UPDATE's `when`;
+    * `prune` bounds the victim scan's candidate files. */
+  private final case class Victims(mark: DataFrame => DataFrame,
+                                   markers: Seq[String], hit: Column,
+                                   fire: Column, prune: Option[Column]) {
+    def hits(df: DataFrame): DataFrame = mark(df).filter(hit)
+    /** Every non-victim row of `df`, its own columns only. */
+    def keep(df: DataFrame): DataFrame = {
+      val kept = mark(df).filter(!fire)
+      if (markers.isEmpty) kept else kept.drop(markers: _*)
+    }
   }
 
-  /** Single-term [[deleteWhereTerms]] — the `WHERE p AND c IN
-    * (SELECT …)` fast form. */
-  def deleteWhereIn(spark: SparkSession, root: String,
-                    residue: Option[Column], inCol: String,
-                    values: DataFrame,
-                    beforeCommit: () => Unit = () => ()): Delete =
-    deleteWhereTerms(spark, root, residue,
-      Seq(MembershipTerm(inCol, values)), beforeCommit)
-
-  /** [[updateWhere]] with N FRAME-shaped membership terms: rows where
-    * `residue` holds AND every term holds get `assignments` applied.
-    * Same pruning, rewrite, and type contract as [[updateWhere]];
-    * term semantics as [[deleteWhereTerms]]. */
-  def updateWhereTerms(spark: SparkSession, root: String,
-                       residue: Option[Column],
-                       terms: Seq[MembershipTerm],
-                       assignments: Map[String, Column],
-                       beforeCommit: () => Unit = () => ()): Delete = {
-    require(assignments.nonEmpty, "updateWhereTerms needs an assignment")
-    require(terms.nonEmpty, "updateWhereTerms needs at least one term")
-    val (mark, fire, prune) = membership(spark, residue, terms)
-    rewriteWith(spark, root, "updateWhereTerms",
-      hits = df => mark(df).filter(fire)
-        .select(df.columns.toSeq.map(c => df(c)): _*),
-      rewrite = df => {
-        val unknown = assignments.keySet -- df.columns.toSet
-        require(unknown.isEmpty,
-          s"updateWhereTerms assigns to unknown column(s): " +
-            unknown.mkString(","))
-        val marked = mark(df)
-        val out = marked.select(df.columns.toSeq.map { c =>
-          assignments.get(c) match {
-            case Some(expr) => F.when(fire, expr).otherwise(df(c)).as(c)
-            case None => df(c)
-          }
-        }: _*)
-        df.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
-          require(a.dataType.catalogString == b.dataType.catalogString,
-            s"assignment changes column '${a.name}' from " +
-              s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
-        }
-        out
-      },
-      beforeCommit, prune)
-  }
-
-  /** Single-term [[updateWhereTerms]]. */
-  def updateWhereIn(spark: SparkSession, root: String,
-                    residue: Option[Column], inCol: String,
-                    values: DataFrame,
-                    assignments: Map[String, Column],
-                    beforeCommit: () => Unit = () => ()): Delete =
-    updateWhereTerms(spark, root, residue,
-      Seq(MembershipTerm(inCol, values)), assignments, beforeCommit)
-
-  /** Shared membership machinery: (frame marker, fire predicate,
-    * file prune) for a residue + N terms. Each term's values pin
-    * once (deduplicated, nulls dropped — a NULL never equality-
-    * matches) and left-outer a `__in_hit_<i>` marker onto the victim
-    * frame; `fire` is the conjunction of the null-safe residue and
-    * every marker (negated markers inverted). */
-  private def membership(spark: SparkSession, residue: Option[Column],
-                         terms: Seq[MembershipTerm])
-      : (DataFrame => DataFrame, Column, Option[Column]) = {
+  /** THE victim builder behind every row-level delete and update: rows
+    * where `predicate` holds (None = every row) AND every term holds.
+    * Each term's values pin once (deduplicated, nulls dropped — a
+    * NULL never equality-matches) and become a `__in_hit_<i>`
+    * marker. Null `col` values on a positive term keep their rows
+    * (IN: NULL is not TRUE); on a negated term they fire (anti
+    * semantics). */
+  private def victimsOf(spark: SparkSession, predicate: Option[Column],
+                        terms: Seq[MembershipTerm]): Victims = {
     val prepared = terms.zipWithIndex.map { case (t, i) =>
       require(t.values.columns.length == 1,
         s"values frame must have exactly one column, " +
@@ -1822,8 +1760,7 @@ object ManifestTable {
         .localCheckpoint(eager = true)
       (t, v, s"__in_id_$i", s"__in_hit_$i")
     }
-    val res = residue.getOrElse(F.lit(true))
-    val prune = (residue.toSeq ++
+    val prune = (predicate.toSeq ++
       prepared.filterNot(_._1.negated).flatMap { case (t, v, idc, _) =>
         idPrune(spark, t.col, v.select(idc), idc)
       }).reduceOption(_ && _)
@@ -1831,12 +1768,14 @@ object ManifestTable {
       prepared.foldLeft(df) { case (acc, (t, v, idc, _)) =>
         acc.join(v, acc(t.col) === v(idc), "left_outer")
       }
-    val fire = (F.coalesce(res, F.lit(false)) +:
-      prepared.map { case (t, _, _, hitc) =>
-        val hit = F.coalesce(F.col(hitc), F.lit(false))
-        if (t.negated) !hit else hit
-      }).reduce(_ && _)
-    (mark, fire, prune)
+    val held = prepared.map { case (t, _, _, hitc) =>
+      if (t.negated) F.col(hitc).isNull else F.col(hitc).isNotNull
+    }
+    Victims(mark, prepared.flatMap(p => Seq(p._3, p._4)),
+      hit = (predicate.toSeq ++ held).reduce(_ && _),
+      fire = (predicate.map(F.coalesce(_, F.lit(false))).toSeq ++ held)
+        .reduce(_ && _),
+      prune)
   }
 
   // ---- merge-on-read deletes ----
@@ -1849,7 +1788,9 @@ object ManifestTable {
     * commit records each victim's (file, row-position) in a DELETION
     * VECTOR sidecar and points the affected files' stat payloads at
     * it (`dvref:` — [[ManifestStats.FileStats.dvRef]]). NO DATA FILE
-    * IS REWRITTEN; the commit is metadata-plus-sidecar sized.
+    * IS REWRITTEN; the commit is metadata-plus-sidecar sized. Victims
+    * (predicate AND membership terms) and pruning are
+    * [[deleteWhere]]'s.
     *
     *  - READERS overlay the DV everywhere: every Scala read plans the
     *    anti-join on `_metadata.row_index` inside [[readSnapshot]],
@@ -1878,40 +1819,20 @@ object ManifestTable {
     * already-deleted rows are invisible to the victim scan and never
     * double-count. */
   def deleteWhereMoR(spark: SparkSession, root: String, predicate: Column,
+                     terms: Seq[MembershipTerm] = Nil,
                      beforeCommit: () => Unit = () => ()): Delete =
-    // null predicate results keep the row (DELETE: NULL is not TRUE)
-    morDelete(spark, root, "deleteWhereMoR", df => df.filter(predicate),
-      beforeCommit, prune = Some(predicate))
+    morDelete(spark, root, "deleteWhereMoR",
+      victimsOf(spark, Some(predicate), terms), beforeCommit)
 
-  /** [[deleteWhereTerms]] in merge-on-read form: victims are rows
-    * where `residue` and every membership term hold — same term
-    * semantics and pruning, zero data files rewritten. */
-  def deleteWhereTermsMoR(spark: SparkSession, root: String,
-                          residue: Option[Column],
-                          terms: Seq[MembershipTerm],
-                          beforeCommit: () => Unit = () => ()): Delete = {
-    require(terms.nonEmpty, "deleteWhereTermsMoR needs at least one term")
-    val (mark, fire, prune) = membership(spark, residue, terms)
-    morDelete(spark, root, "deleteWhereTermsMoR", df => mark(df).filter(fire),
-      beforeCommit, prune)
-  }
-
-  /** [[deleteIds]] in merge-on-read form — the takedown shape: victim
-    * membership resolves through a semi join against the (unbounded)
-    * one-column `victims` frame; only DV sidecars commit. */
+  /** [[deleteIds]] in merge-on-read form — the takedown shape: the
+    * (unbounded) one-column `victims` frame is one membership term;
+    * only DV sidecars commit. */
   def deleteIdsMoR(spark: SparkSession, root: String, idCol: String,
                    victims: DataFrame,
-                   beforeCommit: () => Unit = () => ()): Delete = {
-    require(victims.columns.length == 1,
-      s"victims frame must have exactly one id column, " +
-        s"got ${victims.columns.mkString(",")}")
-    val v = victims.toDF("__victim_id").distinct()
-      .localCheckpoint(eager = true)
-    val prune = idPrune(spark, idCol, v, "__victim_id")
+                   beforeCommit: () => Unit = () => ()): Delete =
     morDelete(spark, root, "deleteIdsMoR",
-      df => df.join(v, df(idCol) === v("__victim_id"), "left_semi"),
-      beforeCommit, prune)
-  }
+      victimsOf(spark, None, Seq(MembershipTerm(idCol, victims))),
+      beforeCommit)
 
   /** A snapshot's DV identity for one file — the drift probe
     * [[drifted]] compares across snapshots. */
@@ -1930,15 +1851,13 @@ object ManifestTable {
     * restarts the scan (a lost MoR-MoR race must not clobber the
     * winner's sidecar pointer). */
   private def morDelete(spark: SparkSession, root: String, op: String,
-                        hits: DataFrame => DataFrame,
-                        beforeCommit: () => Unit,
-                        prune: Option[Column]): Delete = {
+                        v: Victims, beforeCommit: () => Unit): Delete = {
     val abs = "__graft_file"
     val pos = "__graft_pos"
     transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
       val base = present(root, head)
       val scanFiles =
-        prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
+        v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
       if (scanFiles.isEmpty) Left(Delete(base, 0L))
       else {
         val scan = readSnapshotImpl(spark, root,
@@ -1948,7 +1867,7 @@ object ManifestTable {
         // write must see the same rows — and price it IN the pin's
         // own materializing job (Pin.countByKey: one action, not a
         // pin plus a grouped count over the rows just pinned)
-        val (victims, perFile) = Pin.countByKey(hits(scan)
+        val (victims, perFile) = Pin.countByKey(v.hits(scan)
           .select(relPathCol(F.col(abs)).as("file"), F.col(pos).as("pos")),
           "file")
         if (perFile.isEmpty) Left(Delete(base, 0L))
@@ -2113,9 +2032,11 @@ object ManifestTable {
   }
 
   /** The `#dvmode:` table declaration: with merge-on-read deletes ON,
-    * the SQL `DELETE FROM` door routes through [[deleteWhereMoR]] /
-    * [[deleteWhereTermsMoR]] instead of the copy-on-write rewrite
-    * (the Scala API always offers both). An ordinary metadata commit;
+    * every SQL `DELETE FROM` door (V1 rule, DSv2 `SupportsDelete`)
+    * routes through [[deleteWhereMoR]] instead of the copy-on-write
+    * [[deleteWhere]], membership terms included
+    * ([[graft.sources.ManifestSql.sqlDeleteAt]]); the Scala API
+    * always offers both. An ordinary metadata commit;
     * carries through compaction and every rewrite like any meta
     * line. */
   def setMorDeletes(root: String, on: Boolean): Snapshot =
@@ -2833,34 +2754,31 @@ object ManifestTable {
   }
 
   /** The shared copy-on-write engine: locate the files containing
-    * `hits` rows (one pushed-down job that also prices the report),
+    * victim rows (one pushed-down job that also prices the report),
     * rewrite ONLY those files through `rewrite`, and commit through
     * [[transact]] under conflict rule RESTART, the affected files as
     * the read set.
-    * `prune` (the op's predicate, when it has a stats-evaluable one)
-    * bounds even the VICTIM SCAN to the manifest's candidate files —
-    * the affected set is provably inside it, so skipped files need
-    * neither scanning nor rewriting. */
+    * The victims' prune bounds even the VICTIM SCAN to the manifest's
+    * candidate files — the affected set is provably inside it, so
+    * skipped files need neither scanning nor rewriting. */
   private def rewriteWith(spark: SparkSession, root: String, op: String,
-                          hits: DataFrame => DataFrame,
-                          rewrite: DataFrame => DataFrame,
-                          beforeCommit: () => Unit,
-                          prune: Option[Column] = None): Delete =
+                          v: Victims, rewrite: DataFrame => DataFrame,
+                          beforeCommit: () => Unit): Delete =
     transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
       val base = present(root, head)
       val scanFiles =
-        prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
+        v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
       if (scanFiles.isEmpty) Left(Delete(base, 0L))
       else {
         // the provenance column materializes AT THE SCAN, before any
-        // join/shuffle `hits` may introduce — and the scan overlays
+        // join/shuffle the victim filter may introduce — and the scan overlays
         // any deletion vectors, so already-MoR-deleted rows are never
         // victims (or survivors) of a copy-on-write pass
         val scan = readSnapshotImpl(spark, root,
           base.copy(files = scanFiles), fileCol = Some("__file"),
           posCol = None)
         // one pushed-down job: affected file -> victim count
-        val perFile = hits(scan)
+        val perFile = v.hits(scan)
           .groupBy("__file").count()
           .collect().map(r => (r.getString(0), r.getLong(1)))
         val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet

@@ -104,7 +104,8 @@ object Retraction {
     * `predicate` (a poisoned SOURCE, a date range, a license class):
     * the victim population is whatever the CURRENT corpus matches, a
     * set that is generally NOT driver-sized, so every store —
-    * including the corpus ([[ManifestTable.deleteIds]]) — purges
+    * including the corpus ([[ManifestTable.deleteWhere]] with the
+    * ids as a membership term) — purges
     * through frame joins instead of an id list. The victim-id frame
     * is pinned BEFORE any store is touched (it defines the set; with
     * a ledger, the pin IS the entry's persisted frame), so recall is
@@ -232,16 +233,14 @@ object Retraction {
       // the compliance clock stops there), foldDeletes below then
       // rewrites only the DV'd files to erase the bytes. The
       // copy-on-write path does both in its one rewrite.
-      val d = (victims, morDeletes) match {
-        case (Left(ids), false) => ManifestTable.deleteWhere(spark, root,
-          F.col(idCol).isin(ids: _*))
-        case (Left(ids), true) => ManifestTable.deleteWhereMoR(spark,
-          root, F.col(idCol).isin(ids: _*))
-        case (Right(df), false) =>
-          ManifestTable.deleteIds(spark, root, idCol, df)
-        case (Right(df), true) =>
-          ManifestTable.deleteIdsMoR(spark, root, idCol, df)
+      val (predicate, terms) = victims match {
+        case Left(ids) => (F.col(idCol).isin(ids: _*), Nil)
+        case Right(df) =>
+          (F.lit(true), Seq(ManifestTable.MembershipTerm(idCol, df)))
       }
+      val d =
+        if (morDeletes) ManifestTable.deleteWhereMoR(spark, root, predicate, terms)
+        else ManifestTable.deleteWhere(spark, root, predicate, terms)
       // fold ANY standing deletion vectors (this purge's, or ones a
       // crashed MoR takedown left behind — the resume path re-enters
       // here with morDeletes=false and still erases them): a takedown

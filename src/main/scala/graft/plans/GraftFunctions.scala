@@ -55,19 +55,11 @@ object GraftFunctions {
       case _ => None
     }
     val cat = spark.sessionState.catalog
-    ident.filter(i => scala.util.Try(
-      cat.tableExists(i) && !cat.isTempView(i) &&
-        cat.getTableMetadata(i).provider.exists(
-          _.equalsIgnoreCase(graft.sources.ManifestSql.ManifestProvider)))
-      .getOrElse(false))
-      .map { i =>
-        val meta = cat.getTableMetadata(i)
-        meta.storage.properties.get("path")
-          .orElse(meta.storage.locationUri.map(u =>
-            new org.apache.hadoop.fs.Path(u).toString))
-          .getOrElse(throw new IllegalStateException(
-            s"manifest catalog table ${i.quotedString} has no path"))
-      }
+    ident.flatMap(i => scala.util.Try(
+      if (cat.tableExists(i) && !cat.isTempView(i))
+        Some(cat.getTableMetadata(i)) else None).toOption.flatten)
+      .filter(graft.sources.ManifestSql.isManifestEntry)
+      .map(graft.sources.ManifestSql.rootOfEntry)
       .getOrElse(throw new IllegalArgumentException(
         s"$fn: '$arg' has no '/' (so it is not a path) and names no " +
           "session-catalog `USING graft-manifest` table — pass the " +

@@ -218,8 +218,8 @@ object GraftSqlParser {
     val isManifest =
       try {
         cat.tableExists(ident) && !cat.isTempView(ident) &&
-          cat.getTableMetadata(ident).provider
-            .exists(_.equalsIgnoreCase("graft-manifest"))
+          graft.sources.ManifestSql.isManifestEntry(
+            cat.getTableMetadata(ident))
       } catch {
         case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
              _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException |
@@ -238,14 +238,9 @@ object GraftSqlParser {
   }
 
   private def manifestRootOf(session: SparkSession,
-                             ident: TableIdentifier): String = {
-    val meta = session.sessionState.catalog.getTableMetadata(ident)
-    meta.storage.properties.get("path")
-      .orElse(meta.storage.locationUri.map(u =>
-        new org.apache.hadoop.fs.Path(u).toString))
-      .getOrElse(throw new IllegalStateException(
-        s"manifest catalog table ${ident.quotedString} has no path"))
-  }
+                             ident: TableIdentifier): String =
+    graft.sources.ManifestSql.rootOfEntry(
+      session.sessionState.catalog.getTableMetadata(ident))
 
   private def rewriteManifestSql(session: SparkSession,
                                  plan: LogicalPlan): LogicalPlan = {

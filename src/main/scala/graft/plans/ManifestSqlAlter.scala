@@ -71,22 +71,17 @@ case class ManifestSqlAlter(spark: SparkSession) extends Rule[LogicalPlan] {
   private def isManifestTable(ident: TableIdentifier): Boolean = {
     val cat = spark.sessionState.catalog
     cat.tableExists(ident) && !cat.isTempView(ident) &&
-      scala.util.Try(cat.getTableMetadata(ident).provider
-        .exists(_.equalsIgnoreCase("graft-manifest"))).getOrElse(false)
+      scala.util.Try(ManifestSql.isManifestEntry(
+        cat.getTableMetadata(ident))).getOrElse(false)
   }
 }
 
 object ManifestSqlAlter {
 
   private def rootOf(session: SparkSession,
-                     ident: TableIdentifier): String = {
-    val meta = session.sessionState.catalog.getTableMetadata(ident)
-    meta.storage.properties.get("path")
-      .orElse(meta.storage.locationUri.map(u =>
-        new org.apache.hadoop.fs.Path(u).toString))
-      .getOrElse(throw new IllegalStateException(
-        s"manifest catalog table ${ident.quotedString} has no path"))
-  }
+                     ident: TableIdentifier): String =
+    ManifestSql.rootOfEntry(
+      session.sessionState.catalog.getTableMetadata(ident))
 
   /** Shared epilogue of a schema-SHAPE change (rename/drop): the
     * physical projection changed, so rebuild the registration the

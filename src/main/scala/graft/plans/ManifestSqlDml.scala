@@ -2,11 +2,10 @@ package graft.plans
 
 import scala.annotation.tailrec
 
-import org.apache.spark.sql.{Column, Row, SparkSession, functions => F,
-  graftbridge}
+import org.apache.spark.sql.{Column, Row, SparkSession, graftbridge}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast,
-  EqualTo, Expression, SubqueryExpression}
+  EqualTo, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -32,10 +31,13 @@ import graft.sources.ManifestSql
   * runnable commands over the Scala writers, which already own the
   * semantics end to end:
   *
-  *  - `DELETE FROM t WHERE p` → `ManifestTable.deleteWhere` — the
-  *    victim scan prunes through per-file bounds + Blooms, rewrites
-  *    only affected files, restarts on commit conflict;
-  *  - `UPDATE t SET c = e, … WHERE p` → `ManifestTable.updateWhere`;
+  *  - `DELETE FROM t WHERE p` → one [[ManifestDeleteCommand]] →
+  *    `ManifestSql.sqlDeleteAt`: `ManifestTable.deleteWhere` (or
+  *    `deleteWhereMoR` on a `#dvmode:` table) — the victim scan
+  *    prunes through per-file bounds + Blooms, rewrites only
+  *    affected files, restarts on commit conflict;
+  *  - `UPDATE t SET c = e, … WHERE p` → one [[ManifestUpdateCommand]]
+  *    → `ManifestTable.updateWhere`;
   *  - `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE
   *    SET * WHEN NOT MATCHED THEN INSERT *` →
   *    `ManifestTable.upsert` (whole-row replace-or-insert by key) —
@@ -51,13 +53,14 @@ import graft.sources.ManifestSql
   *    (clauses translated with source attributes re-addressed under
   *    the merge frame's `__s_` prefix).
   *
-  * DELETE/UPDATE predicates may carry ANY NUMBER of membership
-  * terms as top-level conjuncts — UNCORRELATED `col IN (SELECT …)`
-  * and `[NOT] EXISTS (SELECT … WHERE s.k = t.col [AND inner…])`
-  * with exactly one equality correlation — each materializing as a
-  * values frame of `deleteWhereTerms` / `updateWhereTerms` (joins,
-  * unbounded, victim scan pruned by the residue AND every positive
-  * term's value set).
+  * A DELETE/UPDATE predicate splits into a subquery-free residue
+  * plus ANY NUMBER of membership terms (none for a plain predicate)
+  * as top-level conjuncts — UNCORRELATED `col IN (SELECT …)` and
+  * `[NOT] EXISTS (SELECT … WHERE s.k = t.col [AND inner…])` with
+  * exactly one equality correlation — each materializing as a
+  * `ManifestTable.MembershipTerm` values frame of the same
+  * `deleteWhere` / `updateWhere` call (joins, unbounded, victim scan
+  * pruned by the residue AND every positive term's value set).
   *
   * `MERGE … WITH SCHEMA EVOLUTION` (r19): source columns absent
   * from the target are ADDED through the schema ledger before the
@@ -88,11 +91,8 @@ case class ManifestSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
     plan.resolveOperatorsUp {
       case d @ DeleteFromTable(tgt @ ManifestTarget(idx), cond)
           if d.childrenResolved && cond.resolved =>
-        extractMembership(cond, tgt, "DELETE") match {
-          case None => ManifestDeleteCommand(idx, byName(cond))
-          case Some(m) => ManifestDeleteInCommand(idx,
-            m.residue.map(byName), m.terms)
-        }
+        val m = extractMembership(cond, tgt, "DELETE")
+        ManifestDeleteCommand(idx, byName(m.residue), m.terms)
 
       case u @ UpdateTable(tgt @ ManifestTarget(idx), assignments, cond)
           if u.childrenResolved && cond.forall(_.resolved) =>
@@ -106,13 +106,9 @@ case class ManifestSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
             "manifest SQL UPDATE assigns whole columns only — " +
               s"'${other.sql}' is not a column of the target table")
         }
-        cond.flatMap(extractMembership(_, tgt, "UPDATE")) match {
-          case None =>
-            ManifestUpdateCommand(idx,
-              cond.map(byName).getOrElse(F.lit(true)), pairs)
-          case Some(m) => ManifestUpdateInCommand(idx,
-            m.residue.map(byName), m.terms, pairs)
-        }
+        val m = extractMembership(cond.getOrElse(Literal.TrueLiteral), tgt,
+          "UPDATE")
+        ManifestUpdateCommand(idx, byName(m.residue), m.terms, pairs)
 
       case m @ MergeIntoTable(tgt @ ManifestTarget(idx), source, cond,
           matched, notMatched, notMatchedBySource, withSchemaEvolution)
@@ -387,8 +383,7 @@ object ManifestSqlDml {
       }
       .find(i => scala.util.Try(
         cat.tableExists(i) && !cat.isTempView(i) &&
-          cat.getTableMetadata(i).provider.exists(
-            _.equalsIgnoreCase(ManifestSql.ManifestProvider)))
+          ManifestSql.isManifestEntry(cat.getTableMetadata(i)))
         .getOrElse(false))
   }
 
@@ -455,15 +450,14 @@ object ManifestSqlDml {
                                            negated: Boolean)
 
   /** The membership terms of a DML predicate plus the subquery-free
-    * residue. */
-  private final case class Membership(residue: Option[Expression],
+    * residue (`true` when every conjunct is a term). */
+  private final case class Membership(residue: Expression,
                                       terms: Seq[TermSpec])
 
-  /** Decompose a DML predicate with subqueries into `residue AND
-    * term1 AND term2 …`, each term a shape [[graft.operators
-    * .ManifestTable.deleteWhereTerms]]/`updateWhereTerms` serve with
-    * frame joins (no V1 seam exists for the general v2 subquery
-    * rewrite):
+  /** Decompose a DML predicate into `residue AND term1 AND term2 …`,
+    * each term a [[graft.operators.ManifestTable.MembershipTerm]]
+    * shape `deleteWhere`/`updateWhere` serve with frame joins (no V1
+    * seam exists for the general v2 subquery rewrite):
     *
     *  - `col IN (SELECT …)`, UNCORRELATED — the subquery is the
     *    values frame;
@@ -474,18 +468,18 @@ object ManifestSqlDml {
     *    sound frame twin (a NULL `t.col` equality-matches nothing,
     *    which is exactly EXISTS' semantics on both polarities).
     *
-    * Returns None when the predicate has NO subquery (the plain
-    * path). Refuses loudly: a disjunctive placement (terms must be
+    * A predicate with NO subquery is all residue, unchanged. Refuses
+    * loudly: a disjunctive placement (terms must be
     * top-level conjuncts), `NOT IN` (its three-valued NULL semantics
     * have no sound frame-join twin), correlated IN, uncorrelated
     * EXISTS (it is a row-independent constant — evaluate it and drop
     * the conjunct), multi-equality or non-equality correlation,
     * multi-column IN tuples, and non-column member expressions. */
   private def extractMembership(cond: Expression, tgt: LogicalPlan,
-                                verb: String): Option[Membership] = {
+                                verb: String): Membership = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, And, Exists,
       InSubquery, ListQuery, Not, OuterReference}
-    if (!SubqueryExpression.hasSubquery(cond)) return None
+    if (!SubqueryExpression.hasSubquery(cond)) return Membership(cond, Nil)
     def conjuncts(e: Expression): Seq[Expression] = e match {
       case And(l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
@@ -575,7 +569,7 @@ object ManifestSqlDml {
           "'col IN (SELECT …)' / '[NOT] EXISTS (…)' AND-conjuncts; " +
           s"got '${other.sql}'")
     }
-    Some(Membership(rest.reduceOption(And), terms))
+    Membership(rest.reduceOption(And).getOrElse(Literal.TrueLiteral), terms)
   }
 
   private def stripCast(e: Expression): Expression = e match {
@@ -657,56 +651,39 @@ object ManifestSqlDml {
     } yield targetCols.map(c => c -> iMap(c))
   }
 
-  /** `DELETE FROM <manifest table> WHERE p` as a runnable command —
-    * a thin shell over [[ManifestSql.sqlDelete]], the one owner. */
+  /** The terms' values plans as frames of this session. */
+  private def framesOf(session: SparkSession, terms: Seq[TermSpec])
+      : Seq[graft.operators.ManifestTable.MembershipTerm] =
+    terms.map(t => graft.operators.ManifestTable.MembershipTerm(
+      t.col, graftbridge.ofRows(session, t.values), t.negated))
+
+  /** `DELETE FROM t WHERE [p AND] <membership terms>` as a runnable
+    * command — a thin shell over [[ManifestSql.sqlDelete]], the one
+    * owner; each subquery materializes as a values FRAME (joins,
+    * unbounded). */
   case class ManifestDeleteCommand(index: ManifestSql.ManifestFileIndex,
-                                   predicate: Column)
-    extends LeafRunnableCommand {
-    override def run(session: SparkSession): Seq[Row] = {
-      ManifestSql.sqlDelete(session, index, predicate)
-      Seq.empty
-    }
-  }
-
-  /** `DELETE FROM t WHERE [p AND] <membership terms>` — each
-    * subquery materializes as a values FRAME of [[graft.operators
-    * .ManifestTable.deleteWhereTerms]] (joins, unbounded). */
-  case class ManifestDeleteInCommand(index: ManifestSql.ManifestFileIndex,
-                                     residue: Option[Column],
-                                     terms: Seq[TermSpec])
+                                   residue: Column,
+                                   terms: Seq[TermSpec])
     extends LeafRunnableCommand {
     override def innerChildren: Seq[LogicalPlan] = terms.map(_.values)
     override def run(session: SparkSession): Seq[Row] = {
-      ManifestSql.sqlDeleteIn(session, index, residue,
-        terms.map(t => graft.operators.ManifestTable.MembershipTerm(
-          t.col, graftbridge.ofRows(session, t.values), t.negated)))
+      ManifestSql.sqlDelete(session, index, residue,
+        framesOf(session, terms))
       Seq.empty
     }
   }
 
-  /** `UPDATE t SET … WHERE [p AND] <membership terms>`. */
-  case class ManifestUpdateInCommand(index: ManifestSql.ManifestFileIndex,
-                                     residue: Option[Column],
-                                     terms: Seq[TermSpec],
-                                     assignments: Seq[(String, Column)])
-    extends LeafRunnableCommand {
-    override def innerChildren: Seq[LogicalPlan] = terms.map(_.values)
-    override def run(session: SparkSession): Seq[Row] = {
-      ManifestSql.sqlUpdateIn(session, index, residue,
-        terms.map(t => graft.operators.ManifestTable.MembershipTerm(
-          t.col, graftbridge.ofRows(session, t.values), t.negated)),
-        assignments)
-      Seq.empty
-    }
-  }
-
-  /** `UPDATE <manifest table> SET … WHERE p` as a runnable command. */
+  /** `UPDATE t SET … WHERE [p AND] <membership terms>` as a runnable
+    * command over [[ManifestSql.sqlUpdate]]. */
   case class ManifestUpdateCommand(index: ManifestSql.ManifestFileIndex,
-                                   predicate: Column,
+                                   residue: Column,
+                                   terms: Seq[TermSpec],
                                    assignments: Seq[(String, Column)])
     extends LeafRunnableCommand {
+    override def innerChildren: Seq[LogicalPlan] = terms.map(_.values)
     override def run(session: SparkSession): Seq[Row] = {
-      ManifestSql.sqlUpdate(session, index, predicate, assignments)
+      ManifestSql.sqlUpdate(session, index, residue,
+        framesOf(session, terms), assignments)
       Seq.empty
     }
   }

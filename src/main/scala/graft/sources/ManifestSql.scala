@@ -51,6 +51,23 @@ object ManifestSql {
     * (V1 rules, parse-time rewrites, the DSv2 catalog) detects by. */
   val ManifestProvider = "graft-manifest"
 
+  /** Is this catalog entry a `USING graft-manifest` table? The one
+    * provider check behind every door's catalog probe; each caller
+    * keeps its own lookup and failure policy. */
+  private[graft] def isManifestEntry(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): Boolean =
+    meta.provider.exists(_.equalsIgnoreCase(ManifestProvider))
+
+  /** The manifest root a catalog entry points at: its `path` storage
+    * property, else its location. */
+  private[graft] def rootOfEntry(
+      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): String =
+    meta.storage.properties.get("path")
+      .orElse(meta.storage.locationUri.map(u => new HPath(u).toString))
+      .getOrElse(throw new IllegalStateException(
+        s"manifest catalog table ${meta.identifier.quotedString} " +
+          "has no path"))
+
   /** The manifest-backed [[FileIndex]]: `listFiles` returns only the
     * files whose recorded stats may match the pushed data filters.
     * Conservative everywhere the stats machinery is — an
@@ -308,67 +325,48 @@ object ManifestSql {
     spark.catalog.refreshByPath(idx.root)
   }
 
-  /** Should SQL deletes on this table run merge-on-read? The
-    * `#dvmode:` table declaration ([[ManifestTable.setMorDeletes]]). */
-  private def sqlDeletesAreMoR(idx: ManifestFileIndex): Boolean =
-    ManifestTable.latest(idx.root).exists(ManifestTable.morDeletes)
-
-  /** The ONE owner of SQL `DELETE FROM` semantics: the ledgered
-    * copy-on-write [[ManifestTable.deleteWhere]] (victim scan pruned
-    * by the predicate through bounds + Blooms) — or, on a table
-    * declared merge-on-read ([[ManifestTable.setMorDeletes]]), the
+  /** The ONE owner of SQL `DELETE FROM` semantics, root-addressed
+    * like [[sqlInsertAt]] so every door shares it (the V1 rule path
+    * through [[sqlDelete]], the DSv2 `SupportsDelete` door
+    * [[graft.catalog.GraftTable]]): victims are the rows where
+    * `predicate` and every membership term hold (each term a `c IN
+    * (SELECT …)` or equality-correlated `[NOT] EXISTS` conjunct,
+    * arriving as an unbounded values frame). The table's `#dvmode:`
+    * declaration ([[ManifestTable.setMorDeletes]]) picks the
     * deletion-vector [[ManifestTable.deleteWhereMoR]], which rewrites
-    * NO data file — then the shared pin move + cache invalidation. */
+    * NO data file, over the copy-on-write
+    * [[ManifestTable.deleteWhere]] (victim scan pruned by the
+    * predicate and the terms through bounds + Blooms). */
+  private[graft] def sqlDeleteAt(spark: SparkSession, root: String,
+                                 predicate: org.apache.spark.sql.Column,
+                                 terms: Seq[ManifestTable.MembershipTerm] = Nil)
+      : Unit =
+    if (ManifestTable.latest(root).exists(ManifestTable.morDeletes))
+      ManifestTable.deleteWhereMoR(spark, root, predicate, terms)
+    else ManifestTable.deleteWhere(spark, root, predicate, terms)
+
+  /** SQL `DELETE FROM` on a registration: [[sqlDeleteAt]] on its
+    * root, then the shared pin move + cache invalidation. */
   private[graft] def sqlDelete(spark: SparkSession, idx: ManifestFileIndex,
-                               predicate: org.apache.spark.sql.Column)
+                               predicate: org.apache.spark.sql.Column,
+                               terms: Seq[ManifestTable.MembershipTerm])
       : Unit = {
     requireHead(idx, "DELETE FROM")
-    if (sqlDeletesAreMoR(idx))
-      ManifestTable.deleteWhereMoR(spark, idx.root, predicate)
-    else ManifestTable.deleteWhere(spark, idx.root, predicate)
-    afterSqlWrite(spark, idx)
-  }
-
-  /** SQL `DELETE FROM … WHERE [p AND] <membership terms>` — each
-    * term a `c IN (SELECT …)` or equality-correlated `[NOT] EXISTS`
-    * conjunct: [[ManifestTable.deleteWhereTerms]] (merge-on-read
-    * twin under `#dvmode:`) under the same guards — the subqueries
-    * arrive as unbounded values frames. */
-  private[graft] def sqlDeleteIn(spark: SparkSession,
-                                 idx: ManifestFileIndex,
-                                 residue: Option[org.apache.spark.sql.Column],
-                                 terms: Seq[ManifestTable.MembershipTerm])
-      : Unit = {
-    requireHead(idx, "DELETE FROM")
-    if (sqlDeletesAreMoR(idx))
-      ManifestTable.deleteWhereTermsMoR(spark, idx.root, residue, terms)
-    else ManifestTable.deleteWhereTerms(spark, idx.root, residue, terms)
-    afterSqlWrite(spark, idx)
-  }
-
-  /** SQL `UPDATE … WHERE [p AND] <membership terms>`:
-    * [[ManifestTable.updateWhereTerms]] under the same guards. */
-  private[graft] def sqlUpdateIn(spark: SparkSession,
-                                 idx: ManifestFileIndex,
-                                 residue: Option[org.apache.spark.sql.Column],
-                                 terms: Seq[ManifestTable.MembershipTerm],
-                                 assignments: Seq[(String,
-                                   org.apache.spark.sql.Column)]): Unit = {
-    requireHead(idx, "UPDATE")
-    ManifestTable.updateWhereTerms(spark, idx.root, residue, terms,
-      assignments.toMap)
+    sqlDeleteAt(spark, idx.root, predicate, terms)
     afterSqlWrite(spark, idx)
   }
 
   /** The ONE owner of SQL `UPDATE` semantics:
-    * [[ManifestTable.updateWhere]] under the same guards. */
+    * [[ManifestTable.updateWhere]] (predicate AND membership terms,
+    * as for [[sqlDeleteAt]]) under the same guards. */
   private[graft] def sqlUpdate(spark: SparkSession, idx: ManifestFileIndex,
                                predicate: org.apache.spark.sql.Column,
+                               terms: Seq[ManifestTable.MembershipTerm],
                                assignments: Seq[(String,
                                  org.apache.spark.sql.Column)]): Unit = {
     requireHead(idx, "UPDATE")
     ManifestTable.updateWhere(spark, idx.root, predicate,
-      assignments.toMap)
+      assignments.toMap, terms)
     afterSqlWrite(spark, idx)
   }
 
@@ -661,7 +659,7 @@ object ManifestSql {
     def createTable(tableName: String): Unit = {
       val tmp = s"${tableName}_reg_" +
         java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      spark.catalog.createTable(tmp, "graft-manifest",
+      spark.catalog.createTable(tmp, ManifestProvider,
         Map("path" -> root))
       try {
         dropAnyShape(tableName)

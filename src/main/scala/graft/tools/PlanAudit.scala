@@ -1,18 +1,13 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Emits a markdown table of scale-relevant physical-plan properties
   * for every SparkEntry query: shuffle (Exchange) count, broadcast
   * usage, parquet filter pushdown, codegen presence. */
 object PlanAudit {
   def main(a: Array[String]): Unit = {
     val sfDir = a.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.api.Metastore.configure(
-      SparkSession.builder().master("local[4]"))
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.sql.adaptive.enabled","false")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.api.Sessions.local(4)
+    // AQE off so the printed plans are the final static plans
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     println("| query | shuffles | broadcast | pushed filters | codegen |")
     println("|---|---|---|---|---|")

@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -94,15 +93,8 @@ object Profile {
 
   def main(a: Array[String]): Unit = {
     val sfDir = a.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.api.Metastore.configure(SparkSession.builder()
-      .master(s"local[$cpus]"))
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.api.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val agg = new Agg
     spark.sparkContext.addSparkListener(agg)

@@ -1696,6 +1696,19 @@ class ManifestTableSpec extends SparkSpec {
       ManifestTable.deleteWhereMoR(spark, root, F.col("id") < 5,
         beforeCommit = bc); ()
     }, _.filter(_._1 >= 5)),
+    // the membership-term forms: victims are the predicate AND the
+    // term, so 7 (a member failing the predicate) and 0, 2, 4 (passing
+    // the predicate, not members) survive
+    Writer("deleteWhere+term", (root, bc) => {
+      ManifestTable.deleteWhere(spark, root, F.col("id") < 5,
+        Seq(ManifestTable.MembershipTerm("id", Seq(1L, 3L, 7L).toDF("k"))),
+        beforeCommit = bc); ()
+    }, _ -- Seq(1L, 3L)),
+    Writer("deleteWhereMoR+term", (root, bc) => {
+      ManifestTable.deleteWhereMoR(spark, root, F.col("id") < 5,
+        Seq(ManifestTable.MembershipTerm("id", Seq(1L, 3L, 7L).toDF("k"))),
+        beforeCommit = bc); ()
+    }, _ -- Seq(1L, 3L)),
     Writer("overwriteWhere", (root, bc) => {
       ManifestTable.overwriteWhere(spark, root,
         F.col("id") >= 50 && F.col("id") < 60, mergeSrc(Seq(50L, 51L), "re"),
@@ -1736,6 +1749,8 @@ class ManifestTableSpec extends SparkSpec {
     "deleteWhere"    -> Seq("merge", "restart", "restart", "merge", "merge"),
     "updateWhere"    -> Seq("merge", "restart", "restart", "merge", "merge"),
     "deleteWhereMoR" -> Seq("merge", "restart", "restart", "merge", "merge"),
+    "deleteWhere+term" -> Seq("merge", "restart", "restart", "merge", "merge"),
+    "deleteWhereMoR+term" -> Seq("merge", "restart", "restart", "merge", "merge"),
     "overwriteWhere" -> Seq("merge", "restart", "restart", "merge", "refuse"),
     "compact"        -> Seq("merge", "abort",   "abort",   "merge", "merge"))
 
@@ -1789,7 +1804,7 @@ class ManifestTableSpec extends SparkSpec {
       conflictMatrix(w.name)(2) == "restart")
     assert(restartWriters.map(_.name) == Seq("upsert", "upsertBatch",
       "mergeInto", "deleteWhere", "updateWhere", "deleteWhereMoR",
-      "overwriteWhere"))
+      "deleteWhere+term", "deleteWhereMoR+term", "overwriteWhere"))
     for (w <- restartWriters) {
       val root = java.nio.file.Files.createTempDirectory("graft_bound").toString
       ManifestTable.init(root, Seq("id"))
@@ -1803,7 +1818,9 @@ class ManifestTableSpec extends SparkSpec {
           calls += 1
         })
       }
-      val op = if (w.name == "upsertBatch") "upsert" else w.name
+      // the term forms commit under their verb's own op name
+      val op = if (w.name == "upsertBatch") "upsert"
+        else w.name.stripSuffix("+term")
       assert(e.getMessage.startsWith(s"$op at $root lost 8 consecutive " +
         "conflicts on the files it read"), s"${w.name}: ${e.getMessage}")
       assert(calls == 8, s"${w.name} made $calls attempts")

@@ -852,4 +852,68 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("Cartesian"),
       s"DV overlay planned a shuffle/cartesian:\n${plan.take(1200)}")
   }
+
+  /** The executed plan of every query `body` runs (row-level writes
+    * run their victim scans as internal actions), with the listener
+    * bus drained before and after, as in [[jobsDuring]]. */
+  private def plansDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftbridge.drainListeners(sc)
+    spark.listenerManager.register(l)
+    try {
+      body
+      org.apache.spark.sql.graftbridge.drainListeners(sc)
+      plans.toArray(Array.empty[String]).toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("row-level writes push the victim predicate into the parquet scan (deleteWhere, updateWhere, SQL DELETE with an IN subquery)") {
+    import graft.operators.ManifestTable
+    import spark.implicits._
+    def fresh(): String = {
+      val root = java.nio.file.Files.createTempDirectory("graft_psrow")
+        .toString + "/t"
+      ManifestTable.init(root, Seq("id"))
+      ManifestTable.append(spark, root, (0L until 100L).toDF("id")
+        .withColumn("v", F.col("id") * 2))
+      root
+    }
+    def pushed(plans: Seq[String]): Seq[String] = plans.flatMap(p =>
+      "PushedFilters: \\[([^\\]]*)\\]".r.findAllMatchIn(p).map(_.group(1)))
+    def assertPushed(what: String, plans: Seq[String]): Unit =
+      assert(pushed(plans).exists(_.contains("LessThan(id,5)")),
+        s"$what: victim predicate not pushed; scans pushed " +
+          pushed(plans).mkString("[", "] [", "]"))
+    val del = fresh()
+    assertPushed("deleteWhere", plansDuring {
+      ManifestTable.deleteWhere(spark, del, F.col("id") < 5); ()
+    })
+    assert(ManifestTable.read(spark, del).count() == 95L)
+    val upd = fresh()
+    assertPushed("updateWhere", plansDuring {
+      ManifestTable.updateWhere(spark, upd, F.col("id") < 5,
+        Map("v" -> F.lit(-1L))); ()
+    })
+    assert(ManifestTable.read(spark, upd).filter(F.col("v") === -1L)
+      .count() == 5L)
+    // the residue beside a membership term pushes as well
+    val sql = fresh()
+    graft.sources.ManifestSql.register(spark, "ps_rowlevel", sql)
+    (0L until 100L by 2L).toDF("k").createOrReplaceTempView("ps_rowlevel_keys")
+    assertPushed("SQL DELETE … AND id IN (SELECT …)", plansDuring {
+      spark.sql("DELETE FROM ps_rowlevel WHERE id < 5 AND id IN " +
+        "(SELECT k FROM ps_rowlevel_keys)"); ()
+    })
+    assert(ManifestTable.read(spark, sql).select("id").as[Long].collect()
+      .toSet == (0L until 100L).toSet -- Seq(0L, 2L, 4L))
+  }
 }

@@ -6,16 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    // suites run under the same HMS-backed catalog as Verify/Bench
-    // (SPARK_GRAFT_HMS=0 opts back into the in-memory catalog)
-    val s = graft.api.Metastore.configure(SparkSession.builder()
-      .master("local[4]"))
-      .appName("graft-test")
-      .withExtensions(new graft.plans.GraftSparkExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // suites run under the same session recipe and HMS-backed catalog
+    // as Verify/Bench (SPARK_GRAFT_HMS=0 opts back into the in-memory
+    // catalog)
+    val s = graft.api.Sessions.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
