@@ -36,12 +36,6 @@ object Dates {
       s"unsupported relative date expression: '$offset'")
   }
 
-  /** The reference's `strtotime('-1 year')` anchored at now —
-    * nondeterministic by nature; prefer the two-arg form in anything
-    * replayable. */
-  def relativeToNow(offset: String): Column =
-    relative(offset, F.current_timestamp())
-
   /** Exact epoch-ns → epoch-µs truncation for an int64 nanos column.
     * NOT `(c / 1000L)`: Spark's long `/` is DOUBLE division, and at
     * 2024-era nanos (~1.7e18) the double ulp is 256 ns — the quotient

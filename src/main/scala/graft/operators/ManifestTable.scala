@@ -1938,57 +1938,21 @@ object ManifestTable {
   def overwriteWhere(spark: SparkSession, root: String,
                      predicate: Column, df: DataFrame,
                      beforeCommit: () => Unit = () => ()): Delete = {
-    // the new rows write ONCE, on the first attempt; a restart reuses
-    // their files and re-derives only the replaced region
-    var reload: Option[(Seq[String], Map[String, String], StructType)] = None
-    transact(root, "overwriteWhere", Restart, beforeCommit = beforeCommit) {
-      (head, w) =>
-        val base = present(root, head)
-        val (newFiles, newStats, newSchema) = reload.getOrElse {
-          // fused pin (Pin.countWhere): the violation audit rides the
-          // pin's own materializing job; the audit column lives only in
-          // the pinned rows and is projected away before the write
-          val (pinnedV, violations) = Pin.countWhere(
-            df.withColumn("__graft_viol", !F.coalesce(predicate, F.lit(false))),
-            "__graft_viol")
-          require(violations == 0L,
-            s"overwriteWhere: $violations new row(s) do not satisfy the " +
-              "replace predicate — they would land OUTSIDE the replaced " +
-              "region; widen the predicate or filter the input")
-          val pinned = pinnedV.drop("__graft_viol")
-          val (files, stats) = w.data(spark, pinned, base)
-          reload = Some((files, stats, pinned.schema))
-          reload.get
-        }
-        val scanFiles =
-          if (base.files.isEmpty) Seq.empty
-          else candidateFiles(spark, root, base, predicate)
-        val (affected, removed) =
-          if (scanFiles.isEmpty) (Seq.empty[String], 0L)
-          else {
-            val scan = readSnapshotImpl(spark, root,
-              base.copy(files = scanFiles), fileCol = Some("__file"),
-              posCol = None)
-            val perFile = scan.filter(predicate)
-              .groupBy("__file").count()
-              .collect().map(r => (r.getString(0), r.getLong(1)))
-            val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
-            (base.files.filter(hitRel), perFile.map(_._2).sum)
-          }
-        // keep side of the affected files (DV overlay applied, so a
-        // MoR-deleted row neither survives nor double-counts); with no
-        // affected file the op is a plain ledgered append
-        val (keptFiles, keptStats) =
-          if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
-          else w.data(spark, readSnapshot(spark, root,
-            base.copy(files = affected))
-            .filter(!F.coalesce(predicate, F.lit(false))), base)
-        val affectedSet = affected.toSet
-        Right(Plan(cur => Some(cur.copy(
-          files = cur.files.filterNot(affectedSet) ++ keptFiles ++ newFiles,
-          stats = cur.stats ++ keptStats ++ newStats)),
-          Delete(_, removed), readSet = affected, schema = Some(newSchema)))
-    }
+    // fused pin (Pin.countWhere): the violation audit rides the pin's
+    // own materializing job; the audit column lives only in the pinned
+    // rows and is projected away before the write
+    val (pinnedV, violations) = Pin.countWhere(
+      df.withColumn("__graft_viol", !F.coalesce(predicate, F.lit(false))),
+      "__graft_viol")
+    require(violations == 0L,
+      s"overwriteWhere: $violations new row(s) do not satisfy the " +
+        "replace predicate — they would land OUTSIDE the replaced " +
+        "region; widen the predicate or filter the input")
+    // the keep side of the affected files reads through any DV overlay,
+    // so a MoR-deleted row neither survives nor double-counts
+    val v = victimsOf(spark, Some(predicate), Nil)
+    rewriteWith(spark, root, "overwriteWhere", v, v.keep, beforeCommit,
+      added = Some(pinnedV.drop("__graft_viol")))
   }
 
   /** FOLD DELETION VECTORS: rewrite ONLY the files carrying a DV
@@ -2250,8 +2214,9 @@ object ManifestTable {
   // not start with `__` (checked below), so `__merge_*` is unreachable.
   private val MergePresentCol = "__merge_present"
 
-  /** GENERAL MERGE — the full SQL `MERGE INTO` shape ([[upsert]] is
-    * the whole-row fast path; this is everything else): conditional
+  /** GENERAL MERGE — the full SQL `MERGE INTO` shape and the one
+    * engine behind every SQL MERGE ([[upsert]] is the Scala
+    * whole-row replace-or-insert): conditional
     * and partial `WHEN MATCHED THEN UPDATE/DELETE` clauses,
     * conditional `WHEN NOT MATCHED THEN INSERT` clauses, and `WHEN
     * NOT MATCHED BY SOURCE THEN UPDATE/DELETE` clauses, applied in
@@ -2760,46 +2725,61 @@ object ManifestTable {
     * the read set.
     * The victims' prune bounds even the VICTIM SCAN to the manifest's
     * candidate files — the affected set is provably inside it, so
-    * skipped files need neither scanning nor rewriting. */
+    * skipped files need neither scanning nor rewriting.
+    * `added` rows (the [[overwriteWhere]] reload) write ONCE, on the
+    * first attempt — a restart reuses their files — and land after
+    * the rewritten ones, schema merged as an append's, in the same
+    * commit; with no victim the op is a plain ledgered append of
+    * them. */
   private def rewriteWith(spark: SparkSession, root: String, op: String,
                           v: Victims, rewrite: DataFrame => DataFrame,
-                          beforeCommit: () => Unit): Delete =
+                          beforeCommit: () => Unit,
+                          added: Option[DataFrame] = None): Delete = {
+    var addedOut: Option[(Seq[String], Map[String, String])] = None
     transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
       val base = present(root, head)
-      val scanFiles =
-        v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-      if (scanFiles.isEmpty) Left(Delete(base, 0L))
-      else {
-        // the provenance column materializes AT THE SCAN, before any
-        // join/shuffle the victim filter may introduce — and the scan overlays
-        // any deletion vectors, so already-MoR-deleted rows are never
-        // victims (or survivors) of a copy-on-write pass
-        val scan = readSnapshotImpl(spark, root,
-          base.copy(files = scanFiles), fileCol = Some("__file"),
-          posCol = None)
-        // one pushed-down job: affected file -> victim count
-        val perFile = v.hits(scan)
-          .groupBy("__file").count()
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-        val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
-        val affected = base.files.filter(hitRel)
-        val removed = perFile.map(_._2).sum
-        if (affected.isEmpty) Left(Delete(base, 0L))
-        else {
-          // rewrite ONLY the affected files — through the mapped
-          // projection, so rewritten files carry the CURRENT names
-          val affectedScan =
-            readSnapshot(spark, root, base.copy(files = affected))
-          val (newFiles, newStats) =
-            w.data(spark, rewrite(affectedScan), base)
-          val affectedSet = affected.toSet
-          Right(Plan(cur => Some(cur.copy(
-            files = cur.files.filterNot(affectedSet) ++ newFiles,
-            stats = cur.stats ++ newStats)), Delete(_, removed),
-            readSet = affected))
+      val (addedFiles, addedStats) = added.fold(
+        (Seq.empty[String], Map.empty[String, String])) { df =>
+        addedOut.getOrElse {
+          addedOut = Some(w.data(spark, df, base))
+          addedOut.get
         }
       }
+      val scanFiles =
+        v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
+      val perFile =
+        if (scanFiles.isEmpty) Array.empty[(String, Long)]
+        else {
+          // the provenance column materializes AT THE SCAN, before any
+          // join/shuffle the victim filter may introduce — and the scan
+          // overlays any deletion vectors, so already-MoR-deleted rows
+          // are never victims (or survivors) of a copy-on-write pass
+          val scan = readSnapshotImpl(spark, root,
+            base.copy(files = scanFiles), fileCol = Some("__file"),
+            posCol = None)
+          // one pushed-down job: affected file -> victim count
+          v.hits(scan).groupBy("__file").count()
+            .collect().map(r => (r.getString(0), r.getLong(1)))
+        }
+      val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
+      val affected = base.files.filter(hitRel)
+      val removed = perFile.map(_._2).sum
+      if (affected.isEmpty && added.isEmpty) Left(Delete(base, 0L))
+      else {
+        // rewrite ONLY the affected files — through the mapped
+        // projection, so rewritten files carry the CURRENT names
+        val (newFiles, newStats) =
+          if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
+          else w.data(spark, rewrite(readSnapshot(spark, root,
+            base.copy(files = affected))), base)
+        val affectedSet = affected.toSet
+        Right(Plan(cur => Some(cur.copy(
+          files = cur.files.filterNot(affectedSet) ++ newFiles ++ addedFiles,
+          stats = cur.stats ++ newStats ++ addedStats)), Delete(_, removed),
+          readSet = affected, schema = added.map(_.schema)))
+      }
     }
+  }
 
   /** TABLE HISTORY — one row per SURVIVING manifest version, from
     * metadata alone (zero data I/O): file count, total rows (when

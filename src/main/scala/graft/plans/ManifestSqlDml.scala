@@ -38,20 +38,16 @@ import graft.sources.ManifestSql
   *    affected files, restarts on commit conflict;
   *  - `UPDATE t SET c = e, … WHERE p` → one [[ManifestUpdateCommand]]
   *    → `ManifestTable.updateWhere`;
-  *  - `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE
-  *    SET * WHEN NOT MATCHED THEN INSERT *` →
-  *    `ManifestTable.upsert` (whole-row replace-or-insert by key) —
-  *    or `upsertBatch` when [[ManifestSql.BatchIdConf]] is set, so a
-  *    replayed MERGE no-ops against the batch ledger;
-  *  - `MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN DELETE`
-  *    (alone) → `ManifestTable.deleteIds` — the key-list takedown;
-  *  - every OTHER merge shape — conditional matched clauses, partial
-  *    `UPDATE SET c = e`, multiple WHEN arms, conditional inserts,
-  *    COMPOSITE ON keys (a conjunction of equalities),
-  *    `WHEN NOT MATCHED BY SOURCE THEN UPDATE/DELETE` —
-  *    → `ManifestTable.mergeInto`, the general copy-on-write merge
-  *    (clauses translated with source attributes re-addressed under
-  *    the merge frame's `__s_` prefix).
+  *  - `MERGE INTO t USING s ON t.k = s.k …`, whatever its clauses
+  *    — star `UPDATE SET *` / `INSERT *`, a lone `WHEN MATCHED THEN
+  *    DELETE`, conditional matched clauses, partial `UPDATE SET c =
+  *    e`, multiple WHEN arms, conditional inserts, COMPOSITE ON keys
+  *    (a conjunction of equalities), `WHEN NOT MATCHED BY SOURCE THEN
+  *    UPDATE/DELETE` — → one [[ManifestMergeIntoCommand]] →
+  *    `ManifestTable.mergeInto`, the copy-on-write merge (clauses
+  *    translated with source attributes re-addressed under the merge
+  *    frame's `__s_` prefix; ledgered when
+  *    [[ManifestSql.BatchIdConf]] is set, so a replayed MERGE no-ops).
   *
   * A DELETE/UPDATE predicate splits into a subquery-free residue
   * plus ANY NUMBER of membership terms (none for a plain predicate)
@@ -165,41 +161,11 @@ case class ManifestSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
                 if (acc.exists(_.name == f.name)) acc else acc :+ f
             }
           }
-        if (evolveCols.nonEmpty)
-          generalMerge(idx, idKeys, tgt, source, matched, notMatched,
-            notMatchedBySource, evolveCols,
-            catalogIdentOf(spark, tgt),
-            starInsert = starShapedInsert)
-        else (matched, notMatched, notMatchedBySource) match {
-          // upsert shape: UPDATE SET * + INSERT * (whole-row
-          // replace-or-insert — the CDC apply shape); kept as a fast
-          // path: the update rows append directly, no join rewrite.
-          // Single-key only — the composite shape goes general, and
-          // so does any unconditional pair that ISN'T whole-row
-          // (partial update, narrower insert, key-drifting insert —
-          // all legal ANSI, upsertPlanOf answers None for them).
-          case (Seq(UpdateAction(None, uAssigns, _)),
-                Seq(InsertAction(None, iAssigns)), Seq())
-              if idKeys.size == 1 =>
-            upsertPlanOf(tgt, idKeys.head, uAssigns, iAssigns) match {
-              case Some(plan) =>
-                ManifestMergeUpsertCommand(idx, idKeys.head.name,
-                  source, plan)
-              case None => generalMerge(idx, idKeys, tgt, source,
-                matched, notMatched, notMatchedBySource)
-            }
-          // key-list delete shape: WHEN MATCHED THEN DELETE alone
-          case (Seq(DeleteAction(None)), Seq(), Seq())
-              if idKeys.size == 1 =>
-            ManifestMergeDeleteCommand(idx, idKeys.head.name, source,
-              stripCast(idKeys.head.sourceSide))
-          // everything else — conditional / partial / multi-clause /
-          // composite-key / NOT MATCHED BY SOURCE — is the general
-          // copy-on-write merge
-          case _ =>
-            generalMerge(idx, idKeys, tgt, source,
-              matched, notMatched, notMatchedBySource)
-        }
+        generalMerge(idx, idKeys, tgt, source, matched, notMatched,
+          notMatchedBySource, evolveCols,
+          refreshIdent =
+            if (evolveCols.isEmpty) None else catalogIdentOf(spark, tgt),
+          starInsert = starShapedInsert)
     }
 }
 
@@ -272,8 +238,7 @@ object ManifestSqlDml {
 
   private def byName(e: Expression): Column = byNameWith(e)(_.name)
 
-  /** Translate the GENERAL MERGE shape — conditional / partial /
-    * multi-clause / `NOT MATCHED BY SOURCE` — into
+  /** Translate a MERGE — every clause shape — into
     * [[graft.operators.ManifestTable.mergeInto]] clauses. Plan-time
     * expressions re-resolve by name over the writer's merge frame:
     * target attributes under their own names, source attributes
@@ -288,11 +253,10 @@ object ManifestSqlDml {
                            notMatched: Seq[MergeAction],
                            notMatchedBySource: Seq[MergeAction],
                            evolveCols: Seq[org.apache.spark.sql.types
-                             .StructField] = Seq.empty,
+                             .StructField],
                            refreshIdent: Option[org.apache.spark.sql
-                             .catalyst.TableIdentifier] = None,
-                           starInsert: Seq[Assignment] => Boolean =
-                             _ => false)
+                             .catalyst.TableIdentifier],
+                           starInsert: Seq[Assignment] => Boolean)
       : LogicalPlan = {
     import graft.operators.{ManifestTable => MT}
     val tgtSet = tgt.outputSet
@@ -583,8 +547,7 @@ object ManifestSqlDml {
     * manifest merge joins and prunes by. Anything else (OR,
     * non-equality, target-vs-target, a column keyed twice) refuses
     * with the exact unsupported piece named. */
-  private final case class MergeKey(name: String, targetAttr: AttributeReference,
-                                    sourceSide: Expression)
+  private final case class MergeKey(name: String, sourceSide: Expression)
 
   private def mergeKeysOf(tgt: LogicalPlan, source: LogicalPlan,
                           cond: Expression): Seq[MergeKey] = {
@@ -598,7 +561,7 @@ object ManifestSqlDml {
       stripCast(a) match {
         case attr: AttributeReference if tgtIds.contains(attr) &&
             stripCast(b).references.subsetOf(source.outputSet) =>
-          Some(MergeKey(attr.name, attr, b))
+          Some(MergeKey(attr.name, b))
         case _ => None
       }
     val keys = conjuncts(cond).map {
@@ -616,39 +579,6 @@ object ManifestSqlDml {
       "manifest SQL MERGE keys each target column at most once in " +
         s"the ON condition; got ${keys.map(_.name).mkString(",")}")
     keys
-  }
-
-  /** Is this unconditional UPDATE+INSERT pair the WHOLE-ROW
-    * replace-or-insert shape the upsert fast path serves? Some(the
-    * aliased projection in TARGET column order) when every target
-    * column is assigned from the source, the MATCHED assignments are
-    * semantically identical to the INSERT ones (whole-row replace =
-    * insert row), and the ON key IS the inserted key (a matched row
-    * must be replaced under the identity it matched on); None for
-    * every other pair — partial updates, narrower inserts, drifted
-    * or key-shifting assignments are all legal ANSI merges, they
-    * just run through the general copy-on-write path instead. */
-  private def upsertPlanOf(tgt: LogicalPlan, idKey: MergeKey,
-                           uAssigns: Seq[Assignment],
-                           iAssigns: Seq[Assignment])
-      : Option[Seq[(String, Expression)]] = {
-    def keyed(as: Seq[Assignment]): Option[Map[String, Expression]] = {
-      val pairs = as.collect {
-        case Assignment(k: AttributeReference, v) => k.name -> v
-      }
-      if (pairs.size == as.size) Some(pairs.toMap) else None
-    }
-    for {
-      uMap <- keyed(uAssigns)
-      iMap <- keyed(iAssigns)
-      targetCols = tgt.output.map(_.name)
-      if targetCols.forall(iMap.contains)
-      if uMap.keySet == iMap.keySet
-      if targetCols.forall(c =>
-        uMap.get(c).forall(_.semanticEquals(iMap(c))))
-      if stripCast(iMap(idKey.name))
-        .semanticEquals(stripCast(idKey.sourceSide))
-    } yield targetCols.map(c => c -> iMap(c))
   }
 
   /** The terms' values plans as frames of this session. */
@@ -688,38 +618,19 @@ object ManifestSqlDml {
     }
   }
 
-  /** Upsert-shaped MERGE: project the source through the INSERT
-    * assignments (resolved expressions over the source plan — same
-    * exprIds, so no re-resolution needed) into target column order,
-    * then replace-or-insert by the key. */
-  case class ManifestMergeUpsertCommand(index: ManifestSql.ManifestFileIndex,
-                                        idCol: String, source: LogicalPlan,
-                                        projection: Seq[(String, Expression)])
-    extends LeafRunnableCommand {
-    override def innerChildren: Seq[LogicalPlan] = Seq(source)
-    override def run(session: SparkSession): Seq[Row] = {
-      val updates = graftbridge.ofRows(session, source)
-        .select(projection.map { case (name, e) =>
-          graftbridge.toColumn(e).as(name) }: _*)
-      ManifestSql.sqlMergeUpsert(session, index, idCol, updates)
-      Seq.empty
-    }
-  }
-
-  /** General MERGE: clause-translated [[graft.operators.ManifestTable
-    * .mergeInto]] over the analyzed source plan — conditional,
-    * partial, multi-clause, and `NOT MATCHED BY SOURCE` shapes,
-    * ledgered under [[ManifestSql.BatchIdConf]] exactly like the
-    * upsert fast path. */
+  /** `MERGE INTO`, every shape: clause-translated
+    * [[graft.operators.ManifestTable.mergeInto]] over the analyzed
+    * source plan through [[ManifestSql.sqlMergeInto]], ledgered under
+    * [[ManifestSql.BatchIdConf]]. */
   case class ManifestMergeIntoCommand(
       index: ManifestSql.ManifestFileIndex, idCols: Seq[String],
       source: LogicalPlan, sourceKeys: Seq[Column],
       matched: Seq[graft.operators.ManifestTable.WhenMatched],
       notMatched: Seq[graft.operators.ManifestTable.WhenNotMatched],
       notMatchedBySource: Seq[graft.operators.ManifestTable.WhenMatched],
-      evolveCols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
+      evolveCols: Seq[org.apache.spark.sql.types.StructField],
       refreshIdent: Option[org.apache.spark.sql.catalyst
-        .TableIdentifier] = None)
+        .TableIdentifier])
     extends LeafRunnableCommand {
     override def innerChildren: Seq[LogicalPlan] = Seq(source)
     override def run(session: SparkSession): Seq[Row] = {
@@ -750,21 +661,6 @@ object ManifestSqlDml {
         graftbridge.ofRows(session, source), sourceKeys,
         matched, notMatched, notMatchedBySource,
         refreshPin = evolveCols.isEmpty)
-      Seq.empty
-    }
-  }
-
-  /** Delete-shaped MERGE: the source's key expression is the victim
-    * id list. */
-  case class ManifestMergeDeleteCommand(index: ManifestSql.ManifestFileIndex,
-                                        idCol: String, source: LogicalPlan,
-                                        key: Expression)
-    extends LeafRunnableCommand {
-    override def innerChildren: Seq[LogicalPlan] = Seq(source)
-    override def run(session: SparkSession): Seq[Row] = {
-      val victims = graftbridge.ofRows(session, source)
-        .select(graftbridge.toColumn(key).as("__victim_id"))
-      ManifestSql.sqlMergeDelete(session, index, idCol, victims)
       Seq.empty
     }
   }

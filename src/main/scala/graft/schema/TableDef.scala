@@ -145,7 +145,6 @@ final case class TableDef(
         s"undeclared field '$n' on table '$name'")) // model.php:219-225
 
   def primaryKeys: Seq[Field] = fields.filter(_.primary)
-  def uniqueFields: Seq[Field] = fields.filter(f => f.unique || f.primary)
 
   def structType: StructType =
     StructType(fields.map(f => StructField(f.name, f.ftype.sparkType, f.nullable)))

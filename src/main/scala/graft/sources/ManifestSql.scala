@@ -370,31 +370,14 @@ object ManifestSql {
     afterSqlWrite(spark, idx)
   }
 
-  /** The ONE owner of SQL upsert-shaped `MERGE INTO` semantics
-    * (`WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT
-    * *`): whole-row replace-or-insert by the ON key through
-    * [[ManifestTable.upsert]] — or [[ManifestTable.upsertBatch]] when
-    * [[BatchIdConf]] is set, making the merge ledgered and a replay a
-    * no-op. The conf auto-resets afterward in BOTH outcomes. */
-  private[graft] def sqlMergeUpsert(spark: SparkSession,
-                                    idx: ManifestFileIndex, idCol: String,
-                                    updates: DataFrame): Unit = {
-    requireHead(idx, "MERGE INTO")
-    withBatchId(spark) {
-      case Some(id) =>
-        ManifestTable.upsertBatch(spark, idx.root, id, idCol, updates)
-      case None => ManifestTable.upsert(spark, idx.root, idCol, updates)
-    }
-    afterSqlWrite(spark, idx)
-  }
-
-  /** The ONE owner of GENERAL SQL `MERGE INTO` semantics — every
-    * shape beyond the whole-row upsert and key-list-delete fast
-    * paths: conditional/partial `WHEN MATCHED THEN UPDATE/DELETE`,
-    * conditional `WHEN NOT MATCHED THEN INSERT`, and `WHEN NOT
-    * MATCHED BY SOURCE` clauses, through the copy-on-write
+  /** The ONE owner of SQL `MERGE INTO` semantics, every clause
+    * shape — star `UPDATE SET *` / `INSERT *`, a lone `WHEN MATCHED
+    * THEN DELETE`, conditional/partial `WHEN MATCHED THEN
+    * UPDATE/DELETE`, conditional `WHEN NOT MATCHED THEN INSERT`, and
+    * `WHEN NOT MATCHED BY SOURCE` clauses — through the copy-on-write
     * [[ManifestTable.mergeInto]]. [[BatchIdConf]] makes it ledgered
-    * exactly as the upsert shape. */
+    * (a replay under the same id no-ops); the conf auto-resets
+    * afterward in BOTH outcomes. */
   private[graft] def sqlMergeInto(spark: SparkSession,
                                   idx: ManifestFileIndex,
                                   idCols: Seq[String],
@@ -417,38 +400,6 @@ object ManifestSql {
     // remains to do
     if (refreshPin) afterSqlWrite(spark, idx)
     else spark.catalog.refreshByPath(idx.root)
-  }
-
-  /** The ONE owner of SQL delete-shaped `MERGE INTO` semantics
-    * (`WHEN MATCHED THEN DELETE`, no other clauses): delete target
-    * rows whose ON key appears in the source —
-    * [[ManifestTable.deleteIds]], whose victim scan prunes per key
-    * for driver-sized id sets. A set [[BatchIdConf]] must be
-    * CONSUMED here like every other MERGE shape (a stale id left
-    * behind could silently no-op an unrelated later write): with an
-    * id, the delete routes through the general
-    * [[ManifestTable.mergeInto]] with a matched-DELETE clause, whose
-    * commit carries the ledger marker — a replayed batch no-ops. */
-  private[graft] def sqlMergeDelete(spark: SparkSession,
-                                    idx: ManifestFileIndex, idCol: String,
-                                    victims: DataFrame): Unit = {
-    requireHead(idx, "MERGE INTO")
-    withBatchId(spark) {
-      case Some(id) =>
-        // single-col by contract; dedup like deleteIds does — key
-        // multiplicity is meaningless for a delete
-        val keyed = victims.toDF("mergekey").distinct()
-        ManifestTable.mergeInto(spark, idx.root, Seq(idCol),
-          keyed, Seq(org.apache.spark.sql.functions.col("mergekey")),
-          matched = Seq(ManifestTable.WhenMatched(None,
-            ManifestTable.MergeDelete)),
-          batchId = Some(id))
-        ()
-      case None =>
-        ManifestTable.deleteIds(spark, idx.root, idCol, victims)
-        ()
-    }
-    afterSqlWrite(spark, idx)
   }
 
   /** The bare front-door relation (physical schema, no rename

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.schema.{Catalog, TableDef}
+import graft.schema.Catalog
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types.StructType
@@ -110,8 +110,6 @@ object Tables {
       case (df, (name, expr)) => df.withColumn(name, expr(F.col(name)))
     }
   }
-
-  def tableDef(table: String): TableDef = Catalog(table)
 
   /** Bucketed materialization for co-located joins (scale path): two
     * tables bucketed+sorted on their join key with the same bucket

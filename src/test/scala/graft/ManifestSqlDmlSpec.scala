@@ -157,6 +157,70 @@ class ManifestSqlDmlSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS sqldml_cat")
   }
 
+  test("MERGE door parity: every shape through temp view, persistent entry and graft.default commits once and equals the Scala mergeInto twin") {
+    import spark.implicits._
+    import ManifestTable.{MergeDelete, MergeUpdate, WhenMatched,
+      WhenNotMatched, sourceCol}
+    val whole = Seq("id", "v", "n").map(c => c -> sourceCol(c)).toMap
+    val star = (90L until 110L).toDF("id")
+      .withColumn("v", F.lit("m")).withColumn("n", F.lit(-1L))
+    val del = Seq(3L, 5L, 8L, 500L).toDF("id")
+    val part = (40L until 60L).toDF("id")
+      .withColumn("v", F.concat(F.lit("p"), F.col("id")))
+    // (SQL clauses, source, the Scala mergeInto twin's clauses)
+    val shapes = Seq(
+      ("WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        star, Seq(WhenMatched(None, MergeUpdate(whole))),
+        Seq(WhenNotMatched(None, whole))),
+      ("WHEN MATCHED THEN DELETE", del,
+        Seq(WhenMatched(None, MergeDelete)), Nil),
+      ("WHEN MATCHED AND t.id % 2 = 0 THEN UPDATE SET v = s.v", part,
+        Seq(WhenMatched(Some(F.col("id") % 2 === 0),
+          MergeUpdate(Map("v" -> sourceCol("v"))))), Nil))
+    def rowsOf(root: String) =
+      ManifestTable.read(spark, root).orderBy("id").collect().toSeq
+    val g = graft.api.Graft(spark, sf)
+    // door name -> (register the table at root, the SQL target name)
+    val doors = Seq[(String, String => String)](
+      "temp view" -> { root =>
+        graft.sources.ManifestSql.register(spark, "mdoor_tmp", root)
+        "mdoor_tmp"
+      },
+      "persistent entry" -> { root =>
+        g.registerManifest("mdoor_cat", root, persistent = true)
+        "mdoor_cat"
+      },
+      "graft.default" -> { root =>
+        g.registerManifest("mdoor_v2", root, persistent = true)
+        "graft.default.mdoor_v2"
+      })
+    try {
+      for (((clauses, source, matched, notMatched), i) <- shapes.zipWithIndex) {
+        source.createOrReplaceTempView("mdoor_src")
+        val (_, twin) = freshTable("graft_mdoor_twin")
+        ManifestTable.mergeInto(spark, twin, Seq("id"), source,
+          Seq(F.col("id")), matched, notMatched)
+        val want = rowsOf(twin)
+        for ((door, register) <- doors) {
+          val (_, root) = freshTable("graft_mdoor")
+          val target = register(root)
+          val v0 = ManifestTable.latest(root).get.version
+          spark.sql(s"MERGE INTO $target t USING mdoor_src s " +
+            s"ON t.id = s.id $clauses")
+          assert(ManifestTable.latest(root).get.version == v0 + 1,
+            s"shape $i through the $door must commit exactly once")
+          assert(rowsOf(root) == want,
+            s"shape $i through the $door differs from the Scala twin")
+          assert(spark.sql(s"SELECT count(*) FROM $target").as[Long].head()
+            == want.size.toLong, s"the $door must read its own write")
+        }
+      }
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS mdoor_cat")
+      spark.sql("DROP TABLE IF EXISTS mdoor_v2")
+    }
+  }
+
   test("the refusal surface: time travel, non-equality ON, NOT IN / correlated subqueries, duplicate source keys") {
     import spark.implicits._
     val (_, root) = freshTable("graft_sqldmlref")
@@ -197,9 +261,12 @@ class ManifestSqlDmlSpec extends SparkSpec {
     // the ANSI cardinality violation: duplicate source keys that
     // MATCH a target row refuse (which copy wins is nondeterministic)
     (Seq(1L, 1L)).toDF("id").withColumn("v", F.lit("dup"))
+      .withColumn("n", F.lit(0L))
       .createOrReplaceTempView("sqldml_ref_dup")
-    refuse("MERGE INTO sqldml_ref t USING sqldml_ref_dup s ON t.id = s.id " +
-      "WHEN MATCHED THEN UPDATE SET v = s.v", "cardinality violation")
+    for (clauses <- Seq("WHEN MATCHED THEN UPDATE SET v = s.v",
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"))
+      refuse("MERGE INTO sqldml_ref t USING sqldml_ref_dup s " +
+        s"ON t.id = s.id $clauses", "cardinality violation")
     // a non-manifest target is untouched by the rule (stock error)
     (0L until 3L).toDF("id").createOrReplaceTempView("sqldml_plain")
     intercept[Exception](spark.sql("DELETE FROM sqldml_plain WHERE id = 1"))
@@ -494,23 +561,30 @@ class ManifestSqlDmlSpec extends SparkSpec {
 
   test("ANSI duplicate-source semantics: unmatched duplicates each insert; only an actual multi-match refuses; 'present' source column is no collision") {
     import spark.implicits._
-    val (_, root) = freshTable("graft_sqldup", n = 10L)
-    graft.sources.ManifestSql.register(spark, "sqldml_dup", root)
     // duplicate keys (200, 200) match NO target row: legal even with a
     // MATCHED clause present (cardinality is about actual multi-match),
-    // and each duplicate fires the INSERT clause, per ANSI MERGE
+    // and each duplicate fires the INSERT clause, per ANSI MERGE — for
+    // explicit clauses and the star shape alike
     Seq(200L, 200L, 3L).toDF("id").withColumn("v", F.lit("ins"))
       .withColumn("n", F.lit(-1L))
       .createOrReplaceTempView("sqldml_dup_src")
-    spark.sql("MERGE INTO sqldml_dup t USING sqldml_dup_src s " +
-      "ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v " +
-      "WHEN NOT MATCHED THEN INSERT (id, v, n) VALUES (s.id, s.v, s.n)")
-    val out = ManifestTable.read(spark, root)
-    assert(out.filter(F.col("id") === 200L).count() == 2L,
-      "duplicate unmatched source rows must each insert")
-    assert(out.filter(F.col("id") === 3L && F.col("v") === "ins")
-      .count() == 1L)
-    assert(out.count() == 12L)
+    val root = Seq(
+      "WHEN MATCHED THEN UPDATE SET v = s.v " +
+        "WHEN NOT MATCHED THEN INSERT (id, v, n) VALUES (s.id, s.v, s.n)",
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    ).map { clauses =>
+      val (_, r) = freshTable("graft_sqldup", n = 10L)
+      graft.sources.ManifestSql.register(spark, "sqldml_dup", r)
+      spark.sql("MERGE INTO sqldml_dup t USING sqldml_dup_src s " +
+        s"ON t.id = s.id $clauses")
+      val out = ManifestTable.read(spark, r)
+      assert(out.filter(F.col("id") === 200L).count() == 2L,
+        s"duplicate unmatched source rows must each insert: $clauses")
+      assert(out.filter(F.col("id") === 3L && F.col("v") === "ins")
+        .count() == 1L, s"the matched row must update: $clauses")
+      assert(out.count() == 12L)
+      r
+    }.last
     // insert-only merge with duplicates: no matched clause, no refusal
     Seq(300L, 300L).toDF("id").withColumn("v", F.lit("dup2"))
       .withColumn("n", F.lit(0L))
@@ -535,6 +609,16 @@ class ManifestSqlDmlSpec extends SparkSpec {
       "the matched row is untouched by NOT MATCHED BY SOURCE")
     assert(after.filter(F.col("id") =!= 1L && F.col("n") =!= -5L)
       .count() == 0L)
+    // a lone MATCHED DELETE is no exception: a duplicated key that
+    // matches a row is the same cardinality violation, refused before
+    // anything commits
+    Seq(4L, 4L, 6L).toDF("id").createOrReplaceTempView("sqldml_dup_src5")
+    val vDel = ManifestTable.latest(root).get.version
+    val eDel = intercept[Exception](spark.sql(
+      "MERGE INTO sqldml_dup t USING sqldml_dup_src5 s " +
+        "ON t.id = s.id WHEN MATCHED THEN DELETE"))
+    assert(eDel.getMessage.contains("cardinality violation"))
+    assert(ManifestTable.latest(root).get.version == vDel)
     // a source column literally named 'present' must not collide with
     // the merge frame's internal match marker
     Seq((5L, true)).toDF("id", "present")

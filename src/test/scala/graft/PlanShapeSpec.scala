@@ -569,6 +569,18 @@ class PlanShapeSpec extends SparkSpec {
         "not bloom-pruned through SQL")
     assert(spark.sql("SELECT count(*) FROM msqldml_s WHERE payload = 'merged'")
       .as[Long].head() == 2L)
+    // a scattered 2-key MATCHED DELETE prunes the same way: both keys
+    // ≡ 3 (mod 8), one genuine victim file, one more for bloom fpp
+    Seq(3L, 11L).toDF("id").createOrReplaceTempView("msqldml_del")
+    spark.sql("MERGE INTO msqldml_s t USING msqldml_del s ON t.id = s.id " +
+      "WHEN MATCHED THEN DELETE")
+    val s2 = ManifestTable.latest(root2).get
+    val deleted = s1.files.toSet -- s2.files.toSet
+    assert(deleted.size <= 2,
+      s"scattered MERGE DELETE rewrote ${deleted.size} files — victim " +
+        "scan not bloom-pruned through SQL")
+    assert(spark.sql("SELECT count(*) FROM msqldml_s WHERE id IN (3, 11)")
+      .as[Long].head() == 0L)
   }
 
   test("GENERAL merge victim scans stay pruned: matched via blooms per key, NOT MATCHED BY SOURCE via its clause bounds") {
