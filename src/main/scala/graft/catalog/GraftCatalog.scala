@@ -80,10 +80,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private final case class Resolved(root: String, chained: Boolean,
       meta: org.apache.spark.sql.catalyst.catalog.CatalogTable)
 
-  private def isManifestEntry(v1: TableIdentifier): Boolean =
-    sessionCatalog.tableExists(v1) && !sessionCatalog.isTempView(v1) &&
-      ManifestSql.isManifestEntry(sessionCatalog.getTableMetadata(v1))
-
   /** Resolve a graft identifier to its manifest root, or a loud
     * NoSuchTable — this catalog only ever serves `USING
     * graft-manifest` entries (directly, or through their
@@ -93,22 +89,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val v1 = v1Ident(ident)
     def missing = new NoSuchTableException(
       Array(catalogName) ++ ident.namespace() :+ ident.name())
-    if (isManifestEntry(v1)) {
-      val meta = sessionCatalog.getTableMetadata(v1)
-      Resolved(ManifestSql.rootOfEntry(meta), chained = false, meta)
-    }
-    else {
-      // the rename-chain shape: `name` is a VIEW over `name_store`
-      val store = v1.copy(table = v1.table + "_store")
-      val viewShaped = sessionCatalog.tableExists(v1) &&
-        !sessionCatalog.isTempView(v1) &&
-        sessionCatalog.getTableMetadata(v1).tableType ==
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
-      if (viewShaped && isManifestEntry(store)) {
-        val meta = sessionCatalog.getTableMetadata(store)
-        Resolved(ManifestSql.rootOfEntry(meta), chained = true, meta)
-      } else throw missing
-    }
+    def resolved(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
+                 chained: Boolean) =
+      Resolved(ManifestSql.rootOfEntry(meta), chained, meta)
+    ManifestSql.manifestEntryOf(session, v1)
+      .map(resolved(_, chained = false))
+      .orElse {
+        // the rename-chain shape: `name` is a VIEW over `name_store`
+        val viewShaped = sessionCatalog.tableExists(v1) &&
+          !sessionCatalog.isTempView(v1) &&
+          sessionCatalog.getTableMetadata(v1).tableType ==
+            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
+        if (!viewShaped) None
+        else ManifestSql.manifestEntryOf(session,
+          v1.copy(table = v1.table + "_store")).map(resolved(_, chained = true))
+      }
+      .getOrElse(throw missing)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -188,13 +184,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new IllegalArgumentException(
         s"CREATE TABLE ${fullName(ident)} needs a 'path' (or " +
           "'location') property naming the manifest root"))
-    def csv(k: String): Seq[String] = props.get(k).toSeq
-      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
     ManifestTable.latest(root) match {
       case None =>
-        ManifestTable.init(root, csv("statCols"), csv("bloomCols"),
-          props.get("bloomCapacity").map(_.trim.toLong)
-            .getOrElse(graft.operators.ManifestStats.BloomKeyCapacity))
+        ManifestSql.declarationsOf(props).init(root)
+        // the schema seed — not a user write, so not through the
+        // whole-table write owner
         if (schema.nonEmpty)
           ManifestTable.overwrite(session, root, session.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](),
@@ -258,8 +252,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         throw new IllegalArgumentException(
           s"CREATE/REPLACE TABLE ${fullName(ident)} needs a 'path' " +
             "(or LOCATION) naming the manifest root"))
-    def csv(k: String): Seq[String] = props.get(k).toSeq
-      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
     val freshlyInited = ManifestTable.latest(root).isEmpty
     if (freshlyInited) {
       // a staged statement that fails must be able to clean up what
@@ -277,9 +269,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "table into it (an aborted statement could not clean up " +
           "without touching pre-existing contents); point at an " +
           "empty/absent location or init the manifest explicitly")
-      ManifestTable.init(root, csv("statCols"), csv("bloomCols"),
-        props.get("bloomCapacity").map(_.trim.toLong)
-          .getOrElse(graft.operators.ManifestStats.BloomKeyCapacity))
+      ManifestSql.declarationsOf(props).init(root)
     }
     StagedGraftTable(session, this, ident, fullName(ident), root,
       StructType(info.schema().fields.map(_.copy(nullable = true))),
@@ -315,9 +305,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case Some(r) =>
         val snap = ManifestTable.latest(root).getOrElse(
           throw new IllegalStateException(s"no manifest at $root"))
-        val (physical, _) = ManifestTable.readShapeOf(
-          ManifestTable.recordedSchemaOf(session, root, snap),
-          ManifestTable.colmapOfSnap(snap))
+        val physical = ManifestSql.physicalSchemaOf(session, root, snap)
         val meta = sessionCatalog.getTableMetadata(v1)
         if (r.root == root) {
           if (meta.dataSchema != physical)

@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table,
   TableCapability}
-import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
-  V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write,
+  Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 
@@ -24,11 +24,13 @@ import graft.sources.ManifestSql
   *    DeltaAnalysis pattern; a second DSv2 reader would duplicate the
   *    stats/Bloom pruning and lose the vectorized parquet exec).
   *  - WRITES go through the `V1_BATCH_WRITE` fallback: the
-  *    [[WriteBuilder]] builds a [[V1Write]] whose
-  *    [[InsertableRelation]] is the SAME ledgered append/overwrite
-  *    the V1 SQL door commits through — `INSERT INTO graft.db.t` is
-  *    one atomic manifest commit, `INSERT OVERWRITE` (truncate mode)
-  *    an atomic snapshot replace. Time-travel pins refuse writes.
+  *    [[WriteBuilder]] picks the write shape (append, overwrite,
+  *    replace-where) and its [[V1Write]]'s [[InsertableRelation]]
+  *    hands it to [[ManifestSql.sqlWrite]], the one owner every door
+  *    commits whole-table writes through — `INSERT INTO graft.db.t`
+  *    is one atomic manifest commit, `INSERT OVERWRITE` (truncate
+  *    mode) an atomic snapshot replace. Time-travel pins and
+  *    rename-chained registrations refuse writes (one guard).
   *
   * `versionAsOf` pins a snapshot for the native v2 time-travel
   * overloads (`VERSION AS OF` / `TIMESTAMP AS OF`). The SCHEMA is
@@ -45,6 +47,29 @@ final case class GraftTable(spark: SparkSession, fullName: String,
   with org.apache.spark.sql.graftbridge.V1FallbackTable {
 
   override def name(): String = fullName
+
+  /** The one guard for what needs the live head of a plain
+    * registration — every write, and streaming: a time-travel pin is
+    * a fixed snapshot, and a rename-chained registration is read-only
+    * from SQL (the documented rename-chain contract). */
+  private def requireHead(verb: String): Unit = {
+    require(versionAsOf.isEmpty,
+      s"cannot $verb a time-travel pin of $fullName — time travel is " +
+        "read-only; address the head")
+    require(!readOnlyChain,
+      s"$fullName is a rename-chained registration — read-only from " +
+        s"SQL; $verb its <name>_store table (physical names) or use " +
+        "the ManifestTable Scala API")
+  }
+
+  /** After a write through this table: the V1 door's per-NAME
+    * relation cache pins the snapshot it resolved — drop it so the
+    * session's next V1-name read sees this write (one table, two
+    * doors, one read-your-writes contract). The write owners have
+    * already invalidated cached plans over the root. */
+  private def refreshV1Name(session: SparkSession): Unit =
+    v1Meta.map(_.identifier).foreach(id => scala.util.Try(
+      session.sessionState.catalog.refreshTable(id)))
 
   /** NATIVE v2 DELETE ([[org.apache.spark.sql.connector.catalog
     * .SupportsDelete]]) — the API-contract door for `DELETE FROM
@@ -63,20 +88,10 @@ final case class GraftTable(spark: SparkSession, fullName: String,
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    require(versionAsOf.isEmpty,
-      s"cannot DELETE from a time-travel pin of $fullName — " +
-        "time travel is read-only; address the head to write")
-    require(!readOnlyChain,
-      s"$fullName is a rename-chained registration — read-only from " +
-        "SQL; write through the ManifestTable Scala API")
+    requireHead("DELETE from")
     val session = SparkSession.active
-    val cond = filters.map(GraftTable.filterToColumn)
-      .reduceOption(_ && _)
-      .getOrElse(org.apache.spark.sql.functions.lit(true))
-    ManifestSql.sqlDeleteAt(session, root, cond)
-    session.catalog.refreshByPath(root)
-    v1Meta.map(_.identifier).foreach(id => scala.util.Try(
-      session.sessionState.catalog.refreshTable(id)))
+    ManifestSql.sqlDeleteAt(session, root, GraftTable.conditionOf(filters))
+    refreshV1Name(session)
   }
 
   /** STREAMING fallback (r19): `spark.readStream.table("graft.db.t")`
@@ -88,12 +103,7 @@ final case class GraftTable(spark: SparkSession, fullName: String,
     * has no provider entry of its own. */
   override def v1Table: org.apache.spark.sql.catalyst.catalog
       .CatalogTable = {
-    require(versionAsOf.isEmpty,
-      s"cannot stream a time-travel pin of $fullName — a pinned " +
-        "snapshot never changes; stream the head")
-    require(!readOnlyChain,
-      s"$fullName is a rename-chained registration — stream its " +
-        "<name>_store table (physical names) or the change feed")
+    requireHead("stream")
     v1Meta.getOrElse(throw new IllegalStateException(
       s"$fullName carries no catalog entry to stream through"))
   }
@@ -126,61 +136,37 @@ final case class GraftTable(spark: SparkSession, fullName: String,
     Map("path" -> root,
       "provider" -> ManifestSql.ManifestProvider).asJava
 
-  /** `INSERT OVERWRITE` arrives as truncate() (= overwrite
-    * AlwaysTrue); `INSERT INTO … REPLACE WHERE <cond>` arrives as
-    * overwrite(filters) — the PREDICATE OVERWRITE shape, served by
-    * [[graft.operators.ManifestTable.overwriteWhere]]: replace
-    * exactly the matching rows with the query's in one ledgered
-    * commit (pruned victim rewrite + append; new rows must satisfy
-    * the predicate). */
+  /** `INSERT INTO` arrives with no filters (append), `INSERT
+    * OVERWRITE` as truncate() (= overwrite AlwaysTrue), `INSERT INTO …
+    * REPLACE WHERE <cond>` as overwrite(filters) — the PREDICATE
+    * OVERWRITE shape ([[graft.operators.ManifestTable.overwriteWhere]]:
+    * replace exactly the matching rows with the query's in one
+    * ledgered commit; new rows must satisfy the predicate). Every
+    * shape commits through [[ManifestSql.sqlWrite]], aligned to the
+    * head's columns. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder
       with org.apache.spark.sql.connector.write.SupportsOverwrite {
-      private var replaceFilters
-          : Option[Array[org.apache.spark.sql.sources.Filter]] = None
+      private var shape: ManifestSql.WriteShape = ManifestSql.WriteShape.Append
       override def overwrite(
           filters: Array[org.apache.spark.sql.sources.Filter])
-          : WriteBuilder = { replaceFilters = Some(filters); this }
+          : WriteBuilder = {
+        shape =
+          if (filters.forall(_ == org.apache.spark.sql.sources.AlwaysTrue))
+            ManifestSql.WriteShape.Overwrite
+          else ManifestSql.WriteShape.ReplaceWhere(
+            GraftTable.conditionOf(filters))
+        this
+      }
       override def build(): Write = new V1Write {
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {
             override def insert(data: DataFrame, ignored: Boolean): Unit = {
-              require(versionAsOf.isEmpty,
-                s"cannot INSERT into a time-travel pin of $fullName — " +
-                  "time travel is read-only; address the head to write")
-              require(!readOnlyChain,
-                s"$fullName is a rename-chained registration — " +
-                  "read-only from SQL (the documented rename-chain " +
-                  "contract); write through the ManifestTable Scala API")
+              requireHead("INSERT into")
               val session = data.sparkSession
-              val columns =
-                ManifestSql.relation(session, root, None).columns.toSeq
-              val truncating = replaceFilters.exists(_.forall(
-                _ == org.apache.spark.sql.sources.AlwaysTrue))
-              replaceFilters.filterNot(_ => truncating) match {
-                case Some(filters) =>
-                  val cond = filters.map(GraftTable.filterToColumn)
-                    .reduceOption(_ && _)
-                    .getOrElse(org.apache.spark.sql.functions.lit(true))
-                  val aligned =
-                    if (data.columns.toSeq == columns) data
-                    else data.toDF(columns.toIndexedSeq: _*)
-                  graft.operators.ManifestTable.overwriteWhere(
-                    session, root, cond, aligned)
-                  ()
-                case None =>
-                  // positional alignment + the BatchIdConf ledger
-                  // contract + the commit, through the ONE V1 owner
-                  ManifestSql.sqlInsertAt(session, root, data,
-                    truncating, columns)
-              }
-              session.catalog.refreshByPath(root)
-              // the V1 door's per-NAME relation cache pins the
-              // snapshot it resolved — drop it so the session's next
-              // V1-name read sees this v2-door write (one table, two
-              // doors, one read-your-writes contract)
-              v1Meta.map(_.identifier).foreach(id => scala.util.Try(
-                session.sessionState.catalog.refreshTable(id)))
+              ManifestSql.sqlWrite(session, root, data, shape,
+                ManifestSql.relation(session, root, None).columns.toSeq)
+              refreshV1Name(session)
             }
           }
       }
@@ -188,6 +174,13 @@ final case class GraftTable(spark: SparkSession, fullName: String,
 }
 
 object GraftTable {
+
+  /** The conjunction of translated source filters as a Column (TRUE
+    * for none) — a v2 DELETE or REPLACE WHERE condition. */
+  private def conditionOf(filters: Array[org.apache.spark.sql.sources.Filter])
+      : org.apache.spark.sql.Column =
+    filters.map(filterToColumn).reduceOption(_ && _)
+      .getOrElse(org.apache.spark.sql.functions.lit(true))
 
   /** The v2 `REPLACE WHERE` condition arrives as translated source
     * filters — re-expressed as a Column for the ledgered predicate

@@ -18,11 +18,13 @@ import graft.sources.ManifestSql
 /** The staged half of an atomic CTAS / `REPLACE TABLE [AS SELECT]`
   * through [[GraftCatalog]]:
   *
-  *  - the QUERY's rows land as ONE ledgered OVERWRITE at the root —
-  *    the content after the statement IS the query result (SQL
-  *    CTAS/RTAS semantics), pre-replace history stays time-travel
-  *    readable, and the data swap is atomic by the manifest's own
-  *    commit protocol;
+  *  - the QUERY's rows land as ONE ledgered OVERWRITE at the root,
+  *    through [[ManifestSql.sqlWrite]] (the one whole-table write
+  *    owner; a set `spark.graft.sql.batchId` refuses there and the
+  *    statement aborts) — the content after the statement IS the
+  *    query result (SQL CTAS/RTAS semantics), pre-replace history
+  *    stays time-travel readable, and the data swap is atomic by the
+  *    manifest's own commit protocol;
   *  - `commitStagedChanges` publishes the catalog entry
   *    ([[GraftCatalog.publishStaged]]): created fresh, refreshed in
   *    place, or repointed in one alterTable — the table NAME is never
@@ -30,7 +32,8 @@ import graft.sources.ManifestSql
   *    shape has);
   *  - a plain `REPLACE TABLE` (no AS SELECT — nothing written when
   *    commit fires) commits a ledgered EMPTY overwrite of the declared
-  *    schema, per SQL semantics;
+  *    schema, per SQL semantics — a schema seed, not a user write, so
+  *    it calls [[ManifestTable.overwrite]] directly;
   *  - `abortStagedChanges`: a manifest THIS statement inited is
   *    deleted (nothing referenced it); an already-committed data
   *    overwrite is a versioned commit and stays — logged, history
@@ -61,14 +64,11 @@ final case class StagedGraftTable(spark: SparkSession,
           new InsertableRelation {
             override def insert(data: DataFrame, overwrite: Boolean)
                 : Unit = {
-              val session = data.sparkSession
-              val aligned =
-                if (declared.isEmpty ||
-                  data.columns.toSeq == declared.fieldNames.toSeq) data
-                else data.toDF(declared.fieldNames.toIndexedSeq: _*)
-              ManifestTable.overwrite(session, root, aligned)
+              ManifestSql.sqlWrite(data.sparkSession, root, data,
+                ManifestSql.WriteShape.Overwrite,
+                if (declared.isEmpty) data.columns.toSeq
+                else declared.fieldNames.toSeq)
               wrote = true
-              session.catalog.refreshByPath(root)
             }
           }
       }

@@ -1537,47 +1537,74 @@ object ManifestTable {
     * directly. */
   def compact(spark: SparkSession, root: String, targetFileBytes: Long,
               beforeCommit: () => Unit = () => (),
-              clusterBy: Seq[String] = Seq.empty): Snapshot = {
+              clusterBy: Seq[String] = Seq.empty): Snapshot =
+    // the read set is the whole base: a conflicting rewrite or a MoR
+    // delete on any base file ABORTS (compaction is layout-only;
+    // merging two rewrites of one base would commit every base row
+    // twice, and a rewrite read through the OLD overlay would
+    // resurrect the delete's victims). Files that appeared since the
+    // base are appends — kept after the compacted set
+    rewriteFiles(spark, root, "compact", Abort, targetFileBytes,
+      _.files, clusterBy, rewrittenFirst = true, beforeCommit)
+
+  /** A file's recorded on-disk size — the `bytes:` stat every write
+    * commits with its file list; None for a legacy line predating the
+    * field. */
+  private[graft] def recordedBytesOf(snap: Snapshot, f: String): Option[Long] =
+    snap.stats.get(f).map(ManifestStats.decodeCached(_).bytes).filter(_ >= 0L)
+
+  /** Total on-disk bytes of `files`: their recorded sizes, with
+    * `fsLen` (an FS stat) asked for only the legacy files lacking
+    * one. */
+  private[graft] def bytesOf(snap: Snapshot, files: Seq[String])
+                            (fsLen: String => Long): Long =
+    files.map(f => recordedBytesOf(snap, f).getOrElse(fsLen(f))).sum
+
+  /** The one LAYOUT REWRITE behind [[compact]] and [[foldDeletes]]:
+    * the files `select` picks from the head (none = no scan, no
+    * commit) are read through the deletion-vector overlay — deleted
+    * rows drop out — arranged into ~`targetFileBytes` files (sized by
+    * [[bytesOf]]; range-clustered and sorted on `clusterBy` when
+    * given), written, and swapped in for exactly those files, with
+    * the selection as the read set under `rule`. Files committed
+    * since the base carry, after the rewritten ones when
+    * `rewrittenFirst`, before them otherwise. */
+  private def rewriteFiles(spark: SparkSession, root: String, op: String,
+                           rule: OnConflict, targetFileBytes: Long,
+                           select: Snapshot => Seq[String],
+                           clusterBy: Seq[String] = Seq.empty,
+                           rewrittenFirst: Boolean = false,
+                           beforeCommit: () => Unit = () => ()): Snapshot = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    transact(root, "compact", Abort, beforeCommit = beforeCommit) {
-      (head, w) =>
-        val base = present(root, head)
-        if (base.files.isEmpty) Left(base)
+    transact(root, op, rule, beforeCommit = beforeCommit) { (head, w) =>
+      val base = present(root, head)
+      val picked = select(base)
+      if (picked.isEmpty) Left(base)
+      else {
+        lazy val fs = fsOf(new HPath(root))
+        val bytes = bytesOf(base, picked)(f =>
+          fs.getFileStatus(new HPath(root, f)).getLen)
+        val n = math.max(1L,
+          (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+        val read = readSnapshot(spark, root, base.copy(files = picked))
+        val arranged = if (clusterBy.isEmpty) read.repartition(n)
         else {
-          // size the rewrite from the manifest's recorded bytes; stat
-          // the FS only for legacy files whose lines predate the bytes
-          // field
-          lazy val fs = fsOf(new HPath(root))
-          val bytes = base.files.map { f =>
-            base.stats.get(f).map(ManifestStats.decodeCached(_).bytes)
-              .filter(_ >= 0)
-              .getOrElse(fs.getFileStatus(new HPath(root, f)).getLen)
-          }.sum
-          val n = math.max(1L,
-            (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-          val baseRead = readSnapshot(spark, root, base)
-          val arranged = if (clusterBy.isEmpty) baseRead.repartition(n)
-          else {
-            val missing = clusterBy.filterNot(baseRead.columns.contains)
-            require(missing.isEmpty,
-              s"clusterBy column(s) not in the table: ${missing.mkString(",")}")
-            baseRead.repartitionByRange(n, clusterBy.map(F.col): _*)
-              .sortWithinPartitions(clusterBy.map(F.col): _*)
-          }
-          val (compacted, compactedStats) = w.data(spark, arranged, base)
-          // the read set is the whole base: a conflicting rewrite or a
-          // MoR delete on any base file ABORTS (compaction is
-          // layout-only; merging two rewrites of one base would commit
-          // every base row twice, and a rewrite read through the OLD
-          // overlay would resurrect the delete's victims). Files that
-          // appeared since the base are appends — kept alongside the
-          // compacted set
-          val baseSet = base.files.toSet
-          Right(Plan(cur => Some(cur.copy(
-            files = compacted ++ cur.files.filterNot(baseSet),
-            stats = cur.stats ++ compactedStats)), s => s,
-            readSet = base.files))
+          val missing = clusterBy.filterNot(read.columns.contains)
+          require(missing.isEmpty,
+            s"clusterBy column(s) not in the table: ${missing.mkString(",")}")
+          read.repartitionByRange(n, clusterBy.map(F.col): _*)
+            .sortWithinPartitions(clusterBy.map(F.col): _*)
         }
+        val (newFiles, newStats) = w.data(spark, arranged, base)
+        val pickedSet = picked.toSet
+        Right(Plan(cur => {
+          val carried = cur.files.filterNot(pickedSet)
+          Some(cur.copy(
+            files = if (rewrittenFirst) newFiles ++ carried
+                    else carried ++ newFiles,
+            stats = cur.stats ++ newStats))
+        }, s => s, readSet = picked))
+      }
     }
   }
 
@@ -1968,32 +1995,13 @@ object ManifestTable {
     * Also the maintenance valve for a DV that grew past broadcast
     * size. */
   def foldDeletes(spark: SparkSession, root: String,
-                  targetFileBytes: Long = 128L * 1024 * 1024): Snapshot = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
+                  targetFileBytes: Long = 128L * 1024 * 1024): Snapshot =
     // RESTART, but boundedly: every lost round has already rewritten
     // all DV'd files (vacuum orphans), so a steady MoR-delete stream
     // fails loudly rather than livelocking on garbage writes
-    transact(root, "foldDeletes", Restart) { (head, w) =>
-      val base = present(root, head)
-      val dvFiles = base.files.filter(f =>
-        base.stats.get(f).exists(
-          ManifestStats.decodeCached(_).dvRef.isDefined))
-      if (dvFiles.isEmpty) Left(base)
-      else {
-        val bytes = dvFiles.flatMap(f => base.stats.get(f)
-          .map(ManifestStats.decodeCached(_).bytes).filter(_ >= 0)).sum
-        val n = math.max(1L,
-          (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-        val folded = readSnapshot(spark, root,
-          base.copy(files = dvFiles)).repartition(n)
-        val (newFiles, newStats) = w.data(spark, folded, base)
-        val dvSet = dvFiles.toSet
-        Right(Plan(cur => Some(cur.copy(
-          files = cur.files.filterNot(dvSet) ++ newFiles,
-          stats = cur.stats ++ newStats)), s => s, readSet = dvFiles))
-      }
-    }
-  }
+    rewriteFiles(spark, root, "foldDeletes", Restart, targetFileBytes,
+      base => base.files.filter(f => base.stats.get(f).exists(
+        ManifestStats.decodeCached(_).dvRef.isDefined)))
 
   /** The `#dvmode:` table declaration: with merge-on-read deletes ON,
     * every SQL `DELETE FROM` door (V1 rule, DSv2 `SupportsDelete`)

@@ -47,18 +47,9 @@ object GraftFunctions {
     val parts = scala.util.Try(
       org.apache.spark.sql.catalyst.parser.CatalystSqlParser
         .parseMultipartIdentifier(arg)).getOrElse(Seq(arg))
-    val ident = parts match {
-      case Seq(t) => Some(org.apache.spark.sql.catalyst
-        .TableIdentifier(t))
-      case Seq(db, t) => Some(org.apache.spark.sql.catalyst
-        .TableIdentifier(t, Some(db)))
-      case _ => None
-    }
-    val cat = spark.sessionState.catalog
-    ident.flatMap(i => scala.util.Try(
-      if (cat.tableExists(i) && !cat.isTempView(i))
-        Some(cat.getTableMetadata(i)) else None).toOption.flatten)
-      .filter(graft.sources.ManifestSql.isManifestEntry)
+    graft.sources.ManifestSql.sessionIdentOf(parts)
+      .flatMap(i => scala.util.Try(
+        graft.sources.ManifestSql.manifestEntryOf(spark, i)).toOption.flatten)
       .map(graft.sources.ManifestSql.rootOfEntry)
       .getOrElse(throw new IllegalArgumentException(
         s"$fn: '$arg' has no '/' (so it is not a path) and names no " +

@@ -198,17 +198,8 @@ object GraftSqlParser {
   private def manifestIdentOf(session: SparkSession,
                               multipart: Seq[String])
       : Option[TableIdentifier] = {
-    val parts = multipart match {
-      case Seq(cat, db, t)
-          if cat.equalsIgnoreCase("spark_catalog") => Seq(db, t)
-      case p => p
-    }
-    val ident = parts match {
-      case Seq(t) => TableIdentifier(t)
-      case Seq(db, t) => TableIdentifier(t, Some(db))
-      case _ => return None
-    }
-    val cat = session.sessionState.catalog
+    val ident = graft.sources.ManifestSql.sessionIdentOf(multipart)
+      .getOrElse(return None)
     // a LOOKUP MISS is the ordinary non-manifest case → stock
     // behavior; an INFRASTRUCTURE failure (metastore down mid-parse)
     // must not silently disengage the rewrite — the statement would
@@ -216,15 +207,8 @@ object GraftSqlParser {
     // logged loudly before falling through (the statement re-touches
     // the catalog at resolution and surfaces the real failure there)
     val isManifest =
-      try {
-        cat.tableExists(ident) && !cat.isTempView(ident) &&
-          graft.sources.ManifestSql.isManifestEntry(
-            cat.getTableMetadata(ident))
-      } catch {
-        case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException |
-             _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException |
-             _: org.apache.spark.sql.catalyst.analysis.NoSuchNamespaceException
-            => false
+      try graft.sources.ManifestSql.manifestEntryOf(session, ident).isDefined
+      catch {
         case scala.util.control.NonFatal(t) =>
           graft.util.Log.warn(
             s"catalog lookup of ${ident.quotedString} failed during " +

@@ -68,12 +68,9 @@ case class ManifestSqlAlter(spark: SparkSession) extends Rule[LogicalPlan] {
         ManifestSqlAlter.TruncateCommand(ident)
     }
 
-  private def isManifestTable(ident: TableIdentifier): Boolean = {
-    val cat = spark.sessionState.catalog
-    cat.tableExists(ident) && !cat.isTempView(ident) &&
-      scala.util.Try(ManifestSql.isManifestEntry(
-        cat.getTableMetadata(ident))).getOrElse(false)
-  }
+  private def isManifestTable(ident: TableIdentifier): Boolean =
+    scala.util.Try(ManifestSql.manifestEntryOf(spark, ident).isDefined)
+      .getOrElse(false)
 }
 
 object ManifestSqlAlter {
@@ -82,6 +79,37 @@ object ManifestSqlAlter {
                      ident: TableIdentifier): String =
     ManifestSql.rootOfEntry(
       session.sessionState.catalog.getTableMetadata(ident))
+
+  /** Drop `CACHE TABLE` materializations of the table — they carry
+    * the pre-statement schema/data; uncache re-resolves the table,
+    * so this runs BEFORE the ledger moves. */
+  private def uncache(session: SparkSession, ident: TableIdentifier): Unit = {
+    val name = ident.quotedString
+    if (session.catalog.isCached(name)) session.catalog.uncacheTable(name)
+  }
+
+  /** The shared epilogue of an in-place schema change (ADD COLUMNS,
+    * type widening): uncache, the ledger op, then the catalog schema
+    * set to the manifest's own PHYSICAL read shape — recorded schema
+    * plus rename-chain names, in ITS order (appending to the old
+    * catalog schema would drift on a rename-chained STORE table, whose
+    * new recorded columns land before the chain names, and trip the
+    * provider's schema-drift guard) — and the session's cached
+    * RELATION dropped (not Catalog.refreshTable, which would re-drive
+    * the OLD FileIndex's refresh and trip its drift guard): the next
+    * resolution rebuilds from the updated entry. */
+  private def alterInPlace(session: SparkSession, ident: TableIdentifier,
+                           root: String)(ledgerOp: => Unit): Seq[Row] = {
+    val cat = session.sessionState.catalog
+    uncache(session, ident)
+    ledgerOp
+    val snap = ManifestTable.latest(root).getOrElse(
+      throw new IllegalStateException(s"no manifest at $root"))
+    cat.alterTableDataSchema(ident,
+      ManifestSql.physicalSchemaOf(session, root, snap))
+    cat.refreshTable(ident)
+    Seq.empty
+  }
 
   /** Shared epilogue of a schema-SHAPE change (rename/drop): the
     * physical projection changed, so rebuild the registration the
@@ -131,8 +159,7 @@ object ManifestSqlAlter {
           s"cannot rename '$resolved' to '$to' on " +
             s"${ident.quotedString} — it collides with column '$c' " +
             "under the session's case-insensitive resolution"))
-      val name = ident.quotedString
-      if (session.catalog.isCached(name)) session.catalog.uncacheTable(name)
+      uncache(session, ident)
       ManifestTable.renameColumn(session, root, resolved, to)
       reRegister(session, ident)
       Seq.empty
@@ -172,8 +199,7 @@ object ManifestSqlAlter {
             .fieldNames.length).getOrElse(0)
         require(victims.size < width,
           s"cannot drop every column of ${ident.quotedString}")
-        val name = ident.quotedString
-        if (session.catalog.isCached(name)) session.catalog.uncacheTable(name)
+        uncache(session, ident)
         var dropped = 0
         try victims.foreach { c =>
           ManifestTable.dropColumn(session, root, c); dropped += 1
@@ -189,33 +215,11 @@ object ManifestSqlAlter {
                                colsToAdd: Seq[StructField])
     extends LeafRunnableCommand {
     override def run(session: SparkSession): Seq[Row] = {
-      val cat = session.sessionState.catalog
       val root = rootOf(session, ident)
-      val added = StructType(colsToAdd.map(_.copy(nullable = true)))
-      // CACHE TABLE materializations carry the old schema — drop them
-      // BEFORE the ledger moves (uncache re-resolves the table, which
-      // must still see the pre-ALTER shape)
-      val name = ident.quotedString
-      if (session.catalog.isCached(name)) session.catalog.uncacheTable(name)
-      ManifestTable.addColumns(session, root, added)
-      // the catalog schema must be the manifest's own PHYSICAL read
-      // shape — recorded schema plus rename-chain names, in ITS
-      // order. Appending to the old catalog schema would drift on a
-      // rename-chained STORE table (new recorded columns land before
-      // the chain names, not after) and trip the provider's
-      // schema-drift guard on the next resolution.
-      val snap = ManifestTable.latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
-      val (physical, _) = ManifestTable.readShapeOf(
-        ManifestTable.recordedSchemaOf(session, root, snap),
-        ManifestTable.colmapOfSnap(snap))
-      cat.alterTableDataSchema(ident, physical)
-      // drop the session's cached RELATION (not Catalog.refreshTable,
-      // which would re-drive the OLD FileIndex's refresh and trip its
-      // schema-drift guard): the next resolution rebuilds from the
-      // updated catalog entry against the evolved recorded schema
-      cat.refreshTable(ident)
-      Seq.empty
+      alterInPlace(session, ident, root) {
+        ManifestTable.addColumns(session, root,
+          StructType(colsToAdd.map(_.copy(nullable = true))))
+      }
     }
   }
 
@@ -232,44 +236,37 @@ object ManifestSqlAlter {
                                 to: org.apache.spark.sql.types.DataType)
     extends LeafRunnableCommand {
     override def run(session: SparkSession): Seq[Row] = {
-      val cat = session.sessionState.catalog
       val root = rootOf(session, ident)
       val resolved = resolveCol(session, root, col).getOrElse(
         throw new IllegalArgumentException(
           s"no column '$col' to widen on ${ident.quotedString}"))
-      val name = ident.quotedString
-      if (session.catalog.isCached(name)) session.catalog.uncacheTable(name)
-      ManifestTable.widenColumn(session, root, resolved, to)
-      val snap = ManifestTable.latest(root).getOrElse(
-        throw new IllegalStateException(s"no manifest at $root"))
-      val (physical, _) = ManifestTable.readShapeOf(
-        ManifestTable.recordedSchemaOf(session, root, snap),
-        ManifestTable.colmapOfSnap(snap))
-      cat.alterTableDataSchema(ident, physical)
-      cat.refreshTable(ident)
-      Seq.empty
+      alterInPlace(session, ident, root) {
+        ManifestTable.widenColumn(session, root, resolved, to)
+      }
     }
   }
 
-  /** TRUNCATE as a versioned ledger commit: overwrite with zero rows
-    * of the RECORDED schema — never a file deletion (see the rule's
-    * doc). History stays time travel-readable; the superseded files
-    * become ordinary vacuum orphans. */
+  /** TRUNCATE as a versioned ledger commit: the one whole-table write
+    * owner ([[ManifestSql.sqlWrite]]) overwrites with zero rows of the
+    * RECORDED schema — never a file deletion (see the rule's doc).
+    * Not the catalog schema: a rename-chained `<name>_store` entry
+    * also carries the renamed-away names, which the schema ledger
+    * refuses to re-introduce. History stays time travel-readable;
+    * the superseded files become ordinary vacuum orphans. */
   case class TruncateCommand(ident: TableIdentifier)
     extends LeafRunnableCommand {
     override def run(session: SparkSession): Seq[Row] = {
-      val meta = session.sessionState.catalog.getTableMetadata(ident)
       val root = rootOf(session, ident)
-      val name = ident.quotedString
-      if (session.catalog.isCached(name)) session.catalog.uncacheTable(name)
-      val schema = StructType(meta.dataSchema.fields.map(
-        _.copy(nullable = true)))
-      ManifestTable.overwrite(session, root,
-        session.createDataFrame(new java.util.ArrayList[Row](), schema))
+      val snap = ManifestTable.latest(root).getOrElse(
+        throw new IllegalStateException(s"no manifest at $root"))
+      val schema = ManifestTable.recordedSchemaOf(session, root, snap)
+      uncache(session, ident)
+      ManifestSql.sqlWrite(session, root,
+        session.createDataFrame(new java.util.ArrayList[Row](), schema),
+        ManifestSql.WriteShape.Overwrite, schema.fieldNames.toSeq)
       // drop the cached relation (its FileIndex pin predates the
-      // truncate) and any cached plans over the root
+      // truncate)
       session.sessionState.catalog.refreshTable(ident)
-      session.catalog.refreshByPath(root)
       Seq.empty
     }
   }

@@ -329,7 +329,6 @@ object ManifestSqlDml {
     * only (their registrations keep the loud re-register contract). */
   private def catalogIdentOf(spark: SparkSession, tgt: LogicalPlan)
       : Option[org.apache.spark.sql.catalyst.TableIdentifier] = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
     def candidates(p: LogicalPlan): Seq[Seq[String]] = p match {
       case s @ SubqueryAlias(id, child) =>
         candidates(child) :+ (id.qualifier :+ id.name)
@@ -337,18 +336,11 @@ object ManifestSqlDml {
       case pr: Project => candidates(pr.child)
       case _ => Seq.empty
     }
-    val cat = spark.sessionState.catalog
     candidates(tgt).iterator // candidates build child-first: deepest
       .map(_.takeRight(2))   // (qualified catalog) alias leads
-      .flatMap {
-        case Seq(t) => Some(TableIdentifier(t))
-        case Seq(db, t) => Some(TableIdentifier(t, Some(db)))
-        case _ => None
-      }
-      .find(i => scala.util.Try(
-        cat.tableExists(i) && !cat.isTempView(i) &&
-          ManifestSql.isManifestEntry(cat.getTableMetadata(i)))
-        .getOrElse(false))
+      .flatMap(ManifestSql.sessionIdentOf)
+      .find(i => scala.util.Try(ManifestSql.manifestEntryOf(spark, i)
+        .isDefined).getOrElse(false))
   }
 
   /** Is every expression of the merge resolved, MODULO the one

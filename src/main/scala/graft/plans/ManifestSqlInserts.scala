@@ -44,9 +44,9 @@ case class ManifestSqlInserts(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** The ledgered-commit execution of a SQL insert on a manifest table
-  * — a thin shell over [[ManifestSql.sqlInsert]], the ONE owner of
-  * the SQL-insert commit semantics (alignment, append/overwrite
-  * dispatch, pin move, cache invalidation) shared with the temp-view
+  * — a thin shell over [[ManifestSql.sqlInsert]] (the registration's
+  * head guard and pin move around [[ManifestSql.sqlWrite]], the one
+  * whole-table write owner), shared with the temp-view
   * `InsertableRelation` path. */
 case class ManifestInsertCommand(root: String, query: LogicalPlan,
                                  overwrite: Boolean,

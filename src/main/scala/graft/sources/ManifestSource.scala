@@ -8,7 +8,7 @@ import org.apache.spark.sql.sources.{BaseRelation,
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.{ManifestStats, ManifestTable}
+import graft.operators.ManifestTable
 
 /** `USING graft-manifest` — the DataSource V1 provider that lets
   * [[graft.operators.ManifestTable]] roots live in a PERSISTENT
@@ -98,11 +98,15 @@ final class ManifestSource extends RelationProvider
     * `df.write.format("graft-manifest").option("path", root)` and
     * SQL `CREATE TABLE … USING graft-manifest OPTIONS (path …) AS
     * SELECT …` first-class — a table is CREATED (manifest init +
-    * first ledgered append) or written through the existing commit
-    * protocol, never as raw files. SaveMode maps exactly onto the
-    * ledger ops: ErrorIfExists refuses an existing manifest, Ignore
-    * no-ops one, Append appends (creating if absent), Overwrite
-    * replaces the snapshot atomically (creating if absent).
+    * first ledgered write) or written through the existing commit
+    * protocol, never as raw files. SaveMode maps onto the ledger ops:
+    * ErrorIfExists refuses an existing manifest, Ignore no-ops one,
+    * Append appends (creating if absent), Overwrite replaces the
+    * snapshot atomically (creating if absent) — the shape Spark's V1
+    * CTAS hands a new table. The commit itself is
+    * [[ManifestSql.sqlWrite]], the one whole-table write owner, by
+    * column name: `spark.graft.sql.batchId` ledgers an append and
+    * refuses an overwrite before anything (the init included) lands.
     *
     * Creation-time declarations ride options: `statCols` /
     * `bloomCols` (comma-separated) and `bloomCapacity` — the same
@@ -117,14 +121,10 @@ final class ManifestSource extends RelationProvider
     require(parameters.get("versionAsOf").isEmpty,
       "cannot write through a versionAsOf option — time travel is " +
         "read-only")
-    def csv(k: String): Seq[String] = parameters.get(k).toSeq
-      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val statCols = csv("statCols")
-    val bloomCols = csv("bloomCols")
-    val bloomCap = parameters.get("bloomCapacity").map(_.trim.toLong)
+    val declared = ManifestSql.declarationsOf(parameters)
     val exists = ManifestTable.latest(root).isDefined
     if (exists)
-      require(statCols.isEmpty && bloomCols.isEmpty && bloomCap.isEmpty,
+      require(declared.isEmpty,
         s"statCols/bloomCols/bloomCapacity are creation-time " +
           s"declarations and the manifest table at $root already " +
           "exists — drop/re-init the table to change its stat shape")
@@ -144,20 +144,15 @@ final class ManifestSource extends RelationProvider
             "ErrorIfExists) — use mode(\"append\") or mode(\"overwrite\")")
       case SaveMode.Ignore if exists => ()
       case _ =>
-        if (!exists)
-          ManifestTable.init(root, statCols, bloomCols,
-            bloomCap.getOrElse(ManifestStats.BloomKeyCapacity))
-        (mode, replaceWhere) match {
+        val shape = (mode, replaceWhere) match {
           case (SaveMode.Overwrite, Some(cond)) if exists =>
-            ManifestTable.overwriteWhere(spark, root,
-              org.apache.spark.sql.functions.expr(cond), data)
-          case (SaveMode.Overwrite, _) if exists =>
-            ManifestTable.overwrite(spark, root, data)
-          case _ => ManifestTable.append(spark, root, data)
+            ManifestSql.WriteShape.ReplaceWhere(
+              org.apache.spark.sql.functions.expr(cond))
+          case (SaveMode.Overwrite, _) => ManifestSql.WriteShape.Overwrite
+          case _ => ManifestSql.WriteShape.Append
         }
-        // cached plans over the root must not serve the pre-write
-        // snapshot (same contract as the SQL insert path)
-        spark.catalog.refreshByPath(root)
+        ManifestSql.sqlWrite(spark, root, data, shape, data.columns.toSeq,
+          prepare = () => if (!exists) declared.init(root))
     }
     ManifestSql.baseRelation(spark, root, None)
   }
@@ -186,8 +181,7 @@ final class ManifestSource extends RelationProvider
         "option naming the merge column")
     require(outputMode == OutputMode.Update() || mergeKey.isEmpty,
       s"'mergeKey' applies to update mode only (got $outputMode)")
-    def csv(k: String): Seq[String] = parameters.get(k).toSeq
-      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+    val declared = ManifestSql.declarationsOf(parameters)
     // the checkpoint LOCATION travels to the sink; the fingerprint
     // itself resolves lazily at the first batch from the STREAMING
     // QUERY ID the engine persists inside the checkpoint — a
@@ -195,8 +189,8 @@ final class ManifestSource extends RelationProvider
     // and refuses loudly instead of silently no-opping new batches
     // below the old ledger watermark
     new ManifestStreamSink(sqlContext.sparkSession, root, outputMode,
-      mergeKey, csv("statCols"), csv("bloomCols"),
-      parameters.get("bloomCapacity").map(_.trim.toLong),
+      mergeKey, declared.statCols, declared.bloomCols,
+      declared.bloomCapacity,
       parameters.get("checkpointLocation").map(_.trim))
   }
 

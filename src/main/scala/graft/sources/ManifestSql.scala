@@ -2,15 +2,18 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, TableIdentifier}
+import org.apache.spark.sql.catalyst.analysis.{NoSuchDatabaseException,
+  NoSuchNamespaceException, NoSuchTableException}
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.ManifestTable
+import graft.operators.{ManifestStats, ManifestTable}
 
 /** SQL FRONT DOOR for [[ManifestTable]] — a pruned, snapshot-pinned
   * relation registered in the session catalog, so
@@ -43,7 +46,13 @@ import graft.operators.ManifestTable
   * reads — one shared [[ManifestTable.readShapeOf]] owner);
   * predicates on a renamed column's coalesce are not prunable
   * shapes — compaction normalizes the files and restores pruning, as
-  * documented on the rename. */
+  * documented on the rename.
+  *
+  * Writes: this object owns one entry per SQL verb for every door —
+  * [[sqlWrite]] for every whole-table write (INSERT, INSERT
+  * OVERWRITE, REPLACE WHERE, CTAS/RTAS, TRUNCATE, `df.write`),
+  * [[sqlDeleteAt]], [[sqlUpdate]] and [[sqlMergeInto]] for row-level
+  * DML — and the one [[BatchIdConf]] reader, [[withBatchId]]. */
 object ManifestSql {
 
   /** The datasource provider name manifest catalog entries register
@@ -52,21 +61,70 @@ object ManifestSql {
   val ManifestProvider = "graft-manifest"
 
   /** Is this catalog entry a `USING graft-manifest` table? The one
-    * provider check behind every door's catalog probe; each caller
-    * keeps its own lookup and failure policy. */
-  private[graft] def isManifestEntry(
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): Boolean =
+    * provider check, behind [[manifestEntryOf]] and the catalog
+    * listing. */
+  private[graft] def isManifestEntry(meta: CatalogTable): Boolean =
     meta.provider.exists(_.equalsIgnoreCase(ManifestProvider))
 
   /** The manifest root a catalog entry points at: its `path` storage
     * property, else its location. */
-  private[graft] def rootOfEntry(
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): String =
+  private[graft] def rootOfEntry(meta: CatalogTable): String =
     meta.storage.properties.get("path")
       .orElse(meta.storage.locationUri.map(u => new HPath(u).toString))
       .getOrElse(throw new IllegalStateException(
         s"manifest catalog table ${meta.identifier.quotedString} " +
           "has no path"))
+
+  /** The session-catalog identifier a one- or two-part name (or a
+    * `spark_catalog`-qualified three-part one) addresses; None for any
+    * other shape. */
+  private[graft] def sessionIdentOf(multipart: Seq[String])
+      : Option[TableIdentifier] = multipart match {
+    case Seq(cat, db, t) if cat.equalsIgnoreCase("spark_catalog") =>
+      Some(TableIdentifier(t, Some(db)))
+    case Seq(db, t) => Some(TableIdentifier(t, Some(db)))
+    case Seq(t) => Some(TableIdentifier(t))
+    case _ => None
+  }
+
+  /** The `USING graft-manifest` session-catalog entry behind `ident`:
+    * None for a missing table or database, a temp view, or another
+    * provider — the one lookup behind every door's catalog probe. Any
+    * other failure (a metastore outage) propagates; each caller keeps
+    * its own policy for it. */
+  private[graft] def manifestEntryOf(spark: SparkSession,
+                                     ident: TableIdentifier)
+      : Option[CatalogTable] = {
+    val cat = spark.sessionState.catalog
+    try {
+      if (!cat.tableExists(ident) || cat.isTempView(ident)) None
+      else Some(cat.getTableMetadata(ident)).filter(isManifestEntry)
+    } catch {
+      case _: NoSuchTableException | _: NoSuchDatabaseException |
+           _: NoSuchNamespaceException => None
+    }
+  }
+
+  /** A table's creation-time declarations, as options or properties
+    * carry them: `statCols` / `bloomCols` (comma-separated) and
+    * `bloomCapacity` — the knobs of [[ManifestTable.init]]. */
+  private[graft] final case class Declarations(statCols: Seq[String],
+                                               bloomCols: Seq[String],
+                                               bloomCapacity: Option[Long]) {
+    def isEmpty: Boolean =
+      statCols.isEmpty && bloomCols.isEmpty && bloomCapacity.isEmpty
+    def init(root: String): Unit =
+      ManifestTable.init(root, statCols, bloomCols,
+        bloomCapacity.getOrElse(ManifestStats.BloomKeyCapacity))
+  }
+
+  private[graft] def declarationsOf(opts: collection.Map[String, String])
+      : Declarations = {
+    def csv(k: String): Seq[String] = opts.get(k).toSeq
+      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+    Declarations(csv("statCols"), csv("bloomCols"),
+      opts.get("bloomCapacity").map(_.trim.toLong))
+  }
 
   /** The manifest-backed [[FileIndex]]: `listFiles` returns only the
     * files whose recorded stats may match the pushed data filters.
@@ -102,14 +160,10 @@ object ManifestSql {
       // post-insert refresh) stays O(1): a query planning N candidates
       // decodes N payloads (through the shared content-addressed LRU),
       // never the whole table
-      private def recordedBytesOf(f: String): Option[Long] =
-        snap.stats.get(f)
-          .map(p => graft.operators.ManifestStats.decodeCached(p).bytes)
-          .filter(_ >= 0L)
       def statusOf(f: String): FileStatus = {
         val hit = cache.get(f)
         if (hit != null) return hit
-        val st = recordedBytesOf(f) match {
+        val st = ManifestTable.recordedBytesOf(snap, f) match {
           case Some(len) => new FileStatus(len, false, 1,
             128L * 1024 * 1024, 0L, new HPath(root, f))
           case None => fs.getFileStatus(new HPath(root, f))
@@ -120,8 +174,7 @@ object ManifestSql {
       /** Table size for the optimizer: recorded bytes, plus an FS
         * stat for only the legacy files lacking them. */
       lazy val totalBytes: Long =
-        snap.files.map(f =>
-          recordedBytesOf(f).getOrElse(statusOf(f).getLen)).sum
+        ManifestTable.bytesOf(snap, snap.files)(statusOf(_).getLen)
       /** Any deletion vector among the pinned files? Once per pin. */
       lazy val hasDv: Boolean = ManifestTable.hasDv(snap)
     }
@@ -192,8 +245,9 @@ object ManifestSql {
   /** The physical read schema of a snapshot — the recorded schema
     * plus rename-chain names, from the shared
     * [[ManifestTable.readShapeOf]] owner. */
-  private def physicalSchemaOf(spark: SparkSession, root: String,
-                               snap: ManifestTable.Snapshot): StructType =
+  private[graft] def physicalSchemaOf(spark: SparkSession, root: String,
+                                      snap: ManifestTable.Snapshot)
+      : StructType =
     ManifestTable.readShapeOf(
       ManifestTable.recordedSchemaOf(spark, root, snap),
       ManifestTable.colmapOfSnap(snap))._1
@@ -242,58 +296,81 @@ object ManifestSql {
       sqlInsert(spark, idx, data, overwrite, physical.fieldNames.toSeq)
   }
 
-  /** The ONE owner of SQL-insert commit semantics, shared by the
-    * temp-view `InsertableRelation` path and the catalog-path rewrite
-    * rule ([[graft.plans.ManifestInsertCommand]]) — two copies would
-    * let the paths drift. Positional alignment under the table's
-    * column names (SQL INSERT semantics; the analyzer has already
-    * arity-checked and cast the query), ledgered append or atomic
-    * overwrite, then: move this registration's own head pin (the
-    * writing session's next read sees the write) and invalidate any
-    * CACHED plans over the table root (`CACHE TABLE` holds
-    * materialized InMemoryRelations that a pin move alone cannot
-    * see — Spark's own insert commands recache the same way). */
-  private[graft] def sqlInsert(spark: SparkSession, idx: ManifestFileIndex,
-                               data: DataFrame, overwrite: Boolean,
-                               columnNames: Seq[String]): Unit = {
-    require(idx.versionAsOf.isEmpty,
-      s"cannot INSERT into a versionAsOf registration of ${idx.root} — " +
-        "time travel is read-only; register the head to write")
-    sqlInsertAt(spark, idx.root, data, overwrite, columnNames)
-    idx.refresh()
-    spark.catalog.refreshByPath(idx.root)
+  /** What a whole-table write does with its rows: append them,
+    * replace the table's contents with them, or replace exactly the
+    * rows matching a predicate (`REPLACE WHERE`). */
+  private[graft] sealed trait WriteShape
+  private[graft] object WriteShape {
+    case object Append extends WriteShape
+    case object Overwrite extends WriteShape
+    final case class ReplaceWhere(predicate: Column) extends WriteShape
   }
 
-  /** The root-addressed core of [[sqlInsert]] — shared with the DSv2
-    * door ([[graft.catalog.GraftTable]]), which has no standing
-    * FileIndex to re-pin (every v2 analysis builds a fresh pin):
-    * positional alignment, the [[BatchIdConf]] ledger contract, and
-    * the append/overwrite commit, one owner. */
-  private[graft] def sqlInsertAt(spark: SparkSession, root: String,
-                                 data: DataFrame, overwrite: Boolean,
-                                 columnNames: Seq[String]): Unit = {
+  /** The ONE owner of whole-table writes — `INSERT INTO`, `INSERT
+    * OVERWRITE`, `REPLACE WHERE`, CTAS/RTAS, `TRUNCATE` and
+    * `df.write`, on every door (temp view, `USING graft-manifest`,
+    * `graft.<db>.<t>`, the provider's write arm). In one place:
+    * positional alignment under the table's column names (SQL INSERT
+    * semantics; pass the frame's own columns to keep by-name writes),
+    * the [[BatchIdConf]] contract (an append commits under the id
+    * through [[ManifestTable.appendBatch]]; every other shape refuses
+    * it; the conf resets in every outcome), the ledger op, and the
+    * invalidation of cached plans over the root (`CACHE TABLE` holds
+    * materialized InMemoryRelations a pin cannot move — Spark's own
+    * insert commands recache the same way). `prepare` runs after the
+    * batch-id check and before any data moves (the provider's
+    * create-on-write init), so a refused write leaves nothing behind. */
+  private[graft] def sqlWrite(spark: SparkSession, root: String,
+                              data: DataFrame, shape: WriteShape,
+                              columnNames: Seq[String],
+                              prepare: () => Unit = () => ()): Unit = {
     val aligned =
       if (data.columns.toSeq == columnNames) data
       else data.toDF(columnNames.toIndexedSeq: _*)
-    withBatchId(spark) {
-      case Some(_) if overwrite => throw new IllegalArgumentException(
-        s"$BatchIdConf applies to INSERT INTO and MERGE INTO only — " +
-          "INSERT OVERWRITE is not a replayable micro-batch shape")
-      case Some(id) => ManifestTable.appendBatch(spark, root, id, aligned)
-      case None =>
-        if (overwrite) ManifestTable.overwrite(spark, root, aligned)
-        else ManifestTable.append(spark, root, aligned)
+    withBatchId(spark) { batchId =>
+      if (batchId.isDefined && shape != WriteShape.Append)
+        throw new IllegalArgumentException(
+          s"$BatchIdConf applies to INSERT INTO and MERGE INTO only — " +
+            "INSERT OVERWRITE is not a replayable micro-batch shape")
+      prepare()
+      (shape, batchId) match {
+        case (WriteShape.Append, Some(id)) =>
+          ManifestTable.appendBatch(spark, root, id, aligned)
+        case (WriteShape.Append, None) =>
+          ManifestTable.append(spark, root, aligned)
+        case (WriteShape.Overwrite, _) =>
+          ManifestTable.overwrite(spark, root, aligned)
+        case (WriteShape.ReplaceWhere(p), _) =>
+          ManifestTable.overwriteWhere(spark, root, p, aligned)
+      }
     }
+    spark.catalog.refreshByPath(root)
+  }
+
+  /** SQL `INSERT INTO` / `INSERT OVERWRITE` on a registration (the
+    * temp-view `InsertableRelation` and the catalog-path
+    * [[graft.plans.ManifestInsertCommand]]): [[sqlWrite]] on its
+    * root, then THIS registration's pin moves to the new head. */
+  private[graft] def sqlInsert(spark: SparkSession, idx: ManifestFileIndex,
+                               data: DataFrame, overwrite: Boolean,
+                               columnNames: Seq[String]): Unit = {
+    requireHead(idx, "INSERT into")
+    sqlWrite(spark, idx.root, data,
+      if (overwrite) WriteShape.Overwrite else WriteShape.Append,
+      columnNames)
+    idx.refresh()
   }
 
   /** Session conf carrying the ledger batch id for an idempotent SQL
     * write (the Delta `txnVersion` idea, public pattern): when set,
-    * the next `MERGE INTO` or `INSERT INTO` on a manifest table
-    * commits under `#batch:<id>` — a replay with the same id finds
-    * the marker and no-ops. AUTO-RESET after each write (applied or
-    * no-oped), so a stale id can never silently swallow an unrelated
-    * later write. `INSERT OVERWRITE` refuses it: an overwrite is not
-    * a replayable micro-batch shape. */
+    * the next `MERGE INTO` or appending write (`INSERT INTO`, a
+    * `df.write` append) on a manifest table commits under
+    * `#batch:<id>` — a replay with the same id finds the marker and
+    * no-ops. AUTO-RESET after each write (applied, no-oped or
+    * refused), so a stale id can never silently swallow an unrelated
+    * later write. Every other whole-table write (`INSERT OVERWRITE`,
+    * `REPLACE WHERE`, CTAS/RTAS, `TRUNCATE`, a `df.write` overwrite)
+    * refuses it: an overwrite is not a replayable micro-batch shape. */
   val BatchIdConf = "spark.graft.sql.batchId"
 
   /** Read-and-consume the [[BatchIdConf]] around one SQL write: the
@@ -315,10 +392,10 @@ object ManifestSql {
       s"cannot $verb a versionAsOf registration of ${idx.root} — " +
         "time travel is read-only; register the head to write")
 
-  /** Shared post-write bookkeeping for every SQL write shape: move
+  /** Shared post-write bookkeeping for the row-level SQL writes: move
     * THIS registration's pin to the new head (the writing session's
     * next read sees its write) and invalidate cached plans over the
-    * table root — same contract as [[sqlInsert]]. */
+    * table root — same contract as [[sqlWrite]] + [[sqlInsert]]. */
   private def afterSqlWrite(spark: SparkSession,
                             idx: ManifestFileIndex): Unit = {
     idx.refresh()
@@ -326,7 +403,7 @@ object ManifestSql {
   }
 
   /** The ONE owner of SQL `DELETE FROM` semantics, root-addressed
-    * like [[sqlInsertAt]] so every door shares it (the V1 rule path
+    * like [[sqlWrite]] so every door shares it (the V1 rule path
     * through [[sqlDelete]], the DSv2 `SupportsDelete` door
     * [[graft.catalog.GraftTable]]): victims are the rows where
     * `predicate` and every membership term hold (each term a `c IN
@@ -336,24 +413,27 @@ object ManifestSql {
     * deletion-vector [[ManifestTable.deleteWhereMoR]], which rewrites
     * NO data file, over the copy-on-write
     * [[ManifestTable.deleteWhere]] (victim scan pruned by the
-    * predicate and the terms through bounds + Blooms). */
+    * predicate and the terms through bounds + Blooms). Cached plans
+    * over the root are invalidated afterwards. */
   private[graft] def sqlDeleteAt(spark: SparkSession, root: String,
                                  predicate: org.apache.spark.sql.Column,
                                  terms: Seq[ManifestTable.MembershipTerm] = Nil)
-      : Unit =
+      : Unit = {
     if (ManifestTable.latest(root).exists(ManifestTable.morDeletes))
       ManifestTable.deleteWhereMoR(spark, root, predicate, terms)
     else ManifestTable.deleteWhere(spark, root, predicate, terms)
+    spark.catalog.refreshByPath(root)
+  }
 
   /** SQL `DELETE FROM` on a registration: [[sqlDeleteAt]] on its
-    * root, then the shared pin move + cache invalidation. */
+    * root, then the registration's pin move. */
   private[graft] def sqlDelete(spark: SparkSession, idx: ManifestFileIndex,
                                predicate: org.apache.spark.sql.Column,
                                terms: Seq[ManifestTable.MembershipTerm])
       : Unit = {
     requireHead(idx, "DELETE FROM")
     sqlDeleteAt(spark, idx.root, predicate, terms)
-    afterSqlWrite(spark, idx)
+    idx.refresh()
   }
 
   /** The ONE owner of SQL `UPDATE` semantics:
@@ -415,9 +495,7 @@ object ManifestSql {
                              versionAsOf: Option[Int],
                              snap: ManifestTable.Snapshot)
       : ManifestWritableRelation = {
-    val (physical, _) = ManifestTable.readShapeOf(
-      ManifestTable.recordedSchemaOf(spark, root, snap),
-      ManifestTable.colmapOfSnap(snap))
+    val physical = physicalSchemaOf(spark, root, snap)
     val idx = new ManifestFileIndex(spark, root, snap, versionAsOf,
       physical)
     new ManifestWritableRelation(spark, root, versionAsOf, idx, physical)

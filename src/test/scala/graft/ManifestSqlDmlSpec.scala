@@ -157,6 +157,62 @@ class ManifestSqlDmlSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS sqldml_cat")
   }
 
+  /** One statement of the door × verb matrix: `prepare` and `run`
+    * take the SQL target name, `twin` applies the same write through
+    * the Scala API to a fresh table root, and `commits` is how many
+    * versions `run` must publish. */
+  private case class DoorInput(label: String, run: String => Unit,
+                               twin: String => Unit, commits: Int = 1,
+                               prepare: String => Unit = _ => ())
+
+  /** Every input through every SQL door (temp view, persistent entry,
+    * `graft.default`), each on a fresh table: the door publishes
+    * exactly `commits` versions, its rows equal the Scala twin's, and
+    * it reads its own write. */
+  private def doorParity(inputs: Seq[DoorInput]): Unit = {
+    def rowsOf(root: String) =
+      ManifestTable.read(spark, root).orderBy("id").collect().toSeq
+    val g = graft.api.Graft(spark, sf)
+    // door name -> (register the table at root, the SQL target name)
+    val doors = Seq[(String, String => String)](
+      "temp view" -> { root =>
+        graft.sources.ManifestSql.register(spark, "mdoor_tmp", root)
+        "mdoor_tmp"
+      },
+      "persistent entry" -> { root =>
+        g.registerManifest("mdoor_cat", root, persistent = true)
+        "mdoor_cat"
+      },
+      "graft.default" -> { root =>
+        g.registerManifest("mdoor_v2", root, persistent = true)
+        "graft.default.mdoor_v2"
+      })
+    try {
+      for (in <- inputs) {
+        val (_, twin) = freshTable("graft_mdoor_twin")
+        in.twin(twin)
+        val want = rowsOf(twin)
+        for ((door, register) <- doors) {
+          val (_, root) = freshTable("graft_mdoor")
+          val target = register(root)
+          in.prepare(target)
+          val v0 = ManifestTable.latest(root).get.version
+          in.run(target)
+          assert(ManifestTable.latest(root).get.version == v0 + in.commits,
+            s"${in.label} through the $door must commit exactly " +
+              s"${in.commits} time(s)")
+          assert(rowsOf(root) == want,
+            s"${in.label} through the $door differs from the Scala twin")
+          assert(spark.sql(s"SELECT count(*) FROM $target").head().getLong(0)
+            == want.size.toLong, s"the $door must read its own write")
+        }
+      }
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS mdoor_cat")
+      spark.sql("DROP TABLE IF EXISTS mdoor_v2")
+    }
+  }
+
   test("MERGE door parity: every shape through temp view, persistent entry and graft.default commits once and equals the Scala mergeInto twin") {
     import spark.implicits._
     import ManifestTable.{MergeDelete, MergeUpdate, WhenMatched,
@@ -177,47 +233,110 @@ class ManifestSqlDmlSpec extends SparkSpec {
       ("WHEN MATCHED AND t.id % 2 = 0 THEN UPDATE SET v = s.v", part,
         Seq(WhenMatched(Some(F.col("id") % 2 === 0),
           MergeUpdate(Map("v" -> sourceCol("v"))))), Nil))
-    def rowsOf(root: String) =
-      ManifestTable.read(spark, root).orderBy("id").collect().toSeq
-    val g = graft.api.Graft(spark, sf)
-    // door name -> (register the table at root, the SQL target name)
-    val doors = Seq[(String, String => String)](
-      "temp view" -> { root =>
-        graft.sources.ManifestSql.register(spark, "mdoor_tmp", root)
-        "mdoor_tmp"
-      },
-      "persistent entry" -> { root =>
-        g.registerManifest("mdoor_cat", root, persistent = true)
-        "mdoor_cat"
-      },
-      "graft.default" -> { root =>
-        g.registerManifest("mdoor_v2", root, persistent = true)
-        "graft.default.mdoor_v2"
-      })
+    doorParity(shapes.zipWithIndex.map {
+      case ((clauses, source, matched, notMatched), i) =>
+        DoorInput(s"shape $i",
+          run = target => {
+            source.createOrReplaceTempView("mdoor_src")
+            spark.sql(s"MERGE INTO $target t USING mdoor_src s " +
+              s"ON t.id = s.id $clauses")
+            ()
+          },
+          twin = root => {
+            ManifestTable.mergeInto(spark, root, Seq("id"), source,
+              Seq(F.col("id")), matched, notMatched)
+            ()
+          })
+    })
+  }
+
+  test("INSERT door parity: INSERT INTO, INSERT OVERWRITE and a batch-id INSERT replay through temp view, persistent entry and graft.default equal their Scala twins") {
+    import spark.implicits._
+    val conf = graft.sources.ManifestSql.BatchIdConf
+    val rows = (200L until 210L).toDF("id")
+      .withColumn("v", F.lit("i")).withColumn("n", F.lit(-2L))
+    rows.createOrReplaceTempView("idoor_src")
+    rows.withColumn("v", F.lit("MUST_NOT_APPLY"))
+      .createOrReplaceTempView("idoor_poison")
+    def sql(text: String): Unit = { spark.sql(text); () }
+    doorParity(Seq(
+      DoorInput("INSERT INTO",
+        run = t => sql(s"INSERT INTO $t SELECT * FROM idoor_src"),
+        twin = root => { ManifestTable.append(spark, root, rows); () }),
+      DoorInput("INSERT OVERWRITE",
+        run = t => sql(s"INSERT OVERWRITE $t SELECT * FROM idoor_src"),
+        twin = root => { ManifestTable.overwrite(spark, root, rows); () }),
+      // the first batch-41 INSERT commits in `prepare`; the replay
+      // under the same id (poisoned rows) must publish nothing
+      DoorInput("batch-id INSERT replay",
+        prepare = t => {
+          spark.conf.set(conf, "41")
+          sql(s"INSERT INTO $t SELECT * FROM idoor_src")
+        },
+        run = t => {
+          spark.conf.set(conf, "41")
+          sql(s"INSERT INTO $t SELECT * FROM idoor_poison")
+          assert(spark.conf.getOption(conf).isEmpty)
+        },
+        twin = root => {
+          ManifestTable.appendBatch(spark, root, 41L, rows); ()
+        },
+        commits = 0)))
+  }
+
+  test("a batch id never outlives a whole-table write: REPLACE WHERE, v2 CTAS, TRUNCATE, V1 CTAS and df.write overwrite refuse it, consume it and publish nothing") {
+    import spark.implicits._
+    val conf = graft.sources.ManifestSql.BatchIdConf
+    val (dir, root) = freshTable("graft_bidleak", n = 20L)
+    graft.api.Graft(spark, sf)
+      .registerManifest("bidleak", root, persistent = true)
+    graft.catalog.GraftCatalog.install(spark)
+    (0L until 5L).toDF("id").withColumn("v", F.lit("s"))
+      .withColumn("n", F.lit(0L)).createOrReplaceTempView("bidleak_src")
+    def sql(text: String): Unit = { spark.sql(text); () }
+    // (shape, the root it writes, the statement)
+    val shapes = Seq[(String, String, () => Unit)](
+      ("v2 INSERT INTO … REPLACE WHERE", root, () =>
+        sql("INSERT INTO graft.default.bidleak REPLACE WHERE id < 5 " +
+          "SELECT * FROM bidleak_src")),
+      ("v2 CTAS", s"$dir/v2ctas", () =>
+        sql("CREATE TABLE graft.default.bidleak_v2ctas " +
+          s"LOCATION '$dir/v2ctas' AS SELECT * FROM bidleak_src")),
+      ("V1 TRUNCATE TABLE", root, () => sql("TRUNCATE TABLE bidleak")),
+      ("V1 CTAS", s"$dir/v1ctas", () =>
+        sql("CREATE TABLE bidleak_v1ctas USING `graft-manifest` " +
+          s"OPTIONS (path '$dir/v1ctas') AS SELECT * FROM bidleak_src")),
+      ("df.write overwrite", root, () =>
+        spark.table("bidleak_src").write.format("graft-manifest")
+          .mode("overwrite").option("path", root).save()))
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).toSeq
     try {
-      for (((clauses, source, matched, notMatched), i) <- shapes.zipWithIndex) {
-        source.createOrReplaceTempView("mdoor_src")
-        val (_, twin) = freshTable("graft_mdoor_twin")
-        ManifestTable.mergeInto(spark, twin, Seq("id"), source,
-          Seq(F.col("id")), matched, notMatched)
-        val want = rowsOf(twin)
-        for ((door, register) <- doors) {
-          val (_, root) = freshTable("graft_mdoor")
-          val target = register(root)
-          val v0 = ManifestTable.latest(root).get.version
-          spark.sql(s"MERGE INTO $target t USING mdoor_src s " +
-            s"ON t.id = s.id $clauses")
-          assert(ManifestTable.latest(root).get.version == v0 + 1,
-            s"shape $i through the $door must commit exactly once")
-          assert(rowsOf(root) == want,
-            s"shape $i through the $door differs from the Scala twin")
-          assert(spark.sql(s"SELECT count(*) FROM $target").as[Long].head()
-            == want.size.toLong, s"the $door must read its own write")
-        }
+      for (((shape, target, write), i) <- shapes.zipWithIndex) {
+        val before = ManifestTable.latest(target).map(_.version)
+        spark.conf.set(conf, (70 + i).toString)
+        val e = intercept[Exception](write())
+        assert(messages(e).exists(_.contains(
+          "INSERT OVERWRITE is not a replayable micro-batch shape")),
+          s"$shape must refuse the batch id: ${messages(e)}")
+        assert(spark.conf.getOption(conf).isEmpty,
+          s"$shape must consume the batch id")
+        assert(ManifestTable.latest(target).map(_.version) == before,
+          s"$shape must publish nothing")
+        // the next plain INSERT INTO commits, unledgered
+        val v = ManifestTable.latest(root).get.version
+        sql(s"INSERT INTO bidleak VALUES (${1000 + i}, 'plain', 0)")
+        val head = ManifestTable.latest(root).get
+        assert(head.version == v + 1,
+          s"the INSERT after $shape must commit")
+        assert(!head.meta.exists(_.startsWith("#batch:")),
+          s"the INSERT after $shape committed under a leaked batch id")
       }
     } finally {
-      spark.sql("DROP TABLE IF EXISTS mdoor_cat")
-      spark.sql("DROP TABLE IF EXISTS mdoor_v2")
+      spark.sql("DROP TABLE IF EXISTS bidleak")
+      spark.sql("DROP TABLE IF EXISTS bidleak_v1ctas")
+      scala.util.Try(spark.sql("DROP TABLE IF EXISTS graft.default.bidleak_v2ctas"))
     }
   }
 

@@ -1501,6 +1501,31 @@ class ManifestTableSpec extends SparkSpec {
       "compaction folding a DV must not surface as row changes")
   }
 
+  test("foldDeletes sizes a legacy file (no recorded bytes stat) from the filesystem, as compact does") {
+    val root = java.nio.file.Files.createTempDirectory("graft_foldlegacy").toString
+    ManifestTable.init(root, Seq("id"))
+    ManifestTable.append(spark, root, batch(0, 200).coalesce(1))
+    ManifestTable.deleteWhereMoR(spark, root, F.col("id") % 10 === 0)
+    // rewrite the head manifest into the legacy shape: filestat lines
+    // without the bytes field (and no checksum sidecar to disagree)
+    val head = ManifestTable.latest(root).get
+    val mf = new java.io.File(root, s"manifest/v${head.version}")
+    val legacy = new String(java.nio.file.Files.readAllBytes(mf.toPath),
+      java.nio.charset.StandardCharsets.UTF_8).replaceAll(";bytes:[0-9]+", "")
+    new java.io.File(root, s"manifest/.v${head.version}.crc").delete()
+    java.nio.file.Files.write(mf.toPath,
+      legacy.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val file = ManifestTable.latest(root).get.files.head
+    assert(ManifestTable.recordedBytesOf(ManifestTable.latest(root).get,
+      file).isEmpty, "the fixture must carry no recorded bytes")
+    // ~3 target-sized outputs from the on-disk length (counting the
+    // legacy file as 0 bytes would rewrite it into one)
+    val len = new java.io.File(root, file).length
+    val folded = ManifestTable.foldDeletes(spark, root, len / 3 + 1)
+    assert(folded.files.size == 3, s"got ${folded.files}")
+    assert(ids(root) == (0L until 200L).filterNot(_ % 10 == 0).toSet)
+  }
+
   test("MoR delete racing a MoR delete restarts and applies both; copy-on-write folds the DV it touches") {
     val root = java.nio.file.Files.createTempDirectory("graft_mor5").toString
     ManifestTable.init(root, Seq("id"))

@@ -415,8 +415,20 @@ class MetastoreSpec extends SparkSpec {
       spark.sql("INSERT INTO pmt_corpus VALUES (7, 'post')")
       assert(spark.sql("SELECT count(*) FROM pmt_corpus")
         .as[Long].head() == 1L)
+      // a rename-chained store truncates too: its catalog schema holds
+      // the renamed-away name, which the empty overwrite must not
+      // re-introduce
+      spark.sql("ALTER TABLE pmt_corpus RENAME COLUMN payload TO body")
+      val v2 = ManifestTable.latest(root).get.version
+      spark.sql("TRUNCATE TABLE pmt_corpus_store")
+      assert(ManifestTable.latest(root).get.version == v2 + 1)
+      assert(spark.sql("SELECT count(*) FROM pmt_corpus")
+        .as[Long].head() == 0L)
+      assert(spark.table("pmt_corpus").columns.toSeq == Seq("id", "body"))
     } finally {
+      scala.util.Try(spark.sql("DROP VIEW IF EXISTS pmt_corpus"))
       scala.util.Try(spark.sql("DROP TABLE IF EXISTS pmt_corpus"))
+      scala.util.Try(spark.sql("DROP TABLE IF EXISTS pmt_corpus_store"))
     }
   }
 
