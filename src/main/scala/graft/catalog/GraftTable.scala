@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write,
 import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.ManifestTable
 import graft.sources.ManifestSql
 
 /** The DSv2 [[Table]] behind [[GraftCatalog]] — deliberately THIN:
@@ -164,8 +165,14 @@ final case class GraftTable(spark: SparkSession, fullName: String,
             override def insert(data: DataFrame, ignored: Boolean): Unit = {
               requireHead("INSERT into")
               val session = data.sparkSession
+              // positional alignment to the head's LOGICAL names — the
+              // recorded schema; no relation is built for the write
+              val head = ManifestTable.latest(root)
+                .getOrElse(throw new IllegalStateException(
+                  s"no manifest at $root"))
               ManifestSql.sqlWrite(session, root, data, shape,
-                ManifestSql.relation(session, root, None).columns.toSeq)
+                ManifestTable.recordedSchemaOf(session,
+                  root, head).fieldNames.toSeq)
               refreshV1Name(session)
             }
           }

@@ -1411,6 +1411,11 @@ object ManifestTable {
     *  - rows of removed files EXCEPT ALL rows of added files = the
     *    DELETES; added EXCEPT ALL removed = the INSERTS (multiset
     *    semantics, so duplicate rows account correctly);
+    *  - COST: one scan per side and ONE aggregate — both EXCEPT ALLs
+    *    computed at once by their own rewrite's algebra (each side's
+    *    rows weighted ±1, grouped by every column, each non-zero
+    *    group replicated |sum| times), so NULLs and float
+    *    normalization behave exactly as in EXCEPT ALL;
     *  - an UPDATE surfaces as its delete+insert pair, and the
     *    UNCHANGED rows of a rewritten file cancel out — a pure
     *    COMPACTION between the versions reports ZERO changes (layout
@@ -1430,6 +1435,27 @@ object ManifestTable {
     * mid-job read failure. */
   def changes(spark: SparkSession, root: String, fromVersion: Int,
               toVersion: Int): DataFrame = {
+    val (rem, add) = changeSides(spark, root, fromVersion, toVersion)
+    // RewriteExceptAll's algebra for both directions at once: a group
+    // with sum n > 0 is n deletes, n < 0 is |n| inserts
+    val cols = rem.columns.toSeq.map(F.col)
+    val n = F.col("__cdf_n")
+    rem.withColumn("__cdf_w", F.lit(1L))
+      .unionByName(add.withColumn("__cdf_w", F.lit(-1L)))
+      .groupBy(cols: _*).agg(F.sum("__cdf_w").as("__cdf_n"))
+      .filter(n =!= 0L)
+      .withColumn("__cdf_rep", F.explode(F.sequence(F.lit(1L), F.abs(n))))
+      .select(cols :+ F.when(n > 0L, F.lit("delete")).otherwise(F.lit("insert"))
+        .as("_change_type"): _*)
+  }
+
+  /** The two row sets [[changes]] diffs: every row of the files
+    * removed between the versions (read under `fromVersion`'s
+    * deletion vectors) and every row of the files added (under
+    * `toVersion`'s), both in the TO version's logical shape. */
+  private[graft] def changeSides(spark: SparkSession, root: String,
+                                 fromVersion: Int, toVersion: Int)
+      : (DataFrame, DataFrame) = {
     require(fromVersion <= toVersion,
       s"fromVersion $fromVersion must be <= toVersion $toVersion")
     def snap(v: Int): Snapshot = snapshot(root, v).getOrElse(
@@ -1440,8 +1466,8 @@ object ManifestTable {
     val toSet = to.files.toSet
     val fromSet = from.files.toSet
     // a file carried between the versions whose DELETION-VECTOR state
-    // moved participates as removed@from + added@to: the except-all
-    // math then yields exactly the newly-DV'd rows as deletes (and a
+    // moved participates as removed@from + added@to: the multiset
+    // diff then yields exactly the newly-DV'd rows as deletes (and a
     // DV-restoring rewrite's rows as inserts) — a DV-only commit
     // changes no file list, but it IS a row-level change
     val dvChanged = from.files.filter(toSet).filter(f =>
@@ -1463,8 +1489,8 @@ object ManifestTable {
           "vacuum/reader-retention contract, like readVersion")
     }
     // pre-ledger manifests (no recorded schema): derive ONE merged
-    // schema over BOTH changed-file sets, so the two except-all sides
-    // align by name — two independent mergeSchema scans could differ
+    // schema over BOTH changed-file sets, so the two sides align by
+    // name — two independent mergeSchema scans could differ
     // in columns (a rewrite that added a column) and either throw or
     // misalign positionally
     val changedAll = removed ++ added
@@ -1490,10 +1516,7 @@ object ManifestTable {
         case None => throw new IllegalStateException(
           s"empty schema-less table at $root has no change feed")
       }
-    val del = rowsOf(removed, from).exceptAll(rowsOf(added, to))
-    val ins = rowsOf(added, to).exceptAll(rowsOf(removed, from))
-    del.withColumn("_change_type", F.lit("delete"))
-      .unionByName(ins.withColumn("_change_type", F.lit("insert")))
+    (rowsOf(removed, from), rowsOf(added, to))
   }
 
   /** Drop manifest files older than the newest `keepLast` versions —
@@ -1560,6 +1583,33 @@ object ManifestTable {
                             (fsLen: String => Long): Long =
     files.map(f => recordedBytesOf(snap, f).getOrElse(fsLen(f))).sum
 
+  /** How many ~`target`-byte files `bytes` of output make (≥ 1). */
+  private def fileCount(bytes: Long, target: Long): Int =
+    math.max(1L, (bytes + target - 1) / target).toInt
+
+  /** A row-level rewrite's output, narrowed (no shuffle) to the file
+    * count its input bytes call for at the session's advisory
+    * partition size — the size AQE coalesces a shuffled rewrite to.
+    * A rewrite whose join broadcasts a key set keeps the scan's
+    * partitioning, one file per scan split, without this.
+    * `extraBytes` prices rows that are not in `files` (a merge's
+    * inserts). */
+  private def sizedRewrite(spark: SparkSession, root: String, base: Snapshot,
+                           files: Seq[String], out: DataFrame,
+                           extraBytes: Long = 0L): DataFrame = {
+    lazy val fs = fsOf(new HPath(root))
+    val bytes = bytesOf(base, files)(f =>
+      fs.getFileStatus(new HPath(root, f)).getLen) + extraBytes
+    out.coalesce(fileCount(bytes, org.apache.spark.sql.internal.SQLConf.get
+      .getConf(org.apache.spark.sql.internal.SQLConf
+        .ADVISORY_PARTITION_SIZE_IN_BYTES)))
+  }
+
+  /** A pinned frame's size estimate — its row-count statistics times
+    * the schema's per-row width ([[Pin]]). */
+  private def pinnedBytes(pinned: DataFrame): Long =
+    pinned.queryExecution.analyzed.stats.sizeInBytes.min(Long.MaxValue).toLong
+
   /** The one LAYOUT REWRITE behind [[compact]] and [[foldDeletes]]:
     * the files `select` picks from the head (none = no scan, no
     * commit) are read through the deletion-vector overlay — deleted
@@ -1582,10 +1632,8 @@ object ManifestTable {
       if (picked.isEmpty) Left(base)
       else {
         lazy val fs = fsOf(new HPath(root))
-        val bytes = bytesOf(base, picked)(f =>
-          fs.getFileStatus(new HPath(root, f)).getLen)
-        val n = math.max(1L,
-          (bytes + targetFileBytes - 1) / targetFileBytes).toInt
+        val n = fileCount(bytesOf(base, picked)(f =>
+          fs.getFileStatus(new HPath(root, f)).getLen), targetFileBytes)
         val read = readSnapshot(spark, root, base.copy(files = picked))
         val arranged = if (clusterBy.isEmpty) read.repartition(n)
         else {
@@ -1668,7 +1716,7 @@ object ManifestTable {
     * ~(matching + fpp·files) files instead of every range-straddling
     * file. The cap bounds the driver's per-file probe cost and stays
     * inside [[ManifestStats.MaxInProbe]]. */
-  private val IdInPruneMax = 1024L
+  private val IdInPruneMax = 1024
 
   /** The victim/merge-scan prune for an id frame: an exact IN-list
     * when the DISTINCT id set is small enough to probe (bloom-able),
@@ -1682,7 +1730,7 @@ object ManifestTable {
     // row past the cap — short when the set is small, an early-exit
     // scan when it is not (the frame is localCheckpoint-pinned by
     // every caller, so this never recomputes upstream lineage)
-    val probe = distinctIds.take(IdInPruneMax.toInt + 1)
+    val probe = distinctIds.take(IdInPruneMax + 1)
     if (probe.isEmpty) return None
     if (probe.length <= IdInPruneMax) {
       val vals = probe.toSeq.map(_.get(0))
@@ -1752,8 +1800,8 @@ object ManifestTable {
                                   negated: Boolean = false)
 
   /** The victim set of one row-level write, from [[victimsOf]].
-    * `mark` left-outer joins every term's `__in_hit_<i>` marker onto
-    * a frame; `hit` is the victim filter — the BARE predicate AND the
+    * `mark` adds every term's `__in_hit_<i>` marker to a frame (and,
+    * for a joined term, its `__in_id_<i>`; `markers` lists them); `hit` is the victim filter — the BARE predicate AND the
     * markers, so the predicate pushes to the parquet scan (a Filter
     * drops NULL already); `fire` is its two-valued form (NULL
     * predicate → false) for the keep side and UPDATE's `when`;
@@ -1771,9 +1819,12 @@ object ManifestTable {
 
   /** THE victim builder behind every row-level delete and update: rows
     * where `predicate` holds (None = every row) AND every term holds.
-    * Each term's values pin once (deduplicated, nulls dropped — a
-    * NULL never equality-matches) and become a `__in_hit_<i>`
-    * marker. Null `col` values on a positive term keep their rows
+    * Each term's values pin once ([[Pin.keySet]]) and become a
+    * `__in_hit_<i>` marker over their distinct non-null values (a
+    * NULL never equality-matches): a driver-sized set marks through
+    * an IN filter (no join) that is also its IN-list prune, both from
+    * that same job; a larger one deduplicates and pins Spark-side,
+    * marks through a left-outer join and prunes by [[idPrune]]. Null `col` values on a positive term keep their rows
     * (IN: NULL is not TRUE); on a negated term they fire (anti
     * semantics). */
   private def victimsOf(spark: SparkSession, predicate: Option[Column],
@@ -1782,23 +1833,33 @@ object ManifestTable {
       require(t.values.columns.length == 1,
         s"values frame must have exactly one column, " +
           s"got ${t.values.columns.mkString(",")}")
-      val v = t.values.toDF(s"__in_id_$i").na.drop().distinct()
-        .withColumn(s"__in_hit_$i", F.lit(true))
-        .localCheckpoint(eager = true)
-      (t, v, s"__in_id_$i", s"__in_hit_$i")
-    }
-    val prune = (predicate.toSeq ++
-      prepared.filterNot(_._1.negated).flatMap { case (t, v, idc, _) =>
-        idPrune(spark, t.col, v.select(idc), idc)
-      }).reduceOption(_ && _)
-    val mark = (df: DataFrame) =>
-      prepared.foldLeft(df) { case (acc, (t, v, idc, _)) =>
-        acc.join(v, acc(t.col) === v(idc), "left_outer")
+      val (idc, hitc) = (s"__in_id_$i", s"__in_hit_$i")
+      // one pinning job; a driver-sized key set marks by an IN filter
+      // (no join, so nothing shuffles or broadcasts) that is also the
+      // IN-list prune
+      val ks = Pin.keySet(t.values.toDF(idc), Seq(idc), IdInPruneMax)
+      ks.member(t.col) match {
+        case Some(hit) =>
+          val m: DataFrame => DataFrame =
+            _.withColumn(hitc, F.when(hit, F.lit(true)))
+          (t, m, Seq(hitc), if (t.negated) None else ks.inList(0, t.col))
+        case None =>
+          val v = ks.frame.na.drop().distinct()
+            .withColumn(hitc, F.lit(true))
+            .localCheckpoint(eager = true)
+          val m: DataFrame => DataFrame =
+            df => df.join(v, df(t.col) === v(idc), "left_outer")
+          (t, m, Seq(idc, hitc),
+            if (t.negated) None else idPrune(spark, t.col, v.select(idc), idc))
       }
-    val held = prepared.map { case (t, _, _, hitc) =>
-      if (t.negated) F.col(hitc).isNull else F.col(hitc).isNotNull
     }
-    Victims(mark, prepared.flatMap(p => Seq(p._3, p._4)),
+    val prune = (predicate.toSeq ++ prepared.flatMap(_._4)).reduceOption(_ && _)
+    val mark = (df: DataFrame) =>
+      prepared.foldLeft(df) { case (acc, (_, m, _, _)) => m(acc) }
+    val held = prepared.map { case (t, _, markers, _) =>
+      if (t.negated) F.col(markers.last).isNull else F.col(markers.last).isNotNull
+    }
+    Victims(mark, prepared.flatMap(_._3),
       hit = (predicate.toSeq ++ held).reduce(_ && _),
       fire = (predicate.map(F.coalesce(_, F.lit(false))).toSeq ++ held)
         .reduce(_ && _),
@@ -2043,16 +2104,24 @@ object ManifestTable {
     * reading of MERGE racing INSERT (last committer is not
     * arbitrated, exactly like two racing plain appends).
     *
-    * MATCH-SCAN OPERATING ENVELOPE: a batch of ≤ [[IdInPruneMax]]
-    * distinct ids prunes per KEY (IN-list over bounds + per-file
-    * Blooms — declare the merge key a bloom column at [[init]] and a
-    * scattered CDC batch opens ~(matching + fpp·files) files); a
-    * larger batch prunes by its id RANGE only, so either cluster the
-    * table by the merge key ([[compact]] `clusterBy` — each file owns
-    * a tight band and the scan opens the intersecting few) or accept
-    * a candidate-wide scan. Pinned by the files-opened contract spec
-    * (ManifestTableSpec) and the bloom corruption proofs
-    * (ManifestStatsSpec). */
+    * MATCH-SCAN OPERATING ENVELOPE (the KEY-SET envelope): the
+    * updates pin in ONE job that also counts them and, for a batch of
+    * ≤ [[IdInPruneMax]] distinct ids of a driver-keyable type
+    * (integral, date/timestamp, binary-collated string —
+    * [[Pin.driverKeyable]]), brings the ids to the driver. Such a
+    * batch prunes per KEY (IN-list over bounds + per-file Blooms —
+    * declare the merge key a bloom column at [[init]] and a scattered
+    * CDC batch opens ~(matching + fpp·files) files), and its ids
+    * select the probe's and the rewrite's rows as an IN filter — no
+    * join, so the table-side scan never shuffles; the rewrite is
+    * sized from the affected files' bytes. A larger batch, or a
+    * floating/binary/collated id, dedups Spark-side and prunes by its
+    * id RANGE only, so either cluster the table by the merge key
+    * ([[compact]] `clusterBy` — each file owns a tight band and the
+    * scan opens the intersecting few) or accept a candidate-wide
+    * scan. Pinned by the files-opened contract spec (ManifestTableSpec),
+    * the bloom corruption proofs (ManifestStatsSpec) and the upsert
+    * plan-shape guard (PlanShapeSpec). */
   def upsert(spark: SparkSession, root: String, idCol: String,
              updates: DataFrame,
              beforeCommit: () => Unit = () => ()): Merge =
@@ -2101,18 +2170,35 @@ object ManifestTable {
                          beforeCommit: () => Unit,
                          batchId: Option[Long],
                          head: Option[Snapshot] = None): Merge = {
-    // fused pins (Pin.count): each pin's materializing job carries
-    // its count — two actions per upsert instead of four
-    val (u, nU) = Pin.count(updates)
-    val (uIds, nIds) =
-      Pin.count(u.select(F.col(idCol).as("__merge_id")).distinct())
-    require(nIds == nU,
-      s"upsert updates must carry distinct '$idCol' values")
-    // the update-id set prunes the match scan: an exact IN-list for
-    // driver-sized batches (bloom-answerable — scattered CDC ids
-    // still skip files), the id RANGE beyond that (cluster by the
-    // merge key to keep it tight — see the class doc's contract)
-    val prune = idPrune(spark, idCol, uIds, "__merge_id")
+    // ONE pinning job (Pin.keySet) counts the updates and, for a
+    // driver-sized batch, brings its distinct ids home: they are the
+    // distinctness check, the match scan's exact IN-list prune
+    // (bloom-answerable — scattered CDC ids still skip files) and the
+    // IN filter the probe and the rewrite select rows by. A larger
+    // batch (or a non-driver-keyable id type) dedups Spark-side and
+    // prunes by the id RANGE (cluster by the merge key to keep it
+    // tight — see the class doc's contract)
+    val ks = Pin.keySet(updates, Seq(idCol), IdInPruneMax)
+    val (u, nU) = (ks.frame, ks.rows)
+    val distinctMsg = s"upsert updates must carry distinct '$idCol' values"
+    // (rows of a frame whose id an update carries, the rest, the prune)
+    val (updated, kept, prune) = ks.member(idCol) match {
+      case Some(hit) =>
+        // a NULL id is one more distinct value, as in a Spark distinct
+        require(ks.keys.get.size == ks.keyedRows && nU - ks.keyedRows <= 1L,
+          distinctMsg)
+        ((df: DataFrame) => df.filter(hit), (df: DataFrame) => df.filter(!hit),
+          ks.inList(0, idCol))
+      case None =>
+        val (ids, nIds) =
+          Pin.count(u.select(F.col(idCol).as("__merge_id")).distinct())
+        require(nIds == nU, distinctMsg)
+        ((df: DataFrame) => df.join(ids, df(idCol) === ids("__merge_id"),
+          "left_semi"),
+          (df: DataFrame) => df.join(ids, df(idCol) === ids("__merge_id"),
+            "left_anti"),
+          idPrune(spark, idCol, ids, "__merge_id"))
+    }
     // the updates write ONCE, on the first attempt; a restart reuses
     // their files and re-derives only the rewritten survivors
     var upd: Option[(Seq[String], Map[String, String])] = None
@@ -2141,8 +2227,7 @@ object ManifestTable {
         val scan = readSnapshotImpl(spark, root,
           base.copy(files = scanFiles), fileCol = Some("__file"),
           posCol = None)
-        scan
-          .join(uIds, scan(idCol) === uIds("__merge_id"), "left_semi")
+        updated(scan)
           .select(F.col("__file"), F.col(idCol).as("__id"))
           .groupBy("__id")
           .agg(F.sort_array(F.collect_set("__file")).as("fs"))
@@ -2169,8 +2254,8 @@ object ManifestTable {
         else {
           val affectedScan =
             readSnapshot(spark, root, base.copy(files = affected))
-          w.data(spark, affectedScan.join(uIds,
-            affectedScan(idCol) === uIds("__merge_id"), "left_anti"), base)
+          w.data(spark, sizedRewrite(spark, root, base, affected,
+            kept(affectedScan)), base)
         }
       val affectedSet = affected.toSet
       Right(Plan(cur => Some(cur.copy(
@@ -2246,10 +2331,15 @@ object ManifestTable {
     * hold several rows for one key (appends are unconstrained);
     * every one of them matches and the fired clause applies to each.
     *
-    * VICTIM PRUNING: matched-clause victims prune per KEY exactly
-    * like [[upsert]] — each key COMPONENT prunes independently
-    * (IN-list + Blooms for driver-sized batches, component range
-    * beyond — same operating envelope) and the conjunction of the
+    * VICTIM PRUNING: the source pins in ONE job that also yields its
+    * key-set envelope ([[Pin.keySet]] — [[upsert]]'s, over key
+    * TUPLES): for ≤ [[IdInPruneMax]] distinct driver-keyable tuples
+    * the duplicate-key check, the IN-list prunes and the broadcast key
+    * frame of the not-matched-by-source anti-join all come from that
+    * job; beyond it they run as Spark queries. Matched-clause victims
+    * prune per KEY exactly like [[upsert]] — each key COMPONENT
+    * prunes independently (IN-list + Blooms for driver-sized
+    * batches, component range beyond) and the conjunction of the
     * component predicates gates the file; `NOT MATCHED BY
     * SOURCE` victims prune by the OR of their clause conditions
     * through the same bounds/Bloom stats (an unconditional clause
@@ -2292,16 +2382,22 @@ object ManifestTable {
     val head = present(root, latest(root).getOrElse(Empty))
     if (batchId.exists(batchCommitted(head, _))) return Merge(head, 0L, 0L)
     val keyCols = idCols.indices.map(mergeKeyCol)
-    // the source pins once: keys first, columns under the __s_
-    // prefix, plus the match marker the left-outer join nulls out
-    val src = source.select(
+    // the source pins once — keys first, columns under the __s_
+    // prefix, plus the match marker the left-outer join nulls out —
+    // in ONE job (Pin.keySet) that also yields, for a driver-sized
+    // source, the distinct key tuples with their counts: the duplicate
+    // check, the IN-list prunes and a local key frame for the
+    // anti-join, with no further query over the source. The pin
+    // carries its row count, so a small source broadcasts into the
+    // probe and rewrite joins
+    val ks = Pin.keySet(source.select(
       (sourceKeys.zip(keyCols).map { case (e, k) => e.as(k) } ++
         srcNames.map(c => F.col(c).as(SourcePrefix + c))) :+
-        F.lit(true).as(MergePresentCol): _*)
-      .localCheckpoint(eager = true)
+        F.lit(true).as(MergePresentCol): _*), keyCols, IdInPruneMax)
+    val src = ks.frame
     val allNonNull = keyCols.map(k => F.col(k).isNotNull).reduce(_ && _)
-    val srcKeys = src.select(keyCols.map(F.col): _*).filter(allNonNull)
-    val nSrcKeys = srcKeys.count()
+    val srcKeys = ks.keysFrame(keyCols).getOrElse(
+      src.select(keyCols.map(F.col): _*).filter(allNonNull))
     // ANSI cardinality: a duplicate source key tuple is a violation
     // only when it would fire a MATCHED clause on one target row
     // twice — duplicate UNMATCHED rows each insert (per SQL MERGE),
@@ -2309,17 +2405,22 @@ object ManifestTable {
     // So: no blanket up-front refusal; with matched clauses present,
     // the duplicated keys probe the (pruned) target inside the scan
     // loop and refuse only on an actual multi-match.
-    val dupKeys =
-      if (srcKeys.distinct().count() == nSrcKeys) None
-      else Some(srcKeys.groupBy(keyCols.map(F.col): _*)
-        .agg(F.count(F.lit(1)).as("__dup_n"))
-        .filter(F.col("__dup_n") > 1)
-        .select(keyCols.map(F.col): _*)
-        .localCheckpoint(eager = true))
+    val dupKeys = ks.keys match {
+      case Some(m) =>
+        if (m.size == ks.keyedRows) None else ks.keysFrame(keyCols, 2L)
+      case None =>
+        if (srcKeys.distinct().count() == ks.keyedRows) None
+        else Some(srcKeys.groupBy(keyCols.map(F.col): _*)
+          .agg(F.count(F.lit(1)).as("__dup_n"))
+          .filter(F.col("__dup_n") > 1)
+          .select(keyCols.map(F.col): _*)
+          .localCheckpoint(eager = true))
+    }
     // each component prunes independently; the conjunction gates the
     // file (conservative superset of tuple-matching files)
     val keyPrune = idCols.indices.flatMap(i =>
-      idPrune(spark, idCols(i),
+      if (ks.keys.isDefined) ks.inList(i, idCols(i))
+      else idPrune(spark, idCols(i),
         srcKeys.select(keyCols(i)).distinct(), keyCols(i)))
       .reduceOption(_ && _)
     def keyJoinCond(left: DataFrame, right: DataFrame): Column =
@@ -2523,10 +2624,11 @@ object ManifestTable {
               s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
         }
       }
-      val insertsPinned = inserts.map(_.localCheckpoint(eager = true))
-      val insertedRows = insertsPinned.map(_.count()).getOrElse(0L)
-      val outFrames = rewritten.toSeq ++
-        insertsPinned.filter(_ => insertedRows > 0L)
+      val (insertsPinned, insertedRows) = inserts.map(Pin.count) match {
+        case Some((df, n)) if n > 0L => (Some(df), n)
+        case _ => (None, 0L)
+      }
+      val outFrames = rewritten.toSeq ++ insertsPinned
       if (outFrames.isEmpty) {
         // nothing fired: no-op — unless the ledger marker must land
         // (the core adds it to an otherwise unchanged head)
@@ -2536,7 +2638,9 @@ object ManifestTable {
         // the merge frame was read through base's DV overlay: the
         // affected files are the read set
         val out = outFrames.reduce(_ unionByName _)
-        val (newFiles, newStats) = w.data(spark, out, base)
+        val (newFiles, newStats) = w.data(spark, sizedRewrite(spark, root,
+          base, affected, out, insertsPinned.map(pinnedBytes).getOrElse(0L)),
+          base)
         val affectedSet = affected.toSet
         Right(Plan(cur => Some(cur.copy(
           files = cur.files.filterNot(affectedSet) ++ newFiles,
@@ -2778,8 +2882,9 @@ object ManifestTable {
         // projection, so rewritten files carry the CURRENT names
         val (newFiles, newStats) =
           if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
-          else w.data(spark, rewrite(readSnapshot(spark, root,
-            base.copy(files = affected))), base)
+          else w.data(spark, sizedRewrite(spark, root, base, affected,
+            rewrite(readSnapshot(spark, root, base.copy(files = affected)))),
+            base)
         val affectedSet = affected.toSet
         Right(Plan(cur => Some(cur.copy(
           files = cur.files.filterNot(affectedSet) ++ newFiles ++ addedFiles,

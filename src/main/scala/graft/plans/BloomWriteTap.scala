@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
   ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
   ShortType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -40,6 +41,15 @@ import org.apache.spark.util.{CollectionAccumulator, sketch}
   * the original aggregate job: the tap is only ever an optimization,
   * the read-back aggregate remains the reference implementation
   * (parity pinned in ManifestStatsSpec).
+  *
+  * LOCAL FRAMES: a frame built from driver rows (`createDataFrame`,
+  * `Seq(...).toDF`) optimizes to a `LocalRelation`, and the optimizer
+  * folds a projection over one into new driver-side rows — the tap
+  * would fire during planning and the write job would carry none.
+  * [[BloomWriteTap.install]] therefore taps such a frame through its
+  * own RDD (a plain leaf with the partitions its plan writes, so the
+  * same files), so a local append stays one job with every file bloomed;
+  * ManifestStatsSpec fails if it falls back to the aggregate.
   *
   * Filter semantics mirror [[graft.operators.ManifestStats]]'s
   * KeyBloomAgg exactly: integral keys put as longs, strings as their
@@ -123,17 +133,25 @@ object BloomWriteTap {
     val eligible = bloomCols.filter(df.columns.contains)
       .filter(c => supported(df.schema(c).dataType))
     if (eligible.isEmpty) return None
+    // LOCAL FRAMES (class doc): any plan over local rows only is tapped
+    // through its own RDD — read off the analyzed plan, which is at
+    // hand; optimizing here would cost every write a second pass
+    val src =
+      if (!df.queryExecution.analyzed.collectLeaves()
+            .forall(_.isInstanceOf[LocalRelation])) df
+      else graftbridge.fromInternalRdd(spark, df.queryExecution.toRdd,
+        df.schema)
     val acc = spark.sparkContext
       .collectionAccumulator[(Int, String, Array[Byte], Long)](
         "graft.bloomWriteTap")
-    val cols = df.columns.toSeq.map { c =>
+    val cols = src.columns.toSeq.map { c =>
       if (eligible.contains(c))
         graftbridge.toColumn(BloomTapValue(
-          graftbridge.toExpression(df(c)),
+          graftbridge.toExpression(src(c)),
           new BloomTapSink(c, capacity, acc))).as(c)
-      else df(c)
+      else src(c)
     }
-    Some(new BloomWriteTap(df.select(cols: _*), eligible, acc))
+    Some(new BloomWriteTap(src.select(cols: _*), eligible, acc))
   }
 }
 

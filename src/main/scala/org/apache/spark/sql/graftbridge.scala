@@ -67,4 +67,26 @@ object graftbridge {
     cs.internalCreateDataFrame(
       df.queryExecution.toRdd, df.schema, isStreaming = false)
   }
+
+  /** [[fromInternalRdd]] for a materialized RDD of known size: the
+    * leaf reports `rows` as its exact row count (and a size from the
+    * schema's per-row width), so the planner can broadcast it. */
+  def pinnedFrame(spark: SparkSession,
+                  rdd: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                  schema: types.StructType, rows: Long): DataFrame = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val attrs = catalyst.types.DataTypeUtils.toAttributes(schema)
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(attrs) * rows,
+      rowCount = Some(BigInt(rows)))
+    classic.Dataset.ofRows(cs,
+      execution.LogicalRDD(attrs, rdd)(cs, Some(stats)))
+  }
+
+  /** Driver-held InternalRows as a LocalRelation frame. */
+  def localFrame(spark: SparkSession, schema: types.StructType,
+                 rows: Seq[catalyst.InternalRow]): DataFrame =
+    ofRows(spark, catalyst.plans.logical.LocalRelation(
+      catalyst.types.DataTypeUtils.toAttributes(schema), rows))
 }

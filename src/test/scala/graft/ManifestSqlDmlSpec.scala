@@ -282,6 +282,29 @@ class ManifestSqlDmlSpec extends SparkSpec {
           ManifestTable.appendBatch(spark, root, 41L, rows); ()
         },
         commits = 0)))
+    // rename-chained: `graft.default.<name>_store` takes the INSERT and
+    // aligns it by position to the LOGICAL (renamed) columns
+    def rowsOf(root: String) =
+      ManifestTable.read(spark, root).orderBy("id").collect().toSeq
+    val (_, chained) = freshTable("graft_idoor_chain")
+    val (_, chainTwin) = freshTable("graft_idoor_chain_twin")
+    Seq(chained, chainTwin).foreach(
+      ManifestTable.renameColumn(spark, _, "v", "w"))
+    ManifestTable.append(spark, chainTwin, rows.toDF("id", "w", "n"))
+    graft.api.Graft(spark, sf)
+      .registerManifest("idoor_chain", chained, persistent = true)
+    try {
+      val v0 = ManifestTable.latest(chained).get.version
+      sql("INSERT INTO graft.default.idoor_chain_store SELECT * FROM idoor_src")
+      assert(ManifestTable.latest(chained).get.version == v0 + 1)
+      assert(ManifestTable.read(spark, chained).columns.toSeq ==
+        Seq("id", "w", "n"))
+      assert(rowsOf(chained) == rowsOf(chainTwin),
+        "a rename-chained v2 INSERT must align to the logical names")
+    } finally {
+      spark.sql("DROP VIEW IF EXISTS idoor_chain")
+      spark.sql("DROP TABLE IF EXISTS idoor_chain_store")
+    }
   }
 
   test("a batch id never outlives a whole-table write: REPLACE WHERE, v2 CTAS, TRUNCATE, V1 CTAS and df.write overwrite refuse it, consume it and publish nothing") {

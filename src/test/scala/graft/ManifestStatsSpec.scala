@@ -488,6 +488,37 @@ class ManifestStatsSpec extends SparkSpec {
       F.col("id") === 7L).size <= 2)
   }
 
+  test("a LOCAL frame's bloom filters build inside its one write job too (append and appendBatch of an uncoalesced toDF)") {
+    // Seq(...).toDF optimizes to a LocalRelation, which folds a
+    // projection into driver-side rows: the tap must still run in the
+    // write tasks, never fall back to the read-back aggregate
+    val root = java.nio.file.Files.createTempDirectory("graft_taplocal").toString
+    ManifestTable.init(root, Seq("id"), Seq("id", "payload"))
+    def local(lo: Long, hi: Long) =
+      (lo until hi).map(i => (i, s"row$i")).toDF("id", "payload")
+    for ((what, lo, write) <- Seq[(String, Long, () => Unit)](
+      ("append", 0L, () => { ManifestTable.append(spark, root, local(0L, 300L)); () }),
+      ("appendBatch", 300L, () => {
+        ManifestTable.appendBatch(spark, root, 7L, local(300L, 600L)); ()
+      }))) {
+      val before = ManifestTable.latest(root).get.files.toSet
+      val (_, jobs) = jobsDuring(write())
+      assert(jobs.size == 1,
+        s"bloom-table $what of a local frame launched ${jobs.size} jobs; " +
+          "the filter must build inside the single write job: " +
+          jobs.mkString(" // "))
+      val snap = ManifestTable.latest(root).get
+      val added = snap.files.filterNot(before)
+      assert(added.nonEmpty && added.forall(f =>
+        ManifestStats.decode(snap.stats(f)).bloomRef.isDefined),
+        s"$what: every new file must carry a bloom")
+      assert(ManifestTable.candidateFiles(spark, root, snap.copy(files = added),
+        F.col("id") === 5000L).isEmpty, s"$what: absent key must bloom-prune")
+      assert(ManifestTable.candidateFiles(spark, root, snap.copy(files = added),
+        F.col("payload") === s"row$lo").nonEmpty, s"$what: present key must stay")
+    }
+  }
+
   test("bloom lifecycle: overfull files drop the filter; renames resolve; vacuum spares live sidecars and sweeps orphans") {
     val root = java.nio.file.Files.createTempDirectory("graft_bloom2").toString
     ManifestTable.init(root, Seq.empty, Seq("id"))

@@ -1863,4 +1863,163 @@ class ManifestTableSpec extends SparkSpec {
       assert(rowsOf(root).size == 92, s"vacuum after ${w.name} broke the table")
     }
   }
+
+  test("change feed parity: the one-aggregate feed equals the EXCEPT ALL formula on duplicates, NULLs, DVs, compaction, renames and pre-ledger tables") {
+    import org.apache.spark.sql.DataFrame
+    // the feed's multiset, as row strings with multiplicities
+    def bag(df: DataFrame): Map[String, Int] =
+      df.collect().toSeq.map(_.toString).groupBy(identity)
+        .map { case (k, v) => k -> v.size }
+    // the reference formula: removed EXCEPT ALL added = deletes,
+    // added EXCEPT ALL removed = inserts
+    def oracle(root: String, a: Int, b: Int): DataFrame = {
+      val (rem, add) = ManifestTable.changeSides(spark, root, a, b)
+      rem.exceptAll(add).withColumn("_change_type", F.lit("delete"))
+        .unionByName(add.exceptAll(rem)
+          .withColumn("_change_type", F.lit("insert")))
+    }
+    def parity(root: String, a: Int, b: Int, what: String): Int = {
+      val got = bag(ManifestTable.changes(spark, root, a, b))
+      assert(got == bag(oracle(root, a, b)), s"$what: feed differs from EXCEPT ALL")
+      got.values.sum
+    }
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("payload", StringType),
+      StructField("d", org.apache.spark.sql.types.DoubleType)))
+    def rows(rs: (Long, String, java.lang.Double)*) =
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rs.map { case (i, p, d) =>
+          org.apache.spark.sql.Row(i, p, d) }, 2), schema)
+    val root = java.nio.file.Files.createTempDirectory("graft_cdfpar").toString
+    ManifestTable.init(root)
+    // duplicate identical rows, NULL payloads, −0.0 / NaN doubles
+    val v1 = ManifestTable.append(spark, root, rows(
+      (1L, "a", 1.0), (1L, "a", 1.0), (1L, "a", 1.0), (2L, null, -0.0),
+      (2L, null, -0.0), (3L, "c", Double.NaN), (4L, null, null))).version
+    assert(parity(root, 0, v1, "append") == 7)
+    // an overwrite keeping one copy of a duplicate, adding copies of
+    // another and flipping −0.0 to 0.0 (normalized: no change)
+    val v2 = ManifestTable.overwrite(spark, root, rows(
+      (1L, "a", 1.0), (2L, null, 0.0), (2L, null, 0.0), (2L, null, 0.0),
+      (3L, "c", Double.NaN), (4L, null, null), (5L, null, 2.0))).version
+    assert(parity(root, v1, v2, "overwrite") == 4) // 2 deletes, 2 inserts
+    // NULL non-key values through a copy-on-write update
+    val v3 = ManifestTable.updateWhere(spark, root, F.col("id") === 4L,
+      Map("payload" -> F.lit("x"))).snapshot.version
+    assert(parity(root, v2, v3, "update of a NULL row") == 2)
+    // a DV-only commit
+    val v4 = ManifestTable.deleteWhereMoR(spark, root, F.col("id") === 2L)
+      .snapshot.version
+    assert(parity(root, v3, v4, "DV-only delete") == 3)
+    // a pure compaction reports nothing
+    val v5 = ManifestTable.compact(spark, root, 1L << 20).version
+    assert(parity(root, v4, v5, "compaction") == 0)
+    // a rename chain: rows surface under the new name on both sides
+    ManifestTable.renameColumn(spark, root, "payload", "body")
+    val v7 = ManifestTable.deleteWhere(spark, root, F.col("id") === 1L)
+      .snapshot.version
+    assert(parity(root, v5, v7, "rename chain") == 1)
+    assert(parity(root, 0, v7, "whole history") > 0)
+    // the pre-ledger merged-schema path: strip the recorded schema
+    val pre = java.nio.file.Files.createTempDirectory("graft_cdfpar2").toString
+    ManifestTable.init(pre)
+    ManifestTable.append(spark, pre, batch(0, 10).union(batch(0, 3)))
+    ManifestTable.append(spark, pre,
+      batch(10, 15).withColumn("lang", F.lit(null).cast("string")))
+    import scala.jdk.CollectionConverters._
+    for (v <- 1 to 2) {
+      val p = java.nio.file.Paths.get(pre, "manifest", s"v$v")
+      java.nio.file.Files.write(p, java.nio.file.Files.readAllLines(p).asScala
+        .filterNot(_.startsWith("#schema:")).mkString("\n").getBytes)
+    }
+    assert(ManifestTable.latest(pre).get.schemaJson.isEmpty)
+    assert(parity(pre, 1, 2, "pre-ledger") == 5)
+    assert(parity(pre, 0, 2, "pre-ledger from empty") == 18)
+  }
+
+  /** A bloom table keyed on `o_orderkey`: 2,000 rows in four files. */
+  private def bloomOrders(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    ManifestTable.init(root, Seq("o_orderkey"), Seq("o_orderkey"))
+    ManifestTable.append(spark, root, (0L until 2000L).toDF("o_orderkey")
+      .withColumn("o_totalprice", F.col("o_orderkey") * 1.5)
+      .withColumn("op", F.lit("U")).repartition(4))
+    root
+  }
+
+  /** 200 keys, half of them present in [[bloomOrders]]: a local frame. */
+  private def orderBatch(op: Long => String) =
+    (1900L until 2100L).map(k => (k, k * 2.0, op(k)))
+      .toDF("o_orderkey", "o_totalprice", "op")
+
+  test("ledgered writers over a 200-key batch stay inside their job budgets (upsertBatch, three-clause mergeInto, deleteIdsMoR, changes)") {
+    import ManifestTable.{MergeDelete, MergeUpdate, WhenMatched,
+      WhenNotMatched, sourceCol}
+    val root = bloomOrders("graft_jobs")
+    val (up, upJobs) = jobsDuring(ManifestTable.upsertBatch(spark, root, 1L,
+      "o_orderkey", orderBatch(_ => "U")))
+    assert(up.matchedRows == 100L && up.insertedRows == 100L)
+    assert(upJobs.size <= 8, s"upsertBatch ran ${upJobs.size} jobs: " +
+      upJobs.mkString(" // "))
+    val (feed, feedJobs) = jobsDuring(ManifestTable.changes(spark, root,
+      up.snapshot.version - 1, up.snapshot.version).collect())
+    assert(feed.count(_.getAs[String]("_change_type") == "delete") == 100)
+    assert(feed.count(_.getAs[String]("_change_type") == "insert") == 200)
+    assert(feedJobs.size <= 3, s"changes ran ${feedJobs.size} jobs: " +
+      feedJobs.mkString(" // "))
+    val cols = Seq("o_orderkey", "o_totalprice", "op")
+    val (m, mJobs) = jobsDuring(ManifestTable.mergeInto(spark, root,
+      Seq("o_orderkey"), orderBatch(k => if (k % 2 == 0) "D" else "U")
+        .withColumn("o_orderkey", F.col("o_orderkey") + 100L),
+      Seq(F.col("o_orderkey")),
+      matched = Seq(
+        WhenMatched(Some(sourceCol("op") === "D"), MergeDelete),
+        WhenMatched(None, MergeUpdate(cols.filter(_ != "o_orderkey")
+          .map(c => c -> sourceCol(c)).toMap))),
+      notMatched = Seq(WhenNotMatched(Some(sourceCol("op") =!= "D"),
+        cols.map(c => c -> sourceCol(c)).toMap)),
+      batchId = Some(2L)))
+    assert(m.matchedRows == 100L && m.insertedRows == 50L)
+    assert(mJobs.size <= 10, s"mergeInto ran ${mJobs.size} jobs: " +
+      mJobs.mkString(" // "))
+    val (d, dJobs) = jobsDuring(ManifestTable.deleteIdsMoR(spark, root,
+      "o_orderkey", (0L until 200L).toDF("id")))
+    assert(d.removedRows == 200L)
+    assert(dJobs.size <= 5, s"deleteIdsMoR ran ${dJobs.size} jobs: " +
+      dJobs.mkString(" // "))
+    assert(ManifestTable.read(spark, root).count() == 2000L + 100L + 50L - 50L - 200L)
+  }
+
+  test("a DoubleType key keeps Spark's equality: -0.0 matches 0.0 in upsert and mergeInto, and counts as the same key") {
+    import ManifestTable.{MergeUpdate, WhenMatched, WhenNotMatched, sourceCol}
+    val root = java.nio.file.Files.createTempDirectory("graft_dblkey").toString
+    ManifestTable.init(root, Seq("k"))
+    ManifestTable.append(spark, root,
+      Seq((0.0, "zero"), (1.0, "one")).toDF("k", "v"))
+    // -0.0 and 0.0 are ONE key to Spark: an upsert carrying both is a
+    // duplicate-key batch, and refuses
+    val dup = intercept[IllegalArgumentException](ManifestTable.upsert(spark,
+      root, "k", Seq((-0.0, "a"), (0.0, "b")).toDF("k", "v")))
+    assert(dup.getMessage.contains("distinct"), dup.getMessage)
+    // -0.0 matches the stored 0.0 row
+    val u = ManifestTable.upsert(spark, root, "k",
+      Seq((-0.0, "neg"), (2.0, "two")).toDF("k", "v"))
+    assert(u.matchedRows == 1L && u.insertedRows == 1L)
+    assert(ManifestTable.read(spark, root).count() == 3L)
+    // a merge source holding both zeros: the pair updates one target
+    // row twice — the ANSI cardinality violation
+    val whole = Seq("k", "v").map(c => c -> sourceCol(c)).toMap
+    val card = intercept[IllegalArgumentException](ManifestTable.mergeInto(
+      spark, root, Seq("k"), Seq((-0.0, "x"), (0.0, "y")).toDF("k", "v"),
+      Seq(F.col("k")), matched = Seq(WhenMatched(None, MergeUpdate(whole)))))
+    assert(card.getMessage.contains("cardinality"), card.getMessage)
+    // a lone 0.0 matches the row the -0.0 upsert wrote
+    val m = ManifestTable.mergeInto(spark, root, Seq("k"),
+      Seq((0.0, "merged"), (3.0, "three")).toDF("k", "v"), Seq(F.col("k")),
+      matched = Seq(WhenMatched(None, MergeUpdate(Map("v" -> sourceCol("v"))))),
+      notMatched = Seq(WhenNotMatched(None, whole)))
+    assert(m.matchedRows == 1L && m.insertedRows == 1L)
+    assert(ManifestTable.read(spark, root).orderBy("k").select("v").as[String]
+      .collect().toSeq == Seq("merged", "one", "two", "three"))
+  }
 }

@@ -865,6 +865,63 @@ class PlanShapeSpec extends SparkSpec {
       s"DV overlay planned a shuffle/cartesian:\n${plan.take(1200)}")
   }
 
+  test("upsert of a 200-key batch into a bloom table probes and rewrites without an exchange on the table-side scan") {
+    import graft.operators.ManifestTable
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_psups")
+      .toString + "/t"
+    ManifestTable.init(root, Seq("id"), Seq("id"))
+    ManifestTable.append(spark, root, (0L until 2000L).toDF("id")
+      .withColumn("v", F.col("id") * 2).repartition(4))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             d: Long): Unit = { plans.add(qe.executedPlan); () }
+      override def onFailure(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graftbridge.drainListeners(sc)
+    spark.listenerManager.register(l)
+    val m = try {
+      val r = ManifestTable.upsert(spark, root, "id",
+        (1900L until 2100L).map(i => (i, -i)).toDF("id", "v"))
+      org.apache.spark.sql.graftbridge.drainListeners(sc)
+      r
+    } finally spark.listenerManager.unregister(l)
+    assert(m.matchedRows == 100L && m.insertedRows == 100L)
+    // the node's children, through AQE stages and write commands
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case w: DataWritingCommandExec => Seq(w.child)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    // rows straight off the table scan: no aggregate in between
+    def scanFed(p: SparkPlan): Boolean = p match {
+      case _: FileSourceScanExec => true
+      case _: BaseAggregateExec => false
+      case other => kids(other).exists(scanFed)
+    }
+    val scanning = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .filter(p => nodes(p).exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(scanning.size >= 2, s"expected the probe and the rewrite, got " +
+      s"${scanning.size} table-scanning plan(s)")
+    for (p <- scanning) {
+      val shuffled = nodes(p).collect { case e: Exchange if kids(e).exists(scanFed) => e }
+      assert(shuffled.isEmpty, s"an exchange sits on the table-side scan:\n$p")
+    }
+  }
+
   /** The executed plan of every query `body` runs (row-level writes
     * run their victim scans as internal actions), with the listener
     * bus drained before and after, as in [[jobsDuring]]. */
