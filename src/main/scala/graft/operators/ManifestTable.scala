@@ -77,6 +77,23 @@ import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   * transaction ends. A concurrent append never conflicts: its files
   * are outside every read set, so it survives any writer (snapshot
   * isolation — rows it adds post-date the writer's scan).
+  *
+  * Every ROW-LEVEL writer — [[deleteWhere]], [[deleteIds]],
+  * [[updateWhere]], [[overwriteWhere]], [[upsert]]/[[upsertBatch]],
+  * [[mergeInto]], [[deleteWhereMoR]] and [[deleteIdsMoR]] — is one
+  * private body on that core ([[rowChange]], rule RESTART). A writer
+  * brings only its own parts: the rows it adds, its per-file probe
+  * (whose files are the affected set), and its row transform. The body
+  * writes the added rows once across restarts and lands the change in
+  * one of two shapes, chosen by the verb:
+  *  - REWRITE (copy-on-write): the affected files, read through the DV
+  *    overlay and the writer's transform, plus any rows of the attempt
+  *    (MERGE's inserts), written as new files sized to their bytes;
+  *  - DV SIDECAR (merge-on-read): the victims' (file, row position)
+  *    plus the affected files' prior DV rows as one sidecar the files'
+  *    stat payloads point at — no data file is rewritten.
+  * [[compact]] and [[foldDeletes]] have no victim probe; they share
+  * the layout rewrite ([[rewriteFiles]]) instead.
   */
 object ManifestTable {
 
@@ -1656,8 +1673,182 @@ object ManifestTable {
     }
   }
 
+  // ---- the one row-level change ----
+
+  /** How a row-level change lands ([[rowChange]]). */
+  private sealed trait Shape
+
+  /** COPY-ON-WRITE: each affected file is read through the DV overlay
+    * and `keep` (the writer's row transform); that output, unioned with
+    * `extra` (rows of this attempt — MERGE's inserts), is narrowed by
+    * [[sizedRewrite]] and written in one job. With `foldSchema` its
+    * schema folds into the head's as a batch's would (MERGE); a delete
+    * or an update rewrites under the recorded schema. */
+  private final case class Rewrite(keep: DataFrame => DataFrame,
+                                   extra: Option[DataFrame] = None,
+                                   foldSchema: Boolean = false) extends Shape
+
+  /** DELETION VECTOR: `victims` (pinned `file`, `pos` rows) plus the
+    * affected files' prior DV rows become ONE new sidecar, and the
+    * affected files' stat payloads point at it; no data file is
+    * rewritten and the file list does not change. */
+  private final case class Sidecar(victims: DataFrame) extends Shape
+
+  /** One attempt of a row-level writer: its per-file probe
+    * (root-relative file → what the writer counts there; the files it
+    * names are the affected set), the shape the change lands in, and
+    * the writer's answer from a snapshot and the probe's total. */
+  private final case class Probe[R](perFile: Map[String, Long], shape: Shape,
+                                    result: (Snapshot, Long) => R)
+
+  /** A row-level writer: its attempt against a base snapshot, and the
+    * rows it adds whatever the probe finds. */
+  private final case class RowWriter[R](attempt: Snapshot => Probe[R],
+                                        added: Option[DataFrame] = None)
+
+  private val NoFiles = (Seq.empty[String], Map.empty[String, String])
+
+  /** THE row-level commit: every DELETE, UPDATE, REPLACE WHERE, upsert,
+    * MERGE and merge-on-read delete is one [[transact]] under rule
+    * RESTART through here. `setup` (the writer's pins, victim set and
+    * up-front checks) runs once; then each attempt
+    *  - writes `added` — on the first attempt only, a restart reuses
+    *    its files;
+    *  - runs the writer's probe, whose files are the affected set;
+    *  - with nothing affected or added, commits nothing (a ledgered
+    *    writer still lands its `#batch` marker on the head);
+    *  - writes the shape's output: a sized rewrite of the affected
+    *    files plus the attempt's extra rows, or a DV sidecar over them;
+    *  - commits one [[Plan]]: carried ++ rewritten ++ added files and
+    *    their stats, the affected files as the read set, `added`'s
+    *    schema merged.
+    * Every frame pinned from `setup` on is released when the
+    * transaction ends ([[Pin.scoped]]), as [[Writes]] clears intents. */
+  private def rowChange[R](spark: SparkSession, root: String, op: String,
+                           head: Option[Snapshot] = None,
+                           ledger: Option[(Long, Snapshot => R)] = None,
+                           beforeCommit: () => Unit)
+                          (setup: => RowWriter[R]): R = Pin.scoped {
+    val writer = setup
+    var addedOut: Option[(Seq[String], Map[String, String])] = None
+    transact(root, op, Restart, head, ledger, beforeCommit) { (hd, w) =>
+      val base = present(root, hd)
+      val (addedFiles, addedStats) = writer.added.fold(NoFiles) { df =>
+        if (addedOut.isEmpty) addedOut = Some(w.data(spark, df, base))
+        addedOut.get
+      }
+      val p = writer.attempt(base)
+      val affected = base.files.filter(p.perFile.contains)
+      val result = (s: Snapshot) => p.result(s, p.perFile.values.sum)
+      val extra = p.shape match {
+        case r: Rewrite => r.extra
+        case _: Sidecar => None
+      }
+      def plan(gone: Set[String], written: (Seq[String], Map[String, String]),
+               pointed: Snapshot => Map[String, String],
+               schema: Option[StructType]) =
+        Right(Plan(cur => Some(cur.copy(
+          files = cur.files.filterNot(gone) ++ written._1 ++ addedFiles,
+          stats = cur.stats ++ written._2 ++ pointed(cur) ++ addedStats)),
+          result, readSet = affected,
+          schema = writer.added.map(_.schema).orElse(schema)))
+      if (affected.isEmpty && writer.added.isEmpty && extra.isEmpty) {
+        if (ledger.isEmpty) Left(result(base))
+        else Right(Plan(Some(_), result))
+      } else p.shape match {
+        case Rewrite(keep, _, foldSchema) =>
+          // through the mapped projection, so rewritten files carry
+          // the CURRENT names
+          val rewritten = if (affected.isEmpty) None
+            else Some(keep(readSnapshot(spark, root, base.copy(files = affected))))
+          val out = (rewritten ++ extra).reduceOption(_ unionByName _)
+          plan(affected.toSet, out.fold(NoFiles)(o => w.data(spark,
+            sizedRewrite(spark, root, base, affected, o,
+              extra.fold(0L)(pinnedBytes)), base)),
+            _ => Map.empty, out.filter(_ => foldSchema).map(_.schema))
+        case Sidecar(victims) =>
+          // prior DV rows of the affected files carry into the new
+          // sidecar (one dvref per file — the new one supersedes)
+          val oldRefs = dvRefsOf(base, affected)
+          val dv = if (oldRefs.isEmpty) victims else {
+            // LocalRelation, not parallelize: a driver-local name list
+            // embeds in the plan (broadcastable, no RDD closure to
+            // clean, no extra stage)
+            val affectedDf = spark.createDataset(affected)(
+              org.apache.spark.sql.Encoders.STRING).toDF("__aff")
+            victims.unionByName(dvRows(spark, root, oldRefs.values.map(_._1).toSeq)
+              .join(affectedDf, F.col("file") === F.col("__aff"), "left_semi"))
+          }
+          val dvDir = w.sidecarDir()
+          val total = p.perFile.values.sum + oldRefs.values.map(_._2).sum
+          // narrowed WITHOUT a shuffle: the victims are pinned, so the
+          // write reads their blocks in fewer tasks
+          dv.coalesce(math.max(1L, total / (8L * 1000 * 1000)).toInt)
+            .write.parquet(s"$root/$dvDir")
+          plan(Set.empty, NoFiles, cur => affected.map { f =>
+            val st = cur.stats.get(f).map(ManifestStats.decodeCached)
+              .getOrElse(ManifestStats.FileStats(-1L, Map.empty))
+            f -> ManifestStats.encode(st.copy(dvRef = Some(dvDir),
+              dvRows = st.dvRows + p.perFile(f)))
+          }.toMap, None)
+      }
+    }
+  }
+
+  private val FileCol = "__file"
+  private val PosCol = "__pos"
+
+  /** The victim rows of `v` in `base`'s candidate files (the prune
+    * bounds even the victim scan — the affected set is provably inside
+    * it), with each row's absolute file path as `__file` and, with
+    * `withPos`, its parquet row index as `__pos`. Both materialize AT
+    * THE SCAN, before any join the victim filter adds, and the scan
+    * overlays existing DVs, so an already-deleted row is never a
+    * victim (or a survivor). None: no candidate file. */
+  private def victimScan(spark: SparkSession, root: String, base: Snapshot,
+                         v: Victims, withPos: Boolean): Option[DataFrame] = {
+    val files =
+      v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
+    if (files.isEmpty) None
+    else Some(v.hits(readSnapshotImpl(spark, root, base.copy(files = files),
+      fileCol = Some(FileCol), posCol = if (withPos) Some(PosCol) else None)))
+  }
+
+  /** A probe's (absolute scan path, count) rows, keyed by the
+    * root-relative path (file entries are always data/<token>/part-*,
+    * three segments). */
+  private def perFileOf(probe: DataFrame): Map[String, Long] =
+    probe.collect().map(r => relPathOf(r.getString(0)) -> r.getLong(1)).toMap
+
+  /** The copy-on-write attempt over `v`: one pushed-down job counts the
+    * victims per file — the affected set and the
+    * [[Delete.removedRows]] report — and the affected files rewrite
+    * through `keep`. */
+  private def rewriteOf(spark: SparkSession, root: String, v: Victims,
+                        keep: DataFrame => DataFrame)
+                       (base: Snapshot): Probe[Delete] =
+    Probe(victimScan(spark, root, base, v, withPos = false).fold(
+      Map.empty[String, Long])(hits => perFileOf(hits.groupBy(FileCol).count())),
+      Rewrite(keep), Delete(_, _))
+
+  /** The deletion-vector attempt over `v`: the victims' (file, pos) pin
+    * and count per file in ONE job ([[Pin.countByKey]]), so the sidecar
+    * and the per-file pricing see the same rows. */
+  private def sidecarOf(spark: SparkSession, root: String, v: Victims)
+                       (base: Snapshot): Probe[Delete] =
+    victimScan(spark, root, base, v, withPos = true) match {
+      case None => Probe(Map.empty, Sidecar(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), DvSchema)),
+        Delete(_, _))
+      case Some(hits) =>
+        val (victims, perFile) = Pin.countByKey(hits.select(
+          relPathCol(F.col(FileCol)).as("file"), F.col(PosCol).as("pos")), "file")
+        Probe(perFile, Sidecar(victims), Delete(_, _))
+    }
+
   /** Row-level DELETE — copy-on-write rewrite of ONLY the files that
-    * contain victim rows, committed through the transaction core.
+    * contain victim rows: the REWRITE shape of the one row-level body
+    * ([[rowChange]]; the class doc states both shapes).
     * The scale-store counterpart of the reference's own S7 delete
     * (`classes/hive/model.php:831-853`) and the primitive a
     * takedown/retraction pass needs: at 100 TB a purge touches the
@@ -1691,10 +1882,11 @@ object ManifestTable {
     * TRUE). `beforeCommit` is the usual race-injection test seam. */
   def deleteWhere(spark: SparkSession, root: String, predicate: Column,
                   terms: Seq[MembershipTerm] = Nil,
-                  beforeCommit: () => Unit = () => ()): Delete = {
-    val v = victimsOf(spark, Some(predicate), terms)
-    rewriteWith(spark, root, "deleteWhere", v, v.keep, beforeCommit)
-  }
+                  beforeCommit: () => Unit = () => ()): Delete =
+    rowChange(spark, root, "deleteWhere", beforeCommit = beforeCommit) {
+      val v = victimsOf(spark, Some(predicate), terms.map(pinned))
+      RowWriter(rewriteOf(spark, root, v, v.keep))
+    }
 
   /** [[deleteWhere]] for a victim set that is NOT driver-sized — the
     * frame-shaped takedown ([[Retraction.purgeWhere]] resume path):
@@ -1704,10 +1896,11 @@ object ManifestTable {
     * snapshot-isolation semantics. */
   def deleteIds(spark: SparkSession, root: String, idCol: String,
                 victims: DataFrame,
-                beforeCommit: () => Unit = () => ()): Delete = {
-    val v = victimsOf(spark, None, Seq(MembershipTerm(idCol, victims)))
-    rewriteWith(spark, root, "deleteIds", v, v.keep, beforeCommit)
-  }
+                beforeCommit: () => Unit = () => ()): Delete =
+    rowChange(spark, root, "deleteIds", beforeCommit = beforeCommit) {
+      val v = victimsOf(spark, None, Seq(pinned(MembershipTerm(idCol, victims))))
+      RowWriter(rewriteOf(spark, root, v, v.keep))
+    }
 
   /** Driver-sized id sets past this prune by RANGE only. Under the
     * cap the ids travel as an IN-list predicate, which the per-file
@@ -1747,7 +1940,8 @@ object ManifestTable {
   }
 
   /** Row-level UPDATE — the copy-on-write twin of [[deleteWhere]]
-    * and the scale form of the reference's S6 update
+    * (the REWRITE shape of [[rowChange]], with the assignments as the
+    * row transform) and the scale form of the reference's S6 update
     * (`classes/hive/model.php:762-829`): rows where `predicate` and
     * every membership term hold (the delete's victims, same
     * pruning) get `assignments` applied (column -> replacement
@@ -1766,24 +1960,26 @@ object ManifestTable {
                   terms: Seq[MembershipTerm] = Nil,
                   beforeCommit: () => Unit = () => ()): Delete = {
     require(assignments.nonEmpty, "updateWhere needs at least one assignment")
-    val v = victimsOf(spark, Some(predicate), terms)
-    rewriteWith(spark, root, "updateWhere", v, df => {
-      val unknown = assignments.keySet -- df.columns.toSet
-      require(unknown.isEmpty,
-        s"updateWhere assigns to unknown column(s): ${unknown.mkString(",")}")
-      val out = v.mark(df).select(df.columns.toSeq.map { c =>
-        assignments.get(c) match {
-          case Some(expr) => F.when(v.fire, expr).otherwise(F.col(c)).as(c)
-          case None => F.col(c)
+    rowChange(spark, root, "updateWhere", beforeCommit = beforeCommit) {
+      val v = victimsOf(spark, Some(predicate), terms.map(pinned))
+      RowWriter(rewriteOf(spark, root, v, df => {
+        val unknown = assignments.keySet -- df.columns.toSet
+        require(unknown.isEmpty,
+          s"updateWhere assigns to unknown column(s): ${unknown.mkString(",")}")
+        val out = v.mark(df).select(df.columns.toSeq.map { c =>
+          assignments.get(c) match {
+            case Some(expr) => F.when(v.fire, expr).otherwise(F.col(c)).as(c)
+            case None => F.col(c)
+          }
+        }: _*)
+        df.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
+          require(a.dataType.catalogString == b.dataType.catalogString,
+            s"assignment changes column '${a.name}' from " +
+              s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
         }
-      }: _*)
-      df.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
-        require(a.dataType.catalogString == b.dataType.catalogString,
-          s"assignment changes column '${a.name}' from " +
-            s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
-      }
-      out
-    }, beforeCommit)
+        out
+      }))
+    }
   }
 
   /** One FRAME-shaped membership conjunct of a row-level delete or
@@ -1799,16 +1995,33 @@ object ManifestTable {
   final case class MembershipTerm(col: String, values: DataFrame,
                                   negated: Boolean = false)
 
+  /** A membership term whose values are pinned: the [[Pin.keySet]]
+    * `keys` over their frame column `keyCol`. */
+  private final case class PinnedTerm(col: String, keys: Pin.KeySet,
+                                      keyCol: String, negated: Boolean = false)
+
+  /** Pin a membership term's one-column values frame, in one job. */
+  private def pinned(t: MembershipTerm): PinnedTerm = {
+    require(t.values.columns.length == 1,
+      s"values frame must have exactly one column, " +
+        s"got ${t.values.columns.mkString(",")}")
+    val kc = "__in_values"
+    PinnedTerm(t.col, Pin.keySet(t.values.toDF(kc), Seq(kc), IdInPruneMax),
+      kc, t.negated)
+  }
+
   /** The victim set of one row-level write, from [[victimsOf]].
-    * `mark` adds every term's `__in_hit_<i>` marker to a frame (and,
-    * for a joined term, its `__in_id_<i>`; `markers` lists them); `hit` is the victim filter — the BARE predicate AND the
-    * markers, so the predicate pushes to the parquet scan (a Filter
-    * drops NULL already); `fire` is its two-valued form (NULL
-    * predicate → false) for the keep side and UPDATE's `when`;
-    * `prune` bounds the victim scan's candidate files. */
+    * `mark` adds each joined term's `__in_id_<i>`/`__in_hit_<i>`
+    * columns to a frame (`markers` lists them); `hit` is the victim
+    * filter — the BARE predicate AND the terms, so the predicate pushes
+    * to the parquet scan (a Filter drops NULL already); `fire` is its
+    * two-valued form (NULL predicate → false) for the keep side and
+    * UPDATE's `when`; `prune` bounds the victim scan's candidate files;
+    * `keys` is each term's distinct non-null value count. */
   private final case class Victims(mark: DataFrame => DataFrame,
                                    markers: Seq[String], hit: Column,
-                                   fire: Column, prune: Option[Column]) {
+                                   fire: Column, prune: Option[Column],
+                                   keys: Seq[Long]) {
     def hits(df: DataFrame): DataFrame = mark(df).filter(hit)
     /** Every non-victim row of `df`, its own columns only. */
     def keep(df: DataFrame): DataFrame = {
@@ -1817,53 +2030,47 @@ object ManifestTable {
     }
   }
 
-  /** THE victim builder behind every row-level delete and update: rows
-    * where `predicate` holds (None = every row) AND every term holds.
-    * Each term's values pin once ([[Pin.keySet]]) and become a
-    * `__in_hit_<i>` marker over their distinct non-null values (a
-    * NULL never equality-matches): a driver-sized set marks through
-    * an IN filter (no join) that is also its IN-list prune, both from
-    * that same job; a larger one deduplicates and pins Spark-side,
-    * marks through a left-outer join and prunes by [[idPrune]]. Null `col` values on a positive term keep their rows
-    * (IN: NULL is not TRUE); on a negated term they fire (anti
-    * semantics). */
+  /** THE victim builder behind every row-level delete, update and
+    * upsert: rows where `predicate` holds (None = every row) AND every
+    * term holds, over the term's distinct non-null values (a NULL never
+    * equality-matches). A driver-sized key set is an IN filter (no
+    * join, so nothing shuffles or broadcasts) that is also the IN-list
+    * prune; a larger one deduplicates and pins Spark-side
+    * ([[Pin.count]], which also counts it), marks through a left-outer
+    * join and prunes by [[idPrune]]. Null `col` values on a positive
+    * term keep their rows (IN: NULL is not TRUE); on a negated term
+    * they fire (anti semantics). */
   private def victimsOf(spark: SparkSession, predicate: Option[Column],
-                        terms: Seq[MembershipTerm]): Victims = {
+                        terms: Seq[PinnedTerm]): Victims = {
+    // (mark, markers, membership, prune, distinct keys) per term
     val prepared = terms.zipWithIndex.map { case (t, i) =>
-      require(t.values.columns.length == 1,
-        s"values frame must have exactly one column, " +
-          s"got ${t.values.columns.mkString(",")}")
-      val (idc, hitc) = (s"__in_id_$i", s"__in_hit_$i")
-      // one pinning job; a driver-sized key set marks by an IN filter
-      // (no join, so nothing shuffles or broadcasts) that is also the
-      // IN-list prune
-      val ks = Pin.keySet(t.values.toDF(idc), Seq(idc), IdInPruneMax)
-      ks.member(t.col) match {
-        case Some(hit) =>
-          val m: DataFrame => DataFrame =
-            _.withColumn(hitc, F.when(hit, F.lit(true)))
-          (t, m, Seq(hitc), if (t.negated) None else ks.inList(0, t.col))
+      t.keys.member(t.col) match {
+        case Some(member) =>
+          (identity[DataFrame] _, Nil, member,
+            if (t.negated) None else t.keys.inList(0, t.col),
+            t.keys.keys.get.size.toLong)
         case None =>
-          val v = ks.frame.na.drop().distinct()
-            .withColumn(hitc, F.lit(true))
-            .localCheckpoint(eager = true)
+          val (idc, hitc) = (s"__in_id_$i", s"__in_hit_$i")
+          val (v, n) = Pin.count(t.keys.frame.select(F.col(t.keyCol).as(idc))
+            .na.drop().distinct().withColumn(hitc, F.lit(true)))
           val m: DataFrame => DataFrame =
             df => df.join(v, df(t.col) === v(idc), "left_outer")
-          (t, m, Seq(idc, hitc),
-            if (t.negated) None else idPrune(spark, t.col, v.select(idc), idc))
+          (m, Seq(idc, hitc), F.col(hitc).isNotNull,
+            if (t.negated) None else idPrune(spark, t.col, v.select(idc), idc),
+            n)
       }
     }
     val prune = (predicate.toSeq ++ prepared.flatMap(_._4)).reduceOption(_ && _)
     val mark = (df: DataFrame) =>
-      prepared.foldLeft(df) { case (acc, (_, m, _, _)) => m(acc) }
-    val held = prepared.map { case (t, _, markers, _) =>
-      if (t.negated) F.col(markers.last).isNull else F.col(markers.last).isNotNull
+      prepared.foldLeft(df) { case (acc, (m, _, _, _, _)) => m(acc) }
+    val held = terms.zip(prepared).map { case (t, (_, _, member, _, _)) =>
+      if (t.negated) !member else member
     }
-    Victims(mark, prepared.flatMap(_._3),
+    Victims(mark, prepared.flatMap(_._2),
       hit = (predicate.toSeq ++ held).reduce(_ && _),
       fire = (predicate.map(F.coalesce(_, F.lit(false))).toSeq ++ held)
         .reduce(_ && _),
-      prune)
+      prune, prepared.map(_._5))
   }
 
   // ---- merge-on-read deletes ----
@@ -1876,7 +2083,8 @@ object ManifestTable {
     * commit records each victim's (file, row-position) in a DELETION
     * VECTOR sidecar and points the affected files' stat payloads at
     * it (`dvref:` — [[ManifestStats.FileStats.dvRef]]). NO DATA FILE
-    * IS REWRITTEN; the commit is metadata-plus-sidecar sized. Victims
+    * IS REWRITTEN; the commit is metadata-plus-sidecar sized — the DV
+    * SIDECAR shape of the one row-level body ([[rowChange]]). Victims
     * (predicate AND membership terms) and pruning are
     * [[deleteWhere]]'s.
     *
@@ -1909,8 +2117,10 @@ object ManifestTable {
   def deleteWhereMoR(spark: SparkSession, root: String, predicate: Column,
                      terms: Seq[MembershipTerm] = Nil,
                      beforeCommit: () => Unit = () => ()): Delete =
-    morDelete(spark, root, "deleteWhereMoR",
-      victimsOf(spark, Some(predicate), terms), beforeCommit)
+    rowChange(spark, root, "deleteWhereMoR", beforeCommit = beforeCommit) {
+      RowWriter(sidecarOf(spark, root,
+        victimsOf(spark, Some(predicate), terms.map(pinned))))
+    }
 
   /** [[deleteIds]] in merge-on-read form — the takedown shape: the
     * (unbounded) one-column `victims` frame is one membership term;
@@ -1918,81 +2128,16 @@ object ManifestTable {
   def deleteIdsMoR(spark: SparkSession, root: String, idCol: String,
                    victims: DataFrame,
                    beforeCommit: () => Unit = () => ()): Delete =
-    morDelete(spark, root, "deleteIdsMoR",
-      victimsOf(spark, None, Seq(MembershipTerm(idCol, victims))),
-      beforeCommit)
+    rowChange(spark, root, "deleteIdsMoR", beforeCommit = beforeCommit) {
+      RowWriter(sidecarOf(spark, root,
+        victimsOf(spark, None, Seq(pinned(MembershipTerm(idCol, victims))))))
+    }
 
   /** A snapshot's DV identity for one file — the drift probe
     * [[drifted]] compares across snapshots. */
   private def dvStateOf(snap: Snapshot, f: String): (Option[String], Long) =
     snap.stats.get(f).map(ManifestStats.decodeCached)
       .map(st => (st.dvRef, st.dvRows)).getOrElse((None, 0L))
-
-  /** The shared MoR-delete engine: scan the candidate files WITH
-    * row-position provenance (the scan overlays existing DVs, so
-    * victims are live rows only), persist victim (file, pos) rows —
-    * unioned with the affected files' prior DV rows — as ONE new
-    * sidecar under its own `data/<token>/`, and commit by pointing
-    * the affected files' stat payloads at it. The file LIST never
-    * changes. The affected files are the read set: one replaced by a
-    * rewrite, OR its DV state moved by a concurrent MoR delete,
-    * restarts the scan (a lost MoR-MoR race must not clobber the
-    * winner's sidecar pointer). */
-  private def morDelete(spark: SparkSession, root: String, op: String,
-                        v: Victims, beforeCommit: () => Unit): Delete = {
-    val abs = "__graft_file"
-    val pos = "__graft_pos"
-    transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
-      val base = present(root, head)
-      val scanFiles =
-        v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-      if (scanFiles.isEmpty) Left(Delete(base, 0L))
-      else {
-        val scan = readSnapshotImpl(spark, root,
-          base.copy(files = scanFiles), fileCol = Some(abs),
-          posCol = Some(pos))
-        // pin the victim set — the per-file pricing and the sidecar
-        // write must see the same rows — and price it IN the pin's
-        // own materializing job (Pin.countByKey: one action, not a
-        // pin plus a grouped count over the rows just pinned)
-        val (victims, perFile) = Pin.countByKey(v.hits(scan)
-          .select(relPathCol(F.col(abs)).as("file"), F.col(pos).as("pos")),
-          "file")
-        if (perFile.isEmpty) Left(Delete(base, 0L))
-        else {
-          val affected = base.files.filter(perFile.contains)
-          val removed = perFile.values.sum
-          // prior DV rows of the affected files carry into the new
-          // sidecar (one dvref per file — the new one supersedes)
-          val oldRefs = dvRefsOf(base, affected)
-          val newDv = if (oldRefs.isEmpty) victims else {
-            // LocalRelation, not parallelize: a driver-local name list
-            // embeds in the plan (broadcastable, no RDD closure to
-            // clean, no extra stage)
-            val affectedDf = spark.createDataset(affected)(
-              org.apache.spark.sql.Encoders.STRING).toDF("__aff")
-            val carried = dvRows(spark, root,
-              oldRefs.values.map(_._1).toSeq)
-              .join(affectedDf, F.col("file") === F.col("__aff"),
-                "left_semi")
-            victims.unionByName(carried)
-          }
-          val dvDir = w.sidecarDir()
-          val total = removed + oldRefs.values.map(_._2).sum
-          val nParts = math.max(1L, total / (8L * 1000 * 1000)).toInt
-          newDv.repartition(nParts).write.parquet(s"$root/$dvDir")
-          // the file LIST never changes: the affected files' payloads
-          // point at the new sidecar
-          Right(Plan(cur => Some(cur.copy(stats = cur.stats ++ affected.map { f =>
-            val st = cur.stats.get(f).map(ManifestStats.decodeCached)
-              .getOrElse(ManifestStats.FileStats(-1L, Map.empty))
-            f -> ManifestStats.encode(st.copy(dvRef = Some(dvDir),
-              dvRows = st.dvRows + perFile(f)))
-          })), Delete(_, removed), readSet = affected))
-        }
-      }
-    }
-  }
 
   /** PREDICATE OVERWRITE — `replaceWhere` / v2 `INSERT INTO …
     * REPLACE WHERE`: replace EXACTLY the rows matching `predicate`
@@ -2001,7 +2146,8 @@ object ManifestTable {
     * rewrites only that day's files (the victim scan prunes through
     * bounds + Blooms like [[deleteWhere]]'s) and appends the new
     * files — never a full-table rewrite, never two commits with a
-    * visible half-state between them.
+    * visible half-state between them. It is [[rowChange]]'s REWRITE
+    * shape with `df` as the added rows.
     *
     *  - every NEW row must satisfy `predicate` (the Delta
     *    `replaceWhere` constraint): a violating reload would
@@ -2025,23 +2171,24 @@ object ManifestTable {
     * `df` (the reload of a not-yet-loaded day). */
   def overwriteWhere(spark: SparkSession, root: String,
                      predicate: Column, df: DataFrame,
-                     beforeCommit: () => Unit = () => ()): Delete = {
-    // fused pin (Pin.countWhere): the violation audit rides the pin's
-    // own materializing job; the audit column lives only in the pinned
-    // rows and is projected away before the write
-    val (pinnedV, violations) = Pin.countWhere(
-      df.withColumn("__graft_viol", !F.coalesce(predicate, F.lit(false))),
-      "__graft_viol")
-    require(violations == 0L,
-      s"overwriteWhere: $violations new row(s) do not satisfy the " +
-        "replace predicate — they would land OUTSIDE the replaced " +
-        "region; widen the predicate or filter the input")
-    // the keep side of the affected files reads through any DV overlay,
-    // so a MoR-deleted row neither survives nor double-counts
-    val v = victimsOf(spark, Some(predicate), Nil)
-    rewriteWith(spark, root, "overwriteWhere", v, v.keep, beforeCommit,
-      added = Some(pinnedV.drop("__graft_viol")))
-  }
+                     beforeCommit: () => Unit = () => ()): Delete =
+    rowChange(spark, root, "overwriteWhere", beforeCommit = beforeCommit) {
+      // fused pin (Pin.countWhere): the violation audit rides the pin's
+      // own materializing job; the audit column lives only in the pinned
+      // rows and is projected away before the write
+      val (pinnedV, violations) = Pin.countWhere(
+        df.withColumn("__graft_viol", !F.coalesce(predicate, F.lit(false))),
+        "__graft_viol")
+      require(violations == 0L,
+        s"overwriteWhere: $violations new row(s) do not satisfy the " +
+          "replace predicate — they would land OUTSIDE the replaced " +
+          "region; widen the predicate or filter the input")
+      // the keep side of the affected files reads through any DV
+      // overlay, so a MoR-deleted row neither survives nor double-counts
+      val v = victimsOf(spark, Some(predicate), Nil)
+      RowWriter(rewriteOf(spark, root, v, v.keep),
+        added = Some(pinnedV.drop("__graft_viol")))
+    }
 
   /** FOLD DELETION VECTORS: rewrite ONLY the files carrying a DV
     * (reading through the overlay, so the rewrite drops the deleted
@@ -2091,7 +2238,9 @@ object ManifestTable {
     * (`classes/hive/model.php:918-934`): each `updates` row REPLACES
     * the corpus row carrying the same `idCol` value (whole-row
     * replace) or inserts if none exists, in ONE commit. Copy-on-write
-    * like the delete/update: the updates write once up front (their
+    * like the delete/update — [[rowChange]]'s REWRITE shape with the
+    * rows whose id the batch carries as victims and the batch as the
+    * added rows: the updates write once up front (their
     * files are reused across restarts), matched rows' files are
     * rewritten WITHOUT the old versions, untouched files carry by
     * reference, and the new snapshot = carried ∪ rewritten ∪ update
@@ -2169,102 +2318,40 @@ object ManifestTable {
                          updates: DataFrame,
                          beforeCommit: () => Unit,
                          batchId: Option[Long],
-                         head: Option[Snapshot] = None): Merge = {
-    // ONE pinning job (Pin.keySet) counts the updates and, for a
-    // driver-sized batch, brings its distinct ids home: they are the
-    // distinctness check, the match scan's exact IN-list prune
-    // (bloom-answerable — scattered CDC ids still skip files) and the
-    // IN filter the probe and the rewrite select rows by. A larger
-    // batch (or a non-driver-keyable id type) dedups Spark-side and
-    // prunes by the id RANGE (cluster by the merge key to keep it
-    // tight — see the class doc's contract)
-    val ks = Pin.keySet(updates, Seq(idCol), IdInPruneMax)
-    val (u, nU) = (ks.frame, ks.rows)
-    val distinctMsg = s"upsert updates must carry distinct '$idCol' values"
-    // (rows of a frame whose id an update carries, the rest, the prune)
-    val (updated, kept, prune) = ks.member(idCol) match {
-      case Some(hit) =>
-        // a NULL id is one more distinct value, as in a Spark distinct
-        require(ks.keys.get.size == ks.keyedRows && nU - ks.keyedRows <= 1L,
-          distinctMsg)
-        ((df: DataFrame) => df.filter(hit), (df: DataFrame) => df.filter(!hit),
-          ks.inList(0, idCol))
-      case None =>
-        val (ids, nIds) =
-          Pin.count(u.select(F.col(idCol).as("__merge_id")).distinct())
-        require(nIds == nU, distinctMsg)
-        ((df: DataFrame) => df.join(ids, df(idCol) === ids("__merge_id"),
-          "left_semi"),
-          (df: DataFrame) => df.join(ids, df(idCol) === ids("__merge_id"),
-            "left_anti"),
-          idPrune(spark, idCol, ids, "__merge_id"))
-    }
-    // the updates write ONCE, on the first attempt; a restart reuses
-    // their files and re-derives only the rewritten survivors
-    var upd: Option[(Seq[String], Map[String, String])] = None
+                         head: Option[Snapshot] = None): Merge =
     // with a batch id every attempt re-checks the ledger (a racing
     // duplicate may have committed the batch while this writer was
     // scanning/writing) and the commit carries the marker
-    transact(root, "upsert", Restart, head = head,
-      ledger = batchId.map(_ -> ((s: Snapshot) => Merge(s, 0L, 0L))),
-      beforeCommit = beforeCommit) { (hd, w) =>
-      val base = present(root, hd)
-      val (updFiles, updStats) = upd.getOrElse {
-        upd = Some(w.data(spark, u, base))
-        upd.get
-      }
-      val scanFiles =
-        if (base.files.isEmpty) Seq.empty
-        else prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-      // one pushed-down job over the CANDIDATE files only: per
-      // matched id, every file holding a row for it — each id
-      // attributed ONCE (to its first file), so `matched` counts
-      // DISTINCT ids even when racing appends left duplicate rows
-      // for one id, possibly across files (insertedRows =
-      // nU - matched can never go negative)
-      val perFile = if (scanFiles.isEmpty) Array.empty[(String, Long)]
-      else {
-        val scan = readSnapshotImpl(spark, root,
-          base.copy(files = scanFiles), fileCol = Some("__file"),
-          posCol = None)
-        updated(scan)
-          .select(F.col("__file"), F.col(idCol).as("__id"))
-          .groupBy("__id")
-          .agg(F.sort_array(F.collect_set("__file")).as("fs"))
-          .select(F.posexplode(F.col("fs")).as(Seq("pos", "__file")))
-          .groupBy("__file")
-          .agg(F.sum(F.when(F.col("pos") === 0, 1L).otherwise(0L))
-            .as("firsts"))
-          .collect().map(r => (r.getString(0), r.getLong(1)))
-      }
-      // O(files) suffix-set probe (file entries are always
-      // data/<token>/part-*, three segments)
-      val hitRel = perFile.iterator
-        .map(x => relPathOf(x._1)).toSet
-      val affected = base.files.filter(hitRel)
-      val matched = perFile.map(_._2).sum
-      // no collisions: the merge is a plain append of the updates.
-      // Otherwise read the affected subset through the SAME mapped
-      // projection as any read — renamed columns coalesce, so the
-      // survivors (and thus the rewritten files) carry the CURRENT
-      // names — and drop the replaced versions; their update rows
-      // arrive via the already-written update files
-      val (newFiles, newStats) =
-        if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
-        else {
-          val affectedScan =
-            readSnapshot(spark, root, base.copy(files = affected))
-          w.data(spark, sizedRewrite(spark, root, base, affected,
-            kept(affectedScan)), base)
-        }
-      val affectedSet = affected.toSet
-      Right(Plan(cur => Some(cur.copy(
-        files = cur.files.filterNot(affectedSet) ++ newFiles ++ updFiles,
-        stats = cur.stats ++ newStats ++ updStats)),
-        Merge(_, matched, nU - matched), readSet = affected,
-        schema = Some(u.schema)))
+    rowChange(spark, root, "upsert", head,
+      batchId.map(_ -> ((s: Snapshot) => Merge(s, 0L, 0L))), beforeCommit) {
+      // ONE pinning job (Pin.keySet) counts the updates and, for a
+      // driver-sized batch, brings its distinct ids home. The victims
+      // are the rows whose id the batch carries — victimsOf over that
+      // same pin (the match scan's prune and IN filter, or its
+      // Spark-side distinct ids, see the class doc's contract) — and
+      // the batch itself is the added rows
+      val ks = Pin.keySet(updates, Seq(idCol), IdInPruneMax)
+      val v = victimsOf(spark, None, Seq(PinnedTerm(idCol, ks, idCol)))
+      // a NULL id is one more distinct value, as in a Spark distinct
+      require(v.keys.head == ks.keyedRows && ks.rows - ks.keyedRows <= 1L,
+        s"upsert updates must carry distinct '$idCol' values")
+      RowWriter(base => Probe(
+        victimScan(spark, root, base, v, withPos = false).fold(
+          Map.empty[String, Long]) { hits =>
+          // one pushed-down job: per matched id, every file holding a
+          // row for it — each id attributed ONCE (to its first file), so
+          // the match count is of DISTINCT ids even when racing appends
+          // left duplicate rows for one id, possibly across files
+          // (insertedRows = rows - matched can never go negative)
+          perFileOf(hits.select(F.col(FileCol), F.col(idCol).as("__id"))
+            .groupBy("__id")
+            .agg(F.sort_array(F.collect_set(FileCol)).as("fs"))
+            .select(F.posexplode(F.col("fs")).as(Seq("pos", FileCol)))
+            .groupBy(FileCol)
+            .agg(F.sum(F.when(F.col("pos") === 0, 1L).otherwise(0L))))
+        }, Rewrite(v.keep), (s, matched) => Merge(s, matched, ks.rows - matched)),
+        added = Some(ks.frame))
     }
-  }
 
   /** One `WHEN MATCHED` / `WHEN NOT MATCHED BY SOURCE` clause of a
     * general [[mergeInto]]: the first clause whose `condition` holds
@@ -2314,7 +2401,9 @@ object ManifestTable {
     * conditional `WHEN NOT MATCHED THEN INSERT` clauses, and `WHEN
     * NOT MATCHED BY SOURCE THEN UPDATE/DELETE` clauses, applied in
     * declaration order (first true condition wins, per ANSI), in ONE
-    * atomic copy-on-write commit.
+    * atomic copy-on-write commit — [[rowChange]]'s REWRITE shape, with
+    * the clause fold as the row transform and the inserts as the
+    * attempt's extra rows.
     *
     * The merge key is `idCols` (one or more target columns) matched
     * against `sourceKeys` (one expression over the source per key
@@ -2382,271 +2471,244 @@ object ManifestTable {
     val head = present(root, latest(root).getOrElse(Empty))
     if (batchId.exists(batchCommitted(head, _))) return Merge(head, 0L, 0L)
     val keyCols = idCols.indices.map(mergeKeyCol)
-    // the source pins once — keys first, columns under the __s_
-    // prefix, plus the match marker the left-outer join nulls out —
-    // in ONE job (Pin.keySet) that also yields, for a driver-sized
-    // source, the distinct key tuples with their counts: the duplicate
-    // check, the IN-list prunes and a local key frame for the
-    // anti-join, with no further query over the source. The pin
-    // carries its row count, so a small source broadcasts into the
-    // probe and rewrite joins
-    val ks = Pin.keySet(source.select(
-      (sourceKeys.zip(keyCols).map { case (e, k) => e.as(k) } ++
-        srcNames.map(c => F.col(c).as(SourcePrefix + c))) :+
-        F.lit(true).as(MergePresentCol): _*), keyCols, IdInPruneMax)
-    val src = ks.frame
-    val allNonNull = keyCols.map(k => F.col(k).isNotNull).reduce(_ && _)
-    val srcKeys = ks.keysFrame(keyCols).getOrElse(
-      src.select(keyCols.map(F.col): _*).filter(allNonNull))
-    // ANSI cardinality: a duplicate source key tuple is a violation
-    // only when it would fire a MATCHED clause on one target row
-    // twice — duplicate UNMATCHED rows each insert (per SQL MERGE),
-    // and NOT MATCHED BY SOURCE clauses never touch a matched row.
-    // So: no blanket up-front refusal; with matched clauses present,
-    // the duplicated keys probe the (pruned) target inside the scan
-    // loop and refuse only on an actual multi-match.
-    val dupKeys = ks.keys match {
-      case Some(m) =>
-        if (m.size == ks.keyedRows) None else ks.keysFrame(keyCols, 2L)
-      case None =>
-        if (srcKeys.distinct().count() == ks.keyedRows) None
-        else Some(srcKeys.groupBy(keyCols.map(F.col): _*)
-          .agg(F.count(F.lit(1)).as("__dup_n"))
-          .filter(F.col("__dup_n") > 1)
-          .select(keyCols.map(F.col): _*)
-          .localCheckpoint(eager = true))
-    }
-    // each component prunes independently; the conjunction gates the
-    // file (conservative superset of tuple-matching files)
-    val keyPrune = idCols.indices.flatMap(i =>
-      if (ks.keys.isDefined) ks.inList(i, idCols(i))
-      else idPrune(spark, idCols(i),
-        srcKeys.select(keyCols(i)).distinct(), keyCols(i)))
-      .reduceOption(_ && _)
-    def keyJoinCond(left: DataFrame, right: DataFrame): Column =
-      idCols.zip(keyCols).map { case (c, k) => left(c) === right(k) }
-        .reduce(_ && _)
-    // null-safe first-true-wins: a NULL condition is NOT TRUE (ANSI)
-    def holds(c: Option[Column]): Column =
-      c.map(F.coalesce(_, F.lit(false))).getOrElse(F.lit(true))
-    def anyHolds(cs: Seq[WhenMatched]): Column =
-      cs.map(c => holds(c.condition)).reduce(_ || _)
-    // the FILE-level prune uses the RAW disjunction: the stats
-    // evaluator treats a Coalesce wrapper as an unsupported shape
-    // (never prune), and null-safety is a row concern — a file where
-    // no condition can be TRUE has no firable row either way
-    def anyRaw(cs: Seq[WhenMatched]): Column =
-      cs.map(_.condition.getOrElse(F.lit(true))).reduce(_ || _)
-
-    transact(root, "mergeInto", Restart, head = Some(head),
-      ledger = batchId.map(_ -> ((s: Snapshot) => Merge(s, 0L, 0L))),
-      beforeCommit = beforeCommit) { (base, w) =>
-      // ---- victim discovery (pruned probes, driver-sized output)
-      // key candidates serve BOTH the matched probe and the insert
-      // anti-join: conservative superset of files that can hold a
-      // source key
-      val keyFiles =
-        if (base.files.isEmpty) Seq.empty
-        else keyPrune.map(candidateFiles(spark, root, base, _))
-          .getOrElse(base.files)
-      // the ANSI cardinality check, on the rows it actually covers:
-      // a violation is a target row MORE THAN ONE source row would
-      // actually MODIFY (fire a matched clause on) — duplicates
-      // matching nothing are legal inserts, and duplicate copies
-      // whose conditions are false on that row attempt nothing. The
-      // probe is bounded to dup-keyed target rows (semi-join), then
-      // counts FIRING source pairs per target row.
-      if (matched.nonEmpty && dupKeys.nonEmpty && keyFiles.nonEmpty) {
-        val dk = dupKeys.get
-        val scan = readSnapshot(spark, root, base.copy(files = keyFiles))
-        val dup = scan.join(dk, keyJoinCond(scan, dk), "left_semi")
-          .withColumn("__rowid", F.monotonically_increasing_id())
-        val firing = dup.join(src, keyJoinCond(dup, src), "inner")
-          .filter(anyHolds(matched))
-        require(firing.groupBy("__rowid").count()
-          .filter(F.col("count") > 1).isEmpty,
-          "mergeInto: more than one source row (duplicate key " +
-            "tuples) attempts to modify the same target row — which " +
-            "copy updates it would be nondeterministic (the ANSI " +
-            "MERGE cardinality violation); de-duplicate the source " +
-            "first")
+    rowChange(spark, root, "mergeInto", Some(head),
+      batchId.map(_ -> ((s: Snapshot) => Merge(s, 0L, 0L))), beforeCommit) {
+      // the source pins once — keys first, columns under the __s_
+      // prefix, plus the match marker the left-outer join nulls out —
+      // in ONE job (Pin.keySet) that also yields, for a driver-sized
+      // source, the distinct key tuples with their counts: the duplicate
+      // check, the IN-list prunes and a local key frame for the
+      // anti-join, with no further query over the source. The pin
+      // carries its row count, so a small source broadcasts into the
+      // probe and rewrite joins
+      val ks = Pin.keySet(source.select(
+        (sourceKeys.zip(keyCols).map { case (e, k) => e.as(k) } ++
+          srcNames.map(c => F.col(c).as(SourcePrefix + c))) :+
+          F.lit(true).as(MergePresentCol): _*), keyCols, IdInPruneMax)
+      val src = ks.frame
+      val allNonNull = keyCols.map(k => F.col(k).isNotNull).reduce(_ && _)
+      val srcKeys = ks.keysFrame(keyCols).getOrElse(
+        src.select(keyCols.map(F.col): _*).filter(allNonNull))
+      // ANSI cardinality: a duplicate source key tuple is a violation
+      // only when it would fire a MATCHED clause on one target row
+      // twice — duplicate UNMATCHED rows each insert (per SQL MERGE),
+      // and NOT MATCHED BY SOURCE clauses never touch a matched row.
+      // So: no blanket up-front refusal; with matched clauses present,
+      // the duplicated keys probe the (pruned) target inside the scan
+      // loop and refuse only on an actual multi-match.
+      val dupKeys = ks.keys match {
+        case Some(m) =>
+          if (m.size == ks.keyedRows) None else ks.keysFrame(keyCols, 2L)
+        case None =>
+          if (srcKeys.distinct().count() == ks.keyedRows) None
+          else Some(Pin.count(srcKeys.groupBy(keyCols.map(F.col): _*)
+            .agg(F.count(F.lit(1)).as("__dup_n"))
+            .filter(F.col("__dup_n") > 1)
+            .select(keyCols.map(F.col): _*))._1)
       }
-      val nmbsFiles =
-        if (notMatchedBySource.isEmpty || base.files.isEmpty) Seq.empty
-        else candidateFiles(spark, root, base,
-          anyRaw(notMatchedBySource))
-      def scanOf(files: Seq[String]): DataFrame =
-        readSnapshotImpl(spark, root, base.copy(files = files),
-          fileCol = Some("__file"), posCol = None)
-      // per-file fired-row counts, matched and not-matched-by-source
-      // tagged apart — ONE pushed-down job over the union
-      val mProbe =
-        if (matched.isEmpty || keyFiles.isEmpty) None
-        else {
-          val scan = scanOf(keyFiles)
-          Some(scan
-            .join(src, keyJoinCond(scan, src), "inner")
-            .filter(anyHolds(matched))
-            .select(F.col("__file"), F.lit(true).as("__m")))
-        }
-      val nProbe =
-        if (nmbsFiles.isEmpty) None
-        else {
-          val scan = scanOf(nmbsFiles)
-          Some(scan
-            .join(srcKeys, keyJoinCond(scan, srcKeys), "left_anti")
-            .filter(anyHolds(notMatchedBySource))
-            .select(F.col("__file"), F.lit(false).as("__m")))
-        }
-      val perFile = (mProbe ++ nProbe).reduceOption(_ unionByName _)
-        .map(_.groupBy("__file")
-          .agg(F.sum(F.when(F.col("__m"), 1L).otherwise(0L)).as("m"))
-          .collect().map(r => (r.getString(0), r.getLong(1))))
-        .getOrElse(Array.empty[(String, Long)])
-      val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
-      val affected = base.files.filter(hitRel)
-      val matchedRows = perFile.map(_._2).sum
+      // each component prunes independently; the conjunction gates the
+      // file (conservative superset of tuple-matching files)
+      val keyPrune = idCols.indices.flatMap(i =>
+        if (ks.keys.isDefined) ks.inList(i, idCols(i))
+        else idPrune(spark, idCols(i),
+          srcKeys.select(keyCols(i)).distinct(), keyCols(i)))
+        .reduceOption(_ && _)
+      def keyJoinCond(left: DataFrame, right: DataFrame): Column =
+        idCols.zip(keyCols).map { case (c, k) => left(c) === right(k) }
+          .reduce(_ && _)
+      // null-safe first-true-wins: a NULL condition is NOT TRUE (ANSI)
+      def holds(c: Option[Column]): Column =
+        c.map(F.coalesce(_, F.lit(false))).getOrElse(F.lit(true))
+      def anyHolds(cs: Seq[WhenMatched]): Column =
+        cs.map(c => holds(c.condition)).reduce(_ || _)
+      // the FILE-level prune uses the RAW disjunction: the stats
+      // evaluator treats a Coalesce wrapper as an unsupported shape
+      // (never prune), and null-safety is a row concern — a file where
+      // no condition can be TRUE has no firable row either way
+      def anyRaw(cs: Seq[WhenMatched]): Column =
+        cs.map(_.condition.getOrElse(F.lit(true))).reduce(_ || _)
       // ---- the rewritten victims: left-outer the source onto the
-      // affected rows, fold the clauses first-true-wins
-      val rewritten =
-        if (affected.isEmpty) None
-        else {
-          val victims = readSnapshot(spark, root,
-            base.copy(files = affected))
-          val unknown = (matched ++ notMatchedBySource).flatMap {
-            case WhenMatched(_, MergeUpdate(as)) => as.keys
-            case _ => Nil
-          }.toSet -- victims.columns.toSet
-          require(unknown.isEmpty,
-            "merge UPDATE assigns to unknown column(s): " +
-              unknown.mkString(","))
-          // with no matched clause, no kept expression references a
-          // source column — join only the DEDUPLICATED key+marker
-          // frame, so a duplicate source key (legal here) cannot fan
-          // a carried row out into two copies
-          val joinSrc =
-            if (matched.nonEmpty) src
-            else src.select(keyCols.map(F.col) :+
-              F.col(MergePresentCol): _*).dropDuplicates(keyCols)
-          val frame = victims.join(joinSrc,
-            keyJoinCond(victims, joinSrc), "left_outer")
-          val isM = F.coalesce(F.col(MergePresentCol), F.lit(false))
-          // clause index: matched clauses 0.., NMBS clauses offset
-          // by the matched count; -1 = untouched
-          val allClauses = matched ++ notMatchedBySource
-          val clauseIdx = allClauses.zipWithIndex.foldRight(
-            F.lit(-1): Column) { case ((cl, i), rest) =>
-            val side = if (i < matched.size) isM else !isM
-            F.when(side && holds(cl.condition), F.lit(i)).otherwise(rest)
-          }
-          val tagged = frame.withColumn("__clause", clauseIdx)
-          val dropIdx = allClauses.zipWithIndex.collect {
-            case (WhenMatched(_, MergeDelete), i) => i }
-          val kept =
-            if (dropIdx.isEmpty) tagged
-            else tagged.filter(!F.col("__clause")
-              .isInCollection(dropIdx.map(Int.box)))
-          Some(kept.select(victims.columns.toIndexedSeq.map { c =>
-            val folded = allClauses.zipWithIndex.foldRight(
-              victims(c)) { case ((cl, i), rest) =>
-              cl.action match {
-                case MergeUpdate(as) if as.contains(c) =>
-                  F.when(F.col("__clause") === i, as(c)).otherwise(rest)
-                case _ => rest
-              }
-            }
-            folded.as(c)
-          }: _*))
+      // affected rows, fold the clauses first-true-wins; a rewrite must
+      // not change the recorded shape
+      def mergeFrame(victims: DataFrame): DataFrame = {
+        val unknown = (matched ++ notMatchedBySource).flatMap {
+          case WhenMatched(_, MergeUpdate(as)) => as.keys
+          case _ => Nil
+        }.toSet -- victims.columns.toSet
+        require(unknown.isEmpty,
+          "merge UPDATE assigns to unknown column(s): " +
+            unknown.mkString(","))
+        // with no matched clause, no kept expression references a
+        // source column — join only the DEDUPLICATED key+marker
+        // frame, so a duplicate source key (legal here) cannot fan
+        // a carried row out into two copies
+        val joinSrc =
+          if (matched.nonEmpty) src
+          else src.select(keyCols.map(F.col) :+
+            F.col(MergePresentCol): _*).dropDuplicates(keyCols)
+        val frame = victims.join(joinSrc,
+          keyJoinCond(victims, joinSrc), "left_outer")
+        val isM = F.coalesce(F.col(MergePresentCol), F.lit(false))
+        // clause index: matched clauses 0.., NMBS clauses offset
+        // by the matched count; -1 = untouched
+        val allClauses = matched ++ notMatchedBySource
+        val clauseIdx = allClauses.zipWithIndex.foldRight(
+          F.lit(-1): Column) { case ((cl, i), rest) =>
+          val side = if (i < matched.size) isM else !isM
+          F.when(side && holds(cl.condition), F.lit(i)).otherwise(rest)
         }
-      // ---- the inserts: source rows matching NO target key, first
-      // insert clause wins, unassigned columns NULL
-      val targetSchema = recordedSchema(base).getOrElse(
-        rewritten.map(r => r.schema).getOrElse(
-          if (base.files.isEmpty) StructType(Seq.empty)
-          else readSnapshot(spark, root, base).schema))
-      val inserts =
-        if (notMatched.isEmpty) None
-        else {
-          val unmatched =
-            if (base.files.isEmpty || keyFiles.isEmpty) src
-            else {
-              val keys = readSnapshot(spark, root,
-                base.copy(files = keyFiles))
-                .select(idCols.map(F.col): _*)
-              src.join(keys, keyJoinCond(keys, src), "left_anti")
+        val tagged = frame.withColumn("__clause", clauseIdx)
+        val dropIdx = allClauses.zipWithIndex.collect {
+          case (WhenMatched(_, MergeDelete), i) => i }
+        val kept =
+          if (dropIdx.isEmpty) tagged
+          else tagged.filter(!F.col("__clause")
+            .isInCollection(dropIdx.map(Int.box)))
+        val out = kept.select(victims.columns.toIndexedSeq.map { c =>
+          val folded = allClauses.zipWithIndex.foldRight(
+            victims(c)) { case ((cl, i), rest) =>
+            cl.action match {
+              case MergeUpdate(as) if as.contains(c) =>
+                F.when(F.col("__clause") === i, as(c)).otherwise(rest)
+              case _ => rest
             }
-          val iIdx = notMatched.zipWithIndex.foldRight(
-            F.lit(-1): Column) { case ((cl, i), rest) =>
-            F.when(holds(cl.condition), F.lit(i)).otherwise(rest)
           }
-          val fired = unmatched.withColumn("__iclause", iIdx)
-            .filter(F.col("__iclause") >= 0)
-          if (targetSchema.nonEmpty) {
-            val unknown = notMatched.flatMap(_.assignments.keys).toSet --
-              targetSchema.fieldNames.toSet
-            require(unknown.isEmpty,
-              "merge INSERT assigns to unknown column(s): " +
-                unknown.mkString(","))
-          }
-          val cols =
-            if (targetSchema.nonEmpty) targetSchema.fields.toSeq
-            else {
-              // empty un-seeded table: the insert clauses define the
-              // shape — every assigned column, in first-clause order
-              val names = notMatched.flatMap(_.assignments.keys).distinct
-              require(names.nonEmpty, "mergeInto into an empty " +
-                "schemaless table needs at least one INSERT assignment")
-              names.map(n => StructField(n, NullType))
-            }
-          val nullRest: StructField => Column = f =>
-            if (targetSchema.nonEmpty) F.lit(null).cast(f.dataType)
-            else F.lit(null)
-          Some(fired.select(cols.map { f =>
-            val v = notMatched.zipWithIndex.foldRight(nullRest(f)) {
-              case ((cl, i), rest) =>
-                cl.assignments.get(f.name) match {
-                  case Some(e) => F.when(F.col("__iclause") === i, e)
-                    .otherwise(rest)
-                  case None => rest
-                }
-            }
-            (if (targetSchema.nonEmpty) v.cast(f.dataType) else v)
-              .as(f.name)
-          }: _*))
-        }
-      // type-safety: a rewrite must not change the recorded shape
-      rewritten.foreach { r =>
-        val before = readSnapshot(spark, root,
-          base.copy(files = affected)).schema
-        before.fields.zip(r.schema.fields).foreach { case (a, b) =>
+          folded.as(c)
+        }: _*)
+        victims.schema.fields.zip(out.schema.fields).foreach { case (a, b) =>
           require(a.dataType.catalogString == b.dataType.catalogString,
             s"merge assignment changes column '${a.name}' from " +
               s"${a.dataType.catalogString} to ${b.dataType.catalogString}")
         }
+        out
       }
-      val (insertsPinned, insertedRows) = inserts.map(Pin.count) match {
-        case Some((df, n)) if n > 0L => (Some(df), n)
-        case _ => (None, 0L)
-      }
-      val outFrames = rewritten.toSeq ++ insertsPinned
-      if (outFrames.isEmpty) {
-        // nothing fired: no-op — unless the ledger marker must land
-        // (the core adds it to an otherwise unchanged head)
-        if (batchId.isEmpty) Left(Merge(base, 0L, 0L))
-        else Right(Plan(cur => Some(cur), Merge(_, 0L, 0L)))
-      } else {
-        // the merge frame was read through base's DV overlay: the
-        // affected files are the read set
-        val out = outFrames.reduce(_ unionByName _)
-        val (newFiles, newStats) = w.data(spark, sizedRewrite(spark, root,
-          base, affected, out, insertsPinned.map(pinnedBytes).getOrElse(0L)),
-          base)
-        val affectedSet = affected.toSet
-        Right(Plan(cur => Some(cur.copy(
-          files = cur.files.filterNot(affectedSet) ++ newFiles,
-          stats = cur.stats ++ newStats)),
-          Merge(_, matchedRows, insertedRows), readSet = affected,
-          schema = Some(out.schema)))
+
+      RowWriter { base =>
+        // ---- victim discovery (pruned probes, driver-sized output)
+        // key candidates serve BOTH the matched probe and the insert
+        // anti-join: conservative superset of files that can hold a
+        // source key
+        val keyFiles =
+          if (base.files.isEmpty) Seq.empty
+          else keyPrune.map(candidateFiles(spark, root, base, _))
+            .getOrElse(base.files)
+        // the ANSI cardinality check, on the rows it actually covers:
+        // a violation is a target row MORE THAN ONE source row would
+        // actually MODIFY (fire a matched clause on) — duplicates
+        // matching nothing are legal inserts, and duplicate copies
+        // whose conditions are false on that row attempt nothing. The
+        // probe is bounded to dup-keyed target rows (semi-join), then
+        // counts FIRING source pairs per target row.
+        if (matched.nonEmpty && dupKeys.nonEmpty && keyFiles.nonEmpty) {
+          val dk = dupKeys.get
+          val scan = readSnapshot(spark, root, base.copy(files = keyFiles))
+          val dup = scan.join(dk, keyJoinCond(scan, dk), "left_semi")
+            .withColumn("__rowid", F.monotonically_increasing_id())
+          val firing = dup.join(src, keyJoinCond(dup, src), "inner")
+            .filter(anyHolds(matched))
+          require(firing.groupBy("__rowid").count()
+            .filter(F.col("count") > 1).isEmpty,
+            "mergeInto: more than one source row (duplicate key " +
+              "tuples) attempts to modify the same target row — which " +
+              "copy updates it would be nondeterministic (the ANSI " +
+              "MERGE cardinality violation); de-duplicate the source " +
+              "first")
+        }
+        val nmbsFiles =
+          if (notMatchedBySource.isEmpty || base.files.isEmpty) Seq.empty
+          else candidateFiles(spark, root, base,
+            anyRaw(notMatchedBySource))
+        def scanOf(files: Seq[String]): DataFrame =
+          readSnapshotImpl(spark, root, base.copy(files = files),
+            fileCol = Some(FileCol), posCol = None)
+        // per-file fired-row counts, matched and not-matched-by-source
+        // tagged apart — ONE pushed-down job over the union
+        val mProbe =
+          if (matched.isEmpty || keyFiles.isEmpty) None
+          else {
+            val scan = scanOf(keyFiles)
+            Some(scan
+              .join(src, keyJoinCond(scan, src), "inner")
+              .filter(anyHolds(matched))
+              .select(F.col(FileCol), F.lit(true).as("__m")))
+          }
+        val nProbe =
+          if (nmbsFiles.isEmpty) None
+          else {
+            val scan = scanOf(nmbsFiles)
+            Some(scan
+              .join(srcKeys, keyJoinCond(scan, srcKeys), "left_anti")
+              .filter(anyHolds(notMatchedBySource))
+              .select(F.col(FileCol), F.lit(false).as("__m")))
+          }
+        val perFile = (mProbe ++ nProbe).reduceOption(_ unionByName _)
+          .fold(Map.empty[String, Long])(u => perFileOf(u.groupBy(FileCol)
+            .agg(F.sum(F.when(F.col("__m"), 1L).otherwise(0L)))))
+        // ---- the inserts: source rows matching NO target key, first
+        // insert clause wins, unassigned columns NULL
+        val affected = base.files.filter(perFile.contains)
+        val targetSchema = recordedSchema(base).getOrElse(
+          if (base.files.isEmpty) StructType(Seq.empty)
+          else readSnapshot(spark, root, base.copy(files =
+            if (affected.nonEmpty) affected else base.files)).schema)
+        val inserts =
+          if (notMatched.isEmpty) None
+          else {
+            val unmatched =
+              if (base.files.isEmpty || keyFiles.isEmpty) src
+              else {
+                val keys = readSnapshot(spark, root,
+                  base.copy(files = keyFiles))
+                  .select(idCols.map(F.col): _*)
+                src.join(keys, keyJoinCond(keys, src), "left_anti")
+              }
+            val iIdx = notMatched.zipWithIndex.foldRight(
+              F.lit(-1): Column) { case ((cl, i), rest) =>
+              F.when(holds(cl.condition), F.lit(i)).otherwise(rest)
+            }
+            val fired = unmatched.withColumn("__iclause", iIdx)
+              .filter(F.col("__iclause") >= 0)
+            if (targetSchema.nonEmpty) {
+              val unknown = notMatched.flatMap(_.assignments.keys).toSet --
+                targetSchema.fieldNames.toSet
+              require(unknown.isEmpty,
+                "merge INSERT assigns to unknown column(s): " +
+                  unknown.mkString(","))
+            }
+            val cols =
+              if (targetSchema.nonEmpty) targetSchema.fields.toSeq
+              else {
+                // empty un-seeded table: the insert clauses define the
+                // shape — every assigned column, in first-clause order
+                val names = notMatched.flatMap(_.assignments.keys).distinct
+                require(names.nonEmpty, "mergeInto into an empty " +
+                  "schemaless table needs at least one INSERT assignment")
+                names.map(n => StructField(n, NullType))
+              }
+            val nullRest: StructField => Column = f =>
+              if (targetSchema.nonEmpty) F.lit(null).cast(f.dataType)
+              else F.lit(null)
+            Some(fired.select(cols.map { f =>
+              val v = notMatched.zipWithIndex.foldRight(nullRest(f)) {
+                case ((cl, i), rest) =>
+                  cl.assignments.get(f.name) match {
+                    case Some(e) => F.when(F.col("__iclause") === i, e)
+                      .otherwise(rest)
+                    case None => rest
+                  }
+              }
+              (if (targetSchema.nonEmpty) v.cast(f.dataType) else v)
+                .as(f.name)
+            }: _*))
+          }
+        val (insertsPinned, insertedRows) = inserts.map(Pin.count) match {
+          case Some((df, n)) if n > 0L => (Some(df), n)
+          case _ => (None, 0L)
+        }
+        // the merge frame reads through base's DV overlay, and its
+        // schema folds into the head's as a batch's would
+        Probe(perFile, Rewrite(mergeFrame, insertsPinned, foldSchema = true),
+          (s, matchedRows) => Merge(s, matchedRows, insertedRows))
       }
     }
   }
@@ -2827,70 +2889,6 @@ object ManifestTable {
         if (boundary.isEmpty) metaRows
         else metaRows + readSnapshot(spark, root, snap.copy(files = boundary))
           .filter(p).count()
-    }
-  }
-
-  /** The shared copy-on-write engine: locate the files containing
-    * victim rows (one pushed-down job that also prices the report),
-    * rewrite ONLY those files through `rewrite`, and commit through
-    * [[transact]] under conflict rule RESTART, the affected files as
-    * the read set.
-    * The victims' prune bounds even the VICTIM SCAN to the manifest's
-    * candidate files — the affected set is provably inside it, so
-    * skipped files need neither scanning nor rewriting.
-    * `added` rows (the [[overwriteWhere]] reload) write ONCE, on the
-    * first attempt — a restart reuses their files — and land after
-    * the rewritten ones, schema merged as an append's, in the same
-    * commit; with no victim the op is a plain ledgered append of
-    * them. */
-  private def rewriteWith(spark: SparkSession, root: String, op: String,
-                          v: Victims, rewrite: DataFrame => DataFrame,
-                          beforeCommit: () => Unit,
-                          added: Option[DataFrame] = None): Delete = {
-    var addedOut: Option[(Seq[String], Map[String, String])] = None
-    transact(root, op, Restart, beforeCommit = beforeCommit) { (head, w) =>
-      val base = present(root, head)
-      val (addedFiles, addedStats) = added.fold(
-        (Seq.empty[String], Map.empty[String, String])) { df =>
-        addedOut.getOrElse {
-          addedOut = Some(w.data(spark, df, base))
-          addedOut.get
-        }
-      }
-      val scanFiles =
-        v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
-      val perFile =
-        if (scanFiles.isEmpty) Array.empty[(String, Long)]
-        else {
-          // the provenance column materializes AT THE SCAN, before any
-          // join/shuffle the victim filter may introduce — and the scan
-          // overlays any deletion vectors, so already-MoR-deleted rows
-          // are never victims (or survivors) of a copy-on-write pass
-          val scan = readSnapshotImpl(spark, root,
-            base.copy(files = scanFiles), fileCol = Some("__file"),
-            posCol = None)
-          // one pushed-down job: affected file -> victim count
-          v.hits(scan).groupBy("__file").count()
-            .collect().map(r => (r.getString(0), r.getLong(1)))
-        }
-      val hitRel = perFile.iterator.map(x => relPathOf(x._1)).toSet
-      val affected = base.files.filter(hitRel)
-      val removed = perFile.map(_._2).sum
-      if (affected.isEmpty && added.isEmpty) Left(Delete(base, 0L))
-      else {
-        // rewrite ONLY the affected files — through the mapped
-        // projection, so rewritten files carry the CURRENT names
-        val (newFiles, newStats) =
-          if (affected.isEmpty) (Seq.empty[String], Map.empty[String, String])
-          else w.data(spark, sizedRewrite(spark, root, base, affected,
-            rewrite(readSnapshot(spark, root, base.copy(files = affected)))),
-            base)
-        val affectedSet = affected.toSet
-        Right(Plan(cur => Some(cur.copy(
-          files = cur.files.filterNot(affectedSet) ++ newFiles ++ addedFiles,
-          stats = cur.stats ++ newStats ++ addedStats)), Delete(_, removed),
-          readSet = affected, schema = added.map(_.schema)))
-      }
     }
   }
 

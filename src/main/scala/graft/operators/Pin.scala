@@ -34,11 +34,33 @@ private[graft] object Pin {
 
   private type Rdd = org.apache.spark.rdd.RDD[InternalRow]
 
+  /** The open [[scoped]] blocks of each thread, innermost first. */
+  private val scopes = new ThreadLocal[List[scala.collection.mutable.Buffer[Rdd]]] {
+    override def initialValue(): List[scala.collection.mutable.Buffer[Rdd]] = Nil
+  }
+
+  /** Run `body`, then RELEASE every frame this thread pinned inside it:
+    * the pinned blocks leave executor memory when `body` ends, however
+    * it ends, instead of whenever the RDD is garbage-collected. For a
+    * body none of whose pinned frames outlive it (a writer returning
+    * only its committed snapshot). Scopes nest; a pin belongs to the
+    * innermost one. */
+  def scoped[T](body: => T): T = {
+    val mine = scala.collection.mutable.ArrayBuffer.empty[Rdd]
+    scopes.set(mine :: scopes.get)
+    try body
+    finally {
+      scopes.set(scopes.get.tail)
+      mine.foreach(_.unpersist(blocking = false))
+    }
+  }
+
   private def pinnedRdd(df: DataFrame): Rdd = {
     // rows are reused buffers — copy before caching, exactly as
     // Dataset.localCheckpoint does
     val rdd = df.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
+    scopes.get.headOption.foreach(_ += rdd)
     rdd
   }
 
