@@ -216,10 +216,10 @@ private[graft] object ExtLayout {
     // commit deletion-vector sidecars WITHOUT rewriting any data file
     // (the file list is asserted identical), repeat deletes union
     // into one superseding sidecar per file, a post-delete append
-    // lands untouched, and the read-back goes through the V1 catalog
-    // door — grading the injected overlay rule (GraftMorReads), the
-    // broadcast anti-join on parquet row position, and the DV-exact
-    // row accounting in one hash.
+    // lands untouched, and the read-back goes through the catalog
+    // name — grading the catalog door's DV overlay, the broadcast
+    // anti-join on parquet row position, and the DV-exact row
+    // accounting in one hash.
     "x_manifest_delete_mor" -> ((s, dir) => {
       val root = layoutDir(dir, "manifest_mor")
       deleteRec(new java.io.File(root))
@@ -427,15 +427,14 @@ private[graft] object ExtLayout {
         s"FROM graft_manifest('$root', 1) " +
         "WHERE doc_id >= 40 AND doc_id < 60 " +
         // ...and a FOURTH way: the ANSI time-travel SYNTAX on the
-        // catalog entry (parse-time re-route to the same TVF pin)
+        // catalog entry (the catalog door's time-travel loadTable)
         "UNION ALL " +
         "SELECT doc_id, lang, source, n_chars, 'v1sql' AS ver " +
         "FROM corpus_manifest_cat VERSION AS OF 1 " +
         "WHERE doc_id >= 40 AND doc_id < 60 " +
-        // ...and the DSv2 door (r19): head + native v2 time travel
-        // through graft.default.* — NO parse-time re-route; the v2
-        // relation swaps to the same pruned V1 scan, so these arms
-        // must hash-equal their V1 twins
+        // ...and the graft.default.* alias (r19): head + native v2
+        // time travel; the v2 relation swaps to the same pruned V1
+        // scan, so these arms must hash-equal their twins
         "UNION ALL " +
         "SELECT doc_id, lang, source, n_chars, 'v2' AS ver " +
         "FROM graft.default.corpus_manifest_cat " +
@@ -563,10 +562,10 @@ private[graft] object ExtLayout {
           .select(F.col("doc_id"), F.col("source"),
             F.col("n_chars").cast("int").as("n_chars")))
       // EXPLICIT SQL widening (r20): ALTER COLUMN … TYPE BIGINT
-      // re-routes at parse time to the ledger widen (metadata-only;
-      // the int files upcast at read) and refreshes the catalog
-      // entry in place — graded against the append-driven widening
-      // arm below and the post-compact read-back, all in one hash
+      // through the catalog door to the ledger widen (metadata-only;
+      // the int files upcast at read) — graded against the
+      // append-driven widening arm below and the post-compact
+      // read-back, all in one hash
       graft.api.Graft(s, dir)
         .registerManifest("widen_corpus", root, persistent = true)
       s.sql("ALTER TABLE widen_corpus ALTER COLUMN n_chars TYPE BIGINT")
@@ -881,9 +880,9 @@ private[graft] object ExtLayout {
     // carries a column the target lacks ADDS it through the schema
     // ledger inside the same statement — matched rows take the
     // source value, inserted rows carry it, every untouched row
-    // reads NULL, and the read-back goes through the CATALOG entry,
-    // so the in-place registration refresh is graded too (a stale
-    // entry would fail the SELECT, a dropped column the hash).
+    // reads NULL, and the read-back goes through the CATALOG name,
+    // which must serve the evolved schema at the next statement (a
+    // stale schema would fail the SELECT, a dropped column the hash).
     "x_manifest_sql_evolve" -> ((s, dir) => {
       val root = layoutDir(dir, "manifest_sqlevo")
       deleteRec(new java.io.File(root))

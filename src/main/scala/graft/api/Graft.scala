@@ -81,11 +81,11 @@ final case class Graft(spark: SparkSession, sfDir: String) {
     *
     * `persistent = true` is the metastore mode ([[enableSql]]'s
     * twin): a real catalog entry (`USING graft-manifest`) that
-    * survives the JVM — every session resolving it pins the
-    * then-current head; schema-changing commits need a re-register
-    * (the resolution fails loudly until then). Persistent mode
-    * registers heads only — time travel stays a session-level pin
-    * (`versionAsOf` with the default temp-view mode). A persistent
+    * survives the JVM — through [[graft.catalog.GraftCatalog]] every
+    * statement reads the then-current head, schema changes included
+    * (no re-register). Persistent mode registers heads only — time
+    * travel is a statement-level pin (`VERSION AS OF`, or
+    * `versionAsOf` with the default temp-view mode). A persistent
     * RE-registration publishes under a temp name and swaps via
     * drop+rename, so the name's unavailability window is two catalog
     * statements — not zero: session-catalog DDL has no transactional
@@ -99,9 +99,9 @@ final case class Graft(spark: SparkSession, sfDir: String) {
         "persistent manifest registration pins the HEAD — time travel " +
           "is a session-level pin (use the default temp-view mode)")
       graft.sources.ManifestSql.registerPersistent(spark, name, root)
-      // every persistent registration is also v2-addressable as
-      // `graft.<db>.<name>` — install the DSv2 window (idempotent
-      // conf set; the catalog loads lazily on first reference)
+      // catalog names resolve through graft's catalog (`db.name` and
+      // the `graft.db.name` alias) — idempotent, never over a user's
+      // own binding
       graft.catalog.GraftCatalog.install(spark)
     } else graft.sources.ManifestSql.register(spark, name, root, versionAsOf)
 

@@ -4,212 +4,191 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, graftbridge}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException,
-  NoSuchTableException}
+import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
+import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.v2.V2SessionCatalog
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.ManifestTable
-import graft.plans.ManifestSqlAlter
 import graft.sources.ManifestSql
 
-/** The DSv2 `TableCatalog` door onto graft-manifest tables — the
-  * structural alternative to the parse-time re-routes the V1
-  * session-catalog path needs (`GraftSqlParser`): under a v2 catalog,
-  * Spark's OWN analyzer serves time travel (`loadTable(ident,
-  * version/timestamp)` overloads), ALTER (RENAME/DROP COLUMN included
-  * — the statements that are v2-only and die in `ResolveSessionCatalog`
-  * for V1 targets), and INSERT (a [[org.apache.spark.sql.connector
-  * .write.V1Write]] onto the ledgered commit) with no injected
-  * string rewriting at all.
+/** The one SQL catalog door onto graft-manifest tables — the
+  * `DelegatingCatalogExtension` pattern (Delta's `DeltaCatalog`),
+  * bound as the SESSION catalog: `spark.sql.catalog.spark_catalog=
+  * graft.catalog.GraftCatalog` ([[graft.api.Sessions.local]] sets it
+  * at build time, [[GraftCatalog.install]] at runtime). A `USING
+  * graft-manifest` entry loads as a [[GraftTable]]; every other name
+  * is the built-in catalog's, unchanged (a parquet table still loads
+  * as its `V1Table` and keeps every V1 command). So `db.t` is a DSv2
+  * table, and Spark's OWN analyzer serves its time travel
+  * (`loadTable(ident, version/timestamp)`), ALTER ([[alterTable]]),
+  * TRUNCATE ([[GraftTable.truncateTable]]), INSERT (a V1Write onto
+  * the ledgered commit) and streaming (the V1 fallback) — no
+  * parse-time rewrite and no post-hoc rule per verb.
   *
-  * Install: `spark.sql.catalog.graft=graft.catalog.GraftCatalog`
-  * (settable at runtime before first use — [[GraftCatalog.install]]).
-  * Then `graft.db.t` addresses the SAME table `db.t` names on the V1
-  * path: this catalog is a v2 WINDOW onto the session catalog's
-  * `USING graft-manifest` entries (namespaces = databases), not a
-  * second metadata store — both doors always see one table. The V1
-  * path keeps working unchanged; migration is incremental by
-  * construction.
+  * The same class bound under another name (`spark.sql.catalog.graft`,
+  * the `graft.db.t` alias) is a window onto the same entries that
+  * serves manifest entries only: other names are NoSuchTable there.
   *
   * Reads: [[GraftTable]] carries no scan machinery of its own — the
   * injected [[graft.plans.GraftDsv2Reads]] resolution rule replaces
-  * the analyzed `DataSourceV2Relation` with the SAME pruned,
-  * snapshot-pinned V1 relation every other door serves
-  * ([[ManifestSql.relation]]), exprIds re-stamped so parent operators
-  * keep resolving (the public DeltaAnalysis pattern). One scan
-  * implementation for the engine — stats pruning, Bloom skipping, and
-  * the vectorized parquet path are shared, not duplicated. */
-class GraftCatalog extends TableCatalog with SupportsNamespaces
+  * the analyzed `DataSourceV2Relation` with the pruned V1 relation
+  * ([[ManifestSql.relation]]) of the head at resolution time, so a
+  * catalog name reads the head at each statement, renamed columns
+  * read through their chain and deletion vectors are overlaid. The
+  * entry's stored schema drives nothing: a Scala-side schema commit
+  * needs no re-register. */
+class GraftCatalog extends DelegatingCatalogExtension
   with StagingTableCatalog {
 
-  private var catalogName: String = "graft"
+  private var catalogName: String = GraftCatalog.SessionCatalogName
 
+  /** Bound under any name but `spark_catalog`, Spark hands this no
+    * delegate — the alias then delegates namespaces to a built-in
+    * catalog over the same session catalog, and serves manifest
+    * entries only. */
   override def initialize(name: String,
                           options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
+    if (isAlias)
+      delegate = new V2SessionCatalog(SparkSession.active.sessionState.catalog)
   }
 
   override def name(): String = catalogName
+
+  private def isAlias: Boolean =
+    !catalogName.equalsIgnoreCase(GraftCatalog.SessionCatalogName)
 
   private def session: SparkSession = SparkSession.active
 
   private def sessionCatalog = session.sessionState.catalog
 
-  private def v1Ident(ident: Identifier): TableIdentifier = {
+  private def v1Ident(ident: Identifier): TableIdentifier =
     ident.namespace() match {
       case Array() => TableIdentifier(ident.name(),
         Some(sessionCatalog.getCurrentDatabase))
       case Array(db) => TableIdentifier(ident.name(), Some(db))
-      case other => throw new NoSuchTableException(
-        Array(catalogName) ++ other :+ ident.name())
+      case _ => throw missing(ident)
     }
-  }
 
-  /** A resolved manifest behind a graft identifier: the table root,
-    * plus whether the registration is RENAME-CHAINED (`<name>_store`
-    * manifest table + coalesce VIEW `<name>` — what the V1 door's
-    * rename epilogue leaves). A chained table READS through this door
-    * (the relation applies the colmap projection itself); writes and
-    * ALTERs refuse with the store named, mirroring the V1 read-only
-    * rename-chain contract. */
-  private final case class Resolved(root: String, chained: Boolean,
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable)
+  private def missing(ident: Identifier) = new NoSuchTableException(
+    Array(catalogName) ++ ident.namespace() :+ ident.name())
 
-  /** Resolve a graft identifier to its manifest root, or a loud
-    * NoSuchTable — this catalog only ever serves `USING
-    * graft-manifest` entries (directly, or through their
-    * rename-chain `<name>_store` sibling); other providers keep
-    * resolving through their own doors. */
-  private def resolve(ident: Identifier): Resolved = {
-    val v1 = v1Ident(ident)
-    def missing = new NoSuchTableException(
-      Array(catalogName) ++ ident.namespace() :+ ident.name())
-    def resolved(meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-                 chained: Boolean) =
-      Resolved(ManifestSql.rootOfEntry(meta), chained, meta)
-    ManifestSql.manifestEntryOf(session, v1)
-      .map(resolved(_, chained = false))
-      .orElse {
-        // the rename-chain shape: `name` is a VIEW over `name_store`
-        val viewShaped = sessionCatalog.tableExists(v1) &&
-          !sessionCatalog.isTempView(v1) &&
-          sessionCatalog.getTableMetadata(v1).tableType ==
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
-        if (!viewShaped) None
-        else ManifestSql.manifestEntryOf(session,
-          v1.copy(table = v1.table + "_store")).map(resolved(_, chained = true))
-      }
-      .getOrElse(throw missing)
-  }
+  private def fullName(ident: Identifier): String =
+    (Seq(catalogName) ++ ident.namespace() :+ ident.name()).mkString(".")
 
-  override def loadTable(ident: Identifier): Table = {
-    val r = resolve(ident)
-    GraftTable(session, fullName(ident), r.root, None,
-      readOnlyChain = r.chained, v1Meta = Some(r.meta))
-  }
+  /** What `ident` names: Right(the `USING graft-manifest` entry), or
+    * Left(the built-in catalog's table) for any other name — one
+    * metadata read either way. The alias knows manifest entries only. */
+  private def lookup(ident: Identifier): Either[Table, CatalogTable] =
+    if (isAlias)
+      Right(ManifestSql.manifestEntryOf(session, v1Ident(ident))
+        .getOrElse(throw missing(ident)))
+    else {
+      val t = super.loadTable(ident)
+      graftbridge.v1EntryOf(t).filter(ManifestSql.isManifestEntry)
+        .toRight(t)
+    }
 
-  /** `VERSION AS OF <n>` — served natively by the v2 resolution
-    * path; no parse-time re-route. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val r = resolve(ident)
-    val v = scala.util.Try(version.trim.toInt).getOrElse(
-      throw new IllegalArgumentException(
-        s"VERSION AS OF on ${fullName(ident)} takes an integer " +
-          s"manifest version; got '$version'"))
-    GraftTable(session, fullName(ident), r.root, Some(v),
-      readOnlyChain = r.chained, v1Meta = Some(r.meta))
-  }
+  /** The manifest entry behind `ident`, if it names one. */
+  private def manifestEntry(ident: Identifier): Option[CatalogTable] =
+    try lookup(ident).toOption
+    catch { case _: NoSuchTableException => None }
+
+  private def graftTable(ident: Identifier, entry: CatalogTable,
+                         versionAsOf: Option[Int]): GraftTable =
+    GraftTable(session, fullName(ident), entry, versionAsOf)
+
+  override def loadTable(ident: Identifier): Table =
+    lookup(ident).fold(identity, graftTable(ident, _, None))
+
+  /** `VERSION AS OF <n>` — served natively by the v2 resolution path. */
+  override def loadTable(ident: Identifier, version: String): Table =
+    lookup(ident) match {
+      case Left(_) => super.loadTable(ident, version)
+      case Right(entry) =>
+        val v = scala.util.Try(version.trim.toInt).getOrElse(
+          throw new IllegalArgumentException(
+            s"VERSION AS OF on ${fullName(ident)} takes an integer " +
+              s"manifest version; got '$version'"))
+        graftTable(ident, entry, Some(v))
+    }
 
   /** `TIMESTAMP AS OF <ts>` — `timestamp` arrives in MICROseconds
     * since epoch, already parsed by the analyzer in the session
     * timezone; resolved by commit mtime ([[ManifestTable.versionAt]],
-    * the Delta convention) AT RESOLUTION time, like every other
-    * registration-free pin. */
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val r = resolve(ident)
-    val millis = Math.floorDiv(timestamp, 1000L)
-    val v = ManifestTable.versionAt(r.root, millis).getOrElse(
-      throw new IllegalArgumentException(
-        s"TIMESTAMP AS OF predates every surviving version of " +
-          fullName(ident)))
-    GraftTable(session, fullName(ident), r.root, Some(v),
-      readOnlyChain = r.chained, v1Meta = Some(r.meta))
-  }
-
-  private def fullName(ident: Identifier): String =
-    (Seq(catalogName) ++ ident.namespace() :+ ident.name()).mkString(".")
+    * the Delta convention) at resolution time. */
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
+    lookup(ident) match {
+      case Left(_) => super.loadTable(ident, timestamp)
+      case Right(entry) =>
+        val v = ManifestTable.versionAt(ManifestSql.rootOfEntry(entry),
+          Math.floorDiv(timestamp, 1000L)).getOrElse(
+          throw new IllegalArgumentException(
+            "TIMESTAMP AS OF predates every surviving version of " +
+              fullName(ident)))
+        graftTable(ident, entry, Some(v))
+    }
 
   /** Only a definitive "no such table" answers false — a transient
     * metastore failure must propagate, not read as "absent" (which
     * could green-light a CREATE over a live table). */
   override def tableExists(ident: Identifier): Boolean =
-    try { resolve(ident); true }
-    catch { case _: NoSuchTableException => false }
+    if (isAlias) manifestEntry(ident).isDefined else super.tableExists(ident)
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    val db = namespace match {
-      case Array() => sessionCatalog.getCurrentDatabase
-      case Array(d) => d
-      case other => throw new NoSuchNamespaceException(
-        Array(catalogName) ++ other)
-    }
-    if (!sessionCatalog.databaseExists(db))
-      throw new NoSuchNamespaceException(Array(catalogName, db))
-    sessionCatalog.listTables(db).filter { t =>
+  override def listTables(namespace: Array[String]): Array[Identifier] =
+    if (!isAlias) super.listTables(namespace)
+    else super.listTables(namespace).filter { t =>
       scala.util.Try(ManifestSql.isManifestEntry(
-        sessionCatalog.getTableMetadata(t))).getOrElse(false)
-    }.map(t => Identifier.of(Array(db), t.table)).toArray
-  }
+        sessionCatalog.getTableMetadata(v1Ident(t)))).getOrElse(false)
+    }
 
-  /** CREATE TABLE graft.db.t (cols) — requires a `path`/`location`
-    * property. A manifest already there registers as-is (schemas must
-    * agree is the reader's business — the recorded schema wins); an
-    * absent one is INITIALIZED with the declared columns recorded via
-    * an empty ledgered overwrite, honoring `statCols`/`bloomCols`/
-    * `bloomCapacity` properties. The entry lands in the session
-    * catalog (`USING graft-manifest`), so the V1 door sees it too. */
-  override def createTable(ident: Identifier, schema: StructType,
+  /** A CREATE's properties, its `OPTIONS (…)` under their own keys
+    * (`statCols`, `bloomCols`, `bloomCapacity`, `path`) as the V1
+    * command passes them. */
+  private def propsOf(properties: util.Map[String, String])
+      : Map[String, String] =
+    properties.asScala.toMap.map { case (k, v) =>
+      k.stripPrefix(TableCatalog.OPTION_PREFIX) -> v }
+
+  private def createsManifest(properties: util.Map[String, String]): Boolean =
+    isAlias || Option(properties.get(TableCatalog.PROP_PROVIDER))
+      .exists(_.equalsIgnoreCase(ManifestSql.ManifestProvider))
+
+  override def createTable(ident: Identifier, columns: Array[Column],
                            partitions: Array[Transform],
-                           properties: util.Map[String, String]): Table = {
+                           properties: util.Map[String, String]): Table =
+    if (!createsManifest(properties))
+      super.createTable(ident, columns, partitions, properties)
+    else createManifest(ident, StructType(columns.map(c =>
+      StructField(c.name(), c.dataType(), c.nullable()))),
+      partitions, properties)
+
+  /** CREATE TABLE … (cols) for a manifest table — requires a
+    * `path`/`location` property. [[ManifestSql.createDeclared]] is the
+    * one init path both doors share (this one and the V1 `CREATE TABLE
+    * … USING graft-manifest` through [[graft.sources.ManifestSource]]);
+    * the entry lands in the session catalog (`USING graft-manifest`). */
+  private def createManifest(ident: Identifier, schema: StructType,
+                             partitions: Array[Transform],
+                             properties: util.Map[String, String]): Table = {
     require(partitions.isEmpty,
       "graft-manifest does not partition by directory — cluster with " +
         "GRAFT COMPACT ... CLUSTER BY instead")
-    val props = properties.asScala
+    val props = propsOf(properties)
     val root = props.get("path").orElse(props.get("location")).getOrElse(
       throw new IllegalArgumentException(
         s"CREATE TABLE ${fullName(ident)} needs a 'path' (or " +
           "'location') property naming the manifest root"))
-    ManifestTable.latest(root) match {
-      case None =>
-        ManifestSql.declarationsOf(props).init(root)
-        // the schema seed — not a user write, so not through the
-        // whole-table write owner
-        if (schema.nonEmpty)
-          ManifestTable.overwrite(session, root, session.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            StructType(schema.fields.map(_.copy(nullable = true)))))
-      case Some(snap) if schema.nonEmpty =>
-        // registering an existing manifest: the RECORDED schema wins
-        // (documented contract) — but a silently-ignored declaration
-        // surprises; say so when they differ
-        val recorded = ManifestTable.recordedSchemaOf(session, root, snap)
-        val declared =
-          StructType(schema.fields.map(_.copy(nullable = true)))
-        if (recorded != declared)
-          graft.util.Log.warn(
-            s"CREATE TABLE ${fullName(ident)}: the manifest at $root " +
-              s"already exists; its recorded schema " +
-              s"(${recorded.simpleString}) wins over the declared " +
-              s"column list (${declared.simpleString})")
-      case _ => ()
-    }
-    val v1 = v1Ident(ident)
-    ManifestSql.registerPersistent(session, v1.unquotedString, root)
+    ManifestSql.createDeclared(session, root, schema,
+      ManifestSql.declarationsOf(props), fullName(ident))
+    ManifestSql.registerPersistent(session, v1Ident(ident).unquotedString,
+      root)
     loadTable(ident)
   }
 
@@ -218,37 +197,36 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // in commitStagedChanges, so a REPLACE never has a window where the
   // table is absent (the non-staged drop-then-create shape): the data
   // swap is ONE ledgered overwrite at the root, and the catalog entry
-  // is refreshed (same root) or repointed (one alterTable) — never
+  // is kept (same root) or repointed (one alterTable) — never
   // dropped. A plain REPLACE TABLE (no AS SELECT) that writes nothing
   // commits a ledgered EMPTY overwrite of the declared schema, per
   // SQL semantics. abort: a manifest this statement inited is deleted
   // (nothing referenced it); a committed data overwrite stays — it is
-  // a versioned commit, history intact — and is WARNed about.
+  // a versioned commit, history intact — and is WARNed about. Bound
+  // as `spark_catalog`, a `USING graft-manifest` CTAS takes Spark's V1
+  // path (the provider's write arm), so only the alias stages.
 
-  private def stagedTable(ident: Identifier,
-                          info: org.apache.spark.sql.connector.catalog
-                            .TableInfo,
+  private def stagedTable(ident: Identifier, info: TableInfo,
                           replace: Boolean, orCreate: Boolean)
       : StagedTable = {
+    if (!createsManifest(info.properties()))
+      throw new UnsupportedOperationException(
+        s"${fullName(ident)}: the session catalog stages graft-manifest " +
+          "tables only; CREATE/REPLACE … AS SELECT for provider " +
+          s"'${info.properties().get(TableCatalog.PROP_PROVIDER)}' " +
+          "is not supported here")
     require(info.partitions().isEmpty,
       "graft-manifest does not partition by directory — cluster with " +
         "GRAFT COMPACT ... CLUSTER BY instead")
-    val props = info.properties().asScala
-    val existing = scala.util.Try(resolve(ident)).toOption
+    val props = propsOf(info.properties())
+    val existing = manifestEntry(ident).map(ManifestSql.rootOfEntry)
     if (!replace && existing.isDefined)
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(
           Array(catalogName) ++ ident.namespace() :+ ident.name())
-    if (replace && !orCreate && existing.isEmpty)
-      throw new NoSuchTableException(
-        Array(catalogName) ++ ident.namespace() :+ ident.name())
-    existing.filter(_.chained).foreach(_ =>
-      throw new UnsupportedOperationException(
-        s"${fullName(ident)} is a rename-chained registration — " +
-          s"replace its ${ident.name()}_store, or drop both objects " +
-          "first"))
+    if (replace && !orCreate && existing.isEmpty) throw missing(ident)
     val root = props.get("path").orElse(props.get("location"))
-      .orElse(existing.map(_.root)).getOrElse(
+      .orElse(existing).getOrElse(
         throw new IllegalArgumentException(
           s"CREATE/REPLACE TABLE ${fullName(ident)} needs a 'path' " +
             "(or LOCATION) naming the manifest root"))
@@ -261,9 +239,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       // parquet dataset) refuses loudly: aborting such a statement
       // would otherwise have to guess which of the directory's
       // contents it owns.
-      val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(session.sparkContext.hadoopConfiguration)
-      require(!fs.exists(p) || fs.listStatus(p).isEmpty,
+      require(ManifestSql.absentOrEmpty(session, root),
         s"CREATE/REPLACE TABLE ${fullName(ident)}: $root exists, is " +
           "not empty, and carries no manifest — refusing to stage a " +
           "table into it (an aborted statement could not clean up " +
@@ -276,193 +252,165 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       replaceSemantics = replace, freshlyInited = freshlyInited)
   }
 
-  override def stageCreate(ident: Identifier,
-      info: org.apache.spark.sql.connector.catalog.TableInfo)
-      : StagedTable = stagedTable(ident, info, replace = false,
-    orCreate = false)
+  override def stageCreate(ident: Identifier, info: TableInfo): StagedTable =
+    stagedTable(ident, info, replace = false, orCreate = false)
 
-  override def stageReplace(ident: Identifier,
-      info: org.apache.spark.sql.connector.catalog.TableInfo)
-      : StagedTable = stagedTable(ident, info, replace = true,
-    orCreate = false)
+  override def stageReplace(ident: Identifier, info: TableInfo): StagedTable =
+    stagedTable(ident, info, replace = true, orCreate = false)
 
   override def stageCreateOrReplace(ident: Identifier,
-      info: org.apache.spark.sql.connector.catalog.TableInfo)
-      : StagedTable = stagedTable(ident, info, replace = true,
-    orCreate = true)
+                                    info: TableInfo): StagedTable =
+    stagedTable(ident, info, replace = true, orCreate = true)
 
   /** The publish half of a staged CTAS/REPLACE: the catalog entry is
-    * created fresh, schema-refreshed in place (same root), or
-    * repointed in ONE alterTable (new root) — the table name is never
-    * absent mid-statement. */
+    * created fresh, left in place (same root — reads resolve the head
+    * anyway), or repointed in ONE alterTable (new root) — the table
+    * name is never absent mid-statement. */
   private[catalog] def publishStaged(ident: Identifier,
                                      root: String): Unit = {
     val v1 = v1Ident(ident)
-    val existing = scala.util.Try(resolve(ident)).toOption
-    existing match {
+    manifestEntry(ident) match {
       case None =>
         ManifestSql.registerPersistent(session, v1.unquotedString, root)
-      case Some(r) =>
-        val snap = ManifestTable.latest(root).getOrElse(
-          throw new IllegalStateException(s"no manifest at $root"))
-        val physical = ManifestSql.physicalSchemaOf(session, root, snap)
-        val meta = sessionCatalog.getTableMetadata(v1)
-        if (r.root == root) {
-          if (meta.dataSchema != physical)
-            sessionCatalog.alterTableDataSchema(v1, physical)
-        } else {
-          // repoint storage + schema in one catalog operation
-          sessionCatalog.alterTable(meta.copy(
-            schema = physical,
-            storage = meta.storage.copy(
-              locationUri = Some(new org.apache.hadoop.fs.Path(root)
-                .toUri),
-              properties = meta.storage.properties + ("path" -> root))))
-        }
-        sessionCatalog.refreshTable(v1)
+      case Some(meta) if ManifestSql.rootOfEntry(meta) != root =>
+        sessionCatalog.alterTable(meta.copy(
+          storage = meta.storage.copy(
+            locationUri = Some(new org.apache.hadoop.fs.Path(root).toUri),
+            properties = meta.storage.properties + ("path" -> root))))
+      case Some(_) => ()
     }
   }
 
-  /** ALTER under v2 — the statements that needed parse-time
-    * re-routing on the V1 path resolve natively here; each change
-    * routes through the SAME ledger commands the V1 door uses (one
-    * owner per semantic). */
+  /** ALTER on a manifest entry: each change is one schema-ledger op
+    * (metadata-only; existing files read through the new shape).
+    * User-written names resolve against the recorded schema under the
+    * session's case sensitivity; a rename may not collide with
+    * another column under it; a multi-column DROP validates as a
+    * whole (missing columns without IF EXISTS, dropping every column)
+    * before the first commit. Top-level columns only. */
   override def alterTable(ident: Identifier,
-                          changes: TableChange*): Table = {
-    val v1 = v1Ident(ident)
-    val r = resolve(ident) // existence + provider check
-    require(!r.chained,
-      s"${fullName(ident)} is a rename-chained registration (a " +
-        s"coalesce VIEW over ${ident.name()}_store) — its fixed " +
-        s"SELECT list cannot be altered; ALTER " +
-        s"${ident.name()}_store instead")
-    changes.foreach {
-      case add: TableChange.AddColumn =>
-        require(add.fieldNames().length == 1,
-          "manifest ALTER adds top-level columns only; " +
-            s"'${add.fieldNames().mkString(".")}' is nested")
-        ManifestSqlAlter.AddColumnsCommand(v1, Seq(
-          org.apache.spark.sql.types.StructField(
-            add.fieldNames().head, add.dataType(),
-            nullable = true))).run(session)
+                          changes: TableChange*): Table =
+    manifestEntry(ident) match {
+      case None => super.alterTable(ident, changes: _*)
+      case Some(entry) =>
+        alterManifest(fullName(ident), ManifestSql.rootOfEntry(entry),
+          changes)
+        loadTable(ident)
+    }
+
+  private def alterManifest(name: String, root: String,
+                            changes: Seq[TableChange]): Unit = {
+    val recorded = ManifestTable.latest(root)
+      .map(ManifestTable.recordedSchemaOf(session, root, _))
+      .getOrElse(throw new IllegalStateException(s"no manifest at $root"))
+    val resolver = session.sessionState.conf.resolver
+    def resolveCol(c: String): Option[String] =
+      recorded.fieldNames.find(resolver(_, c))
+    def present(c: String, verb: String): String = resolveCol(c).getOrElse(
+      throw new IllegalArgumentException(s"no column '$c' to $verb on $name"))
+    def topLevel(names: Array[String], verb: String): String = {
+      require(names.length == 1,
+        s"manifest ALTER $verb top-level columns only; " +
+          s"'${names.mkString(".")}' is nested")
+      names.head
+    }
+    // resolve and validate every change before the first commit
+    val added = changes.collect { case a: TableChange.AddColumn =>
+      StructField(topLevel(a.fieldNames(), "adds"), a.dataType(),
+        nullable = true)
+    }
+    val ops: Seq[() => Unit] = changes.collect {
       case rn: TableChange.RenameColumn =>
-        require(rn.fieldNames().length == 1,
-          "manifest ALTER renames top-level columns only; " +
-            s"'${rn.fieldNames().mkString(".")}' is nested")
-        ManifestSqlAlter.RenameColumnCommand(v1,
-          rn.fieldNames().head, rn.newName()).run(session)
-      case del: TableChange.DeleteColumn =>
-        require(del.fieldNames().length == 1,
-          "manifest ALTER drops top-level columns only; " +
-            s"'${del.fieldNames().mkString(".")}' is nested")
-        ManifestSqlAlter.DropColumnsCommand(v1,
-          Seq(del.fieldNames().head), del.ifExists()).run(session)
+        val from = present(topLevel(rn.fieldNames(), "renames"), "rename")
+        // renaming a -> B beside a column b would leave every
+        // unqualified reference ambiguous under case-insensitive
+        // resolution (a case-only rename of the SAME column is fine)
+        resolveCol(rn.newName()).filter(_ != from).foreach(c =>
+          throw new IllegalArgumentException(
+            s"cannot rename '$from' to '${rn.newName()}' on $name — it " +
+              s"collides with column '$c' under the session's " +
+              "case-insensitive resolution"))
+        () => { ManifestTable.renameColumn(session, root, from,
+          rn.newName()); () }
       case upd: TableChange.UpdateColumnType =>
-        require(upd.fieldNames().length == 1,
-          "manifest ALTER COLUMN TYPE changes top-level columns only; " +
-            s"'${upd.fieldNames().mkString(".")}' is nested")
-        ManifestSqlAlter.WidenColumnCommand(v1,
-          upd.fieldNames().head, upd.newDataType()).run(session)
+        val col = present(topLevel(upd.fieldNames(), "changes the type of"),
+          "widen")
+        () => { ManifestTable.widenColumn(session, root, col,
+          upd.newDataType()); () }
+      case _: TableChange.AddColumn | _: TableChange.DeleteColumn =>
+        () => ()
       case other => throw new UnsupportedOperationException(
         s"graft catalog does not support table change " +
           s"${other.getClass.getSimpleName} — supported: ADD COLUMNS, " +
           "RENAME COLUMN, DROP COLUMN, ALTER COLUMN TYPE (in-family " +
           "numeric widening)")
     }
-    loadTable(ident)
+    val dropped = changes.collect { case d: TableChange.DeleteColumn =>
+      val c = topLevel(d.fieldNames(), "drops")
+      resolveCol(c) match {
+        case None if !d.ifExists() => throw new IllegalArgumentException(
+          s"no column '$c' to drop on $name (use IF EXISTS to ignore " +
+            "missing columns)")
+        case r => r
+      }
+    }.flatten.distinct
+    require(dropped.size < recorded.fields.length || dropped.isEmpty,
+      s"cannot drop every column of $name")
+    if (added.nonEmpty)
+      ManifestTable.addColumns(session, root, StructType(added))
+    ops.foreach(_())
+    dropped.foreach(ManifestTable.dropColumn(session, root, _))
   }
 
   /** DROP TABLE drops the catalog entry; the manifest root (an
-    * external location by construction) stays on disk. A
-    * rename-chained registration is TWO session-catalog objects
-    * (coalesce VIEW + `<name>_store` table) — dropping only the view
-    * would orphan the store, so it refuses loudly like ALTER/RENAME
-    * do: drop both objects through the session catalog. */
-  override def dropTable(ident: Identifier): Boolean = {
-    val r = try Some(resolve(ident))
-      catch { case _: NoSuchTableException => None }
-    r match {
-      case None => false
-      case Some(res) =>
-        require(!res.chained,
-          s"${fullName(ident)} is a rename-chained registration (a " +
-            s"coalesce VIEW over ${ident.name()}_store) — drop BOTH " +
-            "objects through the session catalog (DROP VIEW " +
-            s"${ident.name()}; DROP TABLE ${ident.name()}_store)")
-        sessionCatalog.dropTable(v1Ident(ident), ignoreIfNotExists = true,
-          purge = false)
-        true
+    * external location by construction) stays on disk. */
+  override def dropTable(ident: Identifier): Boolean =
+    if (!isAlias) super.dropTable(ident)
+    else manifestEntry(ident).isDefined && {
+      sessionCatalog.dropTable(v1Ident(ident), ignoreIfNotExists = true,
+        purge = false)
+      true
     }
-  }
 
   override def renameTable(oldIdent: Identifier,
-                           newIdent: Identifier): Unit = {
-    val r = resolve(oldIdent)
-    require(!r.chained,
-      s"rename the ${oldIdent.name()}_store pair through the session " +
-        "catalog — a chained registration is two objects")
-    sessionCatalog.renameTable(v1Ident(oldIdent), v1Ident(newIdent))
-  }
+                           newIdent: Identifier): Unit =
+    if (!isAlias) super.renameTable(oldIdent, newIdent)
+    else {
+      lookup(oldIdent)
+      sessionCatalog.renameTable(v1Ident(oldIdent), v1Ident(newIdent))
+    }
 
   override def invalidateTable(ident: Identifier): Unit =
     scala.util.Try(sessionCatalog.refreshTable(v1Ident(ident)))
-
-  // ---- namespaces = the session catalog's databases ----
-
-  override def defaultNamespace(): Array[String] =
-    Array(sessionCatalog.getCurrentDatabase)
-
-  override def listNamespaces(): Array[Array[String]] =
-    sessionCatalog.listDatabases().map(Array(_)).toArray
-
-  override def listNamespaces(namespace: Array[String])
-      : Array[Array[String]] = namespace match {
-    case Array() => listNamespaces()
-    case Array(db) if sessionCatalog.databaseExists(db) => Array.empty
-    case other => throw new NoSuchNamespaceException(
-      Array(catalogName) ++ other)
-  }
-
-  override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace match {
-      case Array(db) => sessionCatalog.databaseExists(db)
-      case _ => false
-    }
-
-  override def loadNamespaceMetadata(namespace: Array[String])
-      : util.Map[String, String] = namespace match {
-    case Array(db) if sessionCatalog.databaseExists(db) =>
-      new util.HashMap[String, String]()
-    case other => throw new NoSuchNamespaceException(
-      Array(catalogName) ++ other)
-  }
-
-  override def createNamespace(namespace: Array[String],
-                               metadata: util.Map[String, String]): Unit =
-    throw new UnsupportedOperationException(
-      "create databases through the session catalog (CREATE DATABASE)")
-
-  override def alterNamespace(namespace: Array[String],
-                              changes: NamespaceChange*): Unit =
-    throw new UnsupportedOperationException(
-      "alter databases through the session catalog")
-
-  override def dropNamespace(namespace: Array[String],
-                             cascade: Boolean): Boolean =
-    throw new UnsupportedOperationException(
-      "drop databases through the session catalog (DROP DATABASE)")
 }
 
 object GraftCatalog {
 
-  /** The conf key installing this catalog as `graft` — settable at
-    * runtime BEFORE the first `graft.…` reference (Spark loads
-    * catalog plugins lazily, once, per session). */
+  private val SessionCatalogName = "spark_catalog"
+
+  /** The conf key binding the `graft.db.t` alias. */
   val ConfKey = "spark.sql.catalog.graft"
 
-  /** Install the catalog into a live session (idempotent; a user's
-    * own `graft` catalog binding, if any, is never clobbered). */
-  def install(spark: SparkSession): Unit =
-    if (spark.conf.getOption(ConfKey).isEmpty)
-      spark.conf.set(ConfKey, classOf[GraftCatalog].getName)
+  /** The conf key binding the session catalog (`db.t`). */
+  val SessionCatalogKey = "spark.sql.catalog.spark_catalog"
+
+  /** Bind this catalog as `spark_catalog` and as the `graft` alias in
+    * a live session — idempotent, and never over a user's own binding
+    * of either name. Settable at runtime: Spark reads the session
+    * catalog's binding at each lookup, and loads the alias lazily on
+    * first reference. A session whose `spark_catalog` is someone
+    * else's resolves manifest entries through Spark's V1 path, where
+    * [[graft.sources.ManifestSource]] serves only the tables that path
+    * reads correctly. */
+  def install(spark: SparkSession): Unit = {
+    val cls = classOf[GraftCatalog].getName
+    if (spark.conf.getOption(ConfKey).isEmpty) spark.conf.set(ConfKey, cls)
+    if (spark.conf.getOption(SessionCatalogKey).forall(_ == "builtin"))
+      spark.conf.set(SessionCatalogKey, cls)
+  }
+
+  /** Does `spark` resolve `db.t` through this catalog? */
+  private[graft] def isSessionCatalog(spark: SparkSession): Boolean =
+    spark.sessionState.catalogManager.catalog(SessionCatalogName)
+      .isInstanceOf[GraftCatalog]
 }

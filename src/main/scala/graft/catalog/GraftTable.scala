@@ -28,85 +28,86 @@ import graft.sources.ManifestSql
   *    [[WriteBuilder]] picks the write shape (append, overwrite,
   *    replace-where) and its [[V1Write]]'s [[InsertableRelation]]
   *    hands it to [[ManifestSql.sqlWrite]], the one owner every door
-  *    commits whole-table writes through — `INSERT INTO graft.db.t`
-  *    is one atomic manifest commit, `INSERT OVERWRITE` (truncate
-  *    mode) an atomic snapshot replace. Time-travel pins and
-  *    rename-chained registrations refuse writes (one guard).
+  *    commits whole-table writes through — `INSERT INTO db.t` is one
+  *    atomic manifest commit, `INSERT OVERWRITE` (truncate mode) an
+  *    atomic snapshot replace, `TRUNCATE TABLE` ([[truncateTable]]) a
+  *    ledgered empty overwrite. A time-travel pin refuses writes.
   *
   * `versionAsOf` pins a snapshot for the native v2 time-travel
   * overloads (`VERSION AS OF` / `TIMESTAMP AS OF`). The SCHEMA is
-  * resolved lazily from the pinned snapshot's recorded schema —
-  * exactly what the V1 relation will serve when the read rule swaps
-  * it in. */
+  * the pinned snapshot's logical read shape (renamed columns under
+  * their new names) — exactly what the V1 relation will serve when
+  * the read rule swaps it in. `entry` is the session-catalog entry
+  * the name resolved to. */
 final case class GraftTable(spark: SparkSession, fullName: String,
-                            root: String, versionAsOf: Option[Int],
-                            readOnlyChain: Boolean = false,
-                            v1Meta: Option[org.apache.spark.sql.catalyst
-                              .catalog.CatalogTable] = None)
+                            entry: org.apache.spark.sql.catalyst.catalog
+                              .CatalogTable,
+                            versionAsOf: Option[Int])
   extends Table with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
+  with org.apache.spark.sql.connector.catalog.TruncatableTable
   with org.apache.spark.sql.graftbridge.V1FallbackTable {
+
+  val root: String = ManifestSql.rootOfEntry(entry)
 
   override def name(): String = fullName
 
-  /** The one guard for what needs the live head of a plain
-    * registration — every write, and streaming: a time-travel pin is
-    * a fixed snapshot, and a rename-chained registration is read-only
-    * from SQL (the documented rename-chain contract). */
-  private def requireHead(verb: String): Unit = {
+  /** The one guard for what needs the live head — every write, and
+    * streaming: a time-travel pin is a fixed snapshot. */
+  private def requireHead(verb: String): Unit =
     require(versionAsOf.isEmpty,
       s"cannot $verb a time-travel pin of $fullName — time travel is " +
         "read-only; address the head")
-    require(!readOnlyChain,
-      s"$fullName is a rename-chained registration — read-only from " +
-        s"SQL; $verb its <name>_store table (physical names) or use " +
-        "the ManifestTable Scala API")
-  }
-
-  /** After a write through this table: the V1 door's per-NAME
-    * relation cache pins the snapshot it resolved — drop it so the
-    * session's next V1-name read sees this write (one table, two
-    * doors, one read-your-writes contract). The write owners have
-    * already invalidated cached plans over the root. */
-  private def refreshV1Name(session: SparkSession): Unit =
-    v1Meta.map(_.identifier).foreach(id => scala.util.Try(
-      session.sessionState.catalog.refreshTable(id)))
 
   /** NATIVE v2 DELETE ([[org.apache.spark.sql.connector.catalog
-    * .SupportsDelete]]) — the API-contract door for `DELETE FROM
-    * graft.db.t` with a filter-translatable condition: Spark's own
+    * .SupportsDelete]]) — the API-contract door for a
+    * filter-translatable `DELETE FROM db.t`: Spark's own
     * `OptimizeMetadataOnlyDeleteFromTable` plans it straight to this
-    * call, with NO injected rule involved. Today the injected
-    * rewrite chain (GraftDsv2Reads → ManifestSqlDml) serves v2 DML
-    * first — this door is the structural backstop that keeps
-    * v2-addressed DELETE working even if the analyzer's rule order
+    * call. The injected rewrite chain (GraftDsv2Reads → ManifestSqlDml)
+    * serves SQL DML first — this door is the structural backstop that
+    * keeps v2-addressed DELETE working if the analyzer's rule order
     * reshuffles (or in a session without the graft extensions), and
-    * commits through the same [[ManifestSql.sqlDeleteAt]] as the SQL
-    * rewrite path (which honors the table's `#dvmode:` declaration). */
+    * commits through the same [[ManifestSql.sqlDeleteAt]] (which
+    * honors the table's `#dvmode:` declaration). */
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    versionAsOf.isEmpty && !readOnlyChain
+    versionAsOf.isEmpty
 
   override def deleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     requireHead("DELETE from")
-    val session = SparkSession.active
-    ManifestSql.sqlDeleteAt(session, root, GraftTable.conditionOf(filters))
-    refreshV1Name(session)
+    ManifestSql.sqlDeleteAt(SparkSession.active, root,
+      GraftTable.conditionOf(filters))
   }
 
-  /** STREAMING fallback (r19): `spark.readStream.table("graft.db.t")`
-    * / `writeStream.toTable(…)` resolve through the V1 provider this
+  /** `TRUNCATE TABLE` as a versioned ledger commit: the whole-table
+    * write owner ([[ManifestSql.sqlWrite]]) overwrites with zero rows
+    * of the RECORDED schema, whatever the table's `#dvmode` — never a
+    * file deletion. History stays time-travel readable; the superseded
+    * files become ordinary vacuum orphans. */
+  override def truncateTable(): Boolean = {
+    requireHead("TRUNCATE")
+    val session = SparkSession.active
+    val head = ManifestTable.latest(root).getOrElse(
+      throw new IllegalStateException(s"no manifest at $root"))
+    val schema = ManifestTable.recordedSchemaOf(session, root, head)
+    ManifestSql.sqlWrite(session, root,
+      session.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        schema),
+      ManifestSql.WriteShape.Overwrite, schema.fieldNames.toSeq)
+    true
+  }
+
+  /** STREAMING fallback (r19): `spark.readStream.table("db.t")` /
+    * `writeStream.toTable(…)` resolve through the V1 provider this
     * CatalogTable names — `graft-manifest`'s StreamSourceProvider
     * (the insert-row feed; `readChangeFeed=true` for change rows) and
     * its exactly-once ledgered sink. Only the head streams: a
-    * time-travel pin is a fixed snapshot, and a rename-chained VIEW
-    * has no provider entry of its own. */
+    * time-travel pin is a fixed snapshot. */
   override def v1Table: org.apache.spark.sql.catalyst.catalog
       .CatalogTable = {
     requireHead("stream")
-    v1Meta.getOrElse(throw new IllegalStateException(
-      s"$fullName carries no catalog entry to stream through"))
+    entry
   }
 
   /** The pinned relation — built once per analysis (the same pin the
@@ -173,7 +174,6 @@ final case class GraftTable(spark: SparkSession, fullName: String,
               ManifestSql.sqlWrite(session, root, data, shape,
                 ManifestTable.recordedSchemaOf(session,
                   root, head).fieldNames.toSeq)
-              refreshV1Name(session)
             }
           }
       }

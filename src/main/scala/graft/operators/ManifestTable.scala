@@ -718,7 +718,7 @@ object ManifestTable {
     * NULL for them (exactly as an appended batch carrying the column
     * would leave older files), and the next append may populate them.
     * The SQL `ALTER TABLE … ADD COLUMNS` routes here
-    * ([[graft.plans.ManifestSqlAlter]]); the same rules as a
+    * ([[graft.catalog.GraftCatalog.alterTable]]); the same rules as a
     * schema-merging append apply: no clash with a live column, no
     * resurrection of a reserved (renamed-away/dropped) name. */
   def addColumns(spark: SparkSession, root: String,

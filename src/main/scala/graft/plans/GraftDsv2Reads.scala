@@ -4,28 +4,32 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.catalog.GraftTable
 
-/** The READ half of the DSv2 door ([[graft.catalog.GraftCatalog]]):
+/** The READ half of the catalog door ([[graft.catalog.GraftCatalog]]):
   * every analyzed `DataSourceV2Relation` over a [[GraftTable]] is
-  * replaced with the SAME pruned, snapshot-pinned V1 relation every
-  * other door serves ([[graft.sources.ManifestSql.relation]] — the
-  * table pins it once per analysis), output attributes re-aliased
-  * under the v2 relation's exprIds so parent operators keep
-  * resolving. This is the public DeltaAnalysis pattern: the v2
-  * catalog owns identity, time travel, ALTER, and the write builder,
-  * while ONE scan implementation (stats pruning, Bloom skipping,
-  * vectorized parquet exec) serves every front door — a second DSv2
-  * reader would duplicate all of it.
+  * replaced with the SAME pruned, snapshot-pinned V1 relation a temp
+  * view serves ([[graft.sources.ManifestSql.relation]] — the table
+  * pins it once per analysis), output attributes re-aliased under the
+  * v2 relation's exprIds so parent operators keep resolving. This is
+  * the public DeltaAnalysis pattern: the v2 catalog owns identity,
+  * time travel, ALTER, and the write builder, while ONE scan
+  * implementation (stats pruning, Bloom skipping, vectorized parquet
+  * exec) serves every front door — a second DSv2 reader would
+  * duplicate all of it.
   *
   * Scope notes:
-  *  - runs FIRST in the injected post-hoc batch, so
-  *    [[ManifestSqlDml]] (same batch, later) sees v2-addressed
-  *    DELETE/UPDATE/MERGE targets already in V1 shape and serves
-  *    them through the ledgered copy-on-write writers — row-level
-  *    DML works on `graft.db.t` without `SupportsRowLevelOperations`;
+  *  - every relation inside the swapped plan carries the table's
+  *    catalog entry, as a V1-resolved table's would:
+  *    `spark.catalog.refreshTable` walks the resolved plan and reads
+  *    `catalogTable.get` on each `LogicalRelation` leaf;
+  *  - runs before [[ManifestSqlDml]] in the injected post-hoc batch,
+  *    so DELETE/UPDATE/MERGE targets arrive already in V1 shape and
+  *    are served through the ledgered writers — row-level DML works
+  *    on `db.t` without `SupportsRowLevelOperations`;
   *  - `V2WriteCommand.table` is NOT a plan child, so INSERT targets
   *    are never rewritten here — they plan through the table's own
   *    `V1Write` fallback;
@@ -50,7 +54,10 @@ case class GraftDsv2Reads(spark: SparkSession) extends Rule[LogicalPlan] {
       case r @ DataSourceV2Relation(t: GraftTable, _, _, _, _, _) =>
         val v1 =
           (if (used.add(t)) t.relation else t.freshRelation)
-            .queryExecution.analyzed
+            .queryExecution.analyzed.transformUp {
+              case lr: LogicalRelation if lr.catalogTable.isEmpty =>
+                lr.copy(catalogTable = Some(t.entry))
+            }
         val resolver = spark.sessionState.conf.resolver
         val aligned = r.output.map { out =>
           val src = v1.output.find(a => resolver(a.name, out.name))

@@ -242,33 +242,21 @@ object GraftFunctions {
         new ExpressionInfo(classOf[DotProduct].getName, name), builder))
     }
     e.injectPostHocResolutionRule(BroadcastFixedDims)
-    // the DSv2 door's read half — MUST precede ManifestSqlDml in
+    // the catalog door's read half — MUST precede ManifestSqlDml in
     // this batch (post-hoc rules run once, in injection order), so
-    // v2-addressed DML targets arrive already in V1 shape
+    // DML targets on catalog names arrive already in V1 shape
     e.injectPostHocResolutionRule(GraftDsv2Reads)
-    // custom post-hoc rules run AFTER the built-in DataSourceAnalysis,
-    // so this sees (and rewrites) the raw-write command the catalog
-    // insert path would otherwise produce — see [[ManifestSqlInserts]]
-    e.injectPostHocResolutionRule(ManifestSqlInserts)
     // row-level DML (DELETE FROM / UPDATE / MERGE INTO) on manifest
     // tables: fully resolved by the stock analyzer, rejected only at
     // checkAnalysis for non-v2 targets — rewritten here first
     e.injectPostHocResolutionRule(ManifestSqlDml.apply)
-    // ALTER TABLE ... ADD COLUMNS on manifest catalog tables: schema
-    // ledger commit + in-place catalog refresh (no re-register)
-    e.injectPostHocResolutionRule(ManifestSqlAlter.apply)
-    // merge-on-read READ correctness for catalog-resolved manifest
-    // relations whose pinned snapshot carries deletion vectors — runs
-    // LAST so the DML/insert rules above still see raw targets
+    // merge-on-read READ correctness for PATH reads through the
+    // provider whose pinned snapshot carries deletion vectors — runs
+    // LAST so the DML rule above still sees raw targets
     e.injectPostHocResolutionRule(GraftMorReads)
-    // maintenance DDL (GRAFT COMPACT/VACUUM/EXPIRE/MAINTAIN) — a
-    // four-statement grammar; everything else delegates verbatim.
-    // The wrapper also re-routes ALTER TABLE RENAME/DROP COLUMN on
-    // manifest catalog tables at PARSE time: ResolveSessionCatalog
-    // throws for those v2-only statements over V1 tables DURING
-    // resolution, before any injected rule can rewrite them
-    e.injectParser((session, delegate) =>
-      new GraftSqlParser(session, delegate))
+    // maintenance DDL (GRAFT COMPACT/VACUUM/EXPIRE/MAINTAIN/MOR/FOLD);
+    // everything else delegates verbatim
+    e.injectParser((_, delegate) => new GraftSqlParser(delegate))
   }
 }
 
@@ -318,6 +306,13 @@ case class BroadcastFixedDims(spark: SparkSession) extends Rule[LogicalPlan] {
     }
 }
 
+/** The graft session extensions: native functions and TVFs, the
+  * `GRAFT …` parser, and four post-hoc rules (BroadcastFixedDims, the
+  * catalog door's read swap GraftDsv2Reads, row-level DML
+  * ManifestSqlDml, path-read DV overlay GraftMorReads). Catalog names
+  * of manifest tables resolve through [[graft.catalog.GraftCatalog]],
+  * which a session binds as `spark_catalog` by conf, not through
+  * these extensions ([[graft.api.Sessions.local]] sets both). */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = GraftFunctions.inject(e)
 }

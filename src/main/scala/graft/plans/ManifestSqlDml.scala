@@ -25,11 +25,11 @@ import graft.sources.ManifestSql
   * assignments) — but only a DSv2 `SupportsRowLevelOperations` table
   * gets a rewrite, so V1 targets die in `checkAnalysis` with "only
   * supported with v2 tables". This post-hoc resolution rule (the
-  * Delta-analysis seam, same batch as [[ManifestSqlInserts]]) matches
-  * the resolved plans whose target digs down to a
-  * [[ManifestSql.ManifestFileIndex]] relation and rewrites them into
-  * runnable commands over the Scala writers, which already own the
-  * semantics end to end:
+  * Delta-analysis seam, after [[GraftDsv2Reads]] has swapped a
+  * catalog name's v2 relation for the manifest relation) matches the
+  * resolved plans whose target reads one whole manifest table
+  * (`ManifestTarget`) and rewrites them into runnable commands over
+  * the Scala writers, which already own the semantics end to end:
   *
   *  - `DELETE FROM t WHERE p` → one [[ManifestDeleteCommand]] →
   *    `ManifestSql.sqlDeleteAt`: `ManifestTable.deleteWhere` (or
@@ -60,8 +60,8 @@ import graft.sources.ManifestSql
   *
   * `MERGE … WITH SCHEMA EVOLUTION` (r19): source columns absent
   * from the target are ADDED through the schema ledger before the
-  * merge (metadata-only; existing files read NULL; a catalog target
-  * gets the in-place entry refresh), and every star-shaped action
+  * merge (metadata-only; existing files read NULL), and every
+  * star-shaped action
   * (`UPDATE SET *` by the analyzer's fromStar flag, `INSERT *` by
   * whole-row-same-name shape) gains `newCol := s.newCol` — the Delta
   * evolution contract; explicit column lists cannot name new columns
@@ -124,8 +124,7 @@ case class ManifestSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
         //    gain `newCol := s.newCol` for every source column
         //    absent from the target, the Delta evolution contract.
         // The columns are ADDED through the schema ledger before the
-        // merge (metadata-only; existing files read NULL; a catalog
-        // target gets the in-place entry refresh).
+        // merge (metadata-only; existing files read NULL).
         val resolver = spark.sessionState.conf.resolver
         def starShapedInsert(as: Seq[Assignment]): Boolean =
           tgt.output.forall(t => as.exists {
@@ -162,25 +161,23 @@ case class ManifestSqlDml(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           }
         generalMerge(idx, idKeys, tgt, source, matched, notMatched,
-          notMatchedBySource, evolveCols,
-          refreshIdent =
-            if (evolveCols.isEmpty) None else catalogIdentOf(spark, tgt),
-          starInsert = starShapedInsert)
+          notMatchedBySource, evolveCols, starInsert = starShapedInsert)
     }
 }
 
 object ManifestSqlDml {
 
-  /** Dig through the alias/view wrapping the analyzer leaves over a
-    * registered manifest table to its [[ManifestSql.ManifestFileIndex]].
-    * Matches the BARE relation only: a rename-chained registration
-    * serves a coalesce Project, which (exactly like SQL INSERT) is
-    * not a writable shape — the dig stops at any real operator. The
-    * one Project shape that IS walked through: a pure IDENTITY
-    * re-alias (every item an attribute, or an alias of one, under
-    * its own name) — what [[GraftDsv2Reads]] stamps over the V1
-    * relation to keep the v2 exprIds resolving, which changes no
-    * row and no column. */
+  /** The table a DML target reads, found by what it reads: dig
+    * through the alias/view wrapping and the identity re-alias
+    * [[GraftDsv2Reads]] stamps over the swapped relation (every item
+    * an attribute, or an alias of one under its own name) to the
+    * whole-table read — a bare manifest relation, or a plan
+    * [[ManifestSql.relation]] built (its root carries
+    * [[ManifestSql.TableReadTag]]: the rename projection, the DV
+    * overlay) — and take the ONE [[ManifestSql.ManifestFileIndex]]
+    * leaf under it (a DV sidecar scan is a plain parquet leaf). Any
+    * other operator on the way — a user's filtered or computed view —
+    * is not a writable target. */
   private object ManifestTarget {
     private def identityRealias(p: Project): Boolean =
       p.projectList.size == p.child.output.size &&
@@ -190,11 +187,8 @@ object ManifestSqlDml {
               c: AttributeReference, _) => a.name == c.name
           case _ => false
         }
-    @tailrec private def dig(p: LogicalPlan)
+    private def indexOf(p: LogicalPlan)
         : Option[ManifestSql.ManifestFileIndex] = p match {
-      case SubqueryAlias(_, child) => dig(child)
-      case v: View => dig(v.child)
-      case pr: Project if identityRealias(pr) => dig(pr.child)
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation => h.location match {
           case m: ManifestSql.ManifestFileIndex => Some(m)
@@ -203,6 +197,18 @@ object ManifestSqlDml {
         case _ => None
       }
       case _ => None
+    }
+    @tailrec private def dig(p: LogicalPlan)
+        : Option[ManifestSql.ManifestFileIndex] = p match {
+      case _ if p.getTagValue(ManifestSql.TableReadTag).isDefined =>
+        p.collectLeaves().flatMap(indexOf) match {
+          case Seq(idx) => Some(idx)
+          case _ => None
+        }
+      case SubqueryAlias(_, child) => dig(child)
+      case v: View => dig(v.child)
+      case pr: Project if identityRealias(pr) => dig(pr.child)
+      case _ => indexOf(p)
     }
     def unapply(p: LogicalPlan): Option[ManifestSql.ManifestFileIndex] =
       dig(p)
@@ -254,8 +260,6 @@ object ManifestSqlDml {
                            notMatchedBySource: Seq[MergeAction],
                            evolveCols: Seq[org.apache.spark.sql.types
                              .StructField],
-                           refreshIdent: Option[org.apache.spark.sql
-                             .catalyst.TableIdentifier],
                            starInsert: Seq[Assignment] => Boolean)
       : LogicalPlan = {
     import graft.operators.{ManifestTable => MT}
@@ -317,30 +321,7 @@ object ManifestSqlDml {
       idKeys.map(k => byName(k.sourceSide)),
       matched.map(matchedOf("UPDATE")), nm,
       notMatchedBySource.map(matchedOf("NOT MATCHED BY SOURCE")),
-      evolveCols, refreshIdent)
-  }
-
-  /** The session-catalog identifier of the merge TARGET, when it is
-    * a (non-temp) `USING graft-manifest` catalog entry — recovered
-    * from the alias chain the catalog resolution wrapped around the
-    * relation, so a schema-evolving merge can refresh the entry in
-    * place (the AddColumnsCommand epilogue). Temp views and TVF
-    * targets have no entry; evolution on them commits the ledger
-    * only (their registrations keep the loud re-register contract). */
-  private def catalogIdentOf(spark: SparkSession, tgt: LogicalPlan)
-      : Option[org.apache.spark.sql.catalyst.TableIdentifier] = {
-    def candidates(p: LogicalPlan): Seq[Seq[String]] = p match {
-      case s @ SubqueryAlias(id, child) =>
-        candidates(child) :+ (id.qualifier :+ id.name)
-      case v: View => candidates(v.child)
-      case pr: Project => candidates(pr.child)
-      case _ => Seq.empty
-    }
-    candidates(tgt).iterator // candidates build child-first: deepest
-      .map(_.takeRight(2))   // (qualified catalog) alias leads
-      .flatMap(ManifestSql.sessionIdentOf)
-      .find(i => scala.util.Try(ManifestSql.manifestEntryOf(spark, i)
-        .isDefined).getOrElse(false))
+      evolveCols)
   }
 
   /** Is every expression of the merge resolved, MODULO the one
@@ -620,18 +601,14 @@ object ManifestSqlDml {
       matched: Seq[graft.operators.ManifestTable.WhenMatched],
       notMatched: Seq[graft.operators.ManifestTable.WhenNotMatched],
       notMatchedBySource: Seq[graft.operators.ManifestTable.WhenMatched],
-      evolveCols: Seq[org.apache.spark.sql.types.StructField],
-      refreshIdent: Option[org.apache.spark.sql.catalyst
-        .TableIdentifier])
+      evolveCols: Seq[org.apache.spark.sql.types.StructField])
     extends LeafRunnableCommand {
     override def innerChildren: Seq[LogicalPlan] = Seq(source)
     override def run(session: SparkSession): Seq[Row] = {
       // WITH SCHEMA EVOLUTION: the ledger widens FIRST (metadata-only
       // commit; existing files read NULL), re-filtered against the
       // RUN-time recorded schema so a replayed/raced statement whose
-      // columns already landed skips cleanly; a catalog target gets
-      // the in-place entry refresh (the ALTER ADD COLUMNS epilogue),
-      // a temp-view/TVF target commits the ledger alone
+      // columns already landed skips cleanly
       if (evolveCols.nonEmpty) {
         import graft.operators.ManifestTable
         val recorded = ManifestTable.latest(index.root)
@@ -640,13 +617,9 @@ object ManifestSqlDml {
         val resolver = session.sessionState.conf.resolver
         val missing = evolveCols.filterNot(f =>
           recorded.exists(resolver(_, f.name)))
-        if (missing.nonEmpty) refreshIdent match {
-          case Some(ident) =>
-            ManifestSqlAlter.AddColumnsCommand(ident, missing).run(session)
-          case None =>
-            ManifestTable.addColumns(session, index.root,
-              org.apache.spark.sql.types.StructType(missing))
-        }
+        if (missing.nonEmpty)
+          ManifestTable.addColumns(session, index.root,
+            org.apache.spark.sql.types.StructType(missing))
         ()
       }
       ManifestSql.sqlMergeInto(session, index, idCols,

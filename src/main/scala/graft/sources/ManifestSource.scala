@@ -10,27 +10,31 @@ import org.apache.spark.sql.types.StructType
 
 import graft.operators.ManifestTable
 
-/** `USING graft-manifest` — the DataSource V1 provider that lets
-  * [[graft.operators.ManifestTable]] roots live in a PERSISTENT
-  * catalog (Hive metastore): the catalog entry stores only the
-  * provider name and the table root; every session that resolves it
-  * gets a fresh [[ManifestSql.ManifestWritableRelation]] pinned to
-  * the table's then-current head — pruned, snapshot-isolated,
-  * SQL-insertable, across JVM restarts.
+/** `USING graft-manifest` — the DataSource V1 provider behind
+  * manifest tables' catalog entries, path reads
+  * (`spark.read.format("graft-manifest").option("path", root)`),
+  * `df.write` and streaming: the catalog entry stores only the
+  * provider name and the table root.
   *
   * Options:
   *  - `path` (required): the manifest table root;
   *  - `versionAsOf` (optional, ad-hoc reads only): pin a published
   *    version. Persistent entries never carry it — time travel is a
-  *    session-level pin, not a catalog identity.
+  *    statement-level pin, not a catalog identity.
   *
-  * Catalog-resolved reads arrive through the
-  * [[SchemaRelationProvider]] arm (Spark passes the schema stored at
-  * registration): a table whose recorded schema has since evolved
-  * fails LOUDLY with a re-register instruction instead of serving the
-  * stale projection — the same pin contract as
-  * `ManifestFileIndex.refresh`. Nullability-only drift is tolerated
-  * (every recorded field is nullable by construction). */
+  * Catalog entries resolve through [[graft.catalog.GraftCatalog]]
+  * bound as `spark_catalog`, never through this provider's relation.
+  * The [[SchemaRelationProvider]] arm (a declared or stored schema)
+  * therefore serves two callers: in a graft-catalog session, Spark's
+  * V1 `CREATE TABLE … (cols) USING graft-manifest`, which shares the
+  * DSv2 door's init path ([[ManifestSql.createDeclared]] — so a
+  * declared-schema path read of an absent root creates it too); in a
+  * session whose `spark_catalog` is someone else's, the V1 read of an
+  * entry — served only while that path's bare relation gives the
+  * graft door's rows (no renamed column, no deletion vector, the
+  * stored schema still the table's), and refused with the fix named
+  * otherwise. Nullability-only drift is tolerated (every recorded
+  * field is nullable by construction). */
 final class ManifestSource extends RelationProvider
   with SchemaRelationProvider with CreatableRelationProvider
   with StreamSinkProvider
@@ -197,14 +201,38 @@ final class ManifestSource extends RelationProvider
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String],
                               schema: StructType): BaseRelation = {
+    val spark = sqlContext.sparkSession
+    val root = rootOf(parameters)
+    if (graft.catalog.GraftCatalog.isSessionCatalog(spark)) {
+      ManifestSql.createDeclared(spark, root, schema,
+        ManifestSql.declarationsOf(parameters), root)
+      createRelation(sqlContext, parameters)
+    } else foreignRead(sqlContext, parameters, schema)
+  }
+
+  private def foreignRead(sqlContext: SQLContext,
+                          parameters: Map[String, String],
+                          schema: StructType): BaseRelation = {
+    val root = rootOf(parameters)
+    val snap = ManifestTable.latest(root).getOrElse(
+      throw new IllegalStateException(s"no manifest at $root"))
+    val fix = s"read it through graft's catalog: set " +
+      s"${graft.catalog.GraftCatalog.SessionCatalogKey}=" +
+      "graft.catalog.GraftCatalog (Sessions.local and " +
+      "GraftCatalog.install do)"
+    require(ManifestTable.colmapOfSnap(snap).isEmpty,
+      s"the manifest table at $root has renamed columns, which this " +
+        s"session's V1 catalog path would read by physical name — $fix")
+    require(!ManifestTable.hasDv(snap),
+      s"the manifest table at $root carries deletion vectors, which " +
+        s"this session's V1 catalog path does not apply — $fix")
     val rel = createRelation(sqlContext, parameters)
     require(rel.schema.fieldNames.toSeq == schema.fieldNames.toSeq &&
       rel.schema.fields.map(_.dataType).toSeq ==
         schema.fields.map(_.dataType).toSeq,
-      s"manifest table at ${rootOf(parameters)} has evolved since its " +
-        "catalog registration (registered " +
-        s"${schema.simpleString}, current ${rel.schema.simpleString}) — " +
-        "re-register the catalog entry to pick up the new projection")
+      s"manifest table at $root has evolved since its catalog " +
+        s"registration (registered ${schema.simpleString}, current " +
+        s"${rel.schema.simpleString}) — $fix, or re-register the entry")
     rel
   }
 }

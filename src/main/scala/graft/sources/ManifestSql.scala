@@ -56,8 +56,8 @@ import graft.operators.{ManifestStats, ManifestTable}
 object ManifestSql {
 
   /** The datasource provider name manifest catalog entries register
-    * under (`USING graft-manifest`) — the one string every door
-    * (V1 rules, parse-time rewrites, the DSv2 catalog) detects by. */
+    * under (`USING graft-manifest`) — the one string the catalog door
+    * ([[graft.catalog.GraftCatalog]]) detects them by. */
   val ManifestProvider = "graft-manifest"
 
   /** Is this catalog entry a `USING graft-manifest` table? The one
@@ -126,6 +126,49 @@ object ManifestSql {
       opts.get("bloomCapacity").map(_.trim.toLong))
   }
 
+  /** Is `root` absent, or an empty directory? */
+  private[graft] def absentOrEmpty(spark: SparkSession,
+                                   root: String): Boolean = {
+    val p = new HPath(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    !fs.exists(p) || fs.listStatus(p).isEmpty
+  }
+
+  /** `CREATE TABLE name (cols) … USING graft-manifest` — the one init
+    * path of both catalog doors (the DSv2 `GraftCatalog.createTable`
+    * and the V1 command through [[ManifestSource]]). An absent or
+    * empty root is INITIALIZED with the declarations and seeded with
+    * the declared columns by an empty ledgered overwrite (a schema
+    * seed, not a user write, so not through [[sqlWrite]]); an existing
+    * manifest registers as-is — its recorded schema wins, with a
+    * warning when the declared columns differ. A non-empty directory
+    * without a manifest refuses. */
+  private[graft] def createDeclared(spark: SparkSession, root: String,
+                                    schema: StructType,
+                                    declared: Declarations,
+                                    name: String): Unit = {
+    val nullable = StructType(schema.fields.map(_.copy(nullable = true)))
+    ManifestTable.latest(root) match {
+      case None =>
+        require(absentOrEmpty(spark, root),
+          s"CREATE TABLE $name: $root exists, is not empty, and carries " +
+            "no manifest — point at an empty/absent location or init " +
+            "the manifest explicitly")
+        declared.init(root)
+        if (schema.nonEmpty)
+          ManifestTable.overwrite(spark, root, spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](), nullable))
+      case Some(snap) if schema.nonEmpty =>
+        val recorded = ManifestTable.recordedSchemaOf(spark, root, snap)
+        if (recorded != nullable)
+          graft.util.Log.warn(
+            s"CREATE TABLE $name: the manifest at $root already exists; " +
+              s"its recorded schema (${recorded.simpleString}) wins over " +
+              s"the declared column list (${nullable.simpleString})")
+      case _ => ()
+    }
+  }
+
   /** The manifest-backed [[FileIndex]]: `listFiles` returns only the
     * files whose recorded stats may match the pushed data filters.
     * Conservative everywhere the stats machinery is — an
@@ -136,7 +179,7 @@ object ManifestSql {
       spark: SparkSession, val root: String,
       initial: ManifestTable.Snapshot,
       val versionAsOf: Option[Int],
-      physicalSchema: StructType) extends FileIndex {
+      val physicalSchema: StructType) extends FileIndex {
 
     /** One immutable pin = (snapshot, its file statuses): swapped
       * atomically by [[refresh]], so a query planning concurrently
@@ -217,19 +260,34 @@ object ManifestSql {
     /** REFRESH TABLE: a head-pinned view moves to the current head; a
       * `versionAsOf` view re-reads its OWN version (and fails loudly
       * if retention expired it) — time travel never silently becomes
-      * the head. The recorded schema must still match the registered
-      * one — a schema-changing commit (rename/drop/widen) needs a
-      * re-[[register]], which rebuilds the projection. */
+      * the head. The recorded schema must still match the pinned one
+      * — a temp view over a table whose schema changed since needs a
+      * re-[[register]], which rebuilds the projection (catalog names
+      * resolve the head at each statement and never need one). */
     override def refresh(): Unit = {
       val target = resolveSnapshot(root, versionAsOf)
       val headPhysical = physicalSchemaOf(spark, root, target)
       require(headPhysical == physicalSchema,
         s"manifest schema at $root changed since registration — " +
-          "re-register the SQL view to pick up the new projection")
+          "re-register the temp view to pick up the new projection")
       pin = new Pin(target)
     }
 
     override def sizeInBytes: Long = pin.totalBytes
+
+    /** Two indexes pinned to the same snapshot of one table serve the
+      * same rows: a catalog name resolves a fresh index per statement,
+      * and `CACHE TABLE` / `UNCACHE TABLE` find their cached plan by
+      * `sameResult`, which compares relations by equality. */
+    override def equals(other: Any): Boolean = other match {
+      case o: ManifestFileIndex =>
+        (o eq this) || (o.root == root && o.versionAsOf == versionAsOf &&
+          o.pinnedSnapshot.version == pinnedSnapshot.version &&
+          o.physicalSchema == physicalSchema)
+      case _ => false
+    }
+
+    override def hashCode: Int = (root, versionAsOf).hashCode
   }
 
   private def resolveSnapshot(root: String,
@@ -245,23 +303,27 @@ object ManifestSql {
   /** The physical read schema of a snapshot — the recorded schema
     * plus rename-chain names, from the shared
     * [[ManifestTable.readShapeOf]] owner. */
-  private[graft] def physicalSchemaOf(spark: SparkSession, root: String,
-                                      snap: ManifestTable.Snapshot)
+  private def physicalSchemaOf(spark: SparkSession, root: String,
+                               snap: ManifestTable.Snapshot)
       : StructType =
     ManifestTable.readShapeOf(
       ManifestTable.recordedSchemaOf(spark, root, snap),
       ManifestTable.colmapOfSnap(snap))._1
 
   /** [[ParquetFileFormat]] with the RAW write path disabled: plain
-    * `INSERT INTO`/`INSERT OVERWRITE` on the front-door relation
+    * `INSERT INTO`/`INSERT OVERWRITE` on a temp-view registration
     * routes through [[ManifestWritableRelation.insert]] (the
     * `InsertableRelation` case of Spark's DataSourceAnalysis precedes
-    * its HadoopFsRelation case), but any OTHER V1 write shape that
-    * falls through to `InsertIntoHadoopFsRelationCommand` would write
-    * bare parquet into the table root — files no manifest references,
-    * invisible to readers and swept by vacuum. Better a loud refusal
-    * at `prepareWrite` (write jobs only — the read side never calls
-    * it) than silent data loss. */
+    * its HadoopFsRelation case), and a catalog entry writes through
+    * [[graft.catalog.GraftTable]]; any OTHER V1 write shape — e.g. an
+    * INSERT on a catalog entry in a session whose `spark_catalog` is
+    * not graft's, where Spark's FindDataSourceTable drops the
+    * InsertableRelation mixin — falls through to
+    * `InsertIntoHadoopFsRelationCommand` and would write bare parquet
+    * into the table root: files no manifest references, invisible to
+    * readers and swept by vacuum. Better a loud refusal at
+    * `prepareWrite` (write jobs only — the read side never calls it)
+    * than silent data loss. */
   private final class ManifestGuardedParquet extends ParquetFileFormat {
     override def prepareWrite(sparkSession: SparkSession,
                               job: org.apache.hadoop.mapreduce.Job,
@@ -269,10 +331,12 @@ object ManifestSql {
                               dataSchema: StructType)
         : org.apache.spark.sql.execution.datasources.OutputWriterFactory =
       throw new UnsupportedOperationException(
-        "manifest tables accept plain INSERT INTO (ledgered append) " +
-          "and INSERT OVERWRITE (atomic replace) only — this write " +
-          "shape would bypass the manifest commit protocol; use the " +
-          "ManifestTable Scala API for merges and row-level DML")
+        "this write shape would bypass the manifest commit protocol — " +
+          "catalog writes to a graft-manifest table need graft's " +
+          s"catalog: set ${graft.catalog.GraftCatalog.SessionCatalogKey}=" +
+          "graft.catalog.GraftCatalog (Sessions.local and " +
+          "GraftCatalog.install do), or write through the ManifestTable " +
+          "Scala API")
   }
 
   /** The front-door [[HadoopFsRelation]], WRITABLE through the
@@ -347,9 +411,8 @@ object ManifestSql {
     spark.catalog.refreshByPath(root)
   }
 
-  /** SQL `INSERT INTO` / `INSERT OVERWRITE` on a registration (the
-    * temp-view `InsertableRelation` and the catalog-path
-    * [[graft.plans.ManifestInsertCommand]]): [[sqlWrite]] on its
+  /** SQL `INSERT INTO` / `INSERT OVERWRITE` on a temp-view
+    * registration (its `InsertableRelation`): [[sqlWrite]] on its
     * root, then THIS registration's pin moves to the new head. */
   private[graft] def sqlInsert(spark: SparkSession, idx: ManifestFileIndex,
                                data: DataFrame, overwrite: Boolean,
@@ -474,17 +537,16 @@ object ManifestSql {
         matched, notMatched, notMatchedBySource, batchId = id)
     }
     // a SCHEMA-EVOLVING merge widened the table: this plan's pinned
-    // index belongs to the pre-evolution registration (its refresh
-    // would rightly trip the drift guard) and the catalog entry was
-    // already refreshed in place — only the cached-plan invalidation
-    // remains to do
+    // index belongs to the pre-evolution schema (its refresh would
+    // rightly trip the drift guard) — only the cached-plan
+    // invalidation remains to do
     if (refreshPin) afterSqlWrite(spark, idx)
     else spark.catalog.refreshByPath(idx.root)
   }
 
   /** The bare front-door relation (physical schema, no rename
     * projection) — what the SQL machinery plans and what
-    * [[ManifestSource]] serves out of the persistent catalog. */
+    * [[ManifestSource]] serves to path reads. */
   private[sources] def baseRelation(spark: SparkSession, root: String,
                                     versionAsOf: Option[Int])
       : ManifestWritableRelation =
@@ -502,6 +564,22 @@ object ManifestSql {
   }
 
   // ---- merge-on-read overlay for the SQL doors ----
+
+  /** Marks the root of every plan [[relation]] builds: the whole
+    * table, as the SQL doors serve it — what row-level DML may target
+    * ([[graft.plans.ManifestSqlDml]]), as opposed to a user's own
+    * filtered or computed view over it. */
+  private[graft] val TableReadTag =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[String](
+      "graft.manifest.table")
+
+  /** The pinned version whose deletion vectors a plan over this
+    * manifest relation already applies — what stops
+    * [[graft.plans.GraftMorReads]] from overlaying it again, until the
+    * relation's pin moves. */
+  private[graft] val DvOverlaidAt =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Int](
+      "graft.mor.overlaid")
 
   /** True while THIS THREAD is building a manifest relation or its DV
     * overlay: the injected [[graft.plans.GraftMorReads]] rule must
@@ -543,15 +621,14 @@ object ManifestSql {
   }
 
   /** Overlay an already-analyzed V1 manifest [[org.apache.spark.sql
-    * .execution.datasources.LogicalRelation]] (the persistent-catalog
-    * resolution path) with its pinned snapshot's deletion vectors —
-    * the plan [[graft.plans.GraftMorReads]] swaps in. `rel` may be
-    * the [[ManifestWritableRelation]] itself OR the plain
-    * `HadoopFsRelation` copy Spark's FindDataSourceTable leaves (the
-    * copy keeps the [[ManifestFileIndex]], which carries everything
-    * the overlay needs). Output attributes re-alias under the
-    * original exprIds so parents keep resolving (the same pattern as
-    * the DSv2 read swap). */
+    * .execution.datasources.LogicalRelation]] (a path read through
+    * the provider) with its pinned snapshot's deletion vectors — the
+    * plan [[graft.plans.GraftMorReads]] swaps in. `rel` may be the
+    * [[ManifestWritableRelation]] itself OR a plain `HadoopFsRelation`
+    * copy (it keeps the [[ManifestFileIndex]], which carries
+    * everything the overlay needs). Output attributes re-alias under
+    * the original exprIds so parents keep resolving (the same pattern
+    * as the DSv2 read swap). */
   private[graft] def dvOverlayFor(spark: SparkSession,
                                   idx: ManifestFileIndex,
                                   rel: org.apache.spark.sql.sources
@@ -598,10 +675,12 @@ object ManifestSql {
 
   /** The manifest table as a DataFrame whose SCAN prunes on pushed
     * filters — the composable form ([[register]] wraps it in a temp
-    * view). `versionAsOf` pins time travel. A snapshot carrying
-    * deletion vectors gets the overlay applied HERE (one resolution
-    * serves pin and overlay), so the frame is correct even in a
-    * session without the graft extensions. */
+    * view; the catalog door swaps it in for `db.t`). `versionAsOf`
+    * pins time travel. Renamed columns read through their chain, and
+    * a snapshot carrying deletion vectors gets the overlay applied
+    * HERE (one resolution serves pin and overlay), so the frame is
+    * correct even in a session without the graft extensions. Its
+    * plan's root carries [[TableReadTag]]. */
   def relation(spark: SparkSession, root: String,
                versionAsOf: Option[Int] = None): DataFrame =
     guardedConstruction {
@@ -611,39 +690,36 @@ object ManifestSql {
         ManifestTable.colmapOfSnap(snap))
       val rel = baseRelationAt(spark, root, versionAsOf, snap)
       val base = spark.baseRelationToDataFrame(rel)
-      if (!ManifestTable.hasDv(snap))
-        projection.fold(base)(p => base.select(p: _*))
-      else
-        withDvOverlay(spark, root, snap, base,
-          projection.getOrElse(
-            base.columns.toSeq.map(org.apache.spark.sql.functions.col)))
+      val df =
+        if (!ManifestTable.hasDv(snap))
+          projection.fold(base)(p => base.select(p: _*))
+        else
+          withDvOverlay(spark, root, snap, base,
+            projection.getOrElse(
+              base.columns.toSeq.map(org.apache.spark.sql.functions.col)))
+      val plan = df.queryExecution.analyzed
+      plan.setTagValue(TableReadTag, root)
+      plan.foreach {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if lr.relation eq rel =>
+          lr.setTagValue(DvOverlaidAt, snap.version)
+        case _ => ()
+      }
+      df
     }
 
-  /** Register the manifest table as `name` for `spark.sql` access —
-    * the SQL twin of [[ManifestTable.read]], with planning-time file
-    * pruning under pure SQL. Re-register to move the snapshot pin.
-    * On an un-renamed table the view is the bare insertable relation,
-    * so `INSERT INTO name ...` / `INSERT OVERWRITE ...` write through
-    * the ledgered commit; a rename-chained table registers its
-    * coalesce projection, which SQL cannot insert through (the Scala
-    * writers remain the write path there). */
+  /** Register the manifest table as temp view `name` for `spark.sql`
+    * access — the SQL twin of [[ManifestTable.read]], with
+    * planning-time file pruning under pure SQL. The view PINS the
+    * snapshot: re-register (or `REFRESH TABLE`) to move it. On an
+    * un-renamed table the view is the bare insertable relation, so
+    * `INSERT INTO name ...` / `INSERT OVERWRITE ...` write through the
+    * ledgered commit; a renamed table registers its coalesce
+    * projection, which SQL cannot insert through. */
   def register(spark: SparkSession, name: String, root: String,
                versionAsOf: Option[Int] = None): Unit =
     relation(spark, root, versionAsOf).createOrReplaceTempView(name)
 
-  /** PERSISTENT registration: a real catalog entry (HMS-backed under
-    * `Graft.enableSql(persistent = true)`'s session wiring) that
-    * survives the JVM — `USING graft-manifest` with the table root as
-    * its path, resolved back through [[ManifestSource]] on every
-    * session, each resolution pinning the THEN-current head. The
-    * catalog stores the schema at registration; a schema-changing
-    * commit (new column, rename, drop, widen) needs a re-register,
-    * the same contract as [[ManifestFileIndex.refresh]]. A
-    * rename-chained table persists as `<name>_store` (the physical
-    * relation) plus a VIEW `name` applying the coalesce projection —
-    * read-only; an un-renamed table persists directly as `name`,
-    * SQL-insertable. Time travel is session business (a pin, not an
-    * identity) — `versionAsOf` is intentionally absent here. */
   /** Backtick-quote an identifier for splicing into SQL text: each
     * dot-separated part is escaped, so reserved words, hyphens, and
     * case-odd names resolve to exactly the named object instead of
@@ -654,75 +730,55 @@ object ManifestSql {
     name.split('.').map(p => "`" + p.replace("`", "``") + "`")
       .mkString(".")
 
+  /** PERSISTENT registration: a real catalog entry (HMS-backed under
+    * `Graft.enableSql(persistent = true)`'s session wiring) that
+    * survives the JVM — `USING graft-manifest` with the table root as
+    * its path. Through [[graft.catalog.GraftCatalog]] every statement
+    * resolves the entry to the then-current head, renamed columns
+    * included, so one registration serves every later commit (a
+    * schema change needs no re-register). Time travel is statement
+    * business (`VERSION AS OF`), not an identity — `versionAsOf` is
+    * intentionally absent here.
+    *
+    * Re-registration publishes under a TEMP name first, then
+    * drop-old + rename-new: the expensive step (createTable resolves
+    * the provider relation — snapshot read, schema build) happens
+    * OUTSIDE the unavailability window, which shrinks to two catalog
+    * round-trips. Session-catalog DDL has no transactional swap
+    * (Spark's own CREATE OR REPLACE paths share the residual window),
+    * so a reader racing those two statements can still see the name
+    * absent for a moment — documented on registerManifest. An older
+    * registration shape under the name — a `<name>_store` table plus
+    * a coalesce VIEW `<name>` — is dropped, so re-registering it once
+    * migrates it. */
   def registerPersistent(spark: SparkSession, name: String,
                          root: String): Unit = {
-    val snap = resolveSnapshot(root, None)
-    val (_, projection) = ManifestTable.readShapeOf(
-      ManifestTable.recordedSchemaOf(spark, root, snap),
-      ManifestTable.colmapOfSnap(snap))
+    resolveSnapshot(root, None)
     // a same-named temp view would shadow the catalog entry
     spark.catalog.dropTempView(name)
-    // drop WHATEVER shape a previous registration left under a name:
-    // a rename on the table flips the registration shape from a bare
-    // TABLE `name` to `name_store` + VIEW `name` (and a fresh root
-    // under a reused name can flip it back) — DROP TABLE refuses
-    // views and vice versa, so probe the catalog for the right verb
-    def dropAnyShape(objName: String): Unit = {
-      if (spark.catalog.tableExists(objName)) {
-        val isView = scala.util.Try(
-          spark.catalog.getTable(objName).tableType == "VIEW")
-          .getOrElse(false)
-        if (isView) spark.sql(s"DROP VIEW IF EXISTS ${quotedId(objName)}")
-        else spark.sql(s"DROP TABLE IF EXISTS ${quotedId(objName)}")
+    val cat = spark.sessionState.catalog
+    val ident = spark.sessionState.sqlParser.parseTableIdentifier(
+      quotedId(name))
+    val tmp = s"${name}_reg_" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(8)
+    spark.catalog.createTable(tmp, ManifestProvider, Map("path" -> root))
+    try {
+      if (cat.tableExists(ident)) {
+        val isView = cat.getTableMetadata(ident).tableType ==
+          org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW
+        if (isView) {
+          spark.sql(s"DROP VIEW IF EXISTS ${quotedId(name)}")
+          val store = ident.copy(table = ident.table + "_store")
+          if (manifestEntryOf(spark, store).isDefined)
+            cat.dropTable(store, ignoreIfNotExists = true, purge = false)
+        } else spark.sql(s"DROP TABLE IF EXISTS ${quotedId(name)}")
       }
+      spark.sql(s"ALTER TABLE ${quotedId(tmp)} RENAME TO ${quotedId(name)}")
       ()
-    }
-    // Re-registration publishes under a TEMP name first, then
-    // drop-old + rename-new: the expensive step (createTable resolves
-    // the provider relation — snapshot read, schema build) happens
-    // OUTSIDE the unavailability window, which shrinks to two catalog
-    // round-trips. Session-catalog DDL has no transactional swap
-    // (Spark's own CREATE OR REPLACE paths share the residual
-    // window), so a reader racing those two statements can still see
-    // the name absent for a moment — documented on registerManifest.
-    def createTable(tableName: String): Unit = {
-      val tmp = s"${tableName}_reg_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(8)
-      spark.catalog.createTable(tmp, ManifestProvider,
-        Map("path" -> root))
-      try {
-        dropAnyShape(tableName)
-        spark.sql(s"ALTER TABLE ${quotedId(tmp)} " +
-          s"RENAME TO ${quotedId(tableName)}")
-        ()
-      } catch {
-        case t: Throwable =>
-          scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS ${quotedId(tmp)}"))
-          throw t
-      }
-    }
-    projection match {
-      case None =>
-        dropAnyShape(s"${name}_store") // stale store from a view-shaped past
-        createTable(name)
-      case Some(cols) =>
-        val store = s"${name}_store"
-        createTable(store)
-        dropAnyShape(name) // a bare-TABLE past blocks CREATE OR REPLACE VIEW
-        // render the coalesce projection to SQL text by analyzing it
-        // against the catalog table (resolved NamedExpression.sql is
-        // the supported rendering — the registerPersistent model-view
-        // pattern, Graft.scala)
-        val projected = spark.table(quotedId(store)).select(cols: _*)
-        val projSql = projected.queryExecution.analyzed match {
-          case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-            p.projectList.map(_.sql).mkString(", ")
-          case other => throw new IllegalStateException(
-            s"expected a Project over $store, got ${other.nodeName}")
-        }
-        spark.sql(s"CREATE OR REPLACE VIEW ${quotedId(name)} AS " +
-          s"SELECT $projSql FROM ${quotedId(store)}")
-        ()
+    } catch {
+      case t: Throwable =>
+        scala.util.Try(spark.sql(s"DROP TABLE IF EXISTS ${quotedId(tmp)}"))
+        throw t
     }
   }
 }

@@ -27,6 +27,14 @@ object graftbridge {
     * reader). */
   trait V1FallbackTable extends connector.catalog.V2TableWithV1Fallback
 
+  /** The catalog entry behind a built-in session catalog's table
+    * (`V1Table` is `private[sql]`); None for any other table. */
+  def v1EntryOf(t: connector.catalog.Table)
+      : Option[catalyst.catalog.CatalogTable] = t match {
+    case v: connector.catalog.V1Table => Some(v.v1Table)
+    case _ => None
+  }
+
   /** `Dataset.ofRows` (private[sql] in Spark 4) — a logical plan as a
     * DataFrame, for RunnableCommands that receive a child plan. */
   def ofRows(spark: SparkSession,

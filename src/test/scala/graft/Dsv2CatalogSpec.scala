@@ -147,38 +147,27 @@ class Dsv2CatalogSpec extends SparkSpec {
       val recorded = ManifestTable.recordedSchemaOf(spark, root,
         ManifestTable.latest(root).get).fieldNames.toSeq
       assert(recorded == Seq("id", "v", "n"), s"got $recorded")
-      // RENAME flips the registration to the chained shape
-      // (<name>_store + coalesce VIEW) — v2 reads keep working
-      // through the store root with the colmap projection…
+      // RENAME keeps ONE catalog table: reads serve the old files
+      // through the chain under the new name, through both names
       spark.sql("ALTER TABLE graft.default.v2alter " +
         "RENAME COLUMN v TO vv")
       assert(spark.sql("SELECT vv FROM graft.default.v2alter")
         .count() == 5L,
-        "a chained table must stay v2-readable under the new name")
+        "a renamed table must stay readable under the new name")
+      assert(spark.table("v2alter").columns.toSeq == Seq("id", "vv", "n"))
       assert(spark.sql(
         "SELECT count(*) FROM graft.default.v2alter VERSION AS OF 1")
         .head().getLong(0) == 5L,
-        "time travel must keep working on the chained shape")
-      // …while further v2 ALTERs and writes refuse with the store
-      // named (the documented read-only rename-chain contract)
-      val e = intercept[Exception](spark.sql(
-        "ALTER TABLE graft.default.v2alter ADD COLUMNS (x STRING)"))
-      assert(e.getMessage.contains("v2alter_store"),
-        s"got: ${e.getMessage}")
-      val e2 = intercept[Exception](spark.sql(
-        "INSERT INTO graft.default.v2alter " +
-          "SELECT 9 AS id, 'x' AS vv, 0 AS n"))
-      assert(e2.getMessage.contains("rename-chained"),
-        s"got: ${e2.getMessage}")
-      // the STORE itself stays a bare manifest table — v2-alterable
-      spark.sql("ALTER TABLE graft.default.v2alter_store " +
-        "ADD COLUMNS (x STRING)")
-      assert(spark.table("v2alter_store").columns.contains("x"))
-    } finally {
-      spark.sql("DROP VIEW IF EXISTS v2alter")
-      spark.sql("DROP TABLE IF EXISTS v2alter")
-      spark.sql("DROP TABLE IF EXISTS v2alter_store")
-    }
+        "time travel must keep working after the rename")
+      // …and it stays writable and alterable: no store/view split
+      spark.sql("ALTER TABLE graft.default.v2alter ADD COLUMNS (x STRING)")
+      spark.sql("INSERT INTO graft.default.v2alter " +
+        "SELECT 9 AS id, 'x' AS vv, 0 AS n, 'y' AS x")
+      assert(spark.sql("SELECT vv, x FROM v2alter WHERE id = 9")
+        .head().toSeq == Seq("x", "y"))
+      assert(ManifestTable.read(spark, root).count() == 6L)
+      assert(spark.catalog.getTable("v2alter").tableType != "VIEW")
+    } finally spark.sql("DROP TABLE IF EXISTS v2alter")
   }
 
   test("row-level DML on the v2 address lands on the ledgered copy-on-write writers") {
@@ -382,7 +371,7 @@ class Dsv2CatalogSpec extends SparkSpec {
       val e1b = intercept[Exception](spark.sql(
         "ALTER TABLE graft.default.v2widen ALTER COLUMN m TYPE DOUBLE"))
       assert(e1b.getMessage.contains("widening"), e1b.getMessage)
-      // V1 door (parse-time re-route): widen another added column
+      // the session-catalog name: widen another added column
       spark.sql("ALTER TABLE v2widen ADD COLUMNS (k SMALLINT)")
       spark.sql("ALTER TABLE v2widen ALTER COLUMN k TYPE INT")
       assert(spark.table("v2widen").schema("k").dataType ==

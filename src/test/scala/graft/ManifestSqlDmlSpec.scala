@@ -282,8 +282,8 @@ class ManifestSqlDmlSpec extends SparkSpec {
           ManifestTable.appendBatch(spark, root, 41L, rows); ()
         },
         commits = 0)))
-    // rename-chained: `graft.default.<name>_store` takes the INSERT and
-    // aligns it by position to the LOGICAL (renamed) columns
+    // renamed: the table itself takes the INSERT through both catalog
+    // names and aligns it by position to the LOGICAL (renamed) columns
     def rowsOf(root: String) =
       ManifestTable.read(spark, root).orderBy("id").collect().toSeq
     val (_, chained) = freshTable("graft_idoor_chain")
@@ -294,17 +294,17 @@ class ManifestSqlDmlSpec extends SparkSpec {
     graft.api.Graft(spark, sf)
       .registerManifest("idoor_chain", chained, persistent = true)
     try {
-      val v0 = ManifestTable.latest(chained).get.version
-      sql("INSERT INTO graft.default.idoor_chain_store SELECT * FROM idoor_src")
-      assert(ManifestTable.latest(chained).get.version == v0 + 1)
+      for (target <- Seq("graft.default.idoor_chain", "idoor_chain")) {
+        val v0 = ManifestTable.latest(chained).get.version
+        sql(s"INSERT INTO $target SELECT * FROM idoor_src")
+        assert(ManifestTable.latest(chained).get.version == v0 + 1)
+      }
+      ManifestTable.append(spark, chainTwin, rows.toDF("id", "w", "n"))
       assert(ManifestTable.read(spark, chained).columns.toSeq ==
         Seq("id", "w", "n"))
       assert(rowsOf(chained) == rowsOf(chainTwin),
-        "a rename-chained v2 INSERT must align to the logical names")
-    } finally {
-      spark.sql("DROP VIEW IF EXISTS idoor_chain")
-      spark.sql("DROP TABLE IF EXISTS idoor_chain_store")
-    }
+        "a renamed table's INSERT must align to the logical names")
+    } finally spark.sql("DROP TABLE IF EXISTS idoor_chain")
   }
 
   test("a batch id never outlives a whole-table write: REPLACE WHERE, v2 CTAS, TRUNCATE, V1 CTAS and df.write overwrite refuse it, consume it and publish nothing") {
@@ -651,8 +651,8 @@ class ManifestSqlDmlSpec extends SparkSpec {
         "USING sqldml_evo_src s ON t.id = s.id " +
         "WHEN MATCHED THEN UPDATE SET * " +
         "WHEN NOT MATCHED THEN INSERT *")
-      // the V1-name catalog read serves the widened schema WITHOUT a
-      // re-register (the in-place AddColumns epilogue ran)
+      // the catalog name serves the widened schema at the next
+      // statement — no re-register
       val got = spark.sql(
         "SELECT id, v, n, extra FROM sqldml_evo ORDER BY id").collect()
       assert(got.length == 11)
@@ -784,13 +784,13 @@ class ManifestSqlDmlSpec extends SparkSpec {
     assert(ManifestTable.latest(root).get.files == before,
       "#dvmode DELETE must not rewrite any data file")
     val want = (0L until 100L).filterNot(_ % 5 == 0).toSet
-    // V1 catalog door (GraftMorReads swaps the resolved relation)
+    // the session-catalog name (the catalog door's relation overlays)
     assert(spark.sql("SELECT id FROM sqldml_mor")
       .as[Long].collect().toSet == want)
-    // spark.table over the catalog entry — same rule, DataFrame form
+    // spark.table over the catalog entry — DataFrame form
     assert(spark.table("sqldml_mor").select("id")
       .as[Long].collect().toSet == want)
-    // DSv2 door (GraftDsv2Reads swaps to the overlaid relation())
+    // the graft alias (the same relation())
     assert(spark.sql("SELECT id FROM graft.default.sqldml_mor")
       .as[Long].collect().toSet == want)
     // Scala door

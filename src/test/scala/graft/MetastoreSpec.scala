@@ -159,20 +159,16 @@ class MetastoreSpec extends SparkSpec {
       assert(ManifestTable.latest(root).get.version == vBefore + 1,
         "INSERT INTO must publish one manifest commit")
       assert(s2.sql("SELECT count(*) FROM pm_corpus").as[Long].head == 401L)
-      // a schema-changing commit invalidates the registration LOUDLY
+      // a schema-changing Scala commit is served at once: the catalog
+      // name resolves the head at each statement, no re-register
       ManifestTable.append(spark, root,
         (2000L until 2001L).toDF("id")
           .withColumn("payload", F.lit("x"))
           .withColumn("extra", F.lit(1L)))
-      val s3 = spark.newSession()
-      val err = intercept[Exception](s3.table("pm_corpus").collect())
-      assert(err.getMessage.contains("re-register"),
-        s"expected the evolved-schema refusal, got: ${err.getMessage}")
-      // re-registering picks up the new projection
-      graft.api.Graft(spark, sf)
-        .registerManifest("pm_corpus", root, persistent = true)
       assert(spark.newSession().sql(
         "SELECT count(extra) FROM pm_corpus").as[Long].head == 1L)
+      assert(s2.sql("SELECT count(extra) FROM pm_corpus").as[Long].head
+        == 1L, "a session that read the old schema sees the new one")
       // CACHE TABLE must not serve stale rows across a SQL INSERT
       // (the catalog-path insert invalidates by path, like Spark's
       // own insert commands)
@@ -183,21 +179,17 @@ class MetastoreSpec extends SparkSpec {
       assert(s4.sql("SELECT count(*) FROM pm_corpus").as[Long].head
         == nCached + 1, "cached plan served stale rows after INSERT")
       s4.sql("UNCACHE TABLE pm_corpus")
-      // a RENAME flips the registration shape (bare TABLE → store +
-      // VIEW): re-register must replace the old shape, not refuse
+      // a RENAME keeps one writable table under the name: the new
+      // name serves the old files through the chain, no re-register
       ManifestTable.renameColumn(spark, root, "payload", "body")
-      graft.api.Graft(spark, sf)
-        .registerManifest("pm_corpus", root, persistent = true)
       val s5 = spark.newSession()
-      assert(s5.catalog.getTable("pm_corpus").tableType == "VIEW")
+      assert(s5.catalog.getTable("pm_corpus").tableType != "VIEW")
       assert(s5.sql("SELECT count(body) FROM pm_corpus").as[Long].head
-        == nCached + 1, "the coalesce view must serve renamed data")
-    } finally {
-      Seq("DROP VIEW IF EXISTS pm_corpus",
-        "DROP TABLE IF EXISTS pm_corpus",
-        "DROP TABLE IF EXISTS pm_corpus_store")
-        .foreach(s => scala.util.Try(spark.sql(s)))
-    }
+        == nCached + 1, "the renamed column must serve its data")
+      s5.sql("INSERT INTO pm_corpus VALUES (4000, 'r', 6)")
+      assert(s5.sql("SELECT body FROM pm_corpus WHERE id = 4000")
+        .as[String].head == "r")
+    } finally scala.util.Try(spark.sql("DROP TABLE IF EXISTS pm_corpus"))
   }
 
   test("ALTER TABLE ADD COLUMNS evolves the schema ledger and refreshes the catalog in place") {
@@ -285,7 +277,7 @@ class MetastoreSpec extends SparkSpec {
       // IF EXISTS on a missing column is a no-op, not an error
       spark.sql("ALTER TABLE prd_corpus DROP COLUMN IF EXISTS ghost")
       // RENAME: the chain serves OLD files through the NEW name; the
-      // registration flips to store+view (read-only from SQL)
+      // name stays one writable table
       spark.sql("ALTER TABLE prd_corpus RENAME COLUMN payload TO body")
       assert(spark.table("prd_corpus").columns.toSeq == Seq("id", "body"))
       assert(spark.sql("SELECT body FROM prd_corpus WHERE id = 7")
@@ -293,11 +285,15 @@ class MetastoreSpec extends SparkSpec {
         "pre-rename files must read through the coalesce chain")
       assert(spark.sql("SELECT count(*) FROM prd_corpus")
         .as[Long].head() == 51L)
-      // a sibling session resolves the rebuilt registration directly
+      assert(spark.catalog.getTable("prd_corpus").tableType != "VIEW")
+      spark.sql("INSERT INTO prd_corpus VALUES (501, 'after')")
+      // a sibling session resolves the same table directly
       val s2 = spark.newSession()
       assert(s2.table("prd_corpus").columns.toSeq == Seq("id", "body"))
       assert(s2.sql("SELECT body FROM prd_corpus WHERE id = 500")
         .as[String].head() == "late")
+      assert(s2.sql("SELECT body FROM prd_corpus WHERE id = 501")
+        .as[String].head() == "after")
       // refusals: nested path and unknown column fail loudly
       val missing = intercept[Exception](
         spark.sql("ALTER TABLE prd_corpus DROP COLUMN ghost"))
@@ -372,7 +368,8 @@ class MetastoreSpec extends SparkSpec {
       val badTs = intercept[Exception](spark.sql(
         "SELECT count(*) FROM ptt_corpus TIMESTAMP AS OF 'not a time'")
         .collect())
-      assert(badTs.getMessage.contains("cannot parse"))
+      assert(badTs.getMessage.contains("INVALID_TIME_TRAVEL_TIMESTAMP_EXPR"),
+        badTs.getMessage)
       // a non-manifest table keeps the stock (unsupported) behavior
       (0L until 3L).toDF("id").write.mode("overwrite")
         .saveAsTable("ptt_plain")
@@ -415,21 +412,16 @@ class MetastoreSpec extends SparkSpec {
       spark.sql("INSERT INTO pmt_corpus VALUES (7, 'post')")
       assert(spark.sql("SELECT count(*) FROM pmt_corpus")
         .as[Long].head() == 1L)
-      // a rename-chained store truncates too: its catalog schema holds
-      // the renamed-away name, which the empty overwrite must not
-      // re-introduce
+      // a renamed table truncates too: the empty overwrite carries the
+      // recorded schema, never the renamed-away physical name
       spark.sql("ALTER TABLE pmt_corpus RENAME COLUMN payload TO body")
       val v2 = ManifestTable.latest(root).get.version
-      spark.sql("TRUNCATE TABLE pmt_corpus_store")
+      spark.sql("TRUNCATE TABLE pmt_corpus")
       assert(ManifestTable.latest(root).get.version == v2 + 1)
       assert(spark.sql("SELECT count(*) FROM pmt_corpus")
         .as[Long].head() == 0L)
       assert(spark.table("pmt_corpus").columns.toSeq == Seq("id", "body"))
-    } finally {
-      scala.util.Try(spark.sql("DROP VIEW IF EXISTS pmt_corpus"))
-      scala.util.Try(spark.sql("DROP TABLE IF EXISTS pmt_corpus"))
-      scala.util.Try(spark.sql("DROP TABLE IF EXISTS pmt_corpus_store"))
-    }
+    } finally scala.util.Try(spark.sql("DROP TABLE IF EXISTS pmt_corpus"))
   }
 
   test("bucketed-table metadata round-trips through the metastore") {

@@ -168,20 +168,25 @@ def bench_gate(new_path, prior_path, max_ratio=1.3):
     board grows (~10 s of new graded lifecycles per round), so the
     meaningful signal is the SHARED-query total against the prior
     round's idle record. Compares the queries present in BOTH bench
-    JSONs ({"queries": {name: seconds}}) and fails when the new shared
+    JSONs ({"queries": {name: seconds}}, top level or under "parsed")
+    and fails when none is shared or when the new shared
     total exceeds max_ratio x the prior one — a real regression
     cluster, not board growth. Run on an IDLE box only (BASELINE.md
     documents ~10% run-to-run variance; 1.3 leaves headroom for it).
 
     Usage: python3 tools/check.py bench <new.json> <prior.json> [ratio]
     """
-    new = json.load(open(new_path))
-    prior = json.load(open(prior_path))
-    nq, pq_ = new.get("queries", {}), prior.get("queries", {})
+    def queries(path):
+        # a bench line keeps its map at the top level; a recorded
+        # BENCH_r*.json record keeps the parsed line under "parsed"
+        rec = json.load(open(path))
+        return rec.get("queries") or rec.get("parsed", {}).get("queries", {})
+    nq, pq_ = queries(new_path), queries(prior_path)
     shared = sorted(set(nq) & set(pq_))
     if not shared:
-        print("bench-gate: no shared queries — nothing to compare")
-        sys.exit(0)
+        print("bench-gate: FAIL — no shared queries; a gate that "
+              "compares nothing passes nothing")
+        sys.exit(1)
     tn = sum(nq[q] for q in shared)
     tp = sum(pq_[q] for q in shared)
     ratio = tn / tp if tp > 0 else float("inf")
