@@ -24,7 +24,9 @@ import graft.sources.ManifestSql
   * at build time, [[GraftCatalog.install]] at runtime). A `USING
   * graft-manifest` entry loads as a [[GraftTable]]; every other name
   * is the built-in catalog's, unchanged (a parquet table still loads
-  * as its `V1Table` and keeps every V1 command). So `db.t` is a DSv2
+  * as its `V1Table` and keeps every V1 command; a v2 provider's table
+  * and its CTAS/REPLACE are served as the built-in catalog serves
+  * them). So `db.t` is a DSv2
   * table, and Spark's OWN analyzer serves its time travel
   * (`loadTable(ident, version/timestamp)`), ALTER ([[alterTable]]),
   * TRUNCATE ([[GraftTable.truncateTable]]), INSERT (a V1Write onto
@@ -83,16 +85,23 @@ class GraftCatalog extends DelegatingCatalogExtension
     (Seq(catalogName) ++ ident.namespace() :+ ident.name()).mkString(".")
 
   /** What `ident` names: Right(the `USING graft-manifest` entry), or
-    * Left(the built-in catalog's table) for any other name — one
-    * metadata read either way. The alias knows manifest entries only. */
+    * Left(the table the built-in catalog serves) for any other name —
+    * one metadata read either way. Under a custom session catalog
+    * Spark's delegate serves every entry as a `V1Table`, so a v2
+    * provider's table is built here, as the built-in catalog builds
+    * it. The alias knows manifest entries only. */
   private def lookup(ident: Identifier): Either[Table, CatalogTable] =
     if (isAlias)
       Right(ManifestSql.manifestEntryOf(session, v1Ident(ident))
         .getOrElse(throw missing(ident)))
     else {
       val t = super.loadTable(ident)
-      graftbridge.v1EntryOf(t).filter(ManifestSql.isManifestEntry)
-        .toRight(t)
+      graftbridge.v1EntryOf(t) match {
+        case Some(entry) if ManifestSql.isManifestEntry(entry) => Right(entry)
+        case Some(entry) =>
+          Left(graftbridge.providerTable(session, entry).getOrElse(t))
+        case None => Left(t)
+      }
     }
 
   /** The manifest entry behind `ident`, if it names one. */
@@ -156,15 +165,15 @@ class GraftCatalog extends DelegatingCatalogExtension
     properties.asScala.toMap.map { case (k, v) =>
       k.stripPrefix(TableCatalog.OPTION_PREFIX) -> v }
 
-  private def createsManifest(properties: util.Map[String, String]): Boolean =
-    isAlias || Option(properties.get(TableCatalog.PROP_PROVIDER))
-      .exists(_.equalsIgnoreCase(ManifestSql.ManifestProvider))
-
+  /** Bound as `spark_catalog`, this is the built-in CREATE: a `USING
+    * graft-manifest` CREATE or CTAS never arrives here — its provider
+    * is a V1 one, so Spark runs it as a V1 command through
+    * [[graft.sources.ManifestSource]]. The alias creates manifest
+    * tables only. */
   override def createTable(ident: Identifier, columns: Array[Column],
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table =
-    if (!createsManifest(properties))
-      super.createTable(ident, columns, partitions, properties)
+    if (!isAlias) super.createTable(ident, columns, partitions, properties)
     else createManifest(ident, StructType(columns.map(c =>
       StructField(c.name(), c.dataType(), c.nullable()))),
       partitions, properties)
@@ -204,17 +213,25 @@ class GraftCatalog extends DelegatingCatalogExtension
   // (nothing referenced it); a committed data overwrite stays — it is
   // a versioned commit, history intact — and is WARNed about. Bound
   // as `spark_catalog`, a `USING graft-manifest` CTAS takes Spark's V1
-  // path (the provider's write arm), so only the alias stages.
+  // path (the provider's write arm), so only the alias stages
+  // manifest tables; the session catalog stages every other v2
+  // provider's CTAS/REPLACE as the built-in catalog runs it: drop (for
+  // a REPLACE) and create up front, write through, drop on abort.
 
   private def stagedTable(ident: Identifier, info: TableInfo,
                           replace: Boolean, orCreate: Boolean)
+      : StagedTable =
+    if (!isAlias) {
+      if (replace) super.dropTable(ident)
+      // the built-in createTable returns no table: load what it made
+      super.createTable(ident, info.columns(), info.partitions(),
+        info.properties())
+      BestEffortStagedTable(ident, loadTable(ident), this)
+    } else stagedManifest(ident, info, replace, orCreate)
+
+  private def stagedManifest(ident: Identifier, info: TableInfo,
+                             replace: Boolean, orCreate: Boolean)
       : StagedTable = {
-    if (!createsManifest(info.properties()))
-      throw new UnsupportedOperationException(
-        s"${fullName(ident)}: the session catalog stages graft-manifest " +
-          "tables only; CREATE/REPLACE … AS SELECT for provider " +
-          s"'${info.properties().get(TableCatalog.PROP_PROVIDER)}' " +
-          "is not supported here")
     require(info.partitions().isEmpty,
       "graft-manifest does not partition by directory — cluster with " +
         "GRAFT COMPACT ... CLUSTER BY instead")
@@ -273,28 +290,54 @@ class GraftCatalog extends DelegatingCatalogExtension
       case None =>
         ManifestSql.registerPersistent(session, v1.unquotedString, root)
       case Some(meta) if ManifestSql.rootOfEntry(meta) != root =>
-        sessionCatalog.alterTable(meta.copy(
-          storage = meta.storage.copy(
-            locationUri = Some(new org.apache.hadoop.fs.Path(root).toUri),
-            properties = meta.storage.properties + ("path" -> root))))
+        repoint(meta, root)
       case Some(_) => ()
     }
   }
 
-  /** ALTER on a manifest entry: each change is one schema-ledger op
-    * (metadata-only; existing files read through the new shape).
-    * User-written names resolve against the recorded schema under the
+  /** Point a manifest entry at another root: its location and its
+    * `path` property, which [[ManifestSql.rootOfEntry]] reads first. */
+  private def repoint(meta: CatalogTable, root: String): Unit =
+    sessionCatalog.alterTable(meta.copy(
+      storage = meta.storage.copy(
+        locationUri = Some(new org.apache.hadoop.fs.Path(root).toUri),
+        properties = meta.storage.properties + ("path" -> root))))
+
+  /** ALTER on a manifest entry. A column change is one schema-ledger
+    * op (metadata-only; existing files read through the new shape):
+    * user-written names resolve against the recorded schema under the
     * session's case sensitivity; a rename may not collide with
     * another column under it; a multi-column DROP validates as a
     * whole (missing columns without IF EXISTS, dropping every column)
-    * before the first commit. Top-level columns only. */
+    * before the first commit. Top-level columns only. A property
+    * change (`SET/UNSET TBLPROPERTIES`, `COMMENT ON TABLE`) edits the
+    * catalog entry through the built-in catalog; `SET LOCATION`
+    * repoints the entry at another manifest. */
   override def alterTable(ident: Identifier,
                           changes: TableChange*): Table =
     manifestEntry(ident) match {
       case None => super.alterTable(ident, changes: _*)
       case Some(entry) =>
-        alterManifest(fullName(ident), ManifestSql.rootOfEntry(entry),
-          changes)
+        val (props, columns) = changes.partition {
+          case _: TableChange.SetProperty | _: TableChange.RemoveProperty =>
+            true
+          case _ => false
+        }
+        val (location, entryProps) = props.partition {
+          case s: TableChange.SetProperty =>
+            s.property() == TableCatalog.PROP_LOCATION
+          case _ => false
+        }
+        if (columns.nonEmpty)
+          alterManifest(fullName(ident), ManifestSql.rootOfEntry(entry),
+            columns)
+        if (entryProps.nonEmpty) super.alterTable(ident, entryProps: _*)
+        location.collect { case s: TableChange.SetProperty => s.value() }
+          .lastOption.foreach { root =>
+            require(ManifestTable.latest(root).isDefined,
+              s"SET LOCATION on ${fullName(ident)}: no manifest at $root")
+            repoint(sessionCatalog.getTableMetadata(v1Ident(ident)), root)
+          }
         loadTable(ident)
     }
 
@@ -343,7 +386,7 @@ class GraftCatalog extends DelegatingCatalogExtension
         s"graft catalog does not support table change " +
           s"${other.getClass.getSimpleName} — supported: ADD COLUMNS, " +
           "RENAME COLUMN, DROP COLUMN, ALTER COLUMN TYPE (in-family " +
-          "numeric widening)")
+          "numeric widening), table properties and SET LOCATION")
     }
     val dropped = changes.collect { case d: TableChange.DeleteColumn =>
       val c = topLevel(d.fieldNames(), "drops")
@@ -356,6 +399,7 @@ class GraftCatalog extends DelegatingCatalogExtension
     }.flatten.distinct
     require(dropped.size < recorded.fields.length || dropped.isEmpty,
       s"cannot drop every column of $name")
+    ManifestSql.uncacheRoot(session, root)
     if (added.nonEmpty)
       ManifestTable.addColumns(session, root, StructType(added))
     ops.foreach(_())

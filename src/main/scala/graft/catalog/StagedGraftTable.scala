@@ -5,8 +5,9 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable,
-  SupportsWrite, TableCapability}
+import org.apache.spark.sql.connector.catalog.{Column, Identifier,
+  StagedTable, SupportsWrite, Table, TableCapability, TableCatalog}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
   V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
@@ -108,4 +109,38 @@ final case class StagedGraftTable(spark: SparkSession,
           "versioned ledger commit (pre-statement rows remain " +
           "time-travel readable); the catalog entry was not changed")
   }
+}
+
+/** A CTAS / `REPLACE TABLE [AS SELECT]` of any other v2 provider
+  * through the session catalog, run as the built-in catalog runs it
+  * (the best-effort staging Delta's `DeltaCatalog` uses): the table
+  * already exists, created by the built-in catalog; writes pass
+  * through to it; an abort drops it. */
+private[catalog] final case class BestEffortStagedTable(
+    ident: Identifier, table: Table, catalog: TableCatalog)
+  extends StagedTable with SupportsWrite {
+
+  override def name(): String = table.name()
+
+  override def schema(): StructType = table.schema()
+
+  override def columns(): Array[Column] = table.columns()
+
+  override def partitioning(): Array[Transform] = table.partitioning()
+
+  override def properties(): util.Map[String, String] = table.properties()
+
+  override def capabilities(): util.Set[TableCapability] =
+    table.capabilities()
+
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    table match {
+      case w: SupportsWrite => w.newWriteBuilder(info)
+      case _ => throw new UnsupportedOperationException(
+        s"table ${table.name()} does not support writes")
+    }
+
+  override def commitStagedChanges(): Unit = ()
+
+  override def abortStagedChanges(): Unit = { catalog.dropTable(ident); () }
 }

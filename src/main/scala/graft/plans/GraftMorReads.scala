@@ -33,21 +33,8 @@ import graft.sources.ManifestSql
   * [[ManifestSql.underConstruction]] thread guard. */
 case class GraftMorReads(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** The pinned manifest index behind a resolved relation, if any —
-    * matched on the FILE INDEX, not the relation class (a copied
-    * HadoopFsRelation keeps the index). */
-  private def manifestIndexOf(lr: LogicalRelation)
-      : Option[ManifestSql.ManifestFileIndex] = lr.relation match {
-    case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-      h.location match {
-        case idx: ManifestSql.ManifestFileIndex => Some(idx)
-        case _ => None
-      }
-    case _ => None
-  }
-
   private def needsOverlay(lr: LogicalRelation): Boolean =
-    manifestIndexOf(lr).exists(idx => idx.pinnedHasDv &&
+    ManifestSql.indexOf(lr).exists(idx => idx.pinnedHasDv &&
       !lr.getTagValue(ManifestSql.DvOverlaidAt)
         .contains(idx.pinnedSnapshot.version))
 
@@ -55,7 +42,7 @@ case class GraftMorReads(spark: SparkSession) extends Rule[LogicalPlan] {
     if (ManifestSql.underConstruction) plan
     else plan.transformUpWithSubqueries {
       case lr: LogicalRelation if needsOverlay(lr) =>
-        val idx = manifestIndexOf(lr).get
+        val idx = ManifestSql.indexOf(lr).get
         // the version BEFORE the overlay reads the pin: a refresh in
         // between only makes the next analysis overlay again
         val version = idx.pinnedSnapshot.version

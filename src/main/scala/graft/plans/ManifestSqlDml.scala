@@ -9,8 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast,
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation}
 
 import graft.sources.ManifestSql
 
@@ -187,28 +185,17 @@ object ManifestSqlDml {
               c: AttributeReference, _) => a.name == c.name
           case _ => false
         }
-    private def indexOf(p: LogicalPlan)
-        : Option[ManifestSql.ManifestFileIndex] = p match {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location match {
-          case m: ManifestSql.ManifestFileIndex => Some(m)
-          case _ => None
-        }
-        case _ => None
-      }
-      case _ => None
-    }
     @tailrec private def dig(p: LogicalPlan)
         : Option[ManifestSql.ManifestFileIndex] = p match {
       case _ if p.getTagValue(ManifestSql.TableReadTag).isDefined =>
-        p.collectLeaves().flatMap(indexOf) match {
+        p.collectLeaves().flatMap(ManifestSql.indexOf) match {
           case Seq(idx) => Some(idx)
           case _ => None
         }
       case SubqueryAlias(_, child) => dig(child)
       case v: View => dig(v.child)
       case pr: Project if identityRealias(pr) => dig(pr.child)
-      case _ => indexOf(p)
+      case _ => ManifestSql.indexOf(p)
     }
     def unapply(p: LogicalPlan): Option[ManifestSql.ManifestFileIndex] =
       dig(p)
@@ -617,9 +604,11 @@ object ManifestSqlDml {
         val resolver = session.sessionState.conf.resolver
         val missing = evolveCols.filterNot(f =>
           recorded.exists(resolver(_, f.name)))
-        if (missing.nonEmpty)
+        if (missing.nonEmpty) {
+          ManifestSql.uncacheRoot(session, index.root)
           ManifestTable.addColumns(session, index.root,
             org.apache.spark.sql.types.StructType(missing))
+        }
         ()
       }
       ManifestSql.sqlMergeInto(session, index, idCols,

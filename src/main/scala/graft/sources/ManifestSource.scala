@@ -25,16 +25,17 @@ import graft.operators.ManifestTable
   * Catalog entries resolve through [[graft.catalog.GraftCatalog]]
   * bound as `spark_catalog`, never through this provider's relation.
   * The [[SchemaRelationProvider]] arm (a declared or stored schema)
-  * therefore serves two callers: in a graft-catalog session, Spark's
-  * V1 `CREATE TABLE … (cols) USING graft-manifest`, which shares the
-  * DSv2 door's init path ([[ManifestSql.createDeclared]] — so a
-  * declared-schema path read of an absent root creates it too); in a
-  * session whose `spark_catalog` is someone else's, the V1 read of an
-  * entry — served only while that path's bare relation gives the
-  * graft door's rows (no renamed column, no deletion vector, the
-  * stored schema still the table's), and refused with the fix named
-  * otherwise. Nullability-only drift is tolerated (every recorded
-  * field is nullable by construction). */
+  * therefore serves three callers. In a graft-catalog session, Spark's
+  * V1 `CREATE TABLE … (cols) USING graft-manifest` shares the DSv2
+  * door's init path ([[ManifestSql.createDeclared]]), and a path read
+  * with a supplied schema writes nothing: it reads an existing
+  * manifest whose schema the supplied one matches, and refuses
+  * otherwise. In a session whose `spark_catalog` is someone else's,
+  * the V1 read of an entry is served only while that path's bare
+  * relation gives the graft door's rows (no renamed column, no
+  * deletion vector, the stored schema still the table's), and refused
+  * with the fix named otherwise. Nullability-only drift is tolerated
+  * (every recorded field is nullable by construction). */
 final class ManifestSource extends RelationProvider
   with SchemaRelationProvider with CreatableRelationProvider
   with StreamSinkProvider
@@ -202,12 +203,30 @@ final class ManifestSource extends RelationProvider
                               parameters: Map[String, String],
                               schema: StructType): BaseRelation = {
     val spark = sqlContext.sparkSession
-    val root = rootOf(parameters)
-    if (graft.catalog.GraftCatalog.isSessionCatalog(spark)) {
+    if (!graft.catalog.GraftCatalog.isSessionCatalog(spark))
+      foreignRead(sqlContext, parameters, schema)
+    else if (org.apache.spark.sql.graftbridge.inV1CreateTable(spark)) {
+      val root = rootOf(parameters)
       ManifestSql.createDeclared(spark, root, schema,
         ManifestSql.declarationsOf(parameters), root)
       createRelation(sqlContext, parameters)
-    } else foreignRead(sqlContext, parameters, schema)
+    } else declaredRead(sqlContext, parameters, schema,
+      "read it without a schema: the manifest records its own")
+  }
+
+  /** The relation at the root, refused when the supplied or stored
+    * `schema` names other columns or types than the table's. */
+  private def declaredRead(sqlContext: SQLContext,
+                           parameters: Map[String, String],
+                           schema: StructType, fix: String): BaseRelation = {
+    val rel = createRelation(sqlContext, parameters)
+    require(rel.schema.fieldNames.toSeq == schema.fieldNames.toSeq &&
+      rel.schema.fields.map(_.dataType).toSeq ==
+        schema.fields.map(_.dataType).toSeq,
+      s"manifest table at ${rootOf(parameters)} has schema " +
+        s"${rel.schema.simpleString}, not the given " +
+        s"${schema.simpleString} — $fix")
+    rel
   }
 
   private def foreignRead(sqlContext: SQLContext,
@@ -226,14 +245,9 @@ final class ManifestSource extends RelationProvider
     require(!ManifestTable.hasDv(snap),
       s"the manifest table at $root carries deletion vectors, which " +
         s"this session's V1 catalog path does not apply — $fix")
-    val rel = createRelation(sqlContext, parameters)
-    require(rel.schema.fieldNames.toSeq == schema.fieldNames.toSeq &&
-      rel.schema.fields.map(_.dataType).toSeq ==
-        schema.fields.map(_.dataType).toSeq,
-      s"manifest table at $root has evolved since its catalog " +
-        s"registration (registered ${schema.simpleString}, current " +
-        s"${rel.schema.simpleString}) — $fix, or re-register the entry")
-    rel
+    declaredRead(sqlContext, parameters, schema,
+      s"the table evolved since its catalog registration; $fix, or " +
+        "re-register the entry")
   }
 }
 

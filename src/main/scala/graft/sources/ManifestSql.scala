@@ -465,6 +465,39 @@ object ManifestSql {
     spark.catalog.refreshByPath(idx.root)
   }
 
+  /** Drop every cached plan that reads the manifest at `root` — run
+    * BEFORE a schema commit (ALTER, a schema-evolving MERGE). A cached
+    * index pins the old physical schema and cannot refresh across the
+    * change: the next write's `refreshByPath` would reach its drift
+    * guard and fail the statement after its commit. */
+  private[graft] def uncacheRoot(spark: SparkSession, root: String): Unit = {
+    def qualified(p: String) = {
+      val path = new HPath(p)
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(path)
+    }
+    val target = qualified(root)
+    org.apache.spark.sql.graftbridge.uncacheWhere(spark,
+      _.exists(indexOf(_).exists(idx => qualified(idx.root) == target)))
+  }
+
+  /** The manifest index a plan node scans, if it is a manifest
+    * relation — matched on the FILE INDEX, not the relation class (a
+    * copied HadoopFsRelation keeps the index). */
+  private[graft] def indexOf(
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Option[ManifestFileIndex] = p match {
+    case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+      l.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case m: ManifestFileIndex => Some(m)
+          case _ => None
+        }
+        case _ => None
+      }
+    case _ => None
+  }
+
   /** The ONE owner of SQL `DELETE FROM` semantics, root-addressed
     * like [[sqlWrite]] so every door shares it (the V1 rule path
     * through [[sqlDelete]], the DSv2 `SupportsDelete` door

@@ -35,6 +35,66 @@ object graftbridge {
     case _ => None
   }
 
+  /** The table Spark's built-in session catalog serves for an entry
+    * of a v2 provider (a `TableProvider` that is not a file source):
+    * `V2SessionCatalog` builds it only while no custom session catalog
+    * is bound, and leaves it to the custom one otherwise. Built here
+    * the same way, skipped like there when the entry's V1 relation is
+    * cached; None for any other entry. */
+  def providerTable(spark: SparkSession,
+                    entry: catalyst.catalog.CatalogTable)
+      : Option[connector.catalog.Table] =
+    entry.provider
+      .filterNot(_ => execution.command.DDLUtils.isHiveTable(entry))
+      .filter(_ => spark.sessionState.catalog.getCachedTable(
+        catalyst.QualifiedTableName(
+          entry.identifier.catalog.getOrElse("spark_catalog"),
+          entry.database, entry.identifier.table)) == null)
+      .flatMap(execution.datasources.v2.DataSourceV2Utils
+        .getTableProvider(_, spark.sessionState.conf))
+      .map { provider =>
+        val opts = new util.CaseInsensitiveStringMap(
+          scala.jdk.CollectionConverters.MapHasAsJava(entry.properties ++
+            entry.storage.locationUri.map(u =>
+              "path" -> catalyst.catalog.CatalogUtils.URIToString(u)))
+            .asJava)
+        if (provider.supportsExternalMetadata())
+          provider.getTable(entry.schema,
+            new connector.catalog.V1Table(entry).partitioning,
+            opts.asCaseSensitiveMap())
+        else provider.getTable(provider.inferSchema(opts),
+          provider.inferPartitioning(opts), opts.asCaseSensitiveMap())
+      }
+
+  /** Drop every cached plan (`CACHE TABLE`, `Dataset.cache`) for
+    * which `drop` holds. The cache manager keeps its entries private,
+    * so they are read by reflection; each match leaves through the
+    * public `uncacheQuery`. */
+  def uncacheWhere(spark: SparkSession,
+                   drop: catalyst.plans.logical.LogicalPlan => Boolean)
+      : Unit = {
+    val cs = spark.asInstanceOf[classic.SparkSession]
+    val cm = cs.sharedState.cacheManager
+    val entries = classOf[execution.CacheManager]
+      .getDeclaredMethod("cachedData")
+    entries.setAccessible(true)
+    entries.invoke(cm).asInstanceOf[IndexedSeq[execution.CachedData]]
+      .map(_.plan).filter(drop)
+      .foreach(cm.uncacheQuery(cs, _, cascade = false))
+  }
+
+  /** Is this thread running a V1 `CREATE TABLE … USING` command
+    * (`CreateDataSourceTableCommand`, which resolves the provider's
+    * relation before it records the entry)? Read from the SQL
+    * execution the command runs under. */
+  def inV1CreateTable(spark: SparkSession): Boolean =
+    Option(spark.sparkContext.getLocalProperty(
+      execution.SQLExecution.EXECUTION_ID_KEY))
+      .flatMap(id => Option(
+        execution.SQLExecution.getQueryExecution(id.toLong)))
+      .exists(_.logical.isInstanceOf[
+        execution.command.CreateDataSourceTableCommand])
+
   /** `Dataset.ofRows` (private[sql] in Spark 4) — a logical plan as a
     * DataFrame, for RunnableCommands that receive a child plan. */
   def ofRows(spark: SparkSession,

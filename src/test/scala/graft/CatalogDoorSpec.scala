@@ -8,6 +8,52 @@ import org.apache.spark.sql.connector.catalog.DelegatingCatalogExtension
   * binding looks like to graft). */
 class ForeignSessionCatalog extends DelegatingCatalogExtension
 
+/** A minimal v2 provider (a `TableProvider`, so its CREATE/CTAS stay
+  * v2 under any session catalog): every table takes batch writes,
+  * which land in [[CatalogDoorSink.rows]]. */
+class CatalogDoorSink extends org.apache.spark.sql.connector.catalog.TableProvider {
+  import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table,
+    TableCapability}
+  import org.apache.spark.sql.connector.write.{LogicalWriteInfo,
+    SupportsTruncate, V1Write, WriteBuilder}
+  import org.apache.spark.sql.types.StructType
+
+  override def supportsExternalMetadata(): Boolean = true
+
+  override def inferSchema(
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
+      : StructType = new StructType()
+
+  override def getTable(declared: StructType,
+                        partitioning: Array[org.apache.spark.sql.connector
+                          .expressions.Transform],
+                        properties: java.util.Map[String, String]): Table =
+    new Table with SupportsWrite {
+      override def name(): String = "cdoor_sink"
+      override def schema(): StructType = declared
+      override def capabilities(): java.util.Set[TableCapability] =
+        java.util.EnumSet.of(TableCapability.V1_BATCH_WRITE,
+          TableCapability.TRUNCATE)
+      override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+        new WriteBuilder with SupportsTruncate {
+          override def truncate(): WriteBuilder = this
+          override def build(): V1Write = new V1Write {
+            override def toInsertableRelation =
+              new org.apache.spark.sql.sources.InsertableRelation {
+                override def insert(data: DataFrame,
+                                    overwrite: Boolean): Unit = {
+                  CatalogDoorSink.rows ++= data.collect(); ()
+                }
+              }
+          }
+        }
+    }
+}
+
+object CatalogDoorSink {
+  val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+}
+
 /** The one SQL catalog door ([[graft.catalog.GraftCatalog]] bound as
   * `spark_catalog`): `db.t` and `graft.db.t` serve every verb on
   * renamed and DV-carrying tables alike, CREATE TABLE initializes
@@ -313,5 +359,114 @@ class CatalogDoorSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS cdoor_fplain")
       spark.sql("DROP TABLE IF EXISTS cdoor_fx")
     }
+  }
+
+  test("a schema change drops every cached plan over the root: CACHE TABLE, then ALTER ADD COLUMNS or an evolving MERGE, then INSERT commits once through default.t and graft.default.t") {
+    import spark.implicits._
+    Seq((3L, "up", 6L, 7L)).toDF("id", "v", "n", "extra")
+      .createOrReplaceTempView("cdoor_evo")
+    val changes = Seq[(String, String => String)](
+      "ALTER ADD COLUMNS" -> (t => s"ALTER TABLE $t ADD COLUMNS (extra BIGINT)"),
+      "MERGE WITH SCHEMA EVOLUTION" -> (t =>
+        s"MERGE WITH SCHEMA EVOLUTION INTO $t t USING cdoor_evo s " +
+          "ON t.id = s.id WHEN MATCHED THEN UPDATE SET * " +
+          "WHEN NOT MATCHED THEN INSERT *"))
+    try {
+      for (name <- Seq("default.cdoor_cache", "graft.default.cdoor_cache");
+           (label, change) <- changes) {
+        val root = freshTable("graft_cdoor_cache")
+        graft.api.Graft(spark, sf)
+          .registerManifest("cdoor_cache", root, persistent = true)
+        graft.sources.ManifestSql.register(spark, "cdoor_cache_tmp", root)
+        spark.sql(s"CACHE TABLE $name")
+        spark.sql("CACHE TABLE cdoor_cache_tmp")
+        // a Scala-side commit leaves both cached plans pinned behind
+        // the head
+        ManifestTable.append(spark, root,
+          Seq((60L, "row60", 120L)).toDF("id", "v", "n"))
+        spark.sql(change(name))
+        val v0 = ManifestTable.latest(root).get.version
+        spark.sql(s"INSERT INTO $name VALUES (70, 'x', 140, 1)")
+        assert(ManifestTable.latest(root).get.version == v0 + 1,
+          s"$label then INSERT through $name must commit the INSERT once")
+        assert(spark.table(name).columns.toSeq == Seq("id", "v", "n", "extra"))
+        assert(spark.sql(s"SELECT count(*), count(extra) FROM $name").head() ==
+          Row(62L, if (label.startsWith("MERGE")) 2L else 1L))
+        spark.catalog.dropTempView("cdoor_cache_tmp")
+        spark.sql("DROP TABLE cdoor_cache")
+      }
+    } finally {
+      spark.catalog.dropTempView("cdoor_cache_tmp")
+      spark.sql("DROP TABLE IF EXISTS cdoor_cache")
+    }
+  }
+
+  test("a path read with a supplied schema writes nothing: an absent root and a different schema refuse") {
+    val declared = org.apache.spark.sql.types.StructType
+      .fromDDL("a INT, b STRING")
+    def read(root: String, schema: org.apache.spark.sql.types.StructType) =
+      spark.read.schema(schema).format("graft-manifest").load(root)
+    val absent = java.nio.file.Files.createTempDirectory("graft_cdoor_rd")
+      .toString + "/absent"
+    intercept[Exception](read(absent, declared).collect())
+    assert(!new java.io.File(absent).exists(),
+      "a read must not create the table")
+    val root = freshTable("graft_cdoor_rd")
+    val head = ManifestTable.latest(root).get
+    val e = intercept[Exception](read(root, declared).collect())
+    assert(e.getMessage.contains("not the given"), e.getMessage)
+    assert(ManifestTable.latest(root).get == head)
+    val own = ManifestTable.read(spark, root).schema
+    assert(read(root, own).count() == 60L, "the table's own schema reads")
+  }
+
+  test("another v2 provider's CTAS and REPLACE TABLE AS SELECT run as under the built-in session catalog") {
+    val provider = classOf[CatalogDoorSink].getName
+    for (binding <- Seq(classOf[graft.catalog.GraftCatalog].getName,
+        "builtin")) {
+      val s = spark.newSession()
+      s.conf.set(graft.catalog.GraftCatalog.SessionCatalogKey, binding)
+      CatalogDoorSink.rows.clear()
+      try {
+        s.sql(s"CREATE TABLE cdoor_v2 USING $provider AS SELECT 1 AS a")
+        s.sql(s"REPLACE TABLE cdoor_v2 USING $provider AS SELECT 2 AS a")
+        assert(CatalogDoorSink.rows.toSeq == Seq(Row(1), Row(2)), binding)
+        assert(s.catalog.tableExists("cdoor_v2"), binding)
+      } finally s.sql("DROP TABLE IF EXISTS cdoor_v2")
+    }
+  }
+
+  test("SET/UNSET TBLPROPERTIES and COMMENT ON TABLE edit a manifest entry, SET LOCATION repoints it, through default.t and graft.default.t") {
+    val ident = org.apache.spark.sql.catalyst.TableIdentifier("cdoor_props",
+      Some("default"))
+    def entry = spark.sessionState.catalog.getTableMetadata(ident)
+    try {
+      for (name <- Seq("default.cdoor_props", "graft.default.cdoor_props")) {
+        val root = freshTable("graft_cdoor_props")
+        val other = freshTable("graft_cdoor_props2", n = 5L)
+        graft.api.Graft(spark, sf)
+          .registerManifest("cdoor_props", root, persistent = true)
+        val head = ManifestTable.latest(root).get
+        spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES ('team' = 'search')")
+        assert(entry.properties.get("team").contains("search"), name)
+        spark.sql(s"ALTER TABLE $name UNSET TBLPROPERTIES ('team')")
+        assert(!entry.properties.contains("team"), name)
+        spark.sql(s"COMMENT ON TABLE $name IS 'corpus'")
+        assert(entry.comment.contains("corpus"), name)
+        assert(ManifestTable.latest(root).get == head,
+          "an entry edit commits nothing")
+        spark.sql(s"ALTER TABLE $name SET LOCATION '$other'")
+        assert(spark.table(name).count() == 5L, s"$name reads the new root")
+        spark.sql(s"INSERT INTO $name VALUES (90, 'x', 0)")
+        assert(ManifestTable.read(spark, other).count() == 6L)
+        assert(ManifestTable.latest(root).get == head)
+        val missing = java.nio.file.Files.createTempDirectory("graft_cdoor_np")
+          .toString + "/absent"
+        intercept[Exception](
+          spark.sql(s"ALTER TABLE $name SET LOCATION '$missing'"))
+        assert(spark.table(name).count() == 6L)
+        spark.sql("DROP TABLE cdoor_props")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS cdoor_props")
   }
 }
