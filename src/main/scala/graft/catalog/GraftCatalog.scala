@@ -399,7 +399,6 @@ class GraftCatalog extends DelegatingCatalogExtension
     }.flatten.distinct
     require(dropped.size < recorded.fields.length || dropped.isEmpty,
       s"cannot drop every column of $name")
-    ManifestSql.uncacheRoot(session, root)
     if (added.nonEmpty)
       ManifestTable.addColumns(session, root, StructType(added))
     ops.foreach(_())

@@ -496,6 +496,12 @@ object ManifestTable {
                     val schema = plan.schema.map(s => mergeSchemaJson(
                       seededSchemaJson(SparkSession.active, root, snap), s,
                       reservedNames(snap.meta))).orElse(next.schemaJson)
+                    // a schema change drops the cached head-pinned plans
+                    // first: they cannot refresh across it
+                    if (schema != snap.schemaJson ||
+                        colmapOf(meta) != colmapOf(snap.meta))
+                      graft.sources.ManifestSql.uncacheRoot(
+                        SparkSession.active, root)
                     out = tryCommit(root, next.copy(version = snap.version + 1,
                       meta = meta, schemaJson = schema)).map(plan.result)
                     if (out.isEmpty) snap = fresh()
@@ -1265,9 +1271,9 @@ object ManifestTable {
     }
   }
 
-  /** MERGE-ON-READ OVERLAY — the one owner every Scala read path
-    * funnels through ([[readSnapshot]]); the SQL doors apply the same
-    * shape via [[graft.sources.ManifestSql]]. `scanned` must carry
+  /** MERGE-ON-READ OVERLAY — applied once per DV-carrying scan by the
+    * one scan builder ([[graft.sources.ManifestSql.scan]]), which every
+    * Scala read and SQL door plans through. `scanned` must carry
     * `absCol` (absolute file path) and `posCol` (parquet row index)
     * alongside the data columns; rows whose (file, pos) appear in any
     * live DV drop. The DV side broadcasts when small (a point
@@ -1305,13 +1311,6 @@ object ManifestTable {
     readSnapshot(spark, root, latest(root).getOrElse(
       throw new IllegalStateException(s"no manifest at $root")))
 
-  /** [[read]] against a snapshot the caller already resolved — the
-    * one-read seam for lifecycle operators that read, number, and
-    * commit against the same head ([[SignatureStore.ingest]]). */
-  private[operators] def readWith(spark: SparkSession, root: String,
-                                  snap: Snapshot): DataFrame =
-    readSnapshot(spark, root, snap)
-
   /** [[isBatchCommitted]] against a caller-read head. */
   private[operators] def isBatchCommittedIn(head: Option[Snapshot],
                                             batchId: Long): Boolean =
@@ -1328,99 +1327,28 @@ object ManifestTable {
       throw new IllegalStateException(
         s"no manifest v$version at $root (never published or expired)")))
 
-  /** Plan with the manifest's recorded merged schema: zero footer
-    * reads, and files written before a column existed read NULL for
-    * it. RENAMED columns read through their `#colmap:` chain — the
-    * physical scan lists the historical names too (same type,
-    * nullable) and the projection coalesces new-then-old, so files
-    * written before the rename serve the column under its new name;
-    * DROPPED columns are simply absent from the projection. Manifests
-    * from before the schema ledger fall back to a `mergeSchema`
-    * footer scan — same semantics, O(files) planning. */
-  private def readSnapshot(spark: SparkSession, root: String,
-                           snap: Snapshot): DataFrame =
-    readSnapshotImpl(spark, root, snap, fileCol = None, posCol = None)
-
-  /** [[readSnapshot]] plus PROVENANCE: `fileCol` (absolute file path
-    * of each row's source file) and/or `posCol` (parquet row index in
-    * it) materialize AT THE SCAN, from the deterministic `_metadata`
-    * columns — join-safe (`input_file_name()` after a shuffle
-    * boundary returns empty strings) and transparent to filter
-    * pushdown, so a victim predicate still reaches the parquet scan.
-    * The copy-on-write victim scans and the MoR delete both ride
-    * this. */
-  private def readSnapshotImpl(spark: SparkSession, root: String,
-                               snap: Snapshot,
-                               fileCol: Option[String],
-                               posCol: Option[String]): DataFrame = {
-    require(snap.files.nonEmpty, s"empty table at $root (v${snap.version})")
-    val paths = snap.files.map(f => s"$root/$f")
-    val dvMap = dvRefsOf(snap, snap.files)
-    val needMeta = dvMap.nonEmpty || posCol.isDefined
-    val (scan0, dataCols) = recordedSchema(snap) match {
-      case Some(sc) =>
-        val (physical, projection) = readShapeOf(sc, colmapOf(snap.meta))
-        val scan = spark.read.schema(physical).parquet(paths: _*)
-        (scan, projection.getOrElse(
-          sc.fieldNames.toSeq.map(F.col)))
-      case None =>
-        val scan = spark.read.option("mergeSchema", "true")
-          .parquet(paths: _*)
-        (scan, scan.columns.toSeq.map(F.col))
-    }
-    if (!needMeta && fileCol.isEmpty) {
-      return scan0.select(dataCols: _*)
-    }
-    if (!needMeta) {
-      // provenance without DVs: the file-path metadata column, NOT
-      // input_file_name() — a nondeterministic projection stops
-      // every filter above it from reaching the parquet scan
-      return scan0.select(dataCols :+
-        F.col("_metadata.file_path").as(fileCol.get): _*)
-    }
-    // DV path (or an explicit posCol ask): select data columns plus
-    // the parquet metadata identity, overlay, then shape the output
-    val abs = "__graft_abs"
-    val pos = "__graft_pos"
-    val wide = scan0.select(dataCols ++ Seq(
-      F.col("_metadata.file_path").as(abs),
-      F.col("_metadata.row_index").as(pos)): _*)
-    val overlaid = overlayDv(spark, root, dvMap, wide, abs, pos)
-    val keep = overlaid.columns.toSeq.flatMap {
-      case `abs` =>
-        fileCol.map(c => F.col(abs).as(c))
-      case `pos` => posCol.map(c => F.col(pos).as(c))
-      case c => Some(F.col(c))
-    }
-    overlaid.select(keep: _*)
-  }
-
-  /** The ONE owner of the rename-chain read shape, shared by the
-    * Scala reads above and the [[graft.sources.ManifestSql]] SQL
-    * front door (duplicating it would let the two paths' rename
-    * semantics drift): the physical scan schema (logical fields
-    * all-nullable, plus every historical name of a renamed column)
-    * and — when any chain exists — the new-then-old coalesce
-    * projection back to the logical shape. */
-  private[graft] def readShapeOf(logical: StructType,
-                                 colmap: Map[String, Seq[String]])
-      : (StructType, Option[Seq[Column]]) = {
-    val extra = logical.fields.flatMap(f =>
-      colmap.getOrElse(f.name, Seq.empty)
-        .map(o => StructField(o, f.dataType, nullable = true)))
-    val physical = StructType(
-      logical.fields.map(_.copy(nullable = true)) ++ extra)
-    val projection =
-      if (colmap.isEmpty) None
-      else Some(logical.fields.toSeq.map { f =>
-        colmap.get(f.name) match {
-          case Some(olds) =>
-            F.coalesce((f.name +: olds).map(F.col): _*).as(f.name)
-          case None => F.col(f.name)
-        }
-      })
-    (physical, projection)
-  }
+  /** A snapshot's rows through the one scan builder
+    * ([[graft.sources.ManifestSql.scan]]), pinned to `snap` for good —
+    * `snap` may be a file subset, and a refresh never moves or widens
+    * it. The recorded schema plans the scan (zero footer reads; files
+    * written before a column existed read NULL for it; a pre-ledger
+    * manifest's schema is the one-off footer merge of
+    * [[recordedSchemaOf]]); RENAMED columns read through their
+    * `#colmap:` chain, DROPPED ones are absent, and deletion vectors
+    * apply. `fileCol` / `posCol` add each row's file path and parquet
+    * row index — join-safe and transparent to filter pushdown, so a
+    * victim predicate still reaches the parquet scan (the
+    * copy-on-write victim scans, the MoR delete and the MERGE probes
+    * ride them). Also the one-read seam for lifecycle operators that
+    * read, number, and commit against the same head
+    * ([[SignatureStore.ingest]]). */
+  private[operators] def readSnapshot(spark: SparkSession, root: String,
+                                      snap: Snapshot,
+                                      fileCol: Option[String] = None,
+                                      posCol: Option[String] = None)
+      : DataFrame =
+    graft.sources.ManifestSql.scan(spark, root, snap, Some(snap.version),
+      fileCol, posCol)
 
   /** CHANGE DATA FEED between two published versions — row-level
     * inserts and deletes derived from the manifests' FILE diff, with
@@ -1505,34 +1433,18 @@ object ManifestTable {
           s"(e.g. ${gone.head}) — the CDF lookback is bounded by the " +
           "vacuum/reader-retention contract, like readVersion")
     }
-    // pre-ledger manifests (no recorded schema): derive ONE merged
-    // schema over BOTH changed-file sets, so the two sides align by
-    // name — two independent mergeSchema scans could differ
-    // in columns (a rewrite that added a column) and either throw or
-    // misalign positionally
+    // pre-ledger manifests (no recorded schema): ONE schema over BOTH
+    // changed-file sets, so the two sides align by name
     val changedAll = removed ++ added
     val readBase: Snapshot =
-      if (to.schemaJson.isDefined || changedAll.isEmpty) to
-      else to.copy(schemaJson = Some(StructType(
-        spark.read.option("mergeSchema", "true")
-          .parquet(changedAll.map(f => s"$root/$f"): _*)
-          .schema.fields.map(_.copy(nullable = true))).json))
+      if (to.schemaJson.isDefined) to
+      else to.copy(schemaJson = Some(recordedSchemaOf(spark, root, to.copy(
+        files = if (changedAll.nonEmpty) changedAll else to.files)).json))
     // each side reads under ITS OWN version's stat payloads, so a
     // file's DV overlay matches the version being diffed
     def rowsOf(files: Seq[String], statsOf: Snapshot): DataFrame =
-      if (files.nonEmpty)
-        readSnapshot(spark, root,
-          readBase.copy(files = files, stats = statsOf.stats))
-      else recordedSchema(readBase) match {
-        case Some(sc) => spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
-        case None if to.files.nonEmpty =>
-          readSnapshot(spark, root, to).limit(0)
-        case None if from.files.nonEmpty =>
-          readSnapshot(spark, root, to.copy(files = from.files)).limit(0)
-        case None => throw new IllegalStateException(
-          s"empty schema-less table at $root has no change feed")
-      }
+      readSnapshot(spark, root,
+        readBase.copy(files = files, stats = statsOf.stats))
     (rowsOf(removed, from), rowsOf(added, to))
   }
 
@@ -1810,7 +1722,7 @@ object ManifestTable {
     val files =
       v.prune.map(candidateFiles(spark, root, base, _)).getOrElse(base.files)
     if (files.isEmpty) None
-    else Some(v.hits(readSnapshotImpl(spark, root, base.copy(files = files),
+    else Some(v.hits(readSnapshot(spark, root, base.copy(files = files),
       fileCol = Some(FileCol), posCol = if (withPos) Some(PosCol) else None)))
   }
 
@@ -2088,12 +2000,13 @@ object ManifestTable {
     * (predicate AND membership terms) and pruning are
     * [[deleteWhere]]'s.
     *
-    *  - READERS overlay the DV everywhere: every Scala read plans the
-    *    anti-join on `_metadata.row_index` inside [[readSnapshot]],
-    *    and the SQL doors (temp view, persistent catalog, DSv2) apply
-    *    the same overlay via [[graft.sources.ManifestSql]] /
-    *    [[graft.plans.GraftMorReads]]. A small DV broadcasts — the
-    *    overlay is a map-side probe, no shuffle on the scan side.
+    *  - READERS overlay the DV everywhere: every Scala read and SQL
+    *    door (temp view, catalog name, TVF) plans the anti-join on
+    *    `_metadata.row_index` inside the one scan builder
+    *    ([[graft.sources.ManifestSql.scan]]); a provider path read
+    *    gets the same overlay from [[graft.plans.GraftMorReads]]. A
+    *    small DV broadcasts — the overlay is a map-side probe, no
+    *    shuffle on the scan side.
     *  - TIME TRAVEL is exact: DV refs live in per-version stat
     *    payloads, so an older version reads its own (or no) DV.
     *  - REWRITES FOLD DVs: [[compact]] reads through the overlay and
@@ -2619,8 +2532,8 @@ object ManifestTable {
           else candidateFiles(spark, root, base,
             anyRaw(notMatchedBySource))
         def scanOf(files: Seq[String]): DataFrame =
-          readSnapshotImpl(spark, root, base.copy(files = files),
-            fileCol = Some(FileCol), posCol = None)
+          readSnapshot(spark, root, base.copy(files = files),
+            fileCol = Some(FileCol))
         // per-file fired-row counts, matched and not-matched-by-source
         // tagged apart — ONE pushed-down job over the union
         val mProbe =
@@ -2647,10 +2560,10 @@ object ManifestTable {
         // ---- the inserts: source rows matching NO target key, first
         // insert clause wins, unassigned columns NULL
         val affected = base.files.filter(perFile.contains)
-        val targetSchema = recordedSchema(base).getOrElse(
-          if (base.files.isEmpty) StructType(Seq.empty)
-          else readSnapshot(spark, root, base.copy(files =
-            if (affected.nonEmpty) affected else base.files)).schema)
+        val targetSchema =
+          if (base.schemaJson.isEmpty && base.files.isEmpty) StructType(Seq.empty)
+          else recordedSchemaOf(spark, root, base.copy(files =
+            if (affected.nonEmpty) affected else base.files))
         val inserts =
           if (notMatched.isEmpty) None
           else {
@@ -2840,11 +2753,9 @@ object ManifestTable {
                 predicate: Column): DataFrame = {
     val snap = latest(root).getOrElse(
       throw new IllegalStateException(s"no manifest at $root"))
-    val cand = candidateFiles(spark, root, snap, predicate)
-    if (cand.isEmpty)
-      readSnapshot(spark, root, snap).filter(predicate).limit(0)
-    else
-      readSnapshot(spark, root, snap.copy(files = cand)).filter(predicate)
+    readSnapshot(spark, root,
+      snap.copy(files = candidateFiles(spark, root, snap, predicate)))
+      .filter(predicate)
   }
 
   /** METADATA-FIRST COUNT: `read(...).filter(predicate).count()`

@@ -139,7 +139,7 @@ object SignatureStore {
       .bandedSignatures(incoming, idCol, textCol, k, bands, terms)
       .localCheckpoint(eager = true)
     val drops = Dedup
-      .incrementalDrops(ManifestTable.readWith(spark, root, head).drop("gen"),
+      .incrementalDrops(ManifestTable.readSnapshot(spark, root, head).drop("gen"),
         bandedB, idCol, k, threshold)
       .localCheckpoint(eager = true)
     val nextGen = ManifestTable.ledgerHigh(head) + 1
@@ -181,7 +181,7 @@ object SignatureStore {
     val stored =
       if (head.map(ManifestTable.ledgerHigh).getOrElse(-1L) < 0)
         bandedB.limit(0)
-      else ManifestTable.readWith(spark, root, head.get).drop("gen")
+      else ManifestTable.readSnapshot(spark, root, head.get).drop("gen")
     val drops = Dedup
       .incrementalDrops(stored, bandedB, idCol, k, threshold)
       .localCheckpoint(eager = true)

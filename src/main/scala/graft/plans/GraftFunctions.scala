@@ -250,13 +250,13 @@ object GraftFunctions {
     // tables: fully resolved by the stock analyzer, rejected only at
     // checkAnalysis for non-v2 targets — rewritten here first
     e.injectPostHocResolutionRule(ManifestSqlDml.apply)
-    // merge-on-read READ correctness for PATH reads through the
-    // provider whose pinned snapshot carries deletion vectors — runs
-    // LAST so the DML rule above still sees raw targets
+    // PATH reads through the provider read as every other door: the
+    // DV overlay and rename coalesce of the one scan — runs LAST so
+    // the DML rule above still sees raw targets
     e.injectPostHocResolutionRule(GraftMorReads)
     // maintenance DDL (GRAFT COMPACT/VACUUM/EXPIRE/MAINTAIN/MOR/FOLD);
     // everything else delegates verbatim
-    e.injectParser((_, delegate) => new GraftSqlParser(delegate))
+    e.injectParser((session, delegate) => new GraftSqlParser(session, delegate))
   }
 }
 

@@ -7,17 +7,19 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 import graft.sources.ManifestSql
 
-/** MERGE-ON-READ read correctness for PATH reads through the
-  * provider (`spark.read.format("graft-manifest").option("path",
-  * root)`): the provider's relation is a bare pruned parquet relation
-  * — when its pinned snapshot carries DELETION VECTORS, this rule
-  * swaps in the DV-overlaid plan ([[ManifestSql.dvOverlayFor]]: scan
-  * + anti-join on parquet row position, output re-aliased under the
-  * original exprIds) so deleted rows never surface. Every other door
-  * needs no rule: catalog names and temp views read
-  * [[ManifestSql.relation]], which applies the overlay at
-  * construction, and the Scala reads overlay inside
-  * `ManifestTable.readSnapshot`.
+/** PATH reads through the provider
+  * (`spark.read.format("graft-manifest").option("path", root)`) read
+  * as every other door does: the provider's relation is a bare pruned
+  * parquet relation — when its pinned snapshot carries DELETION
+  * VECTORS or a rename chain, this rule swaps in the shaped plan
+  * ([[ManifestSql.shapedPathRead]]: the one scan builder's overlay —
+  * anti-join on parquet row position — and rename coalesce, output
+  * re-aliased under the original exprIds) so deleted rows never
+  * surface and renamed columns carry their old files' values. Every
+  * other read needs no rule: the Scala reads, the writers' scans,
+  * catalog names, temp views and the TVF all plan through
+  * [[ManifestSql.scan]], which shapes at construction and tags its
+  * relation, so this rule never wraps them a second time.
   *
   * Runs LAST in the injected post-hoc batch — the DML rule before it
   * must see its raw relation targets. Uses `transformUp` (not
@@ -25,7 +27,7 @@ import graft.sources.ManifestSql
   * analyzed-marked subtree that the resolve-variants skip.
   * Idempotence comes from [[ManifestSql.DvOverlaidAt]] instead:
   * every manifest relation inside an overlay plan (and every one
-  * [[ManifestSql.relation]] builds) carries the pin version its
+  * [[ManifestSql.scan]] builds) carries the pin version its
   * overlay covers, so re-runs and re-analyses of reused plans never
   * double-wrap — while a pin that MOVED since (a temp view after
   * `REFRESH TABLE` or its own DML) is overlaid with its new deletion
@@ -33,20 +35,21 @@ import graft.sources.ManifestSql
   * [[ManifestSql.underConstruction]] thread guard. */
 case class GraftMorReads(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def needsOverlay(lr: LogicalRelation): Boolean =
-    ManifestSql.indexOf(lr).exists(idx => idx.pinnedHasDv &&
+  private def needsShape(lr: LogicalRelation): Boolean =
+    ManifestSql.indexOf(lr).exists(idx =>
       !lr.getTagValue(ManifestSql.DvOverlaidAt)
-        .contains(idx.pinnedSnapshot.version))
+        .contains(idx.pinnedSnapshot.version) && (idx.pinnedHasDv ||
+        graft.operators.ManifestTable.colmapOfSnap(idx.pinnedSnapshot).nonEmpty))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (ManifestSql.underConstruction) plan
     else plan.transformUpWithSubqueries {
-      case lr: LogicalRelation if needsOverlay(lr) =>
+      case lr: LogicalRelation if needsShape(lr) =>
         val idx = ManifestSql.indexOf(lr).get
         // the version BEFORE the overlay reads the pin: a refresh in
         // between only makes the next analysis overlay again
         val version = idx.pinnedSnapshot.version
-        val swapped = ManifestSql.dvOverlayFor(spark, idx, lr.relation, lr)
+        val swapped = ManifestSql.shapedPathRead(spark, idx, lr.relation, lr)
         // tag every relation inside the overlay (including the fresh
         // copy of this one) — reused plans re-enter this rule via
         // transformUp, and the tag is what stops a second wrap

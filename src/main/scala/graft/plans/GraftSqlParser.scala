@@ -18,7 +18,10 @@ import graft.operators.ManifestTable
   * grammar and DELEGATES everything else, byte for byte and plan for
   * plan, to the session parser it wraps. It rewrites no other
   * statement: ALTER, time travel and every other verb on a manifest
-  * table resolve through [[graft.catalog.GraftCatalog]].
+  * table resolve through [[graft.catalog.GraftCatalog]]. In a session
+  * bound to another `spark_catalog`, the delegated statements pass
+  * [[ForeignCatalogGuard]], which refuses the manifest verbs that
+  * session's V1 path cannot serve, with the fix named.
   *
   * {{{
   *   GRAFT COMPACT {'<root>'|TABLE <name>} [TARGET <bytes>] [CLUSTER BY c1[, c2…]]
@@ -43,21 +46,22 @@ import graft.operators.ManifestTable
   * wrapper never shadows standard SQL; a malformed GRAFT statement
   * fails with the usage line rather than falling through to a
   * confusing ANSI parse error. */
-class GraftSqlParser(delegate: ParserInterface)
+class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
   extends ParserInterface {
 
   import GraftSqlParser._
 
   override def parsePlan(sqlText: String): LogicalPlan =
-    parseGraft(sqlText).getOrElse(delegate.parsePlan(sqlText))
+    parseGraft(sqlText).getOrElse(
+      ForeignCatalogGuard.checked(session, delegate.parsePlan(sqlText)))
 
   // parameterized spark.sql(text, args) must keep its binding — only
   // intercept our grammar (which has no parameters), else delegate the
   // PARAMETERIZED entry point, not parsePlan
   override def parsePlanWithParameters(sqlText: String,
                                        ctx: ParameterContext): LogicalPlan =
-    parseGraft(sqlText).getOrElse(
-      delegate.parsePlanWithParameters(sqlText, ctx))
+    parseGraft(sqlText).getOrElse(ForeignCatalogGuard.checked(session,
+      delegate.parsePlanWithParameters(sqlText, ctx)))
 
   override def parseQuery(sqlText: String): LogicalPlan =
     delegate.parseQuery(sqlText)

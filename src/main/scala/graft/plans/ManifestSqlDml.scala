@@ -604,12 +604,9 @@ object ManifestSqlDml {
         val resolver = session.sessionState.conf.resolver
         val missing = evolveCols.filterNot(f =>
           recorded.exists(resolver(_, f.name)))
-        if (missing.nonEmpty) {
-          ManifestSql.uncacheRoot(session, index.root)
+        if (missing.nonEmpty)
           ManifestTable.addColumns(session, index.root,
             org.apache.spark.sql.types.StructType(missing))
-        }
-        ()
       }
       ManifestSql.sqlMergeInto(session, index, idCols,
         graftbridge.ofRows(session, source), sourceKeys,

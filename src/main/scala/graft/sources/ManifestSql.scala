@@ -11,15 +11,18 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 import graft.operators.{ManifestStats, ManifestTable}
 
-/** SQL FRONT DOOR for [[ManifestTable]] — a pruned, snapshot-pinned
-  * relation registered in the session catalog, so
-  * `spark.sql("SELECT … FROM corpus WHERE doc_id = 7")` plans a
-  * stats-pruned scan with snapshot isolation and (optionally) time
-  * travel, composing the manifest stack with the SQL/metastore stack.
+/** THE MANIFEST SCAN and the SQL front door for [[ManifestTable]].
+  * [[scan]] is the one place a snapshot becomes rows: the Scala reads,
+  * the writers' victim scans and probes, the layout rewrite, the change
+  * feed and every SQL door (temp view, catalog name, the
+  * `graft_manifest` TVF) plan through it, so
+  * `spark.sql("SELECT … FROM corpus WHERE doc_id = 7")` and
+  * `ManifestTable.read(…).filter(…)` plan the same stats-pruned,
+  * snapshot-isolated scan.
   *
   * Design: a custom [[FileIndex]] over Spark's own parquet
   * `HadoopFsRelation` — the seam transactional table formats use
@@ -29,24 +32,24 @@ import graft.operators.{ManifestStats, ManifestTable}
   * the index maps them onto the manifest's per-file stats
   * ([[ManifestTable.candidatesOf]] — min/max bounds, null counts,
   * prefix intervals AND the per-file Bloom side index), so the
-  * planned scan lists only candidate files. Everything downstream is
-  * stock Spark: vectorized parquet readers, row-group pushdown,
-  * whole-stage codegen — a hand-rolled DataSource-V2 reader factory
-  * would repeat the pruning but lose the vectorized exec path.
+  * planned scan lists only candidate files, and file statuses come
+  * from the manifest's recorded sizes. Everything downstream is stock
+  * Spark: vectorized parquet readers, row-group pushdown, whole-stage
+  * codegen — a hand-rolled DataSource-V2 reader factory would repeat
+  * the pruning but lose the vectorized exec path.
   *
-  * Snapshot semantics: the relation PINS the snapshot current at
-  * registration (or the `versionAsOf` version) — exactly a
-  * transactional reader's contract: queries against the view are
-  * repeatable while writers commit new versions. `REFRESH TABLE`
-  * (routed to [[ManifestFileIndex.refresh]]) moves a HEAD pin to the
-  * current head and leaves a `versionAsOf` pin exactly where it is
-  * (a time-travel view must never silently start serving head data);
-  * re-[[register]] rebuilds everything. Renamed columns read through
-  * their `#colmap:` chain (the same coalesce projection as the Scala
-  * reads — one shared [[ManifestTable.readShapeOf]] owner);
-  * predicates on a renamed column's coalesce are not prunable
-  * shapes — compaction normalizes the files and restores pruning, as
-  * documented on the rename.
+  * Snapshot semantics: the relation PINS a snapshot — exactly a
+  * transactional reader's contract: queries are repeatable while
+  * writers commit new versions. A SQL head registration pins the head
+  * current at registration, and `REFRESH TABLE` (routed to
+  * [[ManifestFileIndex.refresh]]) moves it to the current head; a
+  * version pin — `versionAsOf` time travel, and every Scala read —
+  * stays exactly where it is, file subset included (time travel must
+  * never silently start serving head data). Re-[[register]] rebuilds
+  * everything. Renamed columns read through their `#colmap:` chain
+  * ([[shapeOf]]); predicates on a renamed column's
+  * coalesce are not prunable shapes — compaction normalizes the
+  * files and restores pruning, as documented on the rename.
   *
   * Writes: this object owns one entry per SQL verb for every door —
   * [[sqlWrite]] for every whole-table write (INSERT, INSERT
@@ -257,33 +260,46 @@ object ManifestSql {
     override def inputFiles: Array[String] =
       pin.snap.files.map(f => s"$root/$f").toArray
 
-    /** REFRESH TABLE: a head-pinned view moves to the current head; a
-      * `versionAsOf` view re-reads its OWN version (and fails loudly
-      * if retention expired it) — time travel never silently becomes
-      * the head. The recorded schema must still match the pinned one
-      * — a temp view over a table whose schema changed since needs a
-      * re-[[register]], which rebuilds the projection (catalog names
-      * resolve the head at each statement and never need one). */
-    override def refresh(): Unit = {
-      val target = resolveSnapshot(root, versionAsOf)
-      val headPhysical = physicalSchemaOf(spark, root, target)
-      require(headPhysical == physicalSchema,
-        s"manifest schema at $root changed since registration — " +
-          "re-register the temp view to pick up the new projection")
-      pin = new Pin(target)
+    /** REFRESH TABLE and every `refreshByPath` recache: a head pin
+      * moves to the current head, whose recorded schema must still
+      * match the pinned one — a temp view over a table whose schema
+      * changed since needs a re-[[register]] (catalog names resolve the
+      * head at each statement and never need one; a schema commit drops
+      * every cached head-pinned plan first, [[uncacheRoot]]). A version
+      * pin — time travel, and every scan [[scan]] builds for the Scala
+      * reads and writers — keeps its snapshot and file subset: a pinned
+      * version never changes, so refresh does nothing (time travel never
+      * silently becomes the head, a cached frame never widens to its
+      * whole version, and an expired version fails only when a query
+      * actually reads its vacuumed files — never the recache a
+      * committed write runs). */
+    override def refresh(): Unit = versionAsOf match {
+      case Some(_) => ()
+      case None =>
+        val target = resolveSnapshot(root, None)
+        val headPhysical = shapeOf(spark, root, target)._1
+        require(headPhysical == physicalSchema,
+          s"manifest schema at $root changed since registration — " +
+            "re-register the temp view to pick up the new projection")
+        pin = new Pin(target)
     }
 
     override def sizeInBytes: Long = pin.totalBytes
 
-    /** Two indexes pinned to the same snapshot of one table serve the
+    /** Two indexes pinned to the same files of one snapshot serve the
       * same rows: a catalog name resolves a fresh index per statement,
       * and `CACHE TABLE` / `UNCACHE TABLE` find their cached plan by
-      * `sameResult`, which compares relations by equality. */
+      * `sameResult`, which compares relations by equality. The file set
+      * is part of the identity, so a cached whole-table plan never
+      * serves a subset scan, nor a subset the whole table. */
     override def equals(other: Any): Boolean = other match {
       case o: ManifestFileIndex =>
-        (o eq this) || (o.root == root && o.versionAsOf == versionAsOf &&
-          o.pinnedSnapshot.version == pinnedSnapshot.version &&
-          o.physicalSchema == physicalSchema)
+        (o eq this) || {
+          val (mine, theirs) = (pinnedSnapshot, o.pinnedSnapshot)
+          o.root == root && o.versionAsOf == versionAsOf &&
+            theirs.version == mine.version &&
+            o.physicalSchema == physicalSchema && theirs.files == mine.files
+        }
       case _ => false
     }
 
@@ -300,15 +316,28 @@ object ManifestSql {
       throw new IllegalStateException(s"no manifest at $root"))
   }
 
-  /** The physical read schema of a snapshot — the recorded schema
-    * plus rename-chain names, from the shared
-    * [[ManifestTable.readShapeOf]] owner. */
-  private def physicalSchemaOf(spark: SparkSession, root: String,
-                               snap: ManifestTable.Snapshot)
-      : StructType =
-    ManifestTable.readShapeOf(
-      ManifestTable.recordedSchemaOf(spark, root, snap),
-      ManifestTable.colmapOfSnap(snap))._1
+  /** A column as its rename chain reads it: new-then-old coalesced
+    * when `name` was renamed, the bare column otherwise. */
+  private def chained(colmap: Map[String, Seq[String]])(name: String): Column =
+    colmap.get(name).fold(org.apache.spark.sql.functions.col(name))(olds =>
+      org.apache.spark.sql.functions.coalesce(
+        (name +: olds).map(org.apache.spark.sql.functions.col): _*).as(name))
+
+  /** THE read shape of a snapshot: the physical scan schema (the
+    * recorded schema all-nullable, plus every historical name of a
+    * renamed column, same type) and — when any chain exists — the
+    * coalesce projection back to the logical columns. */
+  private def shapeOf(spark: SparkSession, root: String,
+                      snap: ManifestTable.Snapshot)
+      : (StructType, Option[Seq[Column]]) = {
+    val logical = ManifestTable.recordedSchemaOf(spark, root, snap)
+    val colmap = ManifestTable.colmapOfSnap(snap)
+    val historical = logical.fields.flatMap(f => colmap.getOrElse(f.name, Nil)
+      .map(StructField(_, f.dataType, nullable = true)))
+    (StructType(logical.fields.map(_.copy(nullable = true)) ++ historical),
+      if (colmap.isEmpty) None
+      else Some(logical.fieldNames.toSeq.map(chained(colmap))))
+  }
 
   /** [[ParquetFileFormat]] with the RAW write path disabled: plain
     * `INSERT INTO`/`INSERT OVERWRITE` on a temp-view registration
@@ -465,11 +494,14 @@ object ManifestSql {
     spark.catalog.refreshByPath(idx.root)
   }
 
-  /** Drop every cached plan that reads the manifest at `root` — run
-    * BEFORE a schema commit (ALTER, a schema-evolving MERGE). A cached
-    * index pins the old physical schema and cannot refresh across the
-    * change: the next write's `refreshByPath` would reach its drift
-    * guard and fail the statement after its commit. */
+  /** Drop every cached plan that reads the HEAD of the manifest at
+    * `root` — the ledger runs it before publishing a schema change
+    * (an added, renamed, dropped or widened column, a schema-merging
+    * write). A cached head-pinned index holds the old physical schema
+    * and cannot refresh across the change: the next write's
+    * `refreshByPath` would reach its drift guard and fail the
+    * statement after its commit. Version pins never drift, so cached
+    * time travel and Scala frames stay cached. */
   private[graft] def uncacheRoot(spark: SparkSession, root: String): Unit = {
     def qualified(p: String) = {
       val path = new HPath(p)
@@ -478,7 +510,8 @@ object ManifestSql {
     }
     val target = qualified(root)
     org.apache.spark.sql.graftbridge.uncacheWhere(spark,
-      _.exists(indexOf(_).exists(idx => qualified(idx.root) == target)))
+      _.exists(indexOf(_).exists(idx =>
+        idx.versionAsOf.isEmpty && qualified(idx.root) == target)))
   }
 
   /** The manifest index a plan node scans, if it is a manifest
@@ -578,28 +611,26 @@ object ManifestSql {
   }
 
   /** The bare front-door relation (physical schema, no rename
-    * projection) — what the SQL machinery plans and what
-    * [[ManifestSource]] serves to path reads. */
+    * projection) — what [[ManifestSource]] serves to path reads. */
   private[sources] def baseRelation(spark: SparkSession, root: String,
                                     versionAsOf: Option[Int])
-      : ManifestWritableRelation =
-    baseRelationAt(spark, root, versionAsOf,
-      resolveSnapshot(root, versionAsOf))
-
-  private def baseRelationAt(spark: SparkSession, root: String,
-                             versionAsOf: Option[Int],
-                             snap: ManifestTable.Snapshot)
       : ManifestWritableRelation = {
-    val physical = physicalSchemaOf(spark, root, snap)
-    val idx = new ManifestFileIndex(spark, root, snap, versionAsOf,
-      physical)
-    new ManifestWritableRelation(spark, root, versionAsOf, idx, physical)
+    val snap = resolveSnapshot(root, versionAsOf)
+    relationAt(spark, root, versionAsOf, snap, shapeOf(spark, root, snap)._1)
   }
 
-  // ---- merge-on-read overlay for the SQL doors ----
+  private def relationAt(spark: SparkSession, root: String,
+                         versionAsOf: Option[Int],
+                         snap: ManifestTable.Snapshot,
+                         physical: StructType): ManifestWritableRelation =
+    new ManifestWritableRelation(spark, root, versionAsOf,
+      new ManifestFileIndex(spark, root, snap, versionAsOf, physical),
+      physical)
 
-  /** Marks the root of every plan [[relation]] builds: the whole
-    * table, as the SQL doors serve it — what row-level DML may target
+  // ---- the one snapshot scan ----
+
+  /** Marks the root of every plan [[scan]] builds: the whole pinned
+    * read, as the doors serve it — what row-level DML may target
     * ([[graft.plans.ManifestSqlDml]]), as opposed to a user's own
     * filtered or computed view over it. */
   private[graft] val TableReadTag =
@@ -614,7 +645,7 @@ object ManifestSql {
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[Int](
       "graft.mor.overlaid")
 
-  /** True while THIS THREAD is building a manifest relation or its DV
+  /** True while THIS THREAD is building a manifest scan or its DV
     * overlay: the injected [[graft.plans.GraftMorReads]] rule must
     * not fire on the internal analyses those constructions trigger
     * (it would recurse / double-wrap). */
@@ -624,59 +655,108 @@ object ManifestSql {
 
   private[graft] def underConstruction: Boolean = constructing.get()
 
-  private[graft] def guardedConstruction[A](f: => A): A = {
+  private def guardedConstruction[A](f: => A): A = {
     val prev = constructing.get()
     constructing.set(true)
     try f finally constructing.set(prev)
   }
 
-  /** The DELETION-VECTOR overlay over a planned manifest frame:
-    * select `cols` plus the parquet file/row-position metadata,
-    * anti-join the pinned snapshot's DV rows, and project back to
-    * exactly `cols` — the same shape every Scala read plans inside
-    * [[ManifestTable]], expressed over the SQL relation (pushed
-    * filters still reach the scan THROUGH the left side of the
-    * anti-join). */
-  private def withDvOverlay(spark: SparkSession, root: String,
-                            snap: ManifestTable.Snapshot,
-                            base: DataFrame,
-                            cols: Seq[org.apache.spark.sql.Column])
-      : DataFrame = {
-    val abs = "__graft_abs"
-    val pos = "__graft_pos"
-    val wide = base.select(cols ++ Seq(
-      org.apache.spark.sql.functions.col("_metadata.file_path").as(abs),
-      org.apache.spark.sql.functions.col("_metadata.row_index").as(pos))
-      : _*)
-    ManifestTable.overlayDv(spark, root,
-      ManifestTable.dvRefsOf(snap, snap.files), wide, abs, pos)
-      .drop(abs, pos)
+  /** THE snapshot → scan builder. Every read of a manifest snapshot
+    * plans here: the Scala reads (`read`, `readVersion`, `readWhere`'s
+    * candidate subset), the writers' victim scans and MERGE probes, the
+    * layout rewrite, the change feed, and every SQL door ([[relation]]:
+    * temp views, catalog names, the TVF). `snap` may be a file subset
+    * of a published version. The scan is a [[ManifestWritableRelation]]
+    * over a [[ManifestFileIndex]] pinned to `snap`: file statuses come
+    * from the recorded byte sizes (no per-file `getFileStatus`), and
+    * pushed filters prune the planned files by the manifest stats. On
+    * top: the rename projection, the deletion-vector overlay (one
+    * anti-join on the parquet row position, when any pinned file
+    * carries a DV) and the optional provenance columns — `fileCol`
+    * (each row's file path) and `posCol` (its parquet row index), both
+    * from `_metadata`, so filters above still reach the scan.
+    * `versionAsOf = None` pins the head (refreshable, writable: the SQL
+    * head doors); `Some(v)` pins `snap` for good (time travel, and
+    * every Scala read, which passes its own version). The plan's root
+    * carries [[TableReadTag]] and its relation [[DvOverlaidAt]]. */
+  private[graft] def scan(spark: SparkSession, root: String,
+                          snap: ManifestTable.Snapshot,
+                          versionAsOf: Option[Int],
+                          fileCol: Option[String] = None,
+                          posCol: Option[String] = None): DataFrame =
+    guardedConstruction {
+      val (physical, projection) = shapeOf(spark, root, snap)
+      val rel = relationAt(spark, root, versionAsOf, snap, physical)
+      val df = overlaid(spark, rel.idx, spark.baseRelationToDataFrame(rel),
+        projection, fileCol, posCol)
+      val plan = df.queryExecution.analyzed
+      plan.setTagValue(TableReadTag, root)
+      plan.foreach {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if lr.relation eq rel =>
+          lr.setTagValue(DvOverlaidAt, snap.version)
+        case _ => ()
+      }
+      df
+    }
+
+  /** The read shape over a manifest relation's frame `base`: `cols`
+    * (all of `base`'s columns when None), the pinned snapshot's DV
+    * overlay, and the provenance columns — the ONE overlay, behind
+    * [[scan]] and [[shapedPathRead]]. */
+  private def overlaid(spark: SparkSession, idx: ManifestFileIndex,
+                       base: DataFrame, cols: Option[Seq[Column]],
+                       fileCol: Option[String],
+                       posCol: Option[String]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val snap = idx.pinnedSnapshot
+    val dvMap = ManifestTable.dvRefsOf(snap, snap.files)
+    val data = cols.getOrElse(base.columns.toSeq.map(col))
+    if (dvMap.isEmpty && posCol.isEmpty) {
+      // provenance by the file-path metadata column, NOT
+      // input_file_name() — a nondeterministic projection stops every
+      // filter above it from reaching the parquet scan
+      val file = fileCol.map(col("_metadata.file_path").as(_))
+      if (cols.isEmpty && file.isEmpty) base
+      else base.select(data ++ file: _*)
+    } else {
+      val (abs, pos) = ("__graft_abs", "__graft_pos")
+      val wide = base.select(data ++ Seq(col("_metadata.file_path").as(abs),
+        col("_metadata.row_index").as(pos)): _*)
+      val kept = ManifestTable.overlayDv(spark, idx.root, dvMap, wide, abs, pos)
+      kept.select(kept.columns.toSeq.flatMap {
+        case `abs` => fileCol.map(col(abs).as(_))
+        case `pos` => posCol.map(col(pos).as(_))
+        case c => Some(col(c))
+      }: _*)
+    }
   }
 
-  /** Overlay an already-analyzed V1 manifest [[org.apache.spark.sql
+  /** Shape an already-analyzed V1 manifest [[org.apache.spark.sql
     * .execution.datasources.LogicalRelation]] (a path read through
-    * the provider) with its pinned snapshot's deletion vectors — the
-    * plan [[graft.plans.GraftMorReads]] swaps in. `rel` may be the
+    * the provider) as [[scan]] would: renamed columns coalesce through
+    * their chain and the pinned snapshot's deletion vectors apply,
+    * through the same [[overlaid]] shape — the plan
+    * [[graft.plans.GraftMorReads]] swaps in. Historical names the
+    * bare relation exposes keep their raw bytes. `rel` may be the
     * [[ManifestWritableRelation]] itself OR a plain `HadoopFsRelation`
     * copy (it keeps the [[ManifestFileIndex]], which carries
     * everything the overlay needs). Output attributes re-alias under
     * the original exprIds so parents keep resolving (the same pattern
     * as the DSv2 read swap). */
-  private[graft] def dvOverlayFor(spark: SparkSession,
-                                  idx: ManifestFileIndex,
-                                  rel: org.apache.spark.sql.sources
-                                    .BaseRelation,
-                                  original: org.apache.spark.sql.catalyst
-                                    .plans.logical.LogicalPlan)
+  private[graft] def shapedPathRead(spark: SparkSession,
+                                    idx: ManifestFileIndex,
+                                    rel: org.apache.spark.sql.sources
+                                      .BaseRelation,
+                                    original: org.apache.spark.sql.catalyst
+                                      .plans.logical.LogicalPlan)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     guardedConstruction {
       import org.apache.spark.sql.catalyst.expressions.Alias
-      val snap = idx.pinnedSnapshot
-      val base = spark.baseRelationToDataFrame(rel)
-      val overlaid = withDvOverlay(spark, idx.root, snap, base,
-        original.output.map(a =>
-          org.apache.spark.sql.functions.col(a.name)))
-      val analyzed0 = overlaid.queryExecution.analyzed
+      val read = chained(ManifestTable.colmapOfSnap(idx.pinnedSnapshot)) _
+      val analyzed0 = overlaid(spark, idx, spark.baseRelationToDataFrame(rel),
+        Some(original.output.map(a => read(a.name))), None, None)
+        .queryExecution.analyzed
       // Catalog.refreshTable walks the resolved plan and does an
       // UNGUARDED catalogTable.get on every LogicalRelation leaf —
       // a catalog-resolved original carries its CatalogTable, so
@@ -697,7 +777,7 @@ object ManifestSql {
       val aligned = original.output.map { out =>
         val src = analyzed.output.find(a => resolver(a.name, out.name))
           .getOrElse(throw new IllegalStateException(
-            s"column '${out.name}' missing from the DV-overlaid " +
+            s"column '${out.name}' missing from the shaped " +
               s"manifest relation at ${idx.root}"))
         Alias(src, out.name)(exprId = out.exprId,
           qualifier = out.qualifier)
@@ -707,39 +787,14 @@ object ManifestSql {
     }
 
   /** The manifest table as a DataFrame whose SCAN prunes on pushed
-    * filters — the composable form ([[register]] wraps it in a temp
-    * view; the catalog door swaps it in for `db.t`). `versionAsOf`
-    * pins time travel. Renamed columns read through their chain, and
-    * a snapshot carrying deletion vectors gets the overlay applied
-    * HERE (one resolution serves pin and overlay), so the frame is
-    * correct even in a session without the graft extensions. Its
-    * plan's root carries [[TableReadTag]]. */
+    * filters — [[scan]] over the head (or the `versionAsOf` version),
+    * the composable SQL form: [[register]] wraps it in a temp view, the
+    * catalog door swaps it in for `db.t`, the `graft_manifest` TVF
+    * returns it. Correct even in a session without the graft
+    * extensions (the overlay is part of the scan). */
   def relation(spark: SparkSession, root: String,
                versionAsOf: Option[Int] = None): DataFrame =
-    guardedConstruction {
-      val snap = resolveSnapshot(root, versionAsOf)
-      val (_, projection) = ManifestTable.readShapeOf(
-        ManifestTable.recordedSchemaOf(spark, root, snap),
-        ManifestTable.colmapOfSnap(snap))
-      val rel = baseRelationAt(spark, root, versionAsOf, snap)
-      val base = spark.baseRelationToDataFrame(rel)
-      val df =
-        if (!ManifestTable.hasDv(snap))
-          projection.fold(base)(p => base.select(p: _*))
-        else
-          withDvOverlay(spark, root, snap, base,
-            projection.getOrElse(
-              base.columns.toSeq.map(org.apache.spark.sql.functions.col)))
-      val plan = df.queryExecution.analyzed
-      plan.setTagValue(TableReadTag, root)
-      plan.foreach {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if lr.relation eq rel =>
-          lr.setTagValue(DvOverlaidAt, snap.version)
-        case _ => ()
-      }
-      df
-    }
+    scan(spark, root, resolveSnapshot(root, versionAsOf), versionAsOf)
 
   /** Register the manifest table as temp view `name` for `spark.sql`
     * access — the SQL twin of [[ManifestTable.read]], with

@@ -327,11 +327,22 @@ class CatalogDoorSpec extends SparkSpec {
       assert(f1 == g1 && f1.size == 50)
       // writes the V1 path would make as raw files refuse
       refuses("INSERT INTO cdoor_fplain VALUES (900, 'x', 0)")
+      // TRUNCATE, every ALTER of a column and time travel: the V1 path
+      // has no manifest twin for them — each refuses with the fix
+      // named and changes nothing
       val v1 = ManifestTable.latest(plain).get
-      intercept[Exception](foreign.sql("TRUNCATE TABLE cdoor_fplain"))
+      for (stmt <- Seq("TRUNCATE TABLE cdoor_fplain",
+          "ALTER TABLE cdoor_fplain ADD COLUMNS (x INT)",
+          "ALTER TABLE cdoor_fplain RENAME COLUMN v TO w",
+          "ALTER TABLE cdoor_fplain DROP COLUMN n",
+          "ALTER TABLE cdoor_fplain ALTER COLUMN n COMMENT 'doubled'",
+          s"SELECT * FROM cdoor_fplain VERSION AS OF $v0"))
+        refuses(stmt)
       assert(ManifestTable.latest(plain).get == v1 &&
         v1.files.forall(f => new java.io.File(plain, f).exists()),
-        "a refused TRUNCATE changes nothing")
+        "a refused statement changes nothing")
+      assert(spark.sql(s"SELECT count(*) FROM cdoor_fplain VERSION AS OF $v0")
+        .head().getLong(0) == 60L, "the graft session still travels")
 
       // renamed and DV-carrying tables: the V1 path would read
       // physical names / deleted rows — every statement refuses
@@ -399,6 +410,29 @@ class CatalogDoorSpec extends SparkSpec {
       spark.catalog.dropTempView("cdoor_cache_tmp")
       spark.sql("DROP TABLE IF EXISTS cdoor_cache")
     }
+  }
+
+  test("a Scala schema commit drops the cached head plans over the root: CACHE TABLE, then addColumns and renameColumn, then INSERT commits once") {
+    try {
+      for (name <- Seq("default.cdoor_scache", "graft.default.cdoor_scache")) {
+        val root = freshTable("graft_cdoor_scache")
+        graft.api.Graft(spark, sf)
+          .registerManifest("cdoor_scache", root, persistent = true)
+        spark.sql(s"CACHE TABLE $name")
+        assert(spark.table(name).count() == 60L)
+        ManifestTable.addColumns(spark, root,
+          org.apache.spark.sql.types.StructType.fromDDL("extra BIGINT"))
+        ManifestTable.renameColumn(spark, root, "v", "w")
+        val v0 = ManifestTable.latest(root).get.version
+        spark.sql(s"INSERT INTO $name VALUES (70, 'x', 140, 1)")
+        assert(ManifestTable.latest(root).get.version == v0 + 1,
+          s"the INSERT through $name must commit exactly once")
+        assert(spark.table(name).columns.toSeq == Seq("id", "w", "n", "extra"))
+        assert(spark.sql(s"SELECT count(*), count(extra), count(w) FROM $name")
+          .head() == Row(61L, 1L, 61L))
+        spark.sql("DROP TABLE cdoor_scache")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS cdoor_scache")
   }
 
   test("a path read with a supplied schema writes nothing: an absent root and a different schema refuse") {

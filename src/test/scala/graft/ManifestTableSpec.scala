@@ -2103,4 +2103,67 @@ class ManifestTableSpec extends SparkSpec {
         s"$shape: the change feeds differ")
     }
   }
+
+  test("cache identity: a cached whole-table read and a subset scan never serve each other; cached Scala frames keep their snapshot across a SQL INSERT") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cacheid").toString
+    ManifestTable.init(root, Seq("id"))
+    for (i <- 0 until 4)
+      ManifestTable.append(spark, root, batch(i * 100L, i * 100L + 100L).coalesce(1))
+    // the candidate-file subset readWhere plans, without its filter
+    def subsetScan() = org.apache.spark.sql.graftbridge.ofRows(spark,
+      ManifestTable.readWhere(spark, root, F.col("id") < 100L)
+        .queryExecution.analyzed.children.head)
+    val whole = ManifestTable.read(spark, root)
+    val subset = subsetScan()
+    assert(subset.count() == 100L && whole.count() == 400L)
+    assert(!whole.queryExecution.analyzed.sameResult(subset.queryExecution.analyzed),
+      "a whole-table read and a subset scan must differ in identity")
+    try {
+      whole.cache()
+      assert(whole.count() == 400L)
+      assert(subsetScan().count() == 100L,
+        "a cached whole-table read must not serve a subset scan")
+      subset.cache()
+      assert(subset.count() == 100L)
+      assert(ManifestTable.read(spark, root).count() == 400L,
+        "a cached subset scan must not serve a whole-table read")
+      // a SQL INSERT recaches every plan over the root: version-pinned
+      // Scala frames keep their snapshot and their file subset
+      graft.sources.ManifestSql.register(spark, "cacheid_t", root)
+      spark.sql("INSERT INTO cacheid_t SELECT * FROM cacheid_t WHERE id = 0")
+      assert(whole.count() == 400L && subset.count() == 100L,
+        "cached Scala frames must keep their snapshot and subset")
+      assert(ManifestTable.read(spark, root).count() == 401L)
+    } finally {
+      whole.unpersist(); subset.unpersist()
+      spark.catalog.dropTempView("cacheid_t")
+    }
+  }
+
+  test("a cached Scala read whose version has expired never fails a later SQL write or GRAFT MAINTAIN") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cacheexp").toString
+    ManifestTable.init(root, Seq("id"))
+    ManifestTable.append(spark, root, batch(0L, 100L).coalesce(1))
+    val cached = ManifestTable.read(spark, root).cache()
+    def head() = ManifestTable.latest(root).get.version
+    try {
+      assert(cached.count() == 100L)
+      ManifestTable.append(spark, root, batch(100L, 200L).coalesce(1))
+      assert(ManifestTable.expireManifests(root, keepLast = 1).nonEmpty)
+      graft.sources.ManifestSql.register(spark, "cacheexp_t", root)
+      // the INSERT commits, then recaches every plan over the root: the
+      // expired pin must not turn that recache into a failed statement
+      val before = head()
+      spark.sql("INSERT INTO cacheexp_t SELECT * FROM cacheexp_t WHERE id = 0")
+      assert(head() == before + 1, "the INSERT must add exactly one version")
+      assert(ManifestTable.read(spark, root).count() == 201L)
+      val m = spark.sql(s"GRAFT MAINTAIN '$root'").head()
+      assert(m != null && head() >= before + 1)
+      assert(ManifestTable.read(spark, root).count() == 201L)
+      assert(cached.count() == 100L, "the cached frame keeps its snapshot")
+    } finally {
+      cached.unpersist()
+      spark.catalog.dropTempView("cacheexp_t")
+    }
+  }
 }

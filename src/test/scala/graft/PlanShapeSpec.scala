@@ -4,6 +4,31 @@ import graft.schema.Catalog
 import graft.sources.Tables
 import org.apache.spark.sql.{functions => F}
 
+/** A local filesystem under its own scheme that records every data
+  * file it is asked to stat or list — how a test sees per-file
+  * metadata calls a scan makes (the tables are written through
+  * `file:` and read through this scheme). */
+class StatCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = StatCountingFs.Scheme
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${StatCountingFs.Scheme}:///")
+  override def getFileStatus(f: org.apache.hadoop.fs.Path)
+      : org.apache.hadoop.fs.FileStatus = {
+    StatCountingFs.touched.add(f.toUri.getPath)
+    super.getFileStatus(f)
+  }
+  override def listStatus(f: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] = {
+    StatCountingFs.touched.add(f.toUri.getPath)
+    super.listStatus(f)
+  }
+}
+
+object StatCountingFs {
+  val Scheme = "graftstat"
+  val touched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
 /** Physical-plan regression guards: the scale-relevant plan
   * properties (.explain invariants) asserted so refactors can't
   * silently lose pushdown, pruning, broadcast, or bucket
@@ -657,6 +682,100 @@ class PlanShapeSpec extends SparkSpec {
         F.sum(F.when(F.col("payload") === "stale", 1L).otherwise(0L)))
       .head()
     assert((counts.getLong(0), counts.getLong(1)) == ((1L, 10L)))
+  }
+
+  test("one manifest scan: every door reads a renamed, DV-carrying table identically through one DV anti-join; Scala reads prune and stat no file") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.operators.ManifestTable
+    import graft.sources.ManifestSql
+    import spark.implicits._
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def antiJoins(df: DataFrame): Int = nodes(df.queryExecution.executedPlan)
+      .count {
+        case j: BaseJoinExec =>
+          j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti
+        case _ => false
+      }
+    def manifestFilesRead(df: DataFrame): Long = {
+      df.collect()
+      nodes(df.queryExecution.executedPlan).collect {
+        case s: FileSourceScanExec
+            if s.relation.location.isInstanceOf[ManifestSql.ManifestFileIndex] =>
+          s.metrics("numFiles").value
+      }.sum
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_onescan").toString
+    val root = s"$dir/t"
+    ManifestTable.init(root, Seq("id"), Seq("id"))
+    for (i <- 0 until 4)
+      ManifestTable.append(spark, root,
+        (i * 100L until i * 100L + 100L).toDF("id")
+          .withColumn("v", F.concat(F.lit("row"), F.col("id"))).coalesce(1))
+    ManifestTable.renameColumn(spark, root, "v", "w")
+    ManifestTable.append(spark, root, (400L until 450L).toDF("id")
+      .withColumn("w", F.concat(F.lit("row"), F.col("id"))).coalesce(1))
+    ManifestTable.deleteWhereMoR(spark, root, F.col("id") % 7 === 0L)
+    val head = ManifestTable.latest(root).get.version
+    ManifestSql.register(spark, "onescan_tmp", root)
+    graft.api.Graft(spark, sf)
+      .registerManifest("onescan_cat", root, persistent = true)
+    try {
+      val doors = Seq[(String, DataFrame)](
+        "read" -> ManifestTable.read(spark, root),
+        "readVersion" -> ManifestTable.readVersion(spark, root, head),
+        "readWhere" -> ManifestTable.readWhere(spark, root, F.col("id") >= 0L),
+        "temp view" -> spark.table("onescan_tmp"),
+        "default.t" -> spark.table("default.onescan_cat"),
+        "graft.default.t" -> spark.table("graft.default.onescan_cat"),
+        "path read" -> spark.read.format("graft-manifest").load(root)
+          .select("id", "w"),
+        "graft_manifest TVF" -> spark.sql(s"SELECT * FROM graft_manifest('$root')"))
+      val expected = (0L until 450L).filter(_ % 7 != 0)
+        .map(i => org.apache.spark.sql.Row(i, s"row$i"))
+      for ((label, df) <- doors) {
+        assert(df.columns.toSeq == Seq("id", "w"), s"$label: ${df.columns.toSeq}")
+        assert(df.collect().toSeq.sortBy(_.getLong(0)) == expected,
+          s"$label must read the renamed column through its chain and " +
+            "drop the DV's rows")
+        assert(antiJoins(df) == 1, s"$label: exactly one DV anti-join")
+      }
+      // a filter on a Scala read prunes the planned files like the SQL
+      // doors: one of the four id bands holds id 150
+      assert(manifestFilesRead(ManifestTable.read(spark, root)
+        .filter(F.col("id") === 150L)) == 1L)
+      assert(manifestFilesRead(ManifestTable.read(spark, root)) == 5L)
+    } finally {
+      spark.catalog.dropTempView("onescan_tmp")
+      spark.sql("DROP TABLE IF EXISTS onescan_cat")
+    }
+    // building and planning a Scala read stats and lists no data file:
+    // statuses come from the manifest's recorded sizes
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${StatCountingFs.Scheme}.impl", classOf[StatCountingFs].getName)
+    val plain = s"$dir/plain"
+    ManifestTable.init(plain, Seq("id"))
+    for (i <- 0 until 3)
+      ManifestTable.append(spark, plain, (i * 10L until i * 10L + 10L).toDF("id"))
+    val aliased = s"${StatCountingFs.Scheme}://$plain"
+    val dataFiles = ManifestTable.latest(plain).get.files
+      .map(f => new java.io.File(plain, f).getPath).toSet
+    StatCountingFs.touched.clear()
+    val planned = Seq(ManifestTable.read(spark, aliased),
+      ManifestTable.readWhere(spark, aliased, F.col("id") < 15L),
+      ManifestTable.readVersion(spark, aliased,
+        ManifestTable.latest(plain).get.version - 1))
+    planned.foreach(_.queryExecution.executedPlan)
+    val statted = StatCountingFs.touched.toArray.toSeq.map(_.toString)
+      .filter(dataFiles)
+    assert(statted.isEmpty, s"per-file FS calls while planning: $statted")
+    assert(planned.head.count() == 30L && planned(1).count() == 15L)
   }
 
   test("SQL planning stats ZERO files: non-candidate files deleted from disk still plan") {
