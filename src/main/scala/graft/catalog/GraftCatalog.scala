@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{SparkSession, graftbridge}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-import org.apache.spark.sql.catalyst.catalog.CatalogTable
+import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
+  CatalogTable, CatalogTableType, CatalogUtils}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.datasources.v2.V2SessionCatalog
@@ -31,7 +32,10 @@ import graft.sources.ManifestSql
   * (`loadTable(ident, version/timestamp)`), ALTER ([[alterTable]]),
   * TRUNCATE ([[GraftTable.truncateTable]]), INSERT (a V1Write onto
   * the ledgered commit) and streaming (the V1 fallback) — no
-  * parse-time rewrite and no post-hoc rule per verb.
+  * parse-time rewrite and no post-hoc rule per verb. `CREATE TABLE …
+  * USING graft-manifest`, CTAS and REPLACE stay v2 commands (the
+  * provider is a `TableProvider`) and land in [[createTable]] and the
+  * staging methods, which branch on the statement's provider.
   *
   * The same class bound under another name (`spark.sql.catalog.graft`,
   * the `graft.db.t` alias) is a window onto the same entries that
@@ -111,7 +115,8 @@ class GraftCatalog extends DelegatingCatalogExtension
 
   private def graftTable(ident: Identifier, entry: CatalogTable,
                          versionAsOf: Option[Int]): GraftTable =
-    GraftTable(session, fullName(ident), entry, versionAsOf)
+    GraftTable(session, fullName(ident), ManifestSql.rootOfEntry(entry),
+      Some(entry), versionAsOf)
 
   override def loadTable(ident: Identifier): Table =
     lookup(ident).fold(identity, graftTable(ident, _, None))
@@ -158,47 +163,80 @@ class GraftCatalog extends DelegatingCatalogExtension
     }
 
   /** A CREATE's properties, its `OPTIONS (…)` under their own keys
-    * (`statCols`, `bloomCols`, `bloomCapacity`, `path`) as the V1
-    * command passes them. */
+    * (`statCols`, `bloomCols`, `bloomCapacity`, `path`). */
   private def propsOf(properties: util.Map[String, String])
       : Map[String, String] =
     properties.asScala.toMap.map { case (k, v) =>
       k.stripPrefix(TableCatalog.OPTION_PREFIX) -> v }
 
-  /** Bound as `spark_catalog`, this is the built-in CREATE: a `USING
-    * graft-manifest` CREATE or CTAS never arrives here — its provider
-    * is a V1 one, so Spark runs it as a V1 command through
-    * [[graft.sources.ManifestSource]]. The alias creates manifest
-    * tables only. */
+  /** Does a CREATE / CTAS / REPLACE make a manifest table? Its `USING`
+    * says so (the alias's default when it names none). */
+  private def createsManifest(properties: util.Map[String, String]): Boolean =
+    Option(properties.get(TableCatalog.PROP_PROVIDER))
+      .forall(_.equalsIgnoreCase(ManifestSql.ManifestProvider))
+
+  /** The manifest root a CREATE names: its `path` option or LOCATION,
+    * else `fallback` (a REPLACE keeps the entry's root). */
+  private def rootOf(ident: Identifier, props: Map[String, String],
+                     fallback: Option[String] = None): String =
+    props.get("path").orElse(props.get("location")).orElse(fallback)
+      .getOrElse(throw new IllegalArgumentException(
+        s"CREATE/REPLACE TABLE ${fullName(ident)} needs a 'path' (or " +
+          "LOCATION) naming the manifest root"))
+
+  /** `CREATE TABLE … USING graft-manifest`, under either name — a
+    * `USING graft-manifest` statement is a v2 command (the provider is
+    * a `TableProvider`), so Spark hands it here; so does
+    * [[ManifestSql.registerPersistent]]'s `spark.catalog.createTable`.
+    * Any other provider is the built-in catalog's. */
   override def createTable(ident: Identifier, columns: Array[Column],
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table =
-    if (!isAlias) super.createTable(ident, columns, partitions, properties)
-    else createManifest(ident, StructType(columns.map(c =>
-      StructField(c.name(), c.dataType(), c.nullable()))),
-      partitions, properties)
+    if (!createsManifest(properties))
+      super.createTable(ident, columns, partitions, properties)
+    else {
+      requireUnpartitioned(partitions)
+      val props = propsOf(properties)
+      val root = rootOf(ident, props)
+      ManifestSql.createDeclared(session, root, StructType(columns.map(c =>
+        StructField(c.name(), c.dataType(), c.nullable()))),
+        ManifestSql.declarationsOf(props), fullName(ident))
+      putEntry(ident, root, properties)
+      loadTable(ident)
+    }
 
-  /** CREATE TABLE … (cols) for a manifest table — requires a
-    * `path`/`location` property. [[ManifestSql.createDeclared]] is the
-    * one init path both doors share (this one and the V1 `CREATE TABLE
-    * … USING graft-manifest` through [[graft.sources.ManifestSource]]);
-    * the entry lands in the session catalog (`USING graft-manifest`). */
-  private def createManifest(ident: Identifier, schema: StructType,
-                             partitions: Array[Transform],
-                             properties: util.Map[String, String]): Table = {
+  private def requireUnpartitioned(partitions: Array[Transform]): Unit =
     require(partitions.isEmpty,
       "graft-manifest does not partition by directory — cluster with " +
         "GRAFT COMPACT ... CLUSTER BY instead")
-    val props = propsOf(properties)
-    val root = props.get("path").orElse(props.get("location")).getOrElse(
-      throw new IllegalArgumentException(
-        s"CREATE TABLE ${fullName(ident)} needs a 'path' (or " +
-          "'location') property naming the manifest root"))
-    ManifestSql.createDeclared(session, root, schema,
-      ManifestSql.declarationsOf(props), fullName(ident))
-    ManifestSql.registerPersistent(session, v1Ident(ident).unquotedString,
-      root)
-    loadTable(ident)
+
+  /** Write the session-catalog entry of the manifest table at `root` —
+    * the ONE place one is written (CREATE, a staged CTAS/REPLACE's
+    * publish, every persistent registration): `USING graft-manifest`,
+    * the root as its location and `path`, the head's recorded schema
+    * (what a session bound to another catalog checks its V1 read
+    * against), and the statement's own table properties and comment. */
+  private def putEntry(ident: Identifier, root: String,
+                       properties: util.Map[String, String]): Unit = {
+    val props = properties.asScala.toMap
+    val schema = ManifestTable.latest(root)
+      .map(ManifestTable.recordedSchemaOf(session, root, _))
+      .getOrElse(StructType(Nil))
+    sessionCatalog.createTable(CatalogTable(
+      identifier = v1Ident(ident),
+      tableType = CatalogTableType.EXTERNAL,
+      storage = CatalogStorageFormat.empty.copy(
+        locationUri = Some(CatalogUtils.stringToURI(root)),
+        properties = Map("path" -> root)),
+      schema = StructType(schema.fields.map(_.copy(nullable = true))),
+      provider = Some(ManifestSql.ManifestProvider),
+      properties = props.filterNot { case (k, _) =>
+        GraftCatalog.ReservedProperties(k) ||
+          k.startsWith(TableCatalog.OPTION_PREFIX) ||
+          props.contains(TableCatalog.OPTION_PREFIX + k)
+      },
+      comment = props.get(TableCatalog.PROP_COMMENT)),
+      ignoreIfExists = false)
   }
 
   // ---- ATOMIC CTAS / REPLACE (StagingTableCatalog, r19) ----
@@ -211,17 +249,16 @@ class GraftCatalog extends DelegatingCatalogExtension
   // commits a ledgered EMPTY overwrite of the declared schema, per
   // SQL semantics. abort: a manifest this statement inited is deleted
   // (nothing referenced it); a committed data overwrite stays — it is
-  // a versioned commit, history intact — and is WARNed about. Bound
-  // as `spark_catalog`, a `USING graft-manifest` CTAS takes Spark's V1
-  // path (the provider's write arm), so only the alias stages
-  // manifest tables; the session catalog stages every other v2
-  // provider's CTAS/REPLACE as the built-in catalog runs it: drop (for
-  // a REPLACE) and create up front, write through, drop on abort.
+  // a versioned commit, history intact — and is WARNed about. A
+  // `USING graft-manifest` statement stages here under either name;
+  // every other provider's CTAS/REPLACE stages as the built-in catalog
+  // runs it: drop (for a REPLACE) and create up front, write through,
+  // drop on abort.
 
   private def stagedTable(ident: Identifier, info: TableInfo,
                           replace: Boolean, orCreate: Boolean)
       : StagedTable =
-    if (!isAlias) {
+    if (!createsManifest(info.properties())) {
       if (replace) super.dropTable(ident)
       // the built-in createTable returns no table: load what it made
       super.createTable(ident, info.columns(), info.partitions(),
@@ -232,9 +269,7 @@ class GraftCatalog extends DelegatingCatalogExtension
   private def stagedManifest(ident: Identifier, info: TableInfo,
                              replace: Boolean, orCreate: Boolean)
       : StagedTable = {
-    require(info.partitions().isEmpty,
-      "graft-manifest does not partition by directory — cluster with " +
-        "GRAFT COMPACT ... CLUSTER BY instead")
+    requireUnpartitioned(info.partitions())
     val props = propsOf(info.properties())
     val existing = manifestEntry(ident).map(ManifestSql.rootOfEntry)
     if (!replace && existing.isDefined)
@@ -242,11 +277,7 @@ class GraftCatalog extends DelegatingCatalogExtension
         .TableAlreadyExistsException(
           Array(catalogName) ++ ident.namespace() :+ ident.name())
     if (replace && !orCreate && existing.isEmpty) throw missing(ident)
-    val root = props.get("path").orElse(props.get("location"))
-      .orElse(existing).getOrElse(
-        throw new IllegalArgumentException(
-          s"CREATE/REPLACE TABLE ${fullName(ident)} needs a 'path' " +
-            "(or LOCATION) naming the manifest root"))
+    val root = rootOf(ident, props, existing)
     val freshlyInited = ManifestTable.latest(root).isEmpty
     if (freshlyInited) {
       // a staged statement that fails must be able to clean up what
@@ -266,7 +297,8 @@ class GraftCatalog extends DelegatingCatalogExtension
     }
     StagedGraftTable(session, this, ident, fullName(ident), root,
       StructType(info.schema().fields.map(_.copy(nullable = true))),
-      replaceSemantics = replace, freshlyInited = freshlyInited)
+      info.properties(), replaceSemantics = replace,
+      freshlyInited = freshlyInited)
   }
 
   override def stageCreate(ident: Identifier, info: TableInfo): StagedTable =
@@ -283,17 +315,15 @@ class GraftCatalog extends DelegatingCatalogExtension
     * created fresh, left in place (same root — reads resolve the head
     * anyway), or repointed in ONE alterTable (new root) — the table
     * name is never absent mid-statement. */
-  private[catalog] def publishStaged(ident: Identifier,
-                                     root: String): Unit = {
-    val v1 = v1Ident(ident)
+  private[catalog] def publishStaged(ident: Identifier, root: String,
+                                     properties: util.Map[String, String])
+      : Unit =
     manifestEntry(ident) match {
-      case None =>
-        ManifestSql.registerPersistent(session, v1.unquotedString, root)
+      case None => putEntry(ident, root, properties)
       case Some(meta) if ManifestSql.rootOfEntry(meta) != root =>
         repoint(meta, root)
       case Some(_) => ()
     }
-  }
 
   /** Point a manifest entry at another root: its location and its
     * `path` property, which [[ManifestSql.rootOfEntry]] reads first. */
@@ -430,6 +460,14 @@ class GraftCatalog extends DelegatingCatalogExtension
 object GraftCatalog {
 
   private val SessionCatalogName = "spark_catalog"
+
+  /** The properties Spark derives from a CREATE's clauses (USING,
+    * LOCATION, COMMENT, …), which the entry records in its own fields. */
+  private val ReservedProperties = {
+    import TableCatalog._
+    Set(PROP_LOCATION, PROP_IS_MANAGED_LOCATION, PROP_EXTERNAL,
+      PROP_TABLE_TYPE, PROP_COMMENT, PROP_COLLATION, PROP_PROVIDER, PROP_OWNER)
+  }
 
   /** The conf key binding the `graft.db.t` alias. */
   val ConfKey = "spark.sql.catalog.graft"

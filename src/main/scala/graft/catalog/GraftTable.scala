@@ -5,8 +5,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table,
-  TableCapability}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite,
+  Table, TableCapability}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write,
   Write, WriteBuilder}
 import org.apache.spark.sql.sources.InsertableRelation
@@ -15,7 +15,11 @@ import org.apache.spark.sql.types.StructType
 import graft.operators.ManifestTable
 import graft.sources.ManifestSql
 
-/** The DSv2 [[Table]] behind [[GraftCatalog]] — deliberately THIN:
+/** The DSv2 [[Table]] of a manifest table — behind a catalog name
+  * ([[GraftCatalog]]) and a path read (`spark.read.format(
+  * "graft-manifest").load(root)`, through
+  * [[graft.sources.ManifestSource]]'s `TableProvider` arm) alike.
+  * Deliberately THIN:
   *
   *  - READS carry no scan machinery here. The table declares
   *    `BATCH_READ`, and the injected [[graft.plans.GraftDsv2Reads]]
@@ -23,7 +27,9 @@ import graft.sources.ManifestSql
   *    snapshot-pinned V1 relation ([[ManifestSql.relation]]) during
   *    analysis — one shared scan path for every door (the public
   *    DeltaAnalysis pattern; a second DSv2 reader would duplicate the
-  *    stats/Bloom pruning and lose the vectorized parquet exec).
+  *    stats/Bloom pruning and lose the vectorized parquet exec). A
+  *    session without the graft extensions never swaps it, and its
+  *    scan builder refuses with the fix named.
   *  - WRITES go through the `V1_BATCH_WRITE` fallback: the
   *    [[WriteBuilder]] picks the write shape (append, overwrite,
   *    replace-where) and its [[V1Write]]'s [[InsertableRelation]]
@@ -32,23 +38,29 @@ import graft.sources.ManifestSql
   *    atomic manifest commit, `INSERT OVERWRITE` (truncate mode) an
   *    atomic snapshot replace, `TRUNCATE TABLE` ([[truncateTable]]) a
   *    ledgered empty overwrite. A time-travel pin refuses writes.
+  *    (`df.write` and `writeStream` by path find no `BATCH_WRITE` /
+  *    `STREAMING_WRITE` here and take the provider's V1 write arms.)
   *
-  * `versionAsOf` pins a snapshot for the native v2 time-travel
-  * overloads (`VERSION AS OF` / `TIMESTAMP AS OF`). The SCHEMA is
-  * the pinned snapshot's logical read shape (renamed columns under
-  * their new names) — exactly what the V1 relation will serve when
-  * the read rule swaps it in. `entry` is the session-catalog entry
-  * the name resolved to. */
+  * `versionAsOf` pins a snapshot (the native v2 time-travel overloads
+  * `VERSION AS OF` / `TIMESTAMP AS OF`, or a path read's option). The
+  * SCHEMA is the pinned snapshot's logical read shape (renamed columns
+  * under their new names) — exactly what the V1 relation will serve
+  * when the read rule swaps it in; a `declared` schema (a path read's
+  * supplied one) must name the same columns and types, or the first
+  * read of the schema refuses. Nothing is read before that: a writer
+  * asks for the table of a root that may not exist yet. `entry` is
+  * the session-catalog entry a catalog name resolved to (None for a
+  * path read). */
 final case class GraftTable(spark: SparkSession, fullName: String,
-                            entry: org.apache.spark.sql.catalyst.catalog
-                              .CatalogTable,
-                            versionAsOf: Option[Int])
-  extends Table with SupportsWrite
+                            root: String,
+                            entry: Option[org.apache.spark.sql.catalyst
+                              .catalog.CatalogTable],
+                            versionAsOf: Option[Int],
+                            declared: Option[StructType] = None)
+  extends Table with SupportsRead with SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
   with org.apache.spark.sql.connector.catalog.TruncatableTable
   with org.apache.spark.sql.graftbridge.V1FallbackTable {
-
-  val root: String = ManifestSql.rootOfEntry(entry)
 
   override def name(): String = fullName
 
@@ -66,9 +78,9 @@ final case class GraftTable(spark: SparkSession, fullName: String,
     * call. The injected rewrite chain (GraftDsv2Reads → ManifestSqlDml)
     * serves SQL DML first — this door is the structural backstop that
     * keeps v2-addressed DELETE working if the analyzer's rule order
-    * reshuffles (or in a session without the graft extensions), and
-    * commits through the same [[ManifestSql.sqlDeleteAt]] (which
-    * honors the table's `#dvmode:` declaration). */
+    * reshuffles, and commits through the same
+    * [[ManifestSql.sqlDeleteAt]] (which honors the table's `#dvmode:`
+    * declaration). */
   override def canDeleteWhere(
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
     versionAsOf.isEmpty
@@ -107,7 +119,8 @@ final case class GraftTable(spark: SparkSession, fullName: String,
   override def v1Table: org.apache.spark.sql.catalyst.catalog
       .CatalogTable = {
     requireHead("stream")
-    entry
+    entry.getOrElse(throw new IllegalStateException(
+      s"$fullName has no catalog entry to stream through"))
   }
 
   /** The pinned relation — built once per analysis (the same pin the
@@ -127,7 +140,23 @@ final case class GraftTable(spark: SparkSession, fullName: String,
   def freshRelation: DataFrame =
     ManifestSql.relation(spark, root, versionAsOf)
 
-  override def schema(): StructType = relation.schema
+  override def schema(): StructType = {
+    val own = relation.schema
+    def shape(s: StructType) = s.fields.toSeq.map(f => f.name -> f.dataType)
+    declared.foreach(d => require(shape(d) == shape(own),
+      s"manifest table at $root has schema ${own.simpleString}, not the " +
+        s"given ${d.simpleString} — read it without a schema: the " +
+        "manifest records its own"))
+    own
+  }
+
+  override def newScanBuilder(options: org.apache.spark.sql.util
+      .CaseInsensitiveStringMap)
+      : org.apache.spark.sql.connector.read.ScanBuilder =
+    throw new UnsupportedOperationException(
+      s"$fullName is read through graft's session extensions: set " +
+        "spark.sql.extensions=graft.plans.GraftSparkExtensions " +
+        "(Sessions.local does)")
 
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,

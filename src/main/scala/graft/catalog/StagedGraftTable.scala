@@ -27,7 +27,8 @@ import graft.sources.ManifestSql
   *    stays time-travel readable, and the data swap is atomic by the
   *    manifest's own commit protocol;
   *  - `commitStagedChanges` publishes the catalog entry
-  *    ([[GraftCatalog.publishStaged]]): created fresh, refreshed in
+  *    ([[GraftCatalog.publishStaged]], with the statement's
+  *    `tableProps`): created fresh, refreshed in
   *    place, or repointed in one alterTable — the table NAME is never
   *    absent mid-statement (the window the non-staged drop-then-create
   *    shape has);
@@ -43,6 +44,7 @@ final case class StagedGraftTable(spark: SparkSession,
                                   catalog: GraftCatalog,
                                   ident: Identifier, fullName: String,
                                   root: String, declared: StructType,
+                                  tableProps: util.Map[String, String],
                                   replaceSemantics: Boolean,
                                   freshlyInited: Boolean)
   extends StagedTable with SupportsWrite {
@@ -83,7 +85,7 @@ final case class StagedGraftTable(spark: SparkSession,
       declared.nonEmpty)
       ManifestTable.overwrite(spark, root, spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), declared))
-    catalog.publishStaged(ident, root)
+    catalog.publishStaged(ident, root, tableProps)
     spark.catalog.refreshByPath(root)
   }
 

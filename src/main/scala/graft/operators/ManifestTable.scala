@@ -1232,7 +1232,7 @@ object ManifestTable {
     * data-file path and the parquet ROW POSITION of a deleted row in
     * it (Spark's `_metadata.row_index` — stable for an immutable
     * file, the public mechanism Delta's DVs key on). */
-  private val DvSchema = StructType(Seq(
+  private[graft] val DvSchema = StructType(Seq(
     StructField("file", org.apache.spark.sql.types.StringType,
       nullable = false),
     StructField("pos", LongType, nullable = false)))
@@ -1257,41 +1257,29 @@ object ManifestTable {
   private def relPathCol(abs: Column): Column =
     F.array_join(F.slice(F.split(abs, "/"), -3, 3), "/")
 
-  /** The (file, pos) rows of the given DV dirs, optionally restricted
-    * to `onlyFiles` (exact schema read — no footer scan). */
+  /** The (file, pos) rows of the given DV dirs (exact schema read —
+    * no footer scan). */
   private def dvRows(spark: SparkSession, root: String,
-                     dirs: Seq[String],
-                     onlyFiles: Option[Seq[String]] = None): DataFrame = {
-    val df = spark.read.schema(DvSchema)
+                     dirs: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema)
       .parquet(dirs.distinct.sorted.map(d => s"$root/$d"): _*)
-    onlyFiles match {
-      case Some(fs) if fs.size <= 1024 =>
-        df.filter(F.col("file").isInCollection(fs))
-      case _ => df
-    }
-  }
 
   /** MERGE-ON-READ OVERLAY — applied once per DV-carrying scan by the
     * one scan builder ([[graft.sources.ManifestSql.scan]]), which every
     * Scala read and SQL door plans through. `scanned` must carry
     * `absCol` (absolute file path) and `posCol` (parquet row index)
-    * alongside the data columns; rows whose (file, pos) appear in any
-    * live DV drop. The DV side broadcasts when small (a point
-    * delete's overlay is a map-side hash probe — no shuffle on the
-    * 100 TB scan side); a huge DV falls back to a plain join and is
-    * compaction's cue to fold. */
-  private[graft] def overlayDv(spark: SparkSession, root: String,
-                               dvMap: Map[String, (String, Long)],
+    * alongside the data columns; rows whose (file, pos) appear in
+    * `dv` (rows of [[DvSchema]]) drop. The DV side broadcasts when
+    * small (`dvRows` deleted rows; a point delete's overlay is a
+    * map-side hash probe — no shuffle on the 100 TB scan side); a huge
+    * DV falls back to a plain join and is compaction's cue to fold. */
+  private[graft] def overlayDv(dv: DataFrame, dvRows: Long,
                                scanned: DataFrame, absCol: String,
                                posCol: String): DataFrame = {
-    if (dvMap.isEmpty) return scanned
-    val dv = dvRows(spark, root, dvMap.values.map(_._1).toSeq,
-      Some(dvMap.keys.toSeq))
-      .withColumnRenamed("file", "__dv_file")
+    val renamed = dv.withColumnRenamed("file", "__dv_file")
       .withColumnRenamed("pos", "__dv_pos")
     val side =
-      if (dvMap.values.map(_._2).sum <= DvBroadcastMaxRows) F.broadcast(dv)
-      else dv
+      if (dvRows <= DvBroadcastMaxRows) F.broadcast(renamed) else renamed
     scanned.join(side,
       relPathCol(scanned(absCol)) === side("__dv_file") &&
         scanned(posCol) === side("__dv_pos"),
@@ -2001,12 +1989,11 @@ object ManifestTable {
     * [[deleteWhere]]'s.
     *
     *  - READERS overlay the DV everywhere: every Scala read and SQL
-    *    door (temp view, catalog name, TVF) plans the anti-join on
-    *    `_metadata.row_index` inside the one scan builder
-    *    ([[graft.sources.ManifestSql.scan]]); a provider path read
-    *    gets the same overlay from [[graft.plans.GraftMorReads]]. A
-    *    small DV broadcasts — the overlay is a map-side probe, no
-    *    shuffle on the scan side.
+    *    door (temp view, catalog name, path read, TVF) plans the
+    *    anti-join on `_metadata.row_index` inside the one scan builder
+    *    ([[graft.sources.ManifestSql.scan]]), against the DVs of the
+    *    scan's current pin. A small DV broadcasts — the overlay is a
+    *    map-side probe, no shuffle on the scan side.
     *  - TIME TRAVEL is exact: DV refs live in per-version stat
     *    payloads, so an older version reads its own (or no) DV.
     *  - REWRITES FOLD DVs: [[compact]] reads through the overlay and

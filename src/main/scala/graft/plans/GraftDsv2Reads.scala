@@ -9,12 +9,14 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.catalog.GraftTable
 
-/** The READ half of the catalog door ([[graft.catalog.GraftCatalog]]):
-  * every analyzed `DataSourceV2Relation` over a [[GraftTable]] is
-  * replaced with the SAME pruned, snapshot-pinned V1 relation a temp
-  * view serves ([[graft.sources.ManifestSql.relation]] — the table
-  * pins it once per analysis), output attributes re-aliased under the
-  * v2 relation's exprIds so parent operators keep resolving. This is
+/** The READ half of every [[GraftTable]] — a catalog name
+  * ([[graft.catalog.GraftCatalog]]) or a path read
+  * ([[graft.sources.ManifestSource]]): every analyzed
+  * `DataSourceV2Relation` over one is replaced with the SAME pruned,
+  * snapshot-pinned V1 relation a temp view serves
+  * ([[graft.sources.ManifestSql.relation]] — the table pins it once
+  * per analysis), output attributes re-aliased under the v2
+  * relation's exprIds so parent operators keep resolving. This is
   * the public DeltaAnalysis pattern: the v2 catalog owns identity,
   * time travel, ALTER, and the write builder, while ONE scan
   * implementation (stats pruning, Bloom skipping, vectorized parquet
@@ -22,8 +24,8 @@ import graft.catalog.GraftTable
   * duplicate all of it.
   *
   * Scope notes:
-  *  - every relation inside the swapped plan carries the table's
-  *    catalog entry, as a V1-resolved table's would:
+  *  - every relation inside the swapped plan carries a catalog
+  *    name's entry, as a V1-resolved table's would:
   *    `spark.catalog.refreshTable` walks the resolved plan and reads
   *    `catalogTable.get` on each `LogicalRelation` leaf;
   *  - runs before [[ManifestSqlDml]] in the injected post-hoc batch,
@@ -52,23 +54,31 @@ case class GraftDsv2Reads(spark: SparkSession) extends Rule[LogicalPlan] {
       : LogicalPlan = {
     val swapped = plan.resolveOperatorsUp {
       case r @ DataSourceV2Relation(t: GraftTable, _, _, _, _, _) =>
-        val v1 =
+        val read =
           (if (used.add(t)) t.relation else t.freshRelation)
-            .queryExecution.analyzed.transformUp {
-              case lr: LogicalRelation if lr.catalogTable.isEmpty =>
-                lr.copy(catalogTable = Some(t.entry))
-            }
+            .queryExecution.analyzed
+        val v1 = t.entry.fold(read)(e => read.transformUp {
+          case lr: LogicalRelation if lr.catalogTable.isEmpty =>
+            lr.copy(catalogTable = Some(e))
+        })
         val resolver = spark.sessionState.conf.resolver
-        val aligned = r.output.map { out =>
-          val src = v1.output.find(a => resolver(a.name, out.name))
+        val srcs = r.output.map(out =>
+          v1.output.find(a => resolver(a.name, out.name))
             .getOrElse(throw new IllegalStateException(
               s"column '${out.name}' of ${t.name()} is missing from " +
                 s"the manifest relation at ${t.root} — re-resolve the " +
-                "table (the recorded schema moved under this plan)"))
-          Alias(src, out.name)(exprId = out.exprId,
-            qualifier = out.qualifier)
+                "table (the recorded schema moved under this plan)")))
+        v1 match {
+          // a bare relation takes the v2 attributes themselves, so a
+          // temp view over a path read stays insertable
+          case lr: LogicalRelation if srcs == lr.output &&
+              r.output.map(_.dataType) == lr.output.map(_.dataType) =>
+            lr.copy(output = r.output)
+          case _ => Project(r.output.zip(srcs).map { case (out, src) =>
+            Alias(src, out.name)(exprId = out.exprId,
+              qualifier = out.qualifier)
+          }, v1)
         }
-        Project(aligned, v1)
     }
     swapped.resolveExpressions {
       case sq: SubqueryExpression

@@ -242,18 +242,14 @@ object GraftFunctions {
         new ExpressionInfo(classOf[DotProduct].getName, name), builder))
     }
     e.injectPostHocResolutionRule(BroadcastFixedDims)
-    // the catalog door's read half — MUST precede ManifestSqlDml in
-    // this batch (post-hoc rules run once, in injection order), so
-    // DML targets on catalog names arrive already in V1 shape
+    // the read half of every GraftTable (catalog names, path reads) —
+    // MUST precede ManifestSqlDml in this batch (post-hoc rules run
+    // once, in injection order), so DML targets arrive in V1 shape
     e.injectPostHocResolutionRule(GraftDsv2Reads)
     // row-level DML (DELETE FROM / UPDATE / MERGE INTO) on manifest
     // tables: fully resolved by the stock analyzer, rejected only at
     // checkAnalysis for non-v2 targets — rewritten here first
     e.injectPostHocResolutionRule(ManifestSqlDml.apply)
-    // PATH reads through the provider read as every other door: the
-    // DV overlay and rename coalesce of the one scan — runs LAST so
-    // the DML rule above still sees raw targets
-    e.injectPostHocResolutionRule(GraftMorReads)
     // maintenance DDL (GRAFT COMPACT/VACUUM/EXPIRE/MAINTAIN/MOR/FOLD);
     // everything else delegates verbatim
     e.injectParser((session, delegate) => new GraftSqlParser(session, delegate))
@@ -307,12 +303,13 @@ case class BroadcastFixedDims(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** The graft session extensions: native functions and TVFs, the
-  * `GRAFT …` parser, and four post-hoc rules (BroadcastFixedDims, the
-  * catalog door's read swap GraftDsv2Reads, row-level DML
-  * ManifestSqlDml, path-read DV overlay GraftMorReads). Catalog names
-  * of manifest tables resolve through [[graft.catalog.GraftCatalog]],
-  * which a session binds as `spark_catalog` by conf, not through
-  * these extensions ([[graft.api.Sessions.local]] sets both). */
+  * `GRAFT …` parser, and three post-hoc rules (BroadcastFixedDims, the
+  * read swap GraftDsv2Reads of every [[graft.catalog.GraftTable]] —
+  * catalog names and path reads alike — and row-level DML
+  * ManifestSqlDml). Catalog names of manifest tables resolve through
+  * [[graft.catalog.GraftCatalog]], which a session binds as
+  * `spark_catalog` by conf, not through these extensions
+  * ([[graft.api.Sessions.local]] sets both). */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = GraftFunctions.inject(e)
 }

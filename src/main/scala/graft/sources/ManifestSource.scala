@@ -1,20 +1,26 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources.{BaseRelation,
-  CreatableRelationProvider, DataSourceRegister, RelationProvider,
-  SchemaRelationProvider, StreamSinkProvider}
+  CreatableRelationProvider, DataSourceRegister, SchemaRelationProvider,
+  StreamSinkProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.ManifestTable
 
-/** `USING graft-manifest` — the DataSource V1 provider behind
-  * manifest tables' catalog entries, path reads
-  * (`spark.read.format("graft-manifest").option("path", root)`),
-  * `df.write` and streaming: the catalog entry stores only the
-  * provider name and the table root.
+/** `USING graft-manifest` — the provider behind manifest tables'
+  * catalog entries, path reads
+  * (`spark.read.format("graft-manifest").load(root)`), `df.write`
+  * and streaming: the catalog entry stores only the provider name and
+  * the table root.
   *
   * Options:
   *  - `path` (required): the manifest table root;
@@ -22,21 +28,22 @@ import graft.operators.ManifestTable
   *    version. Persistent entries never carry it — time travel is a
   *    statement-level pin, not a catalog identity.
   *
-  * Catalog entries resolve through [[graft.catalog.GraftCatalog]]
-  * bound as `spark_catalog`, never through this provider's relation.
-  * The [[SchemaRelationProvider]] arm (a declared or stored schema)
-  * therefore serves three callers. In a graft-catalog session, Spark's
-  * V1 `CREATE TABLE … (cols) USING graft-manifest` shares the DSv2
-  * door's init path ([[ManifestSql.createDeclared]]), and a path read
-  * with a supplied schema writes nothing: it reads an existing
-  * manifest whose schema the supplied one matches, and refuses
-  * otherwise. In a session whose `spark_catalog` is someone else's,
-  * the V1 read of an entry is served only while that path's bare
-  * relation gives the graft door's rows (no renamed column, no
-  * deletion vector, the stored schema still the table's), and refused
-  * with the fix named otherwise. Nullability-only drift is tolerated
-  * (every recorded field is nullable by construction). */
-final class ManifestSource extends RelationProvider
+  * A DSv2 [[TableProvider]] whose table is [[graft.catalog.GraftTable]]
+  * keyed by the root, so every read takes the catalog door's read
+  * path: a path read is a `DataSourceV2Relation` that
+  * [[graft.plans.GraftDsv2Reads]] swaps for [[ManifestSql.relation]],
+  * as it does for `db.t`; and `CREATE TABLE … USING graft-manifest` /
+  * CTAS stay v2 commands, which [[graft.catalog.GraftCatalog]]
+  * serves. The table declares no `BATCH_WRITE` or `STREAMING_WRITE`,
+  * so `df.write` and `writeStream` by path take the V1 write and sink
+  * arms below. The [[SchemaRelationProvider]] arm serves one caller:
+  * a session whose `spark_catalog` is someone else's resolves an
+  * entry through Spark's V1 path, and its read is served only while
+  * that path's bare relation gives the graft door's rows (no renamed
+  * column, no deletion vector, the stored schema still the table's),
+  * and refused with the fix named otherwise. Nullability-only drift
+  * is tolerated (every recorded field is nullable by construction). */
+final class ManifestSource extends TableProvider
   with SchemaRelationProvider with CreatableRelationProvider
   with StreamSinkProvider
   with org.apache.spark.sql.sources.StreamSourceProvider
@@ -93,22 +100,44 @@ final class ManifestSource extends RelationProvider
       tableSchema(sqlContext.sparkSession, rootOf(parameters)))
   }
 
-  override def createRelation(sqlContext: SQLContext,
-                              parameters: Map[String, String])
-      : BaseRelation =
-    ManifestSql.baseRelation(sqlContext.sparkSession,
-      rootOf(parameters), parameters.get("versionAsOf").map(_.trim.toInt))
+  private def versionOf(parameters: Map[String, String]): Option[Int] =
+    parameters.get("versionAsOf").map(_.trim.toInt)
+
+  // ---- the DSv2 arm: every read is a GraftTable ----
+
+  /** Writers and a supplied schema hand [[getTable]] a schema; only a
+    * read without one asks for this. */
+  override def supportsExternalMetadata(): Boolean = true
+
+  /** The pinned version's recorded schema (a catalog without graft's
+    * stores it on an entry it creates). */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val parameters = CaseInsensitiveMap(options.asScala.toMap)
+    ManifestSql.recordedSchema(SparkSession.active, rootOf(parameters),
+      versionOf(parameters))
+  }
+
+  /** The table at the `path` root. Reads nothing: `DataFrameWriter`
+    * and `DataStreamWriter` ask for it, with the frame's schema, before
+    * they take the V1 arms — a first write creates its root. The
+    * schema given is checked against the table's when a read first asks
+    * for it. */
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+                        properties: java.util.Map[String, String]): Table = {
+    val parameters = CaseInsensitiveMap(properties.asScala.toMap)
+    val root = rootOf(parameters)
+    graft.catalog.GraftTable(SparkSession.active, root, root, None,
+      versionOf(parameters), Some(schema))
+  }
 
   /** The WRITE arm ([[CreatableRelationProvider]]): makes
-    * `df.write.format("graft-manifest").option("path", root)` and
-    * SQL `CREATE TABLE … USING graft-manifest OPTIONS (path …) AS
-    * SELECT …` first-class — a table is CREATED (manifest init +
-    * first ledgered write) or written through the existing commit
-    * protocol, never as raw files. SaveMode maps onto the ledger ops:
-    * ErrorIfExists refuses an existing manifest, Ignore no-ops one,
-    * Append appends (creating if absent), Overwrite replaces the
-    * snapshot atomically (creating if absent) — the shape Spark's V1
-    * CTAS hands a new table. The commit itself is
+    * `df.write.format("graft-manifest").option("path", root)`
+    * first-class — a table is CREATED (manifest init + first ledgered
+    * write) or written through the existing commit protocol, never as
+    * raw files. SaveMode maps onto the ledger ops: ErrorIfExists
+    * refuses an existing manifest, Ignore no-ops one, Append appends
+    * (creating if absent), Overwrite replaces the snapshot atomically
+    * (creating if absent). The commit itself is
     * [[ManifestSql.sqlWrite]], the one whole-table write owner, by
     * column name: `spark.graft.sql.batchId` ledgers an append and
     * refuses an overwrite before anything (the init included) lands.
@@ -199,39 +228,12 @@ final class ManifestSource extends RelationProvider
       parameters.get("checkpointLocation").map(_.trim))
   }
 
+  /** A foreign-catalog session's V1 read of an entry (see the class
+    * note): refused on a renamed or DV-carrying table, or when the
+    * stored `schema` names other columns or types than the table's. */
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String],
                               schema: StructType): BaseRelation = {
-    val spark = sqlContext.sparkSession
-    if (!graft.catalog.GraftCatalog.isSessionCatalog(spark))
-      foreignRead(sqlContext, parameters, schema)
-    else if (org.apache.spark.sql.graftbridge.inV1CreateTable(spark)) {
-      val root = rootOf(parameters)
-      ManifestSql.createDeclared(spark, root, schema,
-        ManifestSql.declarationsOf(parameters), root)
-      createRelation(sqlContext, parameters)
-    } else declaredRead(sqlContext, parameters, schema,
-      "read it without a schema: the manifest records its own")
-  }
-
-  /** The relation at the root, refused when the supplied or stored
-    * `schema` names other columns or types than the table's. */
-  private def declaredRead(sqlContext: SQLContext,
-                           parameters: Map[String, String],
-                           schema: StructType, fix: String): BaseRelation = {
-    val rel = createRelation(sqlContext, parameters)
-    require(rel.schema.fieldNames.toSeq == schema.fieldNames.toSeq &&
-      rel.schema.fields.map(_.dataType).toSeq ==
-        schema.fields.map(_.dataType).toSeq,
-      s"manifest table at ${rootOf(parameters)} has schema " +
-        s"${rel.schema.simpleString}, not the given " +
-        s"${schema.simpleString} — $fix")
-    rel
-  }
-
-  private def foreignRead(sqlContext: SQLContext,
-                          parameters: Map[String, String],
-                          schema: StructType): BaseRelation = {
     val root = rootOf(parameters)
     val snap = ManifestTable.latest(root).getOrElse(
       throw new IllegalStateException(s"no manifest at $root"))
@@ -245,9 +247,15 @@ final class ManifestSource extends RelationProvider
     require(!ManifestTable.hasDv(snap),
       s"the manifest table at $root carries deletion vectors, which " +
         s"this session's V1 catalog path does not apply — $fix")
-    declaredRead(sqlContext, parameters, schema,
-      s"the table evolved since its catalog registration; $fix, or " +
-        "re-register the entry")
+    val rel = ManifestSql.baseRelation(sqlContext.sparkSession, root,
+      versionOf(parameters))
+    require(rel.schema.fieldNames.toSeq == schema.fieldNames.toSeq &&
+      rel.schema.fields.map(_.dataType).toSeq ==
+        schema.fields.map(_.dataType).toSeq,
+      s"manifest table at $root has schema ${rel.schema.simpleString}, " +
+        s"not the given ${schema.simpleString} — the table evolved since " +
+        s"its catalog registration; $fix, or re-register the entry")
+    rel
   }
 }
 

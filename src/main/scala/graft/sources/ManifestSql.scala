@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.analysis.{NoSuchDatabaseException,
 import org.apache.spark.sql.catalyst.catalog.CatalogTable
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex,
-  HadoopFsRelation, PartitionDirectory}
+  FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{StructField, StructType}
 
@@ -137,9 +137,9 @@ object ManifestSql {
     !fs.exists(p) || fs.listStatus(p).isEmpty
   }
 
-  /** `CREATE TABLE name (cols) … USING graft-manifest` — the one init
-    * path of both catalog doors (the DSv2 `GraftCatalog.createTable`
-    * and the V1 command through [[ManifestSource]]). An absent or
+  /** `CREATE TABLE name (cols) … USING graft-manifest` — the init
+    * behind `GraftCatalog.createTable`, whichever name it comes
+    * through. An absent or
     * empty root is INITIALIZED with the declarations and seeded with
     * the declared columns by an empty ledgered overwrite (a schema
     * seed, not a user write, so not through [[sqlWrite]]); an existing
@@ -177,12 +177,14 @@ object ManifestSql {
     * Conservative everywhere the stats machinery is — an
     * un-evaluable filter shape simply lists every file, and Spark
     * re-applies every filter on the rows anyway (this index only
-    * ever SKIPS provably matchless files). */
+    * ever SKIPS provably matchless files). `overlays` says whether the
+    * plan over this index drops deletion-vector rows ([[scan]]). */
   final class ManifestFileIndex(
       spark: SparkSession, val root: String,
       initial: ManifestTable.Snapshot,
       val versionAsOf: Option[Int],
-      val physicalSchema: StructType) extends FileIndex {
+      val physicalSchema: StructType,
+      private[graft] val overlays: Boolean) extends FileIndex {
 
     /** One immutable pin = (snapshot, its file statuses): swapped
       * atomically by [[refresh]], so a query planning concurrently
@@ -227,15 +229,10 @@ object ManifestSql {
 
     @volatile private var pin = new Pin(initial)
 
-    /** The snapshot this index currently serves — what the DV-overlay
-      * machinery keys on (same pin as the planned scan, so overlay
-      * and file list always agree). */
+    /** The snapshot this index currently serves — what the DV overlay
+      * reads ([[DvIndex]] lists the deletion vectors of this pin, so
+      * overlay and file list always agree). */
     private[graft] def pinnedSnapshot: ManifestTable.Snapshot = pin.snap
-
-    /** Does the pinned snapshot carry any deletion vector? Computed
-      * once per pin ([[graft.plans.GraftMorReads]] probes this on
-      * every query — O(files) once, not per query). */
-    private[graft] def pinnedHasDv: Boolean = pin.hasDv
 
     override def rootPaths: Seq[HPath] = Seq(new HPath(root))
 
@@ -245,6 +242,12 @@ object ManifestSql {
                            dataFilters: Seq[Expression])
         : Seq[PartitionDirectory] = {
       val p = pin
+      // a plan built without the overlay cannot drop the rows of a
+      // deletion vector its pin moved onto: refuse, never resurface them
+      require(overlays || !p.hasDv,
+        s"the manifest table at $root gained deletion vectors after this " +
+          "plan was built — re-register the temp view (or read the table " +
+          "again) to apply them")
       val cand =
         if (dataFilters.isEmpty) p.snap.files
         else {
@@ -315,6 +318,12 @@ object ManifestSql {
     case None => ManifestTable.latest(root).getOrElse(
       throw new IllegalStateException(s"no manifest at $root"))
   }
+
+  /** The recorded schema of the head (or the `versionAsOf` version). */
+  private[sources] def recordedSchema(spark: SparkSession, root: String,
+                                      versionAsOf: Option[Int]): StructType =
+    ManifestTable.recordedSchemaOf(spark, root,
+      resolveSnapshot(root, versionAsOf))
 
   /** A column as its rename chain reads it: new-then-old coalesced
     * when `name` was renamed, the bare column otherwise. */
@@ -610,22 +619,27 @@ object ManifestSql {
     else spark.catalog.refreshByPath(idx.root)
   }
 
-  /** The bare front-door relation (physical schema, no rename
-    * projection) — what [[ManifestSource]] serves to path reads. */
+  /** The bare relation at the head (or the `versionAsOf` version):
+    * physical schema, no rename projection, no DV overlay — what
+    * [[ManifestSource]]'s V1 arms hand Spark (a foreign-catalog
+    * session's read of an entry it checked is rename- and DV-free,
+    * and the write arm's result). */
   private[sources] def baseRelation(spark: SparkSession, root: String,
                                     versionAsOf: Option[Int])
       : ManifestWritableRelation = {
     val snap = resolveSnapshot(root, versionAsOf)
-    relationAt(spark, root, versionAsOf, snap, shapeOf(spark, root, snap)._1)
+    relationAt(spark, root, versionAsOf, snap, shapeOf(spark, root, snap)._1,
+      overlays = false)
   }
 
   private def relationAt(spark: SparkSession, root: String,
                          versionAsOf: Option[Int],
                          snap: ManifestTable.Snapshot,
-                         physical: StructType): ManifestWritableRelation =
+                         physical: StructType,
+                         overlays: Boolean): ManifestWritableRelation =
     new ManifestWritableRelation(spark, root, versionAsOf,
-      new ManifestFileIndex(spark, root, snap, versionAsOf, physical),
-      physical)
+      new ManifestFileIndex(spark, root, snap, versionAsOf, physical,
+        overlays), physical)
 
   // ---- the one snapshot scan ----
 
@@ -637,154 +651,108 @@ object ManifestSql {
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[String](
       "graft.manifest.table")
 
-  /** The pinned version whose deletion vectors a plan over this
-    * manifest relation already applies — what stops
-    * [[graft.plans.GraftMorReads]] from overlaying it again, until the
-    * relation's pin moves. */
-  private[graft] val DvOverlaidAt =
-    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Int](
-      "graft.mor.overlaid")
-
-  /** True while THIS THREAD is building a manifest scan or its DV
-    * overlay: the injected [[graft.plans.GraftMorReads]] rule must
-    * not fire on the internal analyses those constructions trigger
-    * (it would recurse / double-wrap). */
-  private val constructing = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue(): java.lang.Boolean = false
-  }
-
-  private[graft] def underConstruction: Boolean = constructing.get()
-
-  private def guardedConstruction[A](f: => A): A = {
-    val prev = constructing.get()
-    constructing.set(true)
-    try f finally constructing.set(prev)
-  }
-
   /** THE snapshot → scan builder. Every read of a manifest snapshot
     * plans here: the Scala reads (`read`, `readVersion`, `readWhere`'s
     * candidate subset), the writers' victim scans and MERGE probes, the
     * layout rewrite, the change feed, and every SQL door ([[relation]]:
-    * temp views, catalog names, the TVF). `snap` may be a file subset
-    * of a published version. The scan is a [[ManifestWritableRelation]]
-    * over a [[ManifestFileIndex]] pinned to `snap`: file statuses come
-    * from the recorded byte sizes (no per-file `getFileStatus`), and
-    * pushed filters prune the planned files by the manifest stats. On
-    * top: the rename projection, the deletion-vector overlay (one
-    * anti-join on the parquet row position, when any pinned file
-    * carries a DV) and the optional provenance columns — `fileCol`
-    * (each row's file path) and `posCol` (its parquet row index), both
-    * from `_metadata`, so filters above still reach the scan.
-    * `versionAsOf = None` pins the head (refreshable, writable: the SQL
-    * head doors); `Some(v)` pins `snap` for good (time travel, and
-    * every Scala read, which passes its own version). The plan's root
-    * carries [[TableReadTag]] and its relation [[DvOverlaidAt]]. */
+    * temp views, catalog names, path reads, the TVF). `snap` may be a
+    * file subset of a published version. The scan is a
+    * [[ManifestWritableRelation]] over a [[ManifestFileIndex]] pinned
+    * to `snap`: file statuses come from the recorded byte sizes (no
+    * per-file `getFileStatus`), and pushed filters prune the planned
+    * files by the manifest stats. On top: the rename projection, the
+    * deletion-vector overlay (one anti-join on the parquet row position
+    * against the DVs of the index's CURRENT pin, [[DvIndex]]) and the
+    * optional provenance columns — `fileCol` (each row's file path) and
+    * `posCol` (its parquet row index), both from `_metadata`, so filters
+    * above still reach the scan. The overlay is planned when the pin
+    * carries a deletion vector, or when a head pin's table declares
+    * merge-on-read deletes (its own SQL DELETE adds them as the pin
+    * moves). `versionAsOf = None` pins the head (refreshable, writable:
+    * the SQL head doors); `Some(v)` pins `snap` for good (time travel,
+    * and every Scala read, which passes its own version). The plan's
+    * root carries [[TableReadTag]]. */
   private[graft] def scan(spark: SparkSession, root: String,
                           snap: ManifestTable.Snapshot,
                           versionAsOf: Option[Int],
                           fileCol: Option[String] = None,
-                          posCol: Option[String] = None): DataFrame =
-    guardedConstruction {
-      val (physical, projection) = shapeOf(spark, root, snap)
-      val rel = relationAt(spark, root, versionAsOf, snap, physical)
-      val df = overlaid(spark, rel.idx, spark.baseRelationToDataFrame(rel),
-        projection, fileCol, posCol)
-      val plan = df.queryExecution.analyzed
-      plan.setTagValue(TableReadTag, root)
-      plan.foreach {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
-            if lr.relation eq rel =>
-          lr.setTagValue(DvOverlaidAt, snap.version)
-        case _ => ()
-      }
-      df
-    }
-
-  /** The read shape over a manifest relation's frame `base`: `cols`
-    * (all of `base`'s columns when None), the pinned snapshot's DV
-    * overlay, and the provenance columns — the ONE overlay, behind
-    * [[scan]] and [[shapedPathRead]]. */
-  private def overlaid(spark: SparkSession, idx: ManifestFileIndex,
-                       base: DataFrame, cols: Option[Seq[Column]],
-                       fileCol: Option[String],
-                       posCol: Option[String]): DataFrame = {
+                          posCol: Option[String] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val snap = idx.pinnedSnapshot
+    val (physical, projection) = shapeOf(spark, root, snap)
     val dvMap = ManifestTable.dvRefsOf(snap, snap.files)
-    val data = cols.getOrElse(base.columns.toSeq.map(col))
-    if (dvMap.isEmpty && posCol.isEmpty) {
-      // provenance by the file-path metadata column, NOT
-      // input_file_name() — a nondeterministic projection stops every
-      // filter above it from reaching the parquet scan
-      val file = fileCol.map(col("_metadata.file_path").as(_))
-      if (cols.isEmpty && file.isEmpty) base
-      else base.select(data ++ file: _*)
-    } else {
-      val (abs, pos) = ("__graft_abs", "__graft_pos")
-      val wide = base.select(data ++ Seq(col("_metadata.file_path").as(abs),
-        col("_metadata.row_index").as(pos)): _*)
-      val kept = ManifestTable.overlayDv(spark, idx.root, dvMap, wide, abs, pos)
-      kept.select(kept.columns.toSeq.flatMap {
-        case `abs` => fileCol.map(col(abs).as(_))
-        case `pos` => posCol.map(col(pos).as(_))
-        case c => Some(col(c))
-      }: _*)
-    }
+    val overlays = dvMap.nonEmpty ||
+      (versionAsOf.isEmpty && ManifestTable.morDeletes(snap))
+    val rel = relationAt(spark, root, versionAsOf, snap, physical, overlays)
+    val base = spark.baseRelationToDataFrame(rel)
+    val data = projection.getOrElse(base.columns.toSeq.map(col))
+    val df =
+      if (!overlays && posCol.isEmpty) {
+        // provenance by the file-path metadata column, NOT
+        // input_file_name() — a nondeterministic projection stops every
+        // filter above it from reaching the parquet scan
+        val file = fileCol.map(col("_metadata.file_path").as(_))
+        if (projection.isEmpty && file.isEmpty) base
+        else base.select(data ++ file: _*)
+      } else {
+        val (abs, pos) = ("__graft_abs", "__graft_pos")
+        val wide = base.select(data ++ Seq(col("_metadata.file_path").as(abs),
+          col("_metadata.row_index").as(pos)): _*)
+        val kept =
+          if (!overlays) wide
+          else ManifestTable.overlayDv(spark.baseRelationToDataFrame(
+            new HadoopFsRelation(new DvIndex(spark, rel.idx), StructType(Nil),
+              ManifestTable.DvSchema, None, new ParquetFileFormat,
+              Map.empty)(spark)),
+            dvMap.values.map(_._2).sum, wide, abs, pos)
+        kept.select(kept.columns.toSeq.flatMap {
+          case `abs` => fileCol.map(col(abs).as(_))
+          case `pos` => posCol.map(col(pos).as(_))
+          case c => Some(col(c))
+        }: _*)
+      }
+    df.queryExecution.analyzed.setTagValue(TableReadTag, root)
+    df
   }
 
-  /** Shape an already-analyzed V1 manifest [[org.apache.spark.sql
-    * .execution.datasources.LogicalRelation]] (a path read through
-    * the provider) as [[scan]] would: renamed columns coalesce through
-    * their chain and the pinned snapshot's deletion vectors apply,
-    * through the same [[overlaid]] shape — the plan
-    * [[graft.plans.GraftMorReads]] swaps in. Historical names the
-    * bare relation exposes keep their raw bytes. `rel` may be the
-    * [[ManifestWritableRelation]] itself OR a plain `HadoopFsRelation`
-    * copy (it keeps the [[ManifestFileIndex]], which carries
-    * everything the overlay needs). Output attributes re-alias under
-    * the original exprIds so parents keep resolving (the same pattern
-    * as the DSv2 read swap). */
-  private[graft] def shapedPathRead(spark: SparkSession,
-                                    idx: ManifestFileIndex,
-                                    rel: org.apache.spark.sql.sources
-                                      .BaseRelation,
-                                    original: org.apache.spark.sql.catalyst
-                                      .plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    guardedConstruction {
-      import org.apache.spark.sql.catalyst.expressions.Alias
-      val read = chained(ManifestTable.colmapOfSnap(idx.pinnedSnapshot)) _
-      val analyzed0 = overlaid(spark, idx, spark.baseRelationToDataFrame(rel),
-        Some(original.output.map(a => read(a.name))), None, None)
-        .queryExecution.analyzed
-      // Catalog.refreshTable walks the resolved plan and does an
-      // UNGUARDED catalogTable.get on every LogicalRelation leaf —
-      // a catalog-resolved original carries its CatalogTable, so
-      // every relation inside the overlay (the re-read table AND the
-      // DV sidecar scan, whose cache identity IS this table) must
-      // carry it too, or refreshTable dies on None.get
-      val analyzed = original match {
-        case olr: org.apache.spark.sql.execution.datasources
-          .LogicalRelation if olr.catalogTable.isDefined =>
-          analyzed0.transform {
-            case ilr: org.apache.spark.sql.execution.datasources
-              .LogicalRelation if ilr.catalogTable.isEmpty =>
-              ilr.copy(catalogTable = olr.catalogTable)
-          }
-        case _ => analyzed0
+  /** The deletion-vector sidecars of `table`'s CURRENT pin, as the DV
+    * side of the overlay reads them: the overlay follows the pin, so a
+    * head pin that `REFRESH TABLE`, a recache or its own DML moves
+    * drops the rows of the deletion vectors it moved onto. Listed once
+    * per pin, through the session's file-status cache (sidecar
+    * directories never change once written). */
+  private final class DvIndex(spark: SparkSession,
+                              val table: ManifestFileIndex) extends FileIndex {
+    @volatile private var listed: (ManifestTable.Snapshot, FileIndex) = _
+
+    private def sidecars: FileIndex = {
+      val (snap, cur) = (table.pinnedSnapshot, listed)
+      if (cur != null && (cur._1 eq snap)) cur._2
+      else {
+        val dirs = ManifestTable.dvRefsOf(snap, snap.files).values
+          .map(_._1).toSeq.distinct.sorted
+        val idx = new InMemoryFileIndex(spark,
+          dirs.map(new HPath(table.root, _)), Map.empty, None,
+          FileStatusCache.getOrCreate(spark))
+        listed = (snap, idx)
+        idx
       }
-      val resolver = spark.sessionState.conf.resolver
-      val aligned = original.output.map { out =>
-        val src = analyzed.output.find(a => resolver(a.name, out.name))
-          .getOrElse(throw new IllegalStateException(
-            s"column '${out.name}' missing from the shaped " +
-              s"manifest relation at ${idx.root}"))
-        Alias(src, out.name)(exprId = out.exprId,
-          qualifier = out.qualifier)
-      }
-      org.apache.spark.sql.catalyst.plans.logical.Project(aligned,
-        analyzed)
     }
+
+    override def rootPaths: Seq[HPath] = sidecars.rootPaths
+    override def partitionSchema: StructType = StructType(Nil)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression])
+        : Seq[PartitionDirectory] =
+      sidecars.listFiles(partitionFilters, dataFilters)
+    override def inputFiles: Array[String] = sidecars.inputFiles
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = sidecars.sizeInBytes
+    override def equals(other: Any): Boolean = other match {
+      case o: DvIndex => o.table == table
+      case _ => false
+    }
+    override def hashCode: Int = table.hashCode
+  }
 
   /** The manifest table as a DataFrame whose SCAN prunes on pushed
     * filters — [[scan]] over the head (or the `versionAsOf` version),
@@ -800,10 +768,11 @@ object ManifestSql {
     * access — the SQL twin of [[ManifestTable.read]], with
     * planning-time file pruning under pure SQL. The view PINS the
     * snapshot: re-register (or `REFRESH TABLE`) to move it. On an
-    * un-renamed table the view is the bare insertable relation, so
-    * `INSERT INTO name ...` / `INSERT OVERWRITE ...` write through the
-    * ledgered commit; a renamed table registers its coalesce
-    * projection, which SQL cannot insert through. */
+    * un-renamed table without deletion vectors or `#dvmode` the view is
+    * the bare insertable relation, so `INSERT INTO name ...` / `INSERT
+    * OVERWRITE ...` write through the ledgered commit; otherwise it
+    * registers the coalesce projection or the DV overlay, which SQL
+    * cannot insert through (DELETE/UPDATE/MERGE still can). */
   def register(spark: SparkSession, name: String, root: String,
                versionAsOf: Option[Int] = None): Unit =
     relation(spark, root, versionAsOf).createOrReplaceTempView(name)
@@ -829,10 +798,9 @@ object ManifestSql {
     * intentionally absent here.
     *
     * Re-registration publishes under a TEMP name first, then
-    * drop-old + rename-new: the expensive step (createTable resolves
-    * the provider relation — snapshot read, schema build) happens
-    * OUTSIDE the unavailability window, which shrinks to two catalog
-    * round-trips. Session-catalog DDL has no transactional swap
+    * drop-old + rename-new: the expensive step (createTable reads the
+    * head's schema for the entry) happens OUTSIDE the unavailability
+    * window, which shrinks to two catalog round-trips. Session-catalog DDL has no transactional swap
     * (Spark's own CREATE OR REPLACE paths share the residual window),
     * so a reader racing those two statements can still see the name
     * absent for a moment — documented on registerManifest. An older

@@ -83,18 +83,6 @@ object graftbridge {
       .foreach(cm.uncacheQuery(cs, _, cascade = false))
   }
 
-  /** Is this thread running a V1 `CREATE TABLE … USING` command
-    * (`CreateDataSourceTableCommand`, which resolves the provider's
-    * relation before it records the entry)? Read from the SQL
-    * execution the command runs under. */
-  def inV1CreateTable(spark: SparkSession): Boolean =
-    Option(spark.sparkContext.getLocalProperty(
-      execution.SQLExecution.EXECUTION_ID_KEY))
-      .flatMap(id => Option(
-        execution.SQLExecution.getQueryExecution(id.toLong)))
-      .exists(_.logical.isInstanceOf[
-        execution.command.CreateDataSourceTableCommand])
-
   /** `Dataset.ofRows` (private[sql] in Spark 4) — a logical plan as a
     * DataFrame, for RunnableCommands that receive a child plan. */
   def ofRows(spark: SparkSession,

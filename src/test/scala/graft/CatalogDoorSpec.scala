@@ -112,6 +112,11 @@ class CatalogDoorSpec extends SparkSpec {
       graft.api.Graft(spark, sf)
         .registerManifest("cdoor_cat", root, persistent = true)
       "graft.default.cdoor_cat"
+    },
+    "path read" -> { root =>
+      spark.read.format("graft-manifest").load(root)
+        .createOrReplaceTempView("cdoor_path")
+      "cdoor_path"
     })
 
   test("DML on DV-carrying and renamed tables: DELETE twice, UPDATE and MERGE through every door equal the ManifestTable twin") {
@@ -155,13 +160,55 @@ class CatalogDoorSpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS cdoor_cat")
   }
 
+  /** Does `stmt` analyze to one of Spark's V1 `CREATE TABLE … USING`
+    * commands? (Analysis only: nothing runs.) */
+  private def plansV1Create(stmt: String): Boolean =
+    spark.sessionState.executePlan(spark.sessionState.sqlParser
+      .parsePlan(stmt)).analyzed.exists {
+      case _: org.apache.spark.sql.execution.command
+          .CreateDataSourceTableCommand => true
+      case _: org.apache.spark.sql.execution.command
+          .CreateDataSourceTableAsSelectCommand => true
+      case _ => false
+    }
+
+  test("a temp view over a DV-free table refuses deletion vectors that arrive after it was built; a write through it still commits once, and re-registering reads them") {
+    val root = freshTable("graft_cdoor_lateDv")
+    graft.sources.ManifestSql.register(spark, "cdoor_late", root)
+    try {
+      spark.sql("CACHE TABLE cdoor_late")
+      ManifestTable.deleteWhereMoR(spark, root, F.col("id") < 10)
+      val v0 = ManifestTable.latest(root).get.version
+      spark.sql("INSERT INTO cdoor_late VALUES (100, 'x', 0)")
+      assert(ManifestTable.latest(root).get.version == v0 + 1)
+      val e = intercept[Exception](spark.table("cdoor_late").collect())
+      assert(e.getMessage.contains("re-register"), e.getMessage)
+      graft.sources.ManifestSql.register(spark, "cdoor_late", root)
+      assert(spark.table("cdoor_late").count() == 51L)
+    } finally spark.catalog.dropTempView("cdoor_late")
+  }
+
   test("CREATE TABLE (cols) USING graft-manifest on an absent root initializes the table through both catalog names") {
     try {
       for (name <- Seq("cdoor_created", "graft.default.cdoor_created")) {
         val root = java.nio.file.Files.createTempDirectory("graft_cdoor_ct")
           .toString + "/absent"
-        spark.sql(s"CREATE TABLE $name (a INT, b STRING) USING `graft-manifest` " +
-          s"OPTIONS (statCols 'a') LOCATION '$root'")
+        val create = s"CREATE TABLE $name (a INT, b STRING) USING " +
+          s"`graft-manifest` OPTIONS (statCols 'a') LOCATION '$root' " +
+          "COMMENT 'made' TBLPROPERTIES ('team' = 'search')"
+        assert(!plansV1Create(create), s"$create plans a V1 command")
+        spark.sql(create)
+        // the entry records the statement's properties and comment, not
+        // its options or the clauses Spark folds into properties
+        val entry = spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier("cdoor_created",
+            Some("default")))
+        assert(entry.properties.get("team").contains("search") &&
+          !entry.properties.keys.exists(k => k.startsWith("option.") ||
+            Set("statCols", "provider", "location", "comment")(k)),
+          entry.properties)
+        assert(entry.comment.contains("made"), name)
+        assert(entry.provider.contains("graft-manifest"), name)
         val head = ManifestTable.latest(root)
         assert(head.isDefined, s"CREATE TABLE $name must init the manifest")
         assert(head.get.meta.contains("#statcols:a"),
@@ -177,6 +224,22 @@ class CatalogDoorSpec extends SparkSpec {
           "DROP TABLE keeps the manifest root")
       }
     } finally spark.sql("DROP TABLE IF EXISTS cdoor_created")
+  }
+
+  test("one CREATE door: a CTAS whose SELECT fails at run time leaves no catalog entry and no manifest through default.t and graft.default.t") {
+    for (name <- Seq("default.cdoor_ctas", "graft.default.cdoor_ctas")) {
+      val root = java.nio.file.Files.createTempDirectory("graft_cdoor_ctas")
+        .toString + "/absent"
+      val ctas = s"CREATE TABLE $name USING `graft-manifest` LOCATION " +
+        s"'$root' AS SELECT id, CAST(raise_error('boom') AS STRING) AS v " +
+        "FROM range(3)"
+      assert(!plansV1Create(ctas), s"$ctas plans a V1 command")
+      intercept[Exception](spark.sql(ctas))
+      assert(!spark.catalog.tableExists("default.cdoor_ctas"),
+        s"a failed CTAS through $name must leave no catalog entry")
+      assert(!new java.io.File(root, "manifest").exists(),
+        s"a failed CTAS through $name must leave no manifest")
+    }
   }
 
   test("door x verb matrix: ALTER, time travel, TRUNCATE and readStream.table through default.t and graft.default.t; temp views refuse ALTER and time travel") {
@@ -452,6 +515,14 @@ class CatalogDoorSpec extends SparkSpec {
     assert(ManifestTable.latest(root).get == head)
     val own = ManifestTable.read(spark, root).schema
     assert(read(root, own).count() == 60L, "the table's own schema reads")
+    // a temp view over a path read takes INSERT INTO as one commit
+    spark.read.format("graft-manifest").load(root)
+      .createOrReplaceTempView("cdoor_rd")
+    try {
+      spark.sql("INSERT INTO cdoor_rd VALUES (100, 'x', 0)")
+      assert(ManifestTable.latest(root).get.version == head.version + 1)
+      assert(spark.table("cdoor_rd").count() == 61L)
+    } finally spark.catalog.dropTempView("cdoor_rd")
   }
 
   test("another v2 provider's CTAS and REPLACE TABLE AS SELECT run as under the built-in session catalog") {

@@ -734,8 +734,7 @@ class PlanShapeSpec extends SparkSpec {
         "temp view" -> spark.table("onescan_tmp"),
         "default.t" -> spark.table("default.onescan_cat"),
         "graft.default.t" -> spark.table("graft.default.onescan_cat"),
-        "path read" -> spark.read.format("graft-manifest").load(root)
-          .select("id", "w"),
+        "path read" -> spark.read.format("graft-manifest").load(root),
         "graft_manifest TVF" -> spark.sql(s"SELECT * FROM graft_manifest('$root')"))
       val expected = (0L until 450L).filter(_ % 7 != 0)
         .map(i => org.apache.spark.sql.Row(i, s"row$i"))
@@ -746,6 +745,18 @@ class PlanShapeSpec extends SparkSpec {
             "drop the DV's rows")
         assert(antiJoins(df) == 1, s"$label: exactly one DV anti-join")
       }
+      // a path read pins versionAsOf (the version before the MoR
+      // delete), and a supplied schema reads only when it is the table's
+      def path(schema: Option[String], version: Option[Int]) = {
+        val r = spark.read.format("graft-manifest")
+        schema.fold(r)(r.schema)
+          .options(version.map(v => "versionAsOf" -> v.toString).toMap)
+          .load(root)
+      }
+      assert(path(None, Some(head - 1)).count() == 450L)
+      assert(path(Some("id BIGINT, w STRING"), None).count() == expected.size)
+      val e = intercept[Exception](path(Some("id BIGINT, v STRING"), None))
+      assert(e.getMessage.contains("not the given"), e.getMessage)
       // a filter on a Scala read prunes the planned files like the SQL
       // doors: one of the four id bands holds id 150
       assert(manifestFilesRead(ManifestTable.read(spark, root)
